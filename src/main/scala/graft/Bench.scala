@@ -8,13 +8,10 @@ object Bench {
     val spark = Engine.builder(master, cpus.toInt).getOrCreate()
     Engine.configure(spark)
     // measurement-time conf overrides ("k=v;k=v") — lets A/B experiments
-    // (e.g. graft.read.fanout on/off) reuse the bench methodology
+    // (e.g. a spark.sql.* setting on/off) reuse the bench methodology
     // without code edits; empty in driver runs, so the contract is
-    // unchanged there
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    // unchanged there. The artifact records the applied pairs.
+    val overrides = Engine.applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     // warm the JVM/codegen paths so the first measured query doesn't
     // absorb session startup (~3-4 s of JIT + codegen compile)
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -163,10 +160,15 @@ object Bench {
     val cn = canary.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cu = canaryCpu.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cp = canaryPos.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jstr(v: String): String =
+      "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    // every artifact says where it ran and with which overrides
+    val env = s""""cpus":$cpus,"master":${jstr(master)},"conf":""" +
+      overrides.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val totalNorm = if (normMed.nonEmpty) normMed.values.sum else 0.0
     val fullJson =
-      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"failed":$fl,"sf":"$sfDir"}"""
+      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"failed":$fl,"sf":"$sfDir",$env}"""
     println(fullJson)
     // The driver's BENCH artifact preserves only a bounded stdout
     // TAIL — r07 lost 201 of 252 per-query medians to truncation,
@@ -185,7 +187,7 @@ object Bench {
     val slowest = results.toSeq.sortBy(-_._2._1).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + f"${v._1}%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"summary":"medians","total_median_sec":$total,"total_norm_sec":$totalNorm,"n_queries":${results.size},"slowest":$slowest,"canary":$cn,"canary_cpu":$cu,"canary_every":$CanaryEvery,"failed":$fl,"bench_out":"$outPath","sf":"$sfDir"}""")
+    println(s"""{"summary":"medians","total_median_sec":$total,"total_norm_sec":$totalNorm,"n_queries":${results.size},"slowest":$slowest,"canary":$cn,"canary_cpu":$cu,"canary_every":$CanaryEvery,"failed":$fl,"bench_out":"$outPath","sf":"$sfDir",$env}""")
     spark.stop()
   }
 }

@@ -14,6 +14,30 @@ import org.apache.spark.sql.SparkSession
   *   - Session TZ UTC so timestamp semantics match the oracle.
   */
 object Engine {
+  /** The engine's runtime SQL confs, applied both at build time
+    * ([[builder]]) and on an externally created session
+    * ([[configure]]). */
+  private val sqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    // events.parquet stores ts as TIMESTAMP(NANOS) which the vectorized
+    // reader rejects; read as raw nanos and convert in Tables.events.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // testdata timestamps may arrive as µs isAdjustedToUTC=false;
+    // with NTZ inference OFF the scan reads them directly as
+    // session-TZ TIMESTAMP (UTC session → instant-preserving), so ts
+    // predicates push into the parquet scan and row-group stats
+    // still prune. Tables.load's per-column NTZ cast stays as a
+    // belt-and-braces fallback for externally built sessions, but a
+    // Cast-wrapped column defeats pushdown — this conf is the real
+    // path.
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // dims (region/nation/customer/supplier/part at dim scale) broadcast
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString)
+
   /** Builder with every conf baked in at construction time. Setting
     * them only post-hoc via spark.conf.set is NOT enough: parallel
     * planning/schema-inference threads read a thread-local SQLConf
@@ -25,22 +49,7 @@ object Engine {
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps may arrive as µs isAdjustedToUTC=false;
-      // with NTZ inference OFF the scan reads them directly as
-      // session-TZ TIMESTAMP (UTC session → instant-preserving), so ts
-      // predicates push into the parquet scan and row-group stats
-      // still prune. Tables.load's per-column NTZ cast stays as a
-      // belt-and-braces fallback for externally built sessions, but a
-      // Cast-wrapped column defeats pushdown — this conf is the real
-      // path.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config(sqlConfs.toMap)
       // per-process dir: the in-memory catalog forgets tables between
       // JVMs but their directories would survive, and saveAsTable
       // refuses to reuse an existing location
@@ -70,19 +79,25 @@ object Engine {
 
   /** Runtime confs safe to (re)apply on an externally created session. */
   def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    // events.parquet stores ts as TIMESTAMP(NANOS) which the vectorized
-    // reader rejects; read as raw nanos and convert in Tables.events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // keep ts predicates pushdown-able on NTZ-written data (see builder)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    // dims (region/nation/customer/supplier/part at dim scale) broadcast
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+    sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Measurement-time conf overrides: `spec` is `k=v` pairs separated
+    * by `;`, so a value cannot contain `;`. Keys and values are
+    * trimmed and empty tokens skipped; a token with no `=` or an empty
+    * key fails fast. Returns the applied pairs, in order. */
+  def applyConf(spark: SparkSession, spec: String): Seq[(String, String)] = {
+    val pairs = spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      val k = if (i < 0) "" else kv.substring(0, i).trim
+      if (k.isEmpty)
+        throw new IllegalArgumentException(
+          s"conf override '$kv' is not of the form key=value")
+      k -> kv.substring(i + 1).trim
+    }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    pairs
   }
 }

@@ -63,58 +63,45 @@ object Tables {
     * (memoized per mtime, early-exit at the parallelism target), so
     * any production layout — files >> cores — never fires it and no
     * query pays an extra exchange. Tiny tables below
-    * `graft.read.fanout.minBytes` (default 512 KiB: dims that
-    * broadcast anyway) are also exempt, because for them the exchange
-    * costs more than single-task decode. Opt out entirely with
-    * `graft.read.fanout=false`. */
-  // path -> (mtime, bytes, rowGroupsCounted, countIsExhaustive)
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int, Boolean)]()
+    * [[FanOutMinBytes]] (dims that broadcast anyway) are also exempt,
+    * because for them the exchange costs more than single-task
+    * decode. */
+  private val FanOutMinBytes = 512L * 1024
 
   private def fanOutUnsplittable(spark: SparkSession, path: String,
       df: DataFrame): DataFrame = {
-    if (!spark.conf.get("graft.read.fanout", "true").toBoolean) return df
     val par = spark.sparkContext.defaultParallelism
-    val minBytes =
-      spark.conf.get("graft.read.fanout.minBytes", (512L * 1024).toString).toLong
     val (bytes, groups) = layout(spark, path, par)
-    if (bytes >= minBytes && groups < par) df.repartition(par) else df
+    if (bytes >= FanOutMinBytes && groups < par) df.repartition(par) else df
   }
 
   /** (total bytes, row groups up to `want`) for the parquet file or
     * directory at `path`; footer reads stop once `want` groups are
     * seen and the result is memoized against the path's mtime. */
-  private def layout(spark: SparkSession, path: String, want: Int): (Long, Int) = {
-    val mt = mtime(spark, path)
-    // reuse when the cached count answers this `want`: either it
-    // reached `want` before early-exiting, or it exhausted every file
-    val hit = layoutCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == mt && (prev._3 >= want || prev._4)) prev
-      else {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = p.getFileSystem(conf)
-        val st = fs.getFileStatus(p)
-        val files =
-          if (st.isDirectory)
-            fs.listStatus(p).filter(s => s.isFile &&
-              s.getPath.getName.endsWith(".parquet")).toSeq
-          else Seq(st)
-        val bytes = files.map(_.getLen).sum
-        var groups = 0
-        val it = files.iterator
-        while (groups < want && it.hasNext) {
-          val f = it.next()
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(f, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try groups += r.getRowGroups.size()
-          finally r.close()
-        }
-        (mt, bytes, groups, !it.hasNext)
-      })
-    (hit._2, hit._3)
-  }
+  private def layout(spark: SparkSession, path: String, want: Int): (Long, Int) =
+    Memo.value(spark, s"tables.layout:$path", Seq(path), want) {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      val files =
+        if (st.isDirectory)
+          fs.listStatus(p).filter(s => s.isFile &&
+            s.getPath.getName.endsWith(".parquet")).toSeq
+        else Seq(st)
+      val bytes = files.map(_.getLen).sum
+      var groups = 0
+      val it = files.iterator
+      while (groups < want && it.hasNext) {
+        val f = it.next()
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromStatus(f, conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try groups += r.getRowGroups.size()
+        finally r.close()
+      }
+      (bytes, groups)
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -148,18 +135,4 @@ object Tables {
     * for registering temp views / generic tooling. */
   def byName(s: SparkSession, d: String, name: String): DataFrame =
     if (name == "events") events(s, d) else load(s, d, name)
-
-  /** Modification time of a table path for cache-staleness keys,
-    * resolved through Hadoop's FileSystem so it works for every
-    * supported scheme (s3a://, hdfs://, file:...) — java.io.File
-    * .lastModified() silently returns 0 off the local filesystem,
-    * which would quietly revert the stale-cache guard in exactly the
-    * object-store deployments the 100 TB framing targets. A missing
-    * path maps to -1 (distinct from any real mtime). */
-  def mtime(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => -1L }
-  }
 }

@@ -16,10 +16,7 @@ object Timeit {
     val spark = Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     Engine.configure(spark)
     // same measurement-time conf overrides as Bench ("k=v;k=v")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    Engine.applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     // -nocse simulates degraded codegen subexpression elimination — a
     // plan is only scale-robust if it stays fast with CSE off
     if (noCse) spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Ckpt.CutOps
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Relational analytics over the TPC-H-ish tables (SURVEY.md section 2.K).
   *
@@ -774,36 +774,24 @@ object Analytics {
     * are the same exact decimal sum cast once to double. Scale: the
     * rollup shuffles lineitem once on suppkey (partial-agg'd), the
     * 1-row max broadcasts back, supplier is a broadcast dim. */
-  /** Cached per-supplier revenue rollup for k17 — keyed-invalidation
-    * discipline (quantizedCache pattern): CacheManager matches by
-    * canonicalized plan, so after an in-session rewrite of lineitem a
-    * bare re-cache() would silently serve the OLD blocks; the
-    * mtime-keyed map unpersists the superseded entry instead. Keyed
-    * also by the date window since it is a parameter now. */
-  private val k17RevCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
   def k17TopSupplierRevenue(spark: SparkSession, dir: String,
                             from: String = "1996-01-01",
                             to: String = "1996-04-01"): DataFrame = {
     // cached: the rollup subtree feeds both the 1-row max and the
     // join-back — Spark plans common subtrees twice, and without the
     // cache that is two full lineitem scans; the cached rollup is
-    // supplier-sized (tiny at any SF).
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val rev = k17RevCache.compute(
-      s"${System.identityHashCode(spark)}:$dir:$from:$to", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          (mtime, Tables.lineitem(spark, dir)
-            .filter(col("l_shipdate") >= lit(from).cast("timestamp") &&
-                    col("l_shipdate") < lit(to).cast("timestamp"))
-            .groupBy(col("l_suppkey"))
-            .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .as("total_revenue"))
-            .cache())
-        })._2
+    // supplier-sized (tiny at any SF). A memo entry, keyed also by the
+    // date window: CacheManager matches by canonicalized plan, so after
+    // an in-session rewrite of lineitem a bare re-cache() would
+    // silently serve the OLD blocks.
+    val rev = Memo.cached(spark, s"analytics.k17rev:$dir:$from:$to",
+        Seq(s"$dir/lineitem.parquet"))(
+      Tables.lineitem(spark, dir)
+        .filter(col("l_shipdate") >= lit(from).cast("timestamp") &&
+                col("l_shipdate") < lit(to).cast("timestamp"))
+        .groupBy(col("l_suppkey"))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .as("total_revenue")))
     val top = rev.agg(max(col("total_revenue")).as("max_revenue"))
     rev.join(broadcast(top), col("total_revenue") === col("max_revenue"))
       .join(broadcast(Tables.supplier(spark, dir)),

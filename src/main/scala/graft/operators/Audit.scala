@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Audit-log / metrics / DLQ set-algebra (reference: services/audit,
   * services/audit-list-api, libs/obs/metrics.ts, services/dlq-retry-api,
@@ -472,22 +472,15 @@ object Audit {
       |WHERE event_id NOT IN (SELECT event_id FROM applied)
       |ORDER BY event_id""".stripMargin
 
-  /** Memoized Count-Min sketch bytes — building the sketch is a Spark
-    * job; constructors must stay plan-only on re-entry (the
-    * Dedup.bloomCache discipline, mtime-keyed). */
-  private val cmsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
   private val CmsEps = 0.001
 
-  private def cmsBytes(spark: SparkSession, dir: String): Array[Byte] = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/events.parquet")
-    cmsCache.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir:$mtime", _ =>
-        Tables.events(spark, dir)
-          .agg(expr(s"count_min_sketch(user_id, ${CmsEps}d, 0.99d, 42)"))
-          .head().getAs[Array[Byte]](0))
-  }
+  /** Memoized Count-Min sketch bytes — building the sketch is a Spark
+    * job; constructors must stay plan-only on re-entry. */
+  private def cmsBytes(spark: SparkSession, dir: String): Array[Byte] =
+    Memo.value(spark, s"audit.cms:$dir", Seq(s"$dir/events.parquet"))(
+      Tables.events(spark, dir)
+        .agg(expr(s"count_min_sketch(user_id, ${CmsEps}d, 0.99d, 42)"))
+        .head().getAs[Array[Byte]](0))
 
   /** Heavy-hitter candidates with their sketch estimates — the raw
     * engine-specific form (estimates have no DuckDB oracle); the

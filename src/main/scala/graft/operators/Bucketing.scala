@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Ckpt, Memo, Tables}
 import graft.Ckpt.CutOps
-import graft.Tables
 
 /** Bucketed/partitioned-layout helpers: the storage-side half of the
   * scale story.
@@ -34,12 +34,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Memoized partitioned-layout write — the same plan-only-on-
-    * re-entry discipline as Persist.bucketedCache / Dedup.bloomCache
-    * (constructing the query twice must not re-run the write job). */
-  private val partCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The query day: mid-range of the synthetic events table so every
     * SF has rows on it. */
   private val PruneDay = "2024-01-15"
@@ -59,79 +53,39 @@ object Bucketing {
     Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(): Unit
   }
 
-  /** ONE static shutdown hook over a concurrent path set: the old
-    * per-rebuild `addShutdownHook` accumulated one thread per dataset
-    * refresh for the life of the JVM (unbounded in a long session). */
-  private val tmpPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val tmpHookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpPaths.forEach(p => rmTree(new java.io.File(p)))))
-    true
-  }
-  private def registerTmpPath(p: String): Unit = {
-    tmpHookInstalled; tmpPaths.add(p): Unit
-  }
-  private def dropTmpPath(p: String): Unit = {
-    rmTree(new java.io.File(p)); tmpPaths.remove(p): Unit
+  /** The memoized written layouts live under ONE per-JVM scratch root
+    * that a single shutdown hook removes. Every build writes into a
+    * fresh directory under it, so no session or concurrent JVM ever
+    * `mode(overwrite)`s a directory another one's lazy plans still
+    * read. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_layouts_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root.toFile)))
+    root
   }
 
-  /** Double-checked per-key memo build. The build closure runs full
-    * Spark write jobs, which must NOT happen inside a
-    * ConcurrentHashMap.compute remapping function — compute holds the
-    * map's bin lock, so an expensive build there blocks unrelated keys
-    * that hash to the same bin. Each key gets its own monitor instead;
-    * a superseded copy (older mtime of the same source) is deleted
-    * eagerly — its lazy plans are stale post-rewrite anyway, and
-    * waiting for JVM exit accumulates full table copies in /tmp. */
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def memoBuild(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      key: String, mtime: Long)(build: => String): String = {
-    val cur = cache.get(key)
-    if (cur != null && cur.startsWith(s"$mtime@")) cur
-    else buildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val cur2 = cache.get(key)
-      if (cur2 != null && cur2.startsWith(s"$mtime@")) cur2
-      else {
-        if (cur2 != null) dropTmpPath(cur2.substring(cur2.indexOf('@') + 1))
-        val entry = build
-        cache.put(key, entry)
-        entry
-      }
-    }
-  }
+  private def freshCopyDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
+  /** A superseded copy (older mtime of the same source) is deleted
+    * eagerly — its lazy plans are stale after the rewrite anyway, and
+    * keeping it until JVM exit accumulates full table copies. */
+  private def dropCopy(p: String): Unit = rmTree(new java.io.File(p))
+
+  private def eventsSrc(dir: String): Seq[String] = Seq(s"$dir/events.parquet")
 
   /** Path of the memoized event_date-partitioned events store —
     * shared by N2 (static pruning) and N13 (dynamic partition
-    * pruning) so both read the SAME on-disk layout. */
-  private def partitionedEventsPath(spark: SparkSession, dir: String): String = {
-    val mtime = Tables.mtime(spark, s"$dir/events.parquet")
-    val entry = memoBuild(partCache,
-      s"${System.identityHashCode(spark)}:$dir", mtime) {
-      // the session identity and the JVM PID are part of the
-      // PATH, not just the memo key: a second session (or a
-      // concurrent JVM of the same user reading the same dataset,
-      // where identityHashCode alone can collide) must never
-      // mode(overwrite) a directory another JVM's lazy plans
-      // still read. The OS user keeps two users on a shared
-      // read-only dataset apart, and the static shutdown hook
-      // reclaims the live copy when the JVM exits.
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_part_" +
-        s"${System.getProperty("user.name")}_" +
-        s"${ProcessHandle.current().pid()}_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(s"${System.identityHashCode(spark)}:$dir:$mtime".getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString
+    * pruning) so both read the SAME on-disk layout. A memo entry, so
+    * constructing the query twice does not re-run the write job. */
+  private def partitionedEventsPath(spark: SparkSession, dir: String): String =
+    Memo[String](spark, s"bucketing.part:$dir", eventsSrc(dir))(dropCopy) {
+      val p = freshCopyDir("part_")
       Tables.events(spark, dir)
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
         .write.mode("overwrite").partitionBy("event_date").parquet(p)
-      registerTmpPath(p)
-      s"$mtime@$p"
+      p
     }
-    entry.substring(entry.indexOf('@') + 1)
-  }
 
   def partitionPrune(spark: SparkSession, dir: String): DataFrame = {
     spark.read.parquet(partitionedEventsPath(spark, dir))
@@ -462,31 +416,19 @@ object Bucketing {
     }.reduce(_.unionAll(_)), wide)
   }
 
-  private val statsStoreReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
   /** The persisted stats store, memoized per (dir, granularity). */
   private[graft] def statsStore(spark: SparkSession, dir: String,
-      partFmt: String = "yyyy-MM"): DataFrame = {
-    // checkpoint mode lives in the VALUE token (Graph.memoCheckpoint
-    // discipline, r13 advisor): a mid-session graft.checkpoint.dir
-    // flip replaces the entry and releases the superseded blocks
-    val token =
-      s"${Tables.mtime(spark, s"$dir/lineitem.parquet")}:${graft.Ckpt.mode(spark)}"
-    statsStoreReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:stats:$partFmt", (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) graft.operators.Graph.releaseCheckpoint(prev._2)
-          val (union, wide) =
-            statsStoreFromWide(Tables.lineitem(spark, dir), partFmt)
-          val outer = union.cutLineage()
-          // the outer checkpoint materialized the union: the inner wide
-          // blocks would otherwise stay pinned for the session
-          graft.operators.Graph.releaseCheckpoint(wide)
-          (token, outer)
-        })._2
-  }
+      partFmt: String = "yyyy-MM"): DataFrame =
+    Memo.checkpointed(spark, s"bucketing.stats:$dir:$partFmt",
+        Seq(s"$dir/lineitem.parquet")) {
+      val (union, wide) =
+        statsStoreFromWide(Tables.lineitem(spark, dir), partFmt)
+      val outer = union.cutLineage()
+      // the outer checkpoint materialized the union: the inner wide
+      // blocks would otherwise stay pinned for the session
+      Ckpt.release(wide)
+      outer
+    }
 
   /** The merged read over any store frame (base, delta, or union). */
   private[graft] def statsMergedRead(store: DataFrame): DataFrame =
@@ -593,9 +535,6 @@ object Bucketing {
          |FROM lineitem""".stripMargin
     }.mkString("\nUNION ALL\n")
 
-  private val evoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The schema-evolution cutoff: batches before it were written by
     * the v1 pipeline (no `service` column), batches after by v2. */
   private val EvoCutoff = "2024-01-15"
@@ -615,15 +554,9 @@ object Bucketing {
     * batches land under one memoized per-(session, dataset-mtime)
     * path, partitionPrune's lifecycle discipline. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/events.parquet")
-    val entry = memoBuild(evoCache,
-      s"${System.identityHashCode(spark)}:$dir", mtime) {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evo_" +
-        s"${System.getProperty("user.name")}_" +
-        s"${ProcessHandle.current().pid()}_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(s"${System.identityHashCode(spark)}:$dir:$mtime".getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString
+    val path = Memo[String](spark, s"bucketing.evo:$dir", eventsSrc(dir))(
+        dropCopy) {
+      val p = freshCopyDir("evo_")
       val ev = Tables.events(spark, dir)
       val cut = lit(EvoCutoff).cast("timestamp")
       ev.filter(col("ts") < cut)
@@ -633,10 +566,8 @@ object Bucketing {
         .select(col("event_id"), col("event_type"), col("value"),
           Audit.serviceCol.as("service"))
         .write.mode("overwrite").parquet(s"$p/batch=v2")
-      registerTmpPath(p)
-      s"$mtime@$p"
+      p
     }
-    val path = entry.substring(entry.indexOf('@') + 1)
     spark.read.option("mergeSchema", "true")
       .parquet(s"$path/batch=v1", s"$path/batch=v2")
       .groupBy(col("event_type"), col("service"))

@@ -326,7 +326,10 @@ object Corpus {
     * verdict) → exact normalized-fingerprint dedup, first occurrence
     * wins (G2's normalization) → benchmark decontamination (G8's
     * rule: drop any surviving train doc sharing a word trigram with
-    * the held-out doc_id % 10 slice) → GPT-style sequence packing of
+    * the held-out doc_id % 10 slice, where both sides' trigrams come
+    * from their first 60 tokens — the Dedup shingle window, which
+    * the DuckDB oracle uses too; a trigram shared only past token 60
+    * is not matched) → GPT-style sequence packing of
     * the survivor corpus (M4's two-level prefix scan). The served
     * row is the packed-corpus manifest: per surviving doc its token
     * count, global token offset, and first/last sequence — exactly

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Memo, Tables}
 import graft.Ckpt.CutOps
-import graft.Tables
 
 /** Document deduplication for LLM-scale corpora (SURVEY §2.G).
   *
@@ -18,6 +18,8 @@ import graft.Tables
   * bit-for-bit (engine-portable minima; no platform-specific hash).
   */
 object Dedup {
+
+  private def docsSrc(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
   /** Whitespace tokens, first 60 (cap documented above). */
   private def toks: Column =
@@ -154,39 +156,30 @@ object Dedup {
     * canonical prefix-filtering order), its size, and its prefix
     * length for threshold t. One shingle pipeline feeds df, the
     * per-doc collect, and (via slice) the prefix — no second explode,
-    * no per-doc window: the prefix ordering happens inside the array. */
+    * no per-doc window: the prefix ordering happens inside the array.
+    *
+    * apssDocs is consumed FOUR times per G19 run (both prefix sides +
+    * both verify sides) and the branches defeat exchange reuse (the
+    * df attach broadcasts) — so the per-doc APSS state is a memoized
+    * cached plan, one entry per (session, dir, t). At 100 TB this
+    * materialized per-doc state is exactly the index segment an APSS
+    * job would persist anyway. */
   private def apssDocs(spark: SparkSession, dir: String,
       t: Double): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/documents.parquet")
-    apssDocsCache.compute(
-      s"${System.identityHashCode(spark)}:$dir:$t", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          val sh = shingles(spark, dir, 3)
-          val df = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          (mtime, sh.join(df, "shingle")
-            .groupBy(col("doc_id"))
-            .agg(sort_array(collect_list(struct(col("df"), col("shingle"))))
-              .as("ranked"))
-            .select(col("doc_id"),
-              expr("transform(ranked, x -> x.shingle)").as("shset"),
-              size(col("ranked")).cast("long").as("n"))
-            .withColumn("plen",
-              (col("n") - ceil(lit(t) * col("n")) + 1).cast("int"))
-            .cache())
-        })._2
+    Memo.cached(spark, s"dedup.apssDocs:$dir:$t", docsSrc(dir)) {
+      val sh = shingles(spark, dir, 3)
+      val df = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      sh.join(df, "shingle")
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(struct(col("df"), col("shingle"))))
+          .as("ranked"))
+        .select(col("doc_id"),
+          expr("transform(ranked, x -> x.shingle)").as("shset"),
+          size(col("ranked")).cast("long").as("n"))
+        .withColumn("plen",
+          (col("n") - ceil(lit(t) * col("n")) + 1).cast("int"))
+    }
   }
-
-  /** apssDocs is consumed FOUR times per G19 run (both prefix sides +
-    * both verify sides) and the branches defeat exchange reuse (the
-    * df attach broadcasts) — so the per-doc APSS state is cached, the
-    * Similarity.quantizedCache discipline: mtime-invalidated,
-    * superseded entries unpersisted first, one entry per
-    * (session, dir, t). At 100 TB this materialized per-doc state is
-    * exactly the index segment an APSS job would persist anyway. */
-  private val apssDocsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
 
   /** Candidate pairs from the prefix-filter join — separated from the
     * verification step so the spec can assert the candidate volume
@@ -239,22 +232,10 @@ object Dedup {
     // downstream of the pairs is ~1 s; the r13 verdict's 13.2×/decade
     // scale-watch was this join re-running per consumer). The near-dup
     // pair table is the bounded index a real pipeline persists anyway,
-    // so it gets the house memoized-checkpoint lifecycle: one build
-    // per (dir, t), mtime + checkpoint mode in the value token,
-    // superseded blocks released (Graph.memoCheckpoint discipline).
-    val token =
-      s"${graft.Tables.mtime(spark, s"$dir/documents.parquet")}:${graft.Ckpt.mode(spark)}"
-    apssPairsReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:apss:$t", (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) Graph.releaseCheckpoint(prev._2)
-          (token, apssPrefixBuild(spark, dir, t).cutLineage())
-        })._2
+    // so it is a memoized checkpointed table, one build per (dir, t).
+    Memo.checkpointed(spark, s"dedup.apss:$dir:$t", docsSrc(dir))(
+      apssPrefixBuild(spark, dir, t).cutLineage())
   }
-
-  private val apssPairsReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
 
   private def apssPrefixBuild(spark: SparkSession, dir: String,
       t: Double): DataFrame = {
@@ -348,22 +329,10 @@ object Dedup {
     // candidate side, every bench rep) and is the dedup family's
     // remaining heavy build at 10x data (9.6 s isolated at sf1, all in
     // this join). The candidate pair set is near-dup-density bounded —
-    // memoized checkpointed per (dir, b, r), mtime + mode in the value
-    // token, superseded blocks released.
-    val token =
-      s"${graft.Tables.mtime(spark, s"$dir/documents.parquet")}:${graft.Ckpt.mode(spark)}"
-    minhashCandReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:mh:$nHashes:$bandRows",
-      (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) Graph.releaseCheckpoint(prev._2)
-          (token, minhashLshBuild(spark, dir, nHashes, bandRows).cutLineage())
-        })._2
+    // memoized checkpointed per (dir, b, r).
+    Memo.checkpointed(spark, s"dedup.minhash:$dir:$nHashes:$bandRows",
+      docsSrc(dir))(minhashLshBuild(spark, dir, nHashes, bandRows).cutLineage())
   }
-
-  private val minhashCandReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
 
   private def minhashLshBuild(spark: SparkSession, dir: String,
                               nHashes: Int, bandRows: Int): DataFrame = {
@@ -607,27 +576,14 @@ object Dedup {
     * work is a shuffle of |edges| messages, and iteration count is
     * the graph diameter (tiny for near-dup clusters). localCheckpoint
     * truncates lineage so plans don't grow with iterations. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
   def clusters(spark: SparkSession, dir: String): DataFrame = {
     val strategyKey = spark.conf
       .getOption("graft.dedup.clusters.driverMaxEdges").getOrElse("default")
-    // the source mtime (via Hadoop FS, so object stores work too), the
-    // strategy conf, and the checkpoint mode all live in the VALUE
-    // token (the Graph.memoCheckpoint discipline, r13 advisor): a
-    // mid-session flip of any of them REPLACES the entry and releases
-    // the superseded checkpointed blocks, instead of growing the map
-    // while the old mode's blocks stay pinned for the session
-    val mtime = graft.Tables.mtime(spark, s"$dir/documents.parquet")
-    val token = s"$mtime:$strategyKey:${graft.Ckpt.mode(spark)}"
-    clusterCache.compute(
-      s"${System.identityHashCode(spark)}:$dir:clusters",
-      (_, prev) =>
-      if (prev != null && prev._1 == token) prev
-      else {
-      if (prev != null) Graph.releaseCheckpoint(prev._2)
-      (token, {
+    // the strategy conf is part of the token: a mid-session flip
+    // REPLACES the entry and releases the superseded checkpointed
+    // blocks, instead of serving the other strategy's answer
+    Memo.checkpointed(spark, s"dedup.clusters:$dir", docsSrc(dir),
+        strategyKey) {
       // checkpoint the pairs BEFORE symmetrizing: a union of the raw
       // pipeline with its own swap would run the shingle pair join
       // twice in the checkpoint materialization
@@ -685,8 +641,7 @@ object Dedup {
         minLabelPropagate(edges)
           .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
       }
-      })
-    })._2
+    }
   }
 
   /** The distributed connected-components seam (shared by G6 and
@@ -902,28 +857,22 @@ object Dedup {
     * [[bloomDecontaminate]] below, which hash-checks the superset law
     * against the exact join; DedupTextSpec additionally pins this raw
     * path's no-shingle-shuffle plan shape. */
-  /** Memoized bloom bytes: building the filter is a Spark job, and
-    * the DataFrame constructor must stay plan-only (merely explaining
-    * the query must not launch jobs) — same hazard and same cache key
-    * discipline as Similarity.ivfKCache. */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
   def bloomFlaggedDocs(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal => CatLit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val sh = shingles(spark, dir, 3).cache()
-    val mtime = graft.Tables.mtime(spark, s"$dir/documents.parquet")
-    val bloomBytes = bloomCache.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir:$mtime", _ => {
-        val benchHashes = sh.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .select(xxhash64(col("shingle")).as("h"))
-        val bloomAgg = GraftSqlBridge.column(
-          BloomFilterAggregate(GraftSqlBridge.expression(col("h")),
-            CatLit(1000000L), CatLit(8L * 1024 * 1024), 0, 0).toAggregateExpression())
-        benchHashes.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
-      })
+    // memoized bloom bytes: building the filter is a Spark job, and
+    // the DataFrame constructor must stay plan-only (merely explaining
+    // the query must not launch jobs)
+    val bloomBytes = Memo.value(spark, s"dedup.bloom:$dir", docsSrc(dir)) {
+      val benchHashes = sh.filter(pmod(col("doc_id"), lit(10)) === 0)
+        .select(xxhash64(col("shingle")).as("h"))
+      val bloomAgg = GraftSqlBridge.column(
+        BloomFilterAggregate(GraftSqlBridge.expression(col("h")),
+          CatLit(1000000L), CatLit(8L * 1024 * 1024), 0, 0).toAggregateExpression())
+      benchHashes.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
+    }
     require(bloomBytes != null, "benchmark shingle set is empty")
     val mightContain = GraftSqlBridge.column(BloomFilterMightContain(
       CatLit.create(bloomBytes, org.apache.spark.sql.types.BinaryType),
@@ -1119,44 +1068,33 @@ object Dedup {
     * cell (never all-pairs); the drop set leaves via anti-join.
     * [[SemCells]] is the tuning knob — production uses ~sqrt(n)
     * cells so cells stay bounded. */
-  /** Keyed cache for semDedup's assignment subtree — the
-    * Similarity.quantizedCache discipline (unpersist the superseded
-    * entry on an mtime change), NOT a bare .cache(): CacheManager
-    * matches canonicalized plans, so after a data rewrite a plain
-    * re-cache would keep serving blocks built from the old files even
-    * though quantized() itself rebuilt. */
-  private val semAssignCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorExpressions.vdotQuantizedNative
     val emb = Similarity.quantized(spark, dir)
-    val mtime = graft.Tables.mtime(spark, s"$dir/embeddings.parquet")
     // cached: the assignment subtree (cross join + rank window) feeds
     // the pair join's BOTH sides and the final anti-join — without the
     // cache Spark executes it three times (the k17 shared-subtree
-    // situation)
-    val assigned = semAssignCache.compute(
-      s"${System.identityHashCode(spark)}:$dir", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          val cents = emb.orderBy(md5(col("vec_id").cast("string")))
-            .limit(SemCells)
-            .select(col("vec_id").as("cent_id"), col("qvec").as("cq"),
-              col("nsq").as("cn"))
-          val wAssign = Window.partitionBy(col("vec_id"))
-            .orderBy(col("cent_cos").desc, col("cent_id"))
-          (mtime, emb.crossJoin(broadcast(cents))
-            .withColumn("cent_cos", Similarity.cosineQ(
-              vdotQuantizedNative(col("qvec"), col("cq")), col("nsq"), col("cn")))
-            .withColumn("arn", row_number().over(wAssign))
-            .filter(col("arn") === 1)
-            .select(col("vec_id"), col("qvec"), col("nsq"),
-              col("cent_id").as("cell"))
-            .cache())
-        })._2
+    // situation). A memo entry, NOT a bare .cache(): CacheManager
+    // matches canonicalized plans, so after a data rewrite a plain
+    // re-cache would keep serving blocks built from the old files
+    // even though quantized() itself rebuilt.
+    val assigned = Memo.cached(spark, s"dedup.semAssign:$dir",
+        Seq(s"$dir/embeddings.parquet")) {
+      val cents = emb.orderBy(md5(col("vec_id").cast("string")))
+        .limit(SemCells)
+        .select(col("vec_id").as("cent_id"), col("qvec").as("cq"),
+          col("nsq").as("cn"))
+      val wAssign = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cent_cos").desc, col("cent_id"))
+      emb.crossJoin(broadcast(cents))
+        .withColumn("cent_cos", Similarity.cosineQ(
+          vdotQuantizedNative(col("qvec"), col("cq")), col("nsq"), col("cn")))
+        .withColumn("arn", row_number().over(wAssign))
+        .filter(col("arn") === 1)
+        .select(col("vec_id"), col("qvec"), col("nsq"),
+          col("cent_id").as("cell"))
+    }
     val x = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("qvec").as("qa"), col("nsq").as("na"))
     val y = assigned.select(col("cell"), col("vec_id").as("id_b"),

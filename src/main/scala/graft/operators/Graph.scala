@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{Ckpt, Memo, Tables}
 import graft.Ckpt.CutOps
-import graft.Tables
 
 /** Graph analytics over the co-purchase graph (SURVEY §2 O-family).
   *
@@ -78,65 +78,20 @@ object Graph {
     * Spark implementation lives by; at 100 TB this is a
     * MEMORY_AND_DISK persist of the edge list, paid once.
     *
-    * Lifecycle: cached plans are tracked in an mtime-keyed memo
-    * ([[cacheReg]]) so a data rewrite under `dir` unpersists the
-    * superseded entry instead of accumulating dead cached tables for
-    * the life of the session. Per dir there are exactly TWO live
-    * cached tables — the basket arrays and the unthresholded pair
-    * counts — shared by every minSupport variant and by K30/K31. */
-  private val cacheReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
+    * Lifecycle: cached plans are [[graft.Memo.cached]] entries, so a
+    * data rewrite under `dir` unpersists the superseded entry instead
+    * of accumulating dead cached tables for the life of the session.
+    * Per dir there are exactly TWO live cached tables — the basket
+    * arrays and the unthresholded pair counts — shared by every
+    * minSupport variant and by K30/K31. */
+  private def lineitemSrc(dir: String): Seq[String] =
+    Seq(s"$dir/lineitem.parquet")
 
-  /** Memoized `.cache()`d plan registration: one live cached DataFrame
-    * per logical key; a changed source mtime unpersists the superseded
-    * entry before caching the fresh one. */
-  private def registeredCache(key: String, mtime: Long)
-                             (build: => DataFrame): DataFrame =
-    cacheReg.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else {
-        if (prev != null) prev._2.unpersist(blocking = false)
-        (mtime, build.cache())
-      })._2
-
-  /** The registeredCache discipline for the ITERATIVE ops' converged
-    * eager-localCheckpoint tables (O1/O3/O4/O5/O9): one live entry per
-    * logical (session, dir, params) key with the source-mtime token in
-    * the VALUE, so a data rewrite under `dir` releases the superseded
-    * entry's checkpointed RDD blocks instead of retaining them for the
-    * session's lifetime (previously the mtime lived in the KEY and a
-    * rewrite just grew the map). */
-  private val ckptReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
-  private def memoCheckpoint(spark: SparkSession, key: String,
-                             mtimeToken: String)
-                            (build: => DataFrame): DataFrame = {
-    // the checkpoint MODE ([[graft.Ckpt]]) is part of the identity: a
-    // mid-session graft.checkpoint.dir flip must rebuild, not serve
-    // the other mode's blocks (CheckpointSpec runs both paths in one
-    // session and pins equality)
-    val token = s"$mtimeToken:${graft.Ckpt.mode(spark)}"
-    ckptReg.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == token) prev
-      else {
-        if (prev != null) releaseCheckpoint(prev._2)
-        (token, build)
-      })._2
-  }
-
-  /** Best-effort unpersist of every checkpointed RDD a converged plan
-    * serves from: a localCheckpoint'd table is a single LogicalRDD
-    * leaf; the BFS accumulator is a union with one leaf per level —
-    * collectLeaves releases them all. Safe mid-loop too: Dataset
-    * .cutLineage() is EAGER, so by the time round i+1 exists its
-    * data no longer depends on round i's blocks. */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** The ITERATIVE ops' converged checkpointed tables (O1/O3/O4/O5/O9)
+    * depend on the co-purchase graph and, for the brand-seeded ones,
+    * on `part`. */
+  private def seededSrc(dir: String): Seq[String] =
+    Seq(s"$dir/lineitem.parquet", s"$dir/part.parquet")
 
   /** The shared cold build, stage 1: per-order sorted distinct-part
     * baskets — the first shuffle of EVERY market-basket/graph
@@ -145,8 +100,7 @@ object Graph {
     * table, so its cold build is paid exactly once. */
   private[operators] def cachedBaskets(spark: SparkSession,
                                        dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    registeredCache(s"${System.identityHashCode(spark)}:$dir:baskets", mtime)(
+    Memo.cached(spark, s"graph:$dir:baskets", lineitemSrc(dir))(
       Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("parts")))
@@ -163,14 +117,8 @@ object Graph {
     * re-ran the whole chain per query. */
   private[operators] def cachedPairCounts(spark: SparkSession,
                                           dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    // resolve the baskets entry BEFORE entering this map's compute:
-    // a nested compute on the same ConcurrentHashMap throws
-    // "Recursive update" whenever the two keys land in one bin
-    val baskets = cachedBaskets(spark, dir)
-    registeredCache(s"${System.identityHashCode(spark)}:$dir:paircounts",
-      mtime)(
-      baskets
+    Memo.cached(spark, s"graph:$dir:paircounts", lineitemSrc(dir))(
+      cachedBaskets(spark, dir)
         .select(explode(expr(
           """flatten(transform(parts, (x, i) ->
             |  transform(slice(parts, i + 2, size(parts)),
@@ -184,7 +132,7 @@ object Graph {
     * (u → v iff (deg_u, u) < (deg_v, v) — the compact-forward
     * orientation whose wedge work is bounded by O(m^1.5)), cached once
     * per (dir, minSupport) and SHARED by O2/O6/O14. Extracted from the
-    * former duplicate registeredCache sites so [[warmShared]] can
+    * former duplicate cached sites so [[warmShared]] can
     * materialize it by name. */
   private[operators] def orientedCached(spark: SparkSession, dir: String,
                                         minSupport: Int): DataFrame = {
@@ -196,9 +144,8 @@ object Graph {
         col("src") === col("node")).drop("node")
       .join(deg.select(col("node"), col("d").as("db")),
         col("dst") === col("node")).drop("node")
-    registeredCache(
-      s"${System.identityHashCode(spark)}:$dir:$minSupport:oriented",
-      Tables.mtime(spark, s"$dir/lineitem.parquet"))(
+    Memo.cached(spark, s"graph:$dir:$minSupport:oriented",
+      lineitemSrc(dir))(
       withDeg.select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("src") < col("dst")),
@@ -240,9 +187,7 @@ object Graph {
     * partitioned once, messages shuffle). */
   private def directedEdges(spark: SparkSession, dir: String,
                             minSupport: Int): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    registeredCache(
-      s"${System.identityHashCode(spark)}:$dir:dedges:$minSupport", mtime) {
+    Memo.cached(spark, s"graph:$dir:dedges:$minSupport", lineitemSrc(dir)) {
       val e = canonicalEdges(spark, dir, minSupport)
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("src"))
@@ -277,11 +222,9 @@ object Graph {
   private[graft] def closenessVisited(spark: SparkSession, dir: String,
       brand: String, nSeeds: Int, minSupport: Int,
       maxHops: Int): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val pmtime = graft.Tables.mtime(spark, s"$dir/part.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:closeness:$brand:" +
+    val key = s"graph:$dir:closeness:$brand:" +
       s"$nSeeds:$minSupport:$maxHops"
-    memoCheckpoint(spark, key, s"$mtime:$pmtime") {
+    Memo.checkpointed(spark, key, seededSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
       val seeds = Tables.part(spark, dir)
@@ -412,11 +355,9 @@ object Graph {
   private[graft] def hyperballSeedEsts(spark: SparkSession, dir: String,
       visited: DataFrame, brand: String, nSeeds: Int, minSupport: Int,
       maxHops: Int): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val pmtime = graft.Tables.mtime(spark, s"$dir/part.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:hyperball:$brand:" +
+    val key = s"graph:$dir:hyperball:$brand:" +
       s"$nSeeds:$minSupport:$maxHops"
-    memoCheckpoint(spark, key, s"$mtime:$pmtime") {
+    Memo.checkpointed(spark, key, seededSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val seeds = broadcast(
         visited.filter(col("hops") === 0).select(col("seed")))
@@ -452,7 +393,7 @@ object Graph {
       val out = ests.cutLineage()
       // the bounded est table is materialized: the per-round sketch
       // tables (node × counter — the expensive blocks) can go
-      rounds.foreach(releaseCheckpoint)
+      rounds.foreach(Ckpt.release)
       out
     }
   }
@@ -577,11 +518,9 @@ object Graph {
   private[graft] def betweennessDeltas(spark: SparkSession, dir: String,
       brand: String, nSeeds: Int, minSupport: Int,
       maxHops: Int): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val pmtime = graft.Tables.mtime(spark, s"$dir/part.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:betweenness:" +
+    val key = s"graph:$dir:betweenness:" +
       s"$brand:$nSeeds:$minSupport:$maxHops"
-    memoCheckpoint(spark, key, s"$mtime:$pmtime") {
+    Memo.checkpointed(spark, key, seededSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
       val seeds = Tables.part(spark, dir)
@@ -641,7 +580,7 @@ object Graph {
       // the bounded δ tables are materialized: the forward level
       // blocks (the expensive ones) can go (the ADVICE r10 lesson —
       // release every checkpoint the returned union does not carry)
-      levels.foreach(releaseCheckpoint)
+      levels.foreach(Ckpt.release)
       acc
     }
   }
@@ -733,16 +672,15 @@ object Graph {
     * product keeps Spark exact to 38 digits; the post-division rank
     * always fits BIGINT again (bounded by total mass).
     *
-    * The converged rank table is memoized ([[memoCheckpoint]]) with a
+    * The converged rank table is memoized ([[Memo.checkpointed]]) with a
     * per-round `localCheckpoint`: each round's plan references the
     * previous round's, so an unrolled lazy chain pays O(iters²)
     * analysis time and re-plans on every action — deep `iters`
     * (param_graph_pagerank runs 20) needs each round cut to a leaf. */
   def pagerank(spark: SparkSession, dir: String, minSupport: Int = 1,
                iters: Int = 5, limit: Int = 100): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:pr:$minSupport:$iters"
-    val ranksFinal = memoCheckpoint(spark, key, mtime.toString) {
+    val key = s"graph:$dir:pr:$minSupport:$iters"
+    val ranksFinal = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .withColumnRenamed("src", "node")
@@ -764,7 +702,7 @@ object Graph {
             (lit(15L * Scale / 100) +
               expr("(85 * CAST(s AS DECIMAL(38,0))) div 100")).as("rank"))
           .cutLineage()
-        releaseCheckpoint(prev) // round i+1 is materialized; free round i
+        Ckpt.release(prev) // round i+1 is materialized; free round i
       }
       // every round is checkpointed, so adj has served its last job
       adj.unpersist(blocking = false)
@@ -852,14 +790,9 @@ object Graph {
     * share. */
   private[operators] def orientedWithAdj(spark: SparkSession, dir: String,
                                          minSupport: Int): DataFrame = {
-    // resolve the oriented entry BEFORE entering this map's compute —
-    // a nested compute on the same ConcurrentHashMap throws
-    // "Recursive update" when the two keys share a bin (the
-    // cachedPairCounts lesson)
-    val oriented = orientedCached(spark, dir, minSupport)
-    registeredCache(
-      s"${System.identityHashCode(spark)}:$dir:$minSupport:oclosure",
-      Tables.mtime(spark, s"$dir/lineitem.parquet")) {
+    Memo.cached(spark, s"graph:$dir:$minSupport:oclosure",
+      lineitemSrc(dir)) {
+      val oriented = orientedCached(spark, dir, minSupport)
       val adj = oriented.groupBy(col("u"))
         .agg(sort_array(collect_list(col("v"))).as("nbrs"))
       oriented
@@ -997,7 +930,7 @@ object Graph {
     * loop is `maxHops` stages, not a convergence test. */
   /** Memoized per-level BFS frontiers. Iterative BFS is the one
     * shape where the DataFrame-constructor-stays-plan-only rule must
-    * bend (Dedup.bloomCache discipline): level k's plan embeds both
+    * bend (as for Dedup's memoized bloom bytes): level k's plan embeds both
     * the previous frontier AND the whole visited union, so the
     * logical plan DOUBLES per hop and Catalyst re-analyzes the
     * exponential tree on every action (measured 14–24 s of pure
@@ -1010,11 +943,9 @@ object Graph {
           minSupport: Int = 1, maxHops: Int = 3): DataFrame = {
     // BOTH source mtimes: edges come from lineitem, seeds from part —
     // regenerating part.parquet alone must invalidate the memo too
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val pmtime = graft.Tables.mtime(spark, s"$dir/part.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:bfs:$brand:" +
+    val key = s"graph:$dir:bfs:$brand:" +
       s"$minSupport:$maxHops"
-    val visited = memoCheckpoint(spark, key, s"$mtime:$pmtime") {
+    val visited = Memo.checkpointed(spark, key, seededSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
       val seeds = Tables.part(spark, dir)
@@ -1083,9 +1014,8 @@ object Graph {
   def connectedComponents(spark: SparkSession, dir: String,
                           minSupport: Int = 2, iters: Int = 10,
                           limit: Int = 50): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:cc:$minSupport:$iters"
-    val labels = memoCheckpoint(spark, key, mtime.toString) {
+    val key = s"graph:$dir:cc:$minSupport:$iters"
+    val labels = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
       val aug = e.union(nodes.select(col("node").as("src"),
@@ -1104,7 +1034,7 @@ object Graph {
         lab = nbrMin.join(ptr, col("node") === col("jnode"))
           .select(col("node"), least(col("nm"), col("plabel")).as("label"))
           .cutLineage()
-        releaseCheckpoint(prev)
+        Ckpt.release(prev)
       }
       lab
     }
@@ -1171,9 +1101,8 @@ object Graph {
   def communitiesLpa(spark: SparkSession, dir: String,
                      minSupport: Int = 2, iters: Int = 3,
                      limit: Int = 50): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:lpa:$minSupport:$iters"
-    val labels = memoCheckpoint(spark, key, mtime.toString) {
+    val key = s"graph:$dir:lpa:$minSupport:$iters"
+    val labels = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
       var lab = nodes.select(col("node"), col("node").as("label"))
@@ -1190,7 +1119,7 @@ object Graph {
           .filter(col("rn") === 1)
           .select(col("node"), col("label"))
           .cutLineage()
-        releaseCheckpoint(prev)
+        Ckpt.release(prev)
       }
       lab
     }
@@ -1245,11 +1174,9 @@ object Graph {
   def personalizedPagerank(spark: SparkSession, dir: String,
                            brand: String = "Brand#1", minSupport: Int = 1,
                            iters: Int = 5, limit: Int = 100): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val pmtime = Tables.mtime(spark, s"$dir/part.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:ppr:$brand:" +
+    val key = s"graph:$dir:ppr:$brand:" +
       s"$minSupport:$iters"
-    val ranksFinal = memoCheckpoint(spark, key, s"$mtime:$pmtime") {
+    val ranksFinal = Memo.checkpointed(spark, key, seededSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .withColumnRenamed("src", "node")
@@ -1276,7 +1203,7 @@ object Graph {
             (when(col("is_seed") === 1, lit(15L * Scale / 100))
               .otherwise(lit(0L)) + col("m")).cast("long").as("rank"))
           .cutLineage()
-        releaseCheckpoint(prev)
+        Ckpt.release(prev)
       }
       adj.unpersist(blocking = false)
       ranks
@@ -1558,10 +1485,9 @@ object Graph {
     * the tested SFs. */
   def kcore(spark: SparkSession, dir: String, minSupport: Int = 1,
             k: Int = 3, rounds: Int = 8, limit: Int = 100): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/lineitem.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:kcore:" +
+    val key = s"graph:$dir:kcore:" +
       s"$minSupport:$k:$rounds"
-    val alive = memoCheckpoint(spark, key, mtime.toString) {
+    val alive = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
       var a = directedEdges(spark, dir, minSupport).cutLineage()
       for (_ <- 1 to rounds) {
         val keep = a.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -1572,7 +1498,7 @@ object Graph {
           .join(keep.select(col("node").as("kd")), col("dst") === col("kd"))
           .drop("kd")
           .cutLineage()
-        releaseCheckpoint(prev)
+        Ckpt.release(prev)
       }
       a
     }

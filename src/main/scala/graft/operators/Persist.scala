@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Persist semantics (reference: services/persist/handler.ts +
   * src/stacks/data-stack.ts single-table design).
@@ -169,13 +169,6 @@ object Persist {
        |FROM ranked GROUP BY 1, 2
        |HAVING MAX(CASE WHEN latest_rn = 1 THEN op END) = 'put'""".stripMargin
 
-  /** Memoized bucketed-table ensure: writing the table is a Spark job,
-    * and query constructors must stay plan-only on re-entry — same
-    * mtime-keyed discipline as Dedup.bloomCache. The table name is
-    * keyed by dir so different SFs coexist in one warehouse. */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** D2-bucketed `persist_upsert_bucketed` — the same idempotent
     * versioned upsert served from a bucketed+sorted layout (storage
     * bucketed by the entity's partition key, the single-table-design
@@ -193,23 +186,28 @@ object Persist {
     * user_id, sorted within buckets) — the storage layout every
     * entity-keyed read can plan against with zero Exchange. Public so
     * specs (and other operators) can pin plans on the SAME layout D2b
-    * serves from rather than re-writing their own bucket table. */
+    * serves from rather than re-writing their own bucket table.
+    *
+    * Writing the table is a Spark job and query constructors must
+    * stay plan-only on re-entry, so the write is a memo entry; a
+    * rewrite of the source re-writes the same table in place. The
+    * table name is keyed by dir so different SFs coexist in one
+    * warehouse. */
   def bucketedEvents(spark: SparkSession, dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/events.parquet")
-    val table = bucketedCache.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir:$mtime", _ => {
-        // md5 prefix, not dir.hashCode: hashCode collides across dirs
-        // (one dir's table would silently serve another's data) and
-        // Int.MinValue would yield an invalid '-'-prefixed identifier
-        val name = "events_bucketed_" + java.security.MessageDigest
-          .getInstance("MD5").digest(dir.getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString
-        Bucketing.writeBucketed(
-          Tables.events(spark, dir)
-            .select("event_id", "user_id", "event_type", "value", "ts"),
-          name, "user_id", 8, Seq("user_id", "event_type", "ts", "event_id"))
-        name
-      })
+    val table = Memo.value(spark, s"persist.bucketed:$dir",
+        Seq(s"$dir/events.parquet")) {
+      // md5 prefix, not dir.hashCode: hashCode collides across dirs
+      // (one dir's table would silently serve another's data) and
+      // Int.MinValue would yield an invalid '-'-prefixed identifier
+      val name = "events_bucketed_" + java.security.MessageDigest
+        .getInstance("MD5").digest(dir.getBytes("UTF-8"))
+        .take(6).map("%02x".format(_)).mkString
+      Bucketing.writeBucketed(
+        Tables.events(spark, dir)
+          .select("event_id", "user_id", "event_type", "value", "ts"),
+        name, "user_id", 8, Seq("user_id", "event_type", "ts", "event_id"))
+      name
+    }
     spark.table(table)
   }
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{Ckpt, Memo, Tables}
 import graft.Ckpt.CutOps
-import graft.Tables
 import graft.functions.VectorOps._
 import graft.functions.VectorExpressions.vdotQuantizedNative
 
@@ -39,27 +39,18 @@ object Similarity {
     * Invalidation note: CacheManager matches cached plans by
     * CANONICALIZED form (root path, not file list), so merely
     * re-caching after a data rewrite would silently serve the OLD
-    * blocks. On an mtime change we therefore unpersist the superseded
-    * entry FIRST (dropping its blocks), then cache the rebuilt plan —
-    * which also caps the cache at one entry per (session, dir). */
-  private val quantizedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
+    * blocks. As a [[Memo.cached]] entry the superseded plan is
+    * unpersisted on an mtime change before the rebuilt one is cached
+    * — one entry per (session, dir). */
+  private def embSrc(dir: String): Seq[String] = Seq(s"$dir/embeddings.parquet")
 
   /** Quantized vectors + integer squared norm (one native self-dot). */
-  private[operators] def quantized(spark: SparkSession, dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/embeddings.parquet")
-    quantizedCache.compute(
-      s"${System.identityHashCode(spark)}:$dir", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          (mtime, Tables.embeddings(spark, dir)
-            .select(col("vec_id"), vquantize(col("embedding"), 10000.0).as("qvec"))
-            .select(col("vec_id"), col("qvec"),
-              vdotQuantizedNative(col("qvec"), col("qvec")).as("nsq"))
-            .cache())
-        })._2
-  }
+  private[operators] def quantized(spark: SparkSession, dir: String): DataFrame =
+    Memo.cached(spark, s"sim.quantized:$dir", embSrc(dir))(
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id"), vquantize(col("embedding"), 10000.0).as("qvec"))
+        .select(col("vec_id"), col("qvec"),
+          vdotQuantizedNative(col("qvec"), col("qvec")).as("nsq")))
 
   /** Deterministic cosine from integer parts — see object doc. */
   private[operators] def cosineQ(dot: Column, nsqA: Column, nsqB: Column): Column =
@@ -146,81 +137,72 @@ object Similarity {
   private val MmrPool = 20
   private val MmrK = 5
 
-  private val mmrReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
   def mmrSelect(spark: SparkSession, dir: String,
                 poolK: Int = MmrPool, selectK: Int = MmrK): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/embeddings.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:mmr:$poolK:$selectK"
-    val sel = mmrReg.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else {
-        // release a superseded entry's checkpointed blocks (the
-        // prCache leak class fixed in r8 — mtime lives in the VALUE)
-        if (prev != null) Graph.releaseCheckpoint(prev._2)
-        val emb = quantized(spark, dir)
-        val q = emb.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("qid"), col("qvec").as("qq"),
-            col("nsq").as("qn"))
-        val wPool = Window.partitionBy(col("qid"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        val pool = emb.join(broadcast(q), col("vec_id") =!= col("qid"))
-          .withColumn("dot", vdotQuantizedNative(col("qq"), col("qvec")))
-          .withColumn("rk", row_number().over(wPool))
-          .filter(col("rk") <= poolK)
-          .select(col("qid"), col("vec_id"),
-            cosineQ(col("dot"), col("qn"), col("nsq")).as("rel"),
-            col("qvec"), col("nsq"))
-          .cutLineage() // NQueries×poolK rows; ends the corpus scan
-        val sims = pool.as("a")
-          .join(pool.as("b"), col("a.qid") === col("b.qid") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-          .select(col("a.qid").as("qid"), col("a.vec_id").as("sa"),
-            col("b.vec_id").as("sb"),
-            cosineQ(vdotQuantizedNative(col("a.qvec"), col("b.qvec")),
-              col("a.nsq"), col("b.nsq")).as("sim"))
-          .cutLineage() // NQueries×poolK×(poolK−1) rows
-        val cand = pool.select(col("qid"), col("vec_id"), col("rel"))
-        val wPick = Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("vec_id"))
-        var s = cand
-          .withColumn("score", lit(0.5) * col("rel"))
+    val sel = Memo.checkpointed(spark, s"sim.mmr:$dir:$poolK:$selectK",
+        embSrc(dir)) {
+      val emb = quantized(spark, dir)
+      val q = emb.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("qid"), col("qvec").as("qq"),
+          col("nsq").as("qn"))
+      val wPool = Window.partitionBy(col("qid"))
+        .orderBy(col("dot").desc, col("vec_id"))
+      val pool = emb.join(broadcast(q), col("vec_id") =!= col("qid"))
+        .withColumn("dot", vdotQuantizedNative(col("qq"), col("qvec")))
+        .withColumn("rk", row_number().over(wPool))
+        .filter(col("rk") <= poolK)
+        .select(col("qid"), col("vec_id"),
+          cosineQ(col("dot"), col("qn"), col("nsq")).as("rel"),
+          col("qvec"), col("nsq"))
+        .cutLineage() // NQueries×poolK rows; ends the corpus scan
+      val sims = pool.as("a")
+        .join(pool.as("b"), col("a.qid") === col("b.qid") &&
+          col("a.vec_id") =!= col("b.vec_id"))
+        .select(col("a.qid").as("qid"), col("a.vec_id").as("sa"),
+          col("b.vec_id").as("sb"),
+          cosineQ(vdotQuantizedNative(col("a.qvec"), col("b.qvec")),
+            col("a.nsq"), col("b.nsq")).as("sim"))
+        .cutLineage() // NQueries×poolK×(poolK−1) rows
+      val cand = pool.select(col("qid"), col("vec_id"), col("rel"))
+      val wPick = Window.partitionBy(col("qid"))
+        .orderBy(col("score").desc, col("vec_id"))
+      var s = cand
+        .withColumn("score", lit(0.5) * col("rel"))
+        .withColumn("rn", row_number().over(wPick))
+        .filter(col("rn") === 1)
+        .select(col("qid"), col("vec_id"), lit(1).as("step"),
+          col("score").as("mmr_score"))
+        .cutLineage()
+      for (t <- 2 to selectK) {
+        val ms = sims
+          .join(s.select(col("qid").as("q2"), col("vec_id").as("selv")),
+            col("qid") === col("q2") && col("sa") === col("selv"))
+          .groupBy(col("qid"), col("sb").as("vec_id"))
+          .agg(max(col("sim")).as("maxsim"))
+        val prevStep = s
+        s = s.union(cand
+          .join(s.select(col("qid").as("q3"), col("vec_id").as("v3")),
+            col("qid") === col("q3") && col("vec_id") === col("v3"),
+            "left_anti")
+          .join(ms, Seq("qid", "vec_id"))
+          .withColumn("score",
+            lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
           .withColumn("rn", row_number().over(wPick))
           .filter(col("rn") === 1)
-          .select(col("qid"), col("vec_id"), lit(1).as("step"),
-            col("score").as("mmr_score"))
+          .select(col("qid"), col("vec_id"), lit(t).as("step"),
+            col("score").as("mmr_score")))
           .cutLineage()
-        for (t <- 2 to selectK) {
-          val ms = sims
-            .join(s.select(col("qid").as("q2"), col("vec_id").as("selv")),
-              col("qid") === col("q2") && col("sa") === col("selv"))
-            .groupBy(col("qid"), col("sb").as("vec_id"))
-            .agg(max(col("sim")).as("maxsim"))
-          val prevStep = s
-          s = s.union(cand
-            .join(s.select(col("qid").as("q3"), col("vec_id").as("v3")),
-              col("qid") === col("q3") && col("vec_id") === col("v3"),
-              "left_anti")
-            .join(ms, Seq("qid", "vec_id"))
-            .withColumn("score",
-              lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
-            .withColumn("rn", row_number().over(wPick))
-            .filter(col("rn") === 1)
-            .select(col("qid"), col("vec_id"), lit(t).as("step"),
-              col("score").as("mmr_score")))
-            .cutLineage()
-          // eager checkpoint above materialized the union — the
-          // superseded per-step blocks are dead; release-on-supersede
-          // (the pagerank discipline, per r9 ADVICE)
-          Graph.releaseCheckpoint(prevStep)
-        }
-        // the final selection is self-contained; the pool and pairwise
-        // sim scaffolding blocks are no longer referenced
-        Graph.releaseCheckpoint(pool)
-        Graph.releaseCheckpoint(sims)
-        (mtime, s)
-      })._2
+        // eager checkpoint above materialized the union — the
+        // superseded per-step blocks are dead; release-on-supersede
+        // (the pagerank discipline, per r9 ADVICE)
+        Ckpt.release(prevStep)
+      }
+      // the final selection is self-contained; the pool and pairwise
+      // sim scaffolding blocks are no longer referenced
+      Ckpt.release(pool)
+      Ckpt.release(sims)
+      s
+    }
     sel.select(col("qid"), col("step"), col("vec_id"),
       round(col("mmr_score"), 6).as("mmr_score"))
       .orderBy(col("qid"), col("step"))
@@ -655,13 +637,6 @@ object Similarity {
     * every-Nth-vector scheme would grow both linearly with n. A real
     * deployment would k-means a sample for better cell balance; the
     * partitioning/probing mechanics are identical. */
-  /** Memoized corpus counts: `emb.count()` is a Spark job, and k is
-    * needed at PLAN time (limit(k)) — without the memo, merely
-    * constructing or explaining sim_ivf_probe launches a count job
-    * every time. Keyed like Dedup.clusterCache (session, dir, mtime). */
-  private val ivfKCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
   /** The IVF search itself, given any centroid set (cent_id, cq, cn):
     * build the inverted file (nearest-centroid assignment), probe the
     * NProbeCells nearest cells per query, re-rank by exact cosine.
@@ -799,51 +774,40 @@ object Similarity {
     * ingest only appends encoded postings. */
   private val RefreshSplitPct = 80
 
-  private val refreshReg = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Long, DataFrame, DataFrame))]()
-
   /** Frozen day-1 artifacts: (splitId, centroids, base inverted
     * lists), memoized per (dir, splitPct) with the house lifecycle. */
   private[graft] def refreshBaseParts(spark: SparkSession, dir: String,
       splitPct: Int): (Long, DataFrame, DataFrame) = {
-    // checkpoint mode lives in the VALUE token (Graph.memoCheckpoint
-    // discipline, r13 advisor): a mid-session graft.checkpoint.dir
-    // flip replaces the entry and RELEASES the superseded blocks,
-    // instead of keying a second entry while the old one stays pinned
-    val token =
-      s"${Tables.mtime(spark, s"$dir/embeddings.parquet")}:${graft.Ckpt.mode(spark)}"
-    refreshReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:refresh:$splitPct",
-      (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) {
-            Graph.releaseCheckpoint(prev._2._2)
-            Graph.releaseCheckpoint(prev._2._3)
-          }
-          val emb = quantized(spark, dir)
-          // bounded 1-row driver scalars (the ivfK/DPP-threshold
-          // pattern): corpus size -> split boundary and base-sized k
-          val n = emb.count()
-          val splitId = n * splitPct / 100
-          val base = emb.filter(col("vec_id") < splitId)
-          // k from the ACTUAL base row count, not from splitId:
-          // vec_ids are dense at the driver SFs but OFFSET per
-          // replica at the scale layouts, where count(vec_id <
-          // splitId) != splitId — deriving k from the threshold
-          // trained a different codebook than the oracle's (caught
-          // by the 10x answer gate in r10)
-          val baseCount = base.count()
-          val kb = math.min(MaxCentroids,
-            math.max(8, math.ceil(math.sqrt(baseCount.toDouble)).toInt))
-          val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(kb)
-            .select(col("vec_id").as("cent_id"), col("qvec").as("cq"),
-              col("nsq").as("cn"))
-            .cutLineage() // the frozen codebook
-          val baseIdx = assignTo(base, cents)
-            .cutLineage() // the persisted day-1 inverted file
-          (token, (splitId, cents, baseIdx))
-        })._2
+    // the checkpoint mode is part of the token, as for every
+    // checkpointed memo: a mid-session graft.checkpoint.dir flip
+    // replaces the entry and RELEASES the superseded blocks
+    Memo[(Long, DataFrame, DataFrame)](spark,
+        s"sim.refresh:$dir:$splitPct", embSrc(dir), Ckpt.mode(spark)) {
+      case (_, cents, baseIdx) => Ckpt.release(cents); Ckpt.release(baseIdx)
+    } {
+      val emb = quantized(spark, dir)
+      // bounded 1-row driver scalars (the ivfK/DPP-threshold
+      // pattern): corpus size -> split boundary and base-sized k
+      val n = emb.count()
+      val splitId = n * splitPct / 100
+      val base = emb.filter(col("vec_id") < splitId)
+      // k from the ACTUAL base row count, not from splitId:
+      // vec_ids are dense at the driver SFs but OFFSET per
+      // replica at the scale layouts, where count(vec_id <
+      // splitId) != splitId — deriving k from the threshold
+      // trained a different codebook than the oracle's (caught
+      // by the 10x answer gate in r10)
+      val baseCount = base.count()
+      val kb = math.min(MaxCentroids,
+        math.max(8, math.ceil(math.sqrt(baseCount.toDouble)).toInt))
+      val cents = base.orderBy(md5(col("vec_id").cast("string"))).limit(kb)
+        .select(col("vec_id").as("cent_id"), col("qvec").as("cq"),
+          col("nsq").as("cn"))
+        .cutLineage() // the frozen codebook
+      val baseIdx = assignTo(base, cents)
+        .cutLineage() // the persisted day-1 inverted file
+      (splitId, cents, baseIdx)
+    }
   }
 
   def indexRefresh(spark: SparkSession, dir: String,
@@ -1232,15 +1196,14 @@ object Similarity {
 
   private val KmeansIters = 2
 
-  /** Shared k (≈sqrt(n) capped) — see ivfKCache. */
+  /** Shared k (≈sqrt(n) capped), memoized: `emb.count()` is a Spark
+    * job, and k is needed at PLAN time (limit(k)) — without the memo,
+    * merely constructing or explaining sim_ivf_probe launches a count
+    * job every time. */
   private def ivfK(spark: SparkSession, dir: String,
-      emb: => DataFrame): Int = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/embeddings.parquet")
-    ivfKCache.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir:$mtime",
-      _ => math.min(MaxCentroids,
-        math.max(8, math.ceil(math.sqrt(emb.count().toDouble)).toInt)))
-  }
+      emb: => DataFrame): Int =
+    Memo.value(spark, s"sim.ivfK:$dir", embSrc(dir))(math.min(MaxCentroids,
+      math.max(8, math.ceil(math.sqrt(emb.count().toDouble)).toInt)))
 
   /** H6 `sim_ivf_kmeans` — IVF with TRAINED coarse centroids: the
     * hash-picked sample of H4 refined by KmeansIters Lloyd
@@ -1262,9 +1225,6 @@ object Similarity {
     ivfSearch(emb, kmeansCents(spark, dir))
   }
 
-  private val kmeansCentsReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
   /** The trained (KmeansIters Lloyd rounds, exact integer) centroid
     * table H6 searches with — exposed as its own seam so M17's
     * cluster-balanced sampling reuses the SAME codebook recipe.
@@ -1275,17 +1235,9 @@ object Similarity {
     * (r15; the un-memoized training dominated sim_ivf_kmeans and a
     * third of sim_recall_eval). */
   private[operators] def kmeansCents(spark: SparkSession,
-      dir: String): DataFrame = {
-    val token =
-      s"${Tables.mtime(spark, s"$dir/embeddings.parquet")}:${graft.Ckpt.mode(spark)}"
-    kmeansCentsReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:kmcents", (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) Graph.releaseCheckpoint(prev._2)
-          (token, graft.Ckpt.cut(kmeansCentsBuild(spark, dir)))
-        })._2
-  }
+      dir: String): DataFrame =
+    Memo.checkpointed(spark, s"sim.kmcents:$dir", embSrc(dir))(
+      kmeansCentsBuild(spark, dir).cutLineage())
 
   private def kmeansCentsBuild(spark: SparkSession,
       dir: String): DataFrame = {
@@ -1317,26 +1269,16 @@ object Similarity {
     cents
   }
 
-  private val kmeansAsgReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
   /** Every corpus vector keyed to its trained k-means cell — the
     * cluster map M17's balanced sampling consumes. Checkpointed and
     * memoized (house lifecycle): M17 fans it out to two consumers
     * (sizes + ranked picks), which would otherwise re-plan the whole
     * Lloyd training subtree per branch. */
   private[operators] def kmeansAssignments(spark: SparkSession,
-      dir: String): DataFrame = {
-    val mtime = graft.Tables.mtime(spark, s"$dir/embeddings.parquet")
-    kmeansAsgReg.compute(
-      s"${System.identityHashCode(spark)}:$dir:kasg", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) Graph.releaseCheckpoint(prev._2)
-          (mtime, assignTo(quantized(spark, dir), kmeansCents(spark, dir))
-            .select(col("vec_id"), col("cell")).cutLineage())
-        })._2
-  }
+      dir: String): DataFrame =
+    Memo.checkpointed(spark, s"sim.kasg:$dir", embSrc(dir))(
+      assignTo(quantized(spark, dir), kmeansCents(spark, dir))
+        .select(col("vec_id"), col("cell")).cutLineage())
 
   def ivfKmeansSql: String =
     s"""WITH $kmeansCtesSql,
@@ -2473,7 +2415,7 @@ object Similarity {
         spark.catalog.dropTempView(name)
       }
     }
-    Graph.releaseCheckpoint(frozen)
+    Ckpt.release(frozen)
     out
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Skew mitigation for hot keys (SURVEY §4).
   *
@@ -195,13 +195,6 @@ object Skew {
     ("v2", "2024-01-06 23:30:00", "2024-01-07 00:30:00"),
     ("v3", "2024-01-09 00:00:00", "2024-01-10 00:00:00"))
 
-  /** Memoized bloom bytes for [[bloomJoinRevenue]] — building the
-    * filter is a Spark job, and the DataFrame constructor must stay
-    * plan-only (Dedup.bloomCache discipline: explaining a query must
-    * not launch jobs). */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
   /** N8 `join_bloom_prefilter` — Bloom-filter semi-join reduction
     * (the "runtime row filter" / sideways-information-passing
     * mechanic, done explicitly): the selective side of a join
@@ -240,16 +233,18 @@ object Skew {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal => CatLit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val mtime = graft.Tables.mtime(spark, s"$dir/orders.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:$priority:$from:$to:$mtime"
-    val bloomBytes = bloomCache.computeIfAbsent(key, _ => {
+    // memoized bloom bytes: building the filter is a Spark job, and
+    // the DataFrame constructor must stay plan-only (explaining a
+    // query must not launch jobs)
+    val bloomBytes = Memo.value(spark, s"skew.bloom:$dir:$priority:$from:$to",
+        Seq(s"$dir/orders.parquet")) {
       val agg = GraftSqlBridge.column(
         BloomFilterAggregate(GraftSqlBridge.expression(col("o_orderkey")),
           CatLit(1000000L), CatLit(8L * 1024 * 1024), 0, 0)
           .toAggregateExpression())
       filteredOrders(spark, dir, priority, from, to)
         .agg(agg.as("bf")).head().getAs[Array[Byte]](0)
-    })
+    }
     require(bloomBytes != null, "filtered build side is empty")
     val mightContain = GraftSqlBridge.column(BloomFilterMightContain(
       CatLit.create(bloomBytes, org.apache.spark.sql.types.BinaryType),

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{Ckpt, Memo, Tables}
 import graft.Ckpt.CutOps
-import graft.Tables
 
 /** Text-analysis operators for training-data pipelines (SURVEY §2.I):
   * language ID, quality scoring, token counting, rolling-hash
@@ -19,6 +19,8 @@ import graft.Tables
 object TextAnalysis {
 
   private def nonEmptyToks: Column = filter(split(col("text"), " "), c => c =!= "")
+
+  private def docsSrc(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
   /** Marker stopword sets per language (tiny n-gram heuristic in the
     * spirit of a language-ID pass; the synthetic corpus is English-ish
@@ -712,30 +714,19 @@ object TextAnalysis {
     * the subtree that feeds BOTH the model-fit chain (per-language
     * counts, global type set, totals) and the scoring join, i.e. it
     * would otherwise re-run the char-explode + rollup for every
-    * branch of the plan. Same keyed-invalidation discipline as
-    * [[dsirFeatsCache]] (mtime in the value, superseded entries
-    * unpersisted). */
-  private val langIdDocBgCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
-  private def langIdDocBg(spark: SparkSession, dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/documents.parquet")
-    langIdDocBgCache.compute(
-      s"${System.identityHashCode(spark)}:$dir", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          // (doc, bigram) counts — one linear explode over positions
-          val bi = Tables.documents(spark, dir)
-            .select(col("doc_id"), col("lang"), col("text"),
-              explode(sequence(lit(1),
-                greatest(length(col("text")) - 1, lit(1)))).as("i"))
-            .select(col("doc_id"), col("lang"),
-              expr("substring(text, i, 2)").as("bg"))
-          (mtime, bi.groupBy(col("doc_id"), col("lang"), col("bg"))
-            .agg(count(lit(1)).as("c")).cache())
-        })._2
-  }
+    * branch of the plan. */
+  private def langIdDocBg(spark: SparkSession, dir: String): DataFrame =
+    Memo.cached(spark, s"text.langIdDocBg:$dir", docsSrc(dir)) {
+      // (doc, bigram) counts — one linear explode over positions
+      val bi = Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("text"),
+          explode(sequence(lit(1),
+            greatest(length(col("text")) - 1, lit(1)))).as("i"))
+        .select(col("doc_id"), col("lang"),
+          expr("substring(text, i, 2)").as("bg"))
+      bi.groupBy(col("doc_id"), col("lang"), col("bg"))
+        .agg(count(lit(1)).as("c"))
+    }
 
   def langIdTrained(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -919,31 +910,21 @@ object TextAnalysis {
     * broadcast weight table joined back, one per-doc agg. */
   /** Cached exploded bigram feature stream — the largest cached frame
     * in the module (one row per bigram occurrence corpus-wide), so it
-    * gets the full keyed-invalidation discipline (quantizedCache
-    * pattern): mtime-keyed, superseded entries unpersisted, never
-    * silently stale after an in-session rewrite of documents. */
-  private val dsirFeatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
-  private def dsirFeats(spark: SparkSession, dir: String): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/documents.parquet")
-    dsirFeatsCache.compute(
-      s"${System.identityHashCode(spark)}:$dir", (_, prev) =>
-        if (prev != null && prev._1 == mtime) prev
-        else {
-          if (prev != null) prev._2.unpersist()
-          val bigrams = Tables.documents(spark, dir)
-            .select(col("doc_id"), col("lang"), nonEmptyToks.as("w"))
-            .select(col("doc_id"), col("lang"),
-              explode(when(size(col("w")) >= 2,
-                  expr("transform(sequence(1, size(w) - 1), " +
-                    "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
-                .otherwise(array().cast("array<string>"))).as("bg"))
-          (mtime, bigrams.select(col("doc_id"), col("lang"),
-            pmod(conv(substring(md5(col("bg").cast("binary")), 1, 15), 16, 10)
-              .cast("long"), lit(DsirBuckets)).as("bucket")).cache())
-        })._2
-  }
+    * is a memoized cached plan, never silently stale after an
+    * in-session rewrite of documents. */
+  private def dsirFeats(spark: SparkSession, dir: String): DataFrame =
+    Memo.cached(spark, s"text.dsirFeats:$dir", docsSrc(dir)) {
+      val bigrams = Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), nonEmptyToks.as("w"))
+        .select(col("doc_id"), col("lang"),
+          explode(when(size(col("w")) >= 2,
+              expr("transform(sequence(1, size(w) - 1), " +
+                "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
+            .otherwise(array().cast("array<string>"))).as("bg"))
+      bigrams.select(col("doc_id"), col("lang"),
+        pmod(conv(substring(md5(col("bg").cast("binary")), 1, 15), 16, 10)
+          .cast("long"), lit(DsirBuckets)).as("bucket"))
+    }
 
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -1484,27 +1465,15 @@ object TextAnalysis {
     * encode, I31 eval, I32 roundtrip) — without the memo each of them
     * replays the full [[BpeTrainMerges]]-round training fold (one
     * word-frequency aggregate + one pair-count aggregate per round)
-    * from the parquet scan. Same keyed-invalidation discipline as
-    * [[langIdDocBgCache]] / Bucketing.statsStoreReg: mtime + checkpoint
-    * mode in the value token, superseded checkpoint blocks released. */
-  private val bpeTrainedReg = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (DataFrame, Seq[DataFrame]))]()
-
+    * from the parquet scan. Checkpointed like every memoized table:
+    * the checkpoint mode is part of the token, and the superseded
+    * dictionary and merge rows are released. */
   private def bpeTrained(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
-    val token =
-      s"${Tables.mtime(spark, s"$dir/documents.parquet")}:${graft.Ckpt.mode(spark)}"
-    bpeTrainedReg.compute(
-      s"${System.identityHashCode(spark)}:$dir", (_, prev) =>
-        if (prev != null && prev._1 == token) prev
-        else {
-          if (prev != null) {
-            graft.operators.Graph.releaseCheckpoint(prev._2._1)
-            prev._2._2.foreach(graft.operators.Graph.releaseCheckpoint)
-          }
-          (token, bpeTrainedBuild(spark, dir))
-        })._2
-  }
+      : (DataFrame, Seq[DataFrame]) =
+    Memo[(DataFrame, Seq[DataFrame])](spark, s"text.bpe:$dir", docsSrc(dir),
+        Ckpt.mode(spark)) {
+      case (dict, merges) => Ckpt.release(dict); merges.foreach(Ckpt.release)
+    }(bpeTrainedBuild(spark, dir))
 
   /** The training fold itself: returns (trained word dictionary after
     * [[BpeTrainMerges]] merges — token, freq, repr — and the per-merge
@@ -1536,7 +1505,7 @@ object TextAnalysis {
           .cutLineage()
         // next is materialized (cutLineage is eager): the superseded
         // round's dictionary blocks can go
-        graft.operators.Graph.releaseCheckpoint(rep)
+        Ckpt.release(rep)
         val row = best.select(lit(k).as("merge_rank"),
           expr("replace(s1, chr(2), '+')").as("left_sym"),
           expr("replace(s2, chr(2), '+')").as("right_sym"),
@@ -2385,12 +2354,6 @@ object TextAnalysis {
 
   private val TrScale = 1000000000L
 
-  /** Memoized converged TextRank table — the O1 iterative-op
-    * discipline (per-round localCheckpoint + release-on-supersede,
-    * mtime in the VALUE). */
-  private val trReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-
   /** I27 `text_textrank` — TextRank keyword extraction (Mihalcea &
     * Tarau, EMNLP'04): damped PageRank over the word CO-OCCURRENCE
     * graph (adjacent-token pairs, weights = corpus co-occurrence
@@ -2414,46 +2377,44 @@ object TextAnalysis {
     * sized rank tables (never broadcast, always keyed). */
   def textrank(spark: SparkSession, dir: String, iters: Int = 5,
                limit: Int = 50): DataFrame = {
-    val mtime = Tables.mtime(spark, s"$dir/documents.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:tr:$iters"
-    val ranksFinal = trReg.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else {
-        if (prev != null) Graph.releaseCheckpoint(prev._2)
-        val bi = Tables.documents(spark, dir)
-          .select(nonEmptyToks.as("w"))
-          .select(explode(expr(
-            """transform(slice(w, 1, size(w) - 1),
-              |  (x, i) -> struct(x AS t1, element_at(w, i + 2) AS t2))"""
-              .stripMargin)).as("p"))
-          .filter(col("p.t1") =!= col("p.t2"))
-          .select(least(col("p.t1"), col("p.t2")).as("a"),
-            greatest(col("p.t1"), col("p.t2")).as("b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
-        val edges = bi.select(col("a").as("src"), col("b").as("dst"), col("w"))
-          .union(bi.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        val wt = edges.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
-          .withColumnRenamed("src", "word")
-        val adj = edges.join(wt, edges("src") === wt("word"))
-          .select(col("src"), col("dst"), col("w"), col("wtot")).cache()
-        var ranks = wt.select(col("word"), lit(TrScale).as("rank"))
+    // the converged rank table is memoized like O1's: per-round
+    // checkpoints, the superseded table released on a rewrite
+    val ranksFinal = Memo.checkpointed(spark, s"text.tr:$dir:$iters",
+        docsSrc(dir)) {
+      val bi = Tables.documents(spark, dir)
+        .select(nonEmptyToks.as("w"))
+        .select(explode(expr(
+          """transform(slice(w, 1, size(w) - 1),
+            |  (x, i) -> struct(x AS t1, element_at(w, i + 2) AS t2))"""
+            .stripMargin)).as("p"))
+        .filter(col("p.t1") =!= col("p.t2"))
+        .select(least(col("p.t1"), col("p.t2")).as("a"),
+          greatest(col("p.t1"), col("p.t2")).as("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
+      val edges = bi.select(col("a").as("src"), col("b").as("dst"), col("w"))
+        .union(bi.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      val wt = edges.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
+        .withColumnRenamed("src", "word")
+      val adj = edges.join(wt, edges("src") === wt("word"))
+        .select(col("src"), col("dst"), col("w"), col("wtot")).cache()
+      var ranks = wt.select(col("word"), lit(TrScale).as("rank"))
+        .cutLineage()
+      for (_ <- 1 to iters) {
+        val prevR = ranks
+        ranks = adj.join(ranks, adj("src") === ranks("word"))
+          .groupBy(col("dst"))
+          // r·w widened through DECIMAL before the integral divide
+          .agg(sum(expr("(CAST(rank AS DECIMAL(38,0)) * w) div wtot"))
+            .as("s"))
+          .select(col("dst").as("word"),
+            (lit(15L * TrScale / 100) +
+              expr("(85 * CAST(s AS DECIMAL(38,0))) div 100")).as("rank"))
           .cutLineage()
-        for (_ <- 1 to iters) {
-          val prevR = ranks
-          ranks = adj.join(ranks, adj("src") === ranks("word"))
-            .groupBy(col("dst"))
-            // r·w widened through DECIMAL before the integral divide
-            .agg(sum(expr("(CAST(rank AS DECIMAL(38,0)) * w) div wtot"))
-              .as("s"))
-            .select(col("dst").as("word"),
-              (lit(15L * TrScale / 100) +
-                expr("(85 * CAST(s AS DECIMAL(38,0))) div 100")).as("rank"))
-            .cutLineage()
-          Graph.releaseCheckpoint(prevR)
-        }
-        adj.unpersist(blocking = false)
-        (mtime, ranks)
-      })._2
+        Ckpt.release(prevR)
+      }
+      adj.unpersist(blocking = false)
+      ranks
+    }
     ranksFinal.select(col("word"), col("rank").as("textrank_fp"))
       .orderBy(col("textrank_fp").desc, col("word"))
       .limit(limit)
@@ -2542,9 +2503,6 @@ object TextAnalysis {
   private[operators] final case class QcModel(serve: DataFrame,
       w: Array[Double], m: Array[Double], vocab: Array[String])
 
-  private val qcReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, QcModel)]()
-
   private def qcFeatureCols: Seq[(String, Column)] = {
     val nToks = size(nonEmptyToks).cast("double")
     Seq(
@@ -2568,106 +2526,102 @@ object TextAnalysis {
                                       lr: Double = QcLr,
                                       vocabK: Int = QcVocabK): QcModel = {
     import org.apache.spark.sql.types.DecimalType
-    val mtime = Tables.mtime(spark, s"$dir/documents.parquet")
-    val key = s"${System.identityHashCode(spark)}:$dir:qc:$epochs:$lr:$vocabK"
-    qcReg.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else {
-        if (prev != null) Graph.releaseCheckpoint(prev._2.serve)
-        val dec = DecimalType(30, 12)
-        val toks = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(nonEmptyToks).as("token"))
-        val cnt = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
-        val tot = cnt.agg(sum(col("c")).cast("double").as("n_corpus"))
-        val vocab = cnt.orderBy(col("c").desc, col("token")).limit(vocabK)
-          .select(col("token"), lit(1).as("inv"))
-        // teacher: I6's mean token surprisal per doc (I21 discipline)
-        val surp = toks.join(cnt, Seq("token"))
-          .crossJoin(broadcast(tot))
-          .select(col("doc_id"),
-            round(-log(col("c").cast("double") / col("n_corpus")), 9)
-              .cast(DecimalType(18, 9)).as("lt"))
-          .groupBy(col("doc_id"))
-          .agg(round(sum(col("lt")).cast("double") / count(lit(1)), 9).as("s"))
-        val th = surp.agg(
-          expr("percentile_disc(0.3) WITHIN GROUP (ORDER BY s)").as("t30"),
-          expr("percentile_disc(0.7) WITHIN GROUP (ORDER BY s)").as("t70"))
-        val vhit = toks.join(broadcast(vocab), Seq("token"), "left")
-          .groupBy(col("doc_id"))
-          .agg((sum(when(col("inv").isNotNull, 1).otherwise(0)).cast("double")
-            / count(lit(1)).cast("double")).as("x5"))
-        val feat = Tables.documents(spark, dir)
-          .select(col("doc_id") +: qcFeatureCols.map { case (n, c) => c.as(n) }: _*)
-          .join(vhit, Seq("doc_id"))
-          .join(surp, Seq("doc_id"))
-          .crossJoin(broadcast(th))
-          .select(col("doc_id"), col("x1"), col("x2"), col("x3"), col("x4"),
-            col("x5"),
-            when(col("s") <= col("t30"), 1)
-              .when(col("s") >= col("t70"), 0).as("y"))
-        val xs = (1 to 5).map(j => s"x$j")
-        // centering means over the TRAIN slice only (round-then-decimal)
-        val m = feat.filter(col("y").isNotNull)
-          .agg(count(lit(1)).as("ntr"), xs.map(x =>
-            sum(round(col(x), 12).cast(dec)).as(s"s_$x")): _*)
-          .select(xs.map(x =>
-            round(col(s"s_$x").cast("double") / col("ntr"), 12).as(s"m_$x")): _*)
-        val z = feat.crossJoin(broadcast(m))
-          .select(col("doc_id") +: col("y") +: xs.zipWithIndex.map {
-            case (x, i) =>
-              ((col(x) - col(s"m_$x")) * lit(QcScale)).as(s"z${i + 1}")
-          }: _*)
+    Memo[QcModel](spark, s"text.qc:$dir:$epochs:$lr:$vocabK", docsSrc(dir))(
+        m => Ckpt.release(m.serve)) {
+      val dec = DecimalType(30, 12)
+      val toks = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(nonEmptyToks).as("token"))
+      val cnt = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
+      val tot = cnt.agg(sum(col("c")).cast("double").as("n_corpus"))
+      val vocab = cnt.orderBy(col("c").desc, col("token")).limit(vocabK)
+        .select(col("token"), lit(1).as("inv"))
+      // teacher: I6's mean token surprisal per doc (I21 discipline)
+      val surp = toks.join(cnt, Seq("token"))
+        .crossJoin(broadcast(tot))
+        .select(col("doc_id"),
+          round(-log(col("c").cast("double") / col("n_corpus")), 9)
+            .cast(DecimalType(18, 9)).as("lt"))
+        .groupBy(col("doc_id"))
+        .agg(round(sum(col("lt")).cast("double") / count(lit(1)), 9).as("s"))
+      val th = surp.agg(
+        expr("percentile_disc(0.3) WITHIN GROUP (ORDER BY s)").as("t30"),
+        expr("percentile_disc(0.7) WITHIN GROUP (ORDER BY s)").as("t70"))
+      val vhit = toks.join(broadcast(vocab), Seq("token"), "left")
+        .groupBy(col("doc_id"))
+        .agg((sum(when(col("inv").isNotNull, 1).otherwise(0)).cast("double")
+          / count(lit(1)).cast("double")).as("x5"))
+      val feat = Tables.documents(spark, dir)
+        .select(col("doc_id") +: qcFeatureCols.map { case (n, c) => c.as(n) }: _*)
+        .join(vhit, Seq("doc_id"))
+        .join(surp, Seq("doc_id"))
+        .crossJoin(broadcast(th))
+        .select(col("doc_id"), col("x1"), col("x2"), col("x3"), col("x4"),
+          col("x5"),
+          when(col("s") <= col("t30"), 1)
+            .when(col("s") >= col("t70"), 0).as("y"))
+      val xs = (1 to 5).map(j => s"x$j")
+      // centering means over the TRAIN slice only (round-then-decimal)
+      val m = feat.filter(col("y").isNotNull)
+        .agg(count(lit(1)).as("ntr"), xs.map(x =>
+          sum(round(col(x), 12).cast(dec)).as(s"s_$x")): _*)
+        .select(xs.map(x =>
+          round(col(s"s_$x").cast("double") / col("ntr"), 12).as(s"m_$x")): _*)
+      val z = feat.crossJoin(broadcast(m))
+        .select(col("doc_id") +: col("y") +: xs.zipWithIndex.map {
+          case (x, i) =>
+            ((col(x) - col(s"m_$x")) * lit(QcScale)).as(s"z${i + 1}")
+        }: _*)
+        .cutLineage()
+      val ztr = z.filter(col("y").isNotNull)
+      def marginOf(w: String => Column): Column =
+        w("w0") + w("w1") * col("z1") + w("w2") * col("z2") +
+          w("w3") * col("z3") + w("w4") * col("z4") + w("w5") * col("z5")
+      def sigmoid(mg: Column): Column =
+        round(lit(0.5) * (lit(1.0) + mg / (lit(1.0) + abs(mg))), 12)
+      var w = spark.range(1)
+        .select((0 to 5).map(j => lit(0.0).as(s"w$j")): _*)
+        .cutLineage()
+      for (_ <- 1 to epochs) {
+        val joined = ztr.crossJoin(broadcast(w))
+        val g = joined
+          .select((sigmoid(marginOf(col)) - col("y")).as("d"),
+            col("z1"), col("z2"), col("z3"), col("z4"), col("z5"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("d"), 12).cast(dec)).as("s0"),
+            sum(round(col("d") * col("z1"), 12).cast(dec)).as("s1"),
+            sum(round(col("d") * col("z2"), 12).cast(dec)).as("s2"),
+            sum(round(col("d") * col("z3"), 12).cast(dec)).as("s3"),
+            sum(round(col("d") * col("z4"), 12).cast(dec)).as("s4"),
+            sum(round(col("d") * col("z5"), 12).cast(dec)).as("s5"))
+          .select(col("n") +: (0 to 5).map(j =>
+            col(s"s$j").cast("double").as(s"g$j")): _*)
+        val prevW = w
+        w = prevW.crossJoin(broadcast(g))
+          .select((0 to 5).map(j =>
+            round(col(s"w$j") - lit(lr) * col(s"g$j") / col("n"), 12)
+              .as(s"w$j")): _*)
           .cutLineage()
-        val ztr = z.filter(col("y").isNotNull)
-        def marginOf(w: String => Column): Column =
-          w("w0") + w("w1") * col("z1") + w("w2") * col("z2") +
-            w("w3") * col("z3") + w("w4") * col("z4") + w("w5") * col("z5")
-        def sigmoid(mg: Column): Column =
-          round(lit(0.5) * (lit(1.0) + mg / (lit(1.0) + abs(mg))), 12)
-        var w = spark.range(1)
-          .select((0 to 5).map(j => lit(0.0).as(s"w$j")): _*)
-          .cutLineage()
-        for (_ <- 1 to epochs) {
-          val joined = ztr.crossJoin(broadcast(w))
-          val g = joined
-            .select((sigmoid(marginOf(col)) - col("y")).as("d"),
-              col("z1"), col("z2"), col("z3"), col("z4"), col("z5"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("d"), 12).cast(dec)).as("s0"),
-              sum(round(col("d") * col("z1"), 12).cast(dec)).as("s1"),
-              sum(round(col("d") * col("z2"), 12).cast(dec)).as("s2"),
-              sum(round(col("d") * col("z3"), 12).cast(dec)).as("s3"),
-              sum(round(col("d") * col("z4"), 12).cast(dec)).as("s4"),
-              sum(round(col("d") * col("z5"), 12).cast(dec)).as("s5"))
-            .select(col("n") +: (0 to 5).map(j =>
-              col(s"s$j").cast("double").as(s"g$j")): _*)
-          val prevW = w
-          w = prevW.crossJoin(broadcast(g))
-            .select((0 to 5).map(j =>
-              round(col(s"w$j") - lit(lr) * col(s"g$j") / col("n"), 12)
-                .as(s"w$j")): _*)
-            .cutLineage()
-          Graph.releaseCheckpoint(prevW)
-        }
-        val p = sigmoid(marginOf(col))
-        val serve = z.crossJoin(broadcast(w))
-          .select(col("doc_id"), col("y"),
-            round(p, 6).as("score"),
-            when(p >= lit(0.5), 1).otherwise(0).as("pred"))
-          .cutLineage()
-        // distill the shippable model: three bounded driver fetches
-        // (1 row of weights, 1 row of means, K vocab tokens) — the
-        // artifacts per-row inference needs (qcInferCols)
-        val wRow = w.head()
-        val wArr = (0 to 5).map(wRow.getDouble).toArray
-        val mRow = m.head()
-        val mArr = (0 until 5).map(mRow.getDouble).toArray
-        val vocabArr = vocab.agg(collect_list(col("token")))
-          .head().getSeq[String](0).sorted.toArray
-        Graph.releaseCheckpoint(z)
-        Graph.releaseCheckpoint(w)
-        (mtime, QcModel(serve, wArr, mArr, vocabArr))
-      })._2
+        Ckpt.release(prevW)
+      }
+      val p = sigmoid(marginOf(col))
+      val serve = z.crossJoin(broadcast(w))
+        .select(col("doc_id"), col("y"),
+          round(p, 6).as("score"),
+          when(p >= lit(0.5), 1).otherwise(0).as("pred"))
+        .cutLineage()
+      // distill the shippable model: three bounded driver fetches
+      // (1 row of weights, 1 row of means, K vocab tokens) — the
+      // artifacts per-row inference needs (qcInferCols)
+      val wRow = w.head()
+      val wArr = (0 to 5).map(wRow.getDouble).toArray
+      val mRow = m.head()
+      val mArr = (0 until 5).map(mRow.getDouble).toArray
+      val vocabArr = vocab.agg(collect_list(col("token")))
+        .head().getSeq[String](0).sorted.toArray
+      Ckpt.release(z)
+      Ckpt.release(w)
+      QcModel(serve, wArr, mArr, vocabArr)
+    }
   }
 
   /** Shuffle-free inference (the payoff the I30 distillation buys):

@@ -14,7 +14,7 @@ class CheckpointSpec extends SparkSpecBase {
 
   // one op per verdict-named seam family
   private val pinned = Seq(
-    "graph_pagerank",         // Graph.memoCheckpoint per-round cuts
+    "graph_pagerank",         // Graph's memoized per-round cuts
     "graph_components",       // BFS/label-propagation union-of-leaves
     "dedup_clusters",         // Dedup candidate-pair seam + union-find
     "sim_index_refresh",      // frozen codebook + day-1 inverted file
