@@ -1,6 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Where an artifact ran and with which overrides, as the JSON
+    * fields every Bench artifact ends with. The strings come from the
+    * environment, so each one is escaped. */
+  def envFields(sfDir: String, cpus: String, master: String,
+      overrides: Seq[(String, String)]): String =
+    s""""sf":${Json.str(sfDir)},"cpus":$cpus,"master":${Json.str(master)},"conf":""" +
+      overrides.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -44,9 +52,7 @@ object Bench {
     // whipsaw — r12 verdict ask #2). Opt out with
     // SPARK_GRAFT_WARM_SHARED=0 to measure the cold build explicitly.
     if (sys.env.getOrElse("SPARK_GRAFT_WARM_SHARED", "1") == "1" &&
-        names.exists { case (n, _) =>
-          n.contains("graph_") || n.contains("copurchase") ||
-            n.contains("association_rules") })
+        names.exists { case (n, _) => SparkEntry.registry(n).graph })
       try operators.Graph.warmShared(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"[bench] warm: $e") }
     val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
@@ -160,15 +166,11 @@ object Bench {
     val cn = canary.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cu = canaryCpu.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cp = canaryPos.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def jstr(v: String): String =
-      "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    // every artifact says where it ran and with which overrides
-    val env = s""""cpus":$cpus,"master":${jstr(master)},"conf":""" +
-      overrides.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val env = envFields(sfDir, cpus, master, overrides)
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val totalNorm = if (normMed.nonEmpty) normMed.values.sum else 0.0
     val fullJson =
-      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"failed":$fl,"sf":"$sfDir",$env}"""
+      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"failed":$fl,$env}"""
     println(fullJson)
     // The driver's BENCH artifact preserves only a bounded stdout
     // TAIL — r07 lost 201 of 252 per-query medians to truncation,
@@ -187,7 +189,7 @@ object Bench {
     val slowest = results.toSeq.sortBy(-_._2._1).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + f"${v._1}%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"summary":"medians","total_median_sec":$total,"total_norm_sec":$totalNorm,"n_queries":${results.size},"slowest":$slowest,"canary":$cn,"canary_cpu":$cu,"canary_every":$CanaryEvery,"failed":$fl,"bench_out":"$outPath","sf":"$sfDir",$env}""")
+    println(s"""{"summary":"medians","total_median_sec":$total,"total_norm_sec":$totalNorm,"n_queries":${results.size},"slowest":$slowest,"canary":$cn,"canary_cpu":$cu,"canary_every":$CanaryEvery,"failed":$fl,"bench_out":${Json.str(outPath)},$env}""")
     spark.stop()
   }
 }

@@ -4,22 +4,21 @@ package graft
   * SparkEntry at a given SF dir — the per-query slice of Bench for
   * plan iteration. Usage:
   *   runMain graft.Timeit <sfDir> [-x] <queryName>...
-  * -x additionally prints the formatted executed plan.
+  * -x additionally prints the formatted executed plan. Conf overrides
+  * come from SPARK_GRAFT_CONF ("k=v;k=v", as in Bench): e.g.
+  * spark.sql.subexpressionElimination.enabled=false checks that a plan
+  * stays fast with codegen subexpression elimination off.
   */
 object Timeit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val explain = args.contains("-x")
-    val noCse = args.contains("-nocse")
-    val names = args.drop(1).filterNot(a => a == "-x" || a == "-nocse")
+    val names = args.drop(1).filterNot(_ == "-x")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     Engine.configure(spark)
     // same measurement-time conf overrides as Bench ("k=v;k=v")
     Engine.applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
-    // -nocse simulates degraded codegen subexpression elimination — a
-    // plan is only scale-robust if it stays fast with CSE off
-    if (noCse) spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen paths (same as Bench)
     spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Ckpt.CutOps
-import graft.{Memo, Tables}
+import graft.{Entry, Memo, Registered, Tables}
 
 /** Relational analytics over the TPC-H-ish tables (SURVEY.md section 2.K).
   *
@@ -21,7 +21,7 @@ import graft.{Memo, Tables}
   * ties cannot occur for binary doubles), summed exactly, and the
   * exact decimal sum is cast back to double. AVG = exact sum / count.
   */
-object Analytics {
+object Analytics extends Registered {
 
   /** Exact cross-engine sum of a double expression, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")
@@ -1725,122 +1725,102 @@ object Analytics {
        |FROM staged CROSS JOIN g""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k34_revenue_concentration" -> ((s, d) => k34RevenueConcentration(s, d)),
-    "param_k34_revenue_concentration" -> ((s, d) =>
-      k34RevenueConcentration(s, d, nBuckets = 4)),
-    "k33_revenue_bridge" -> ((s, d) => k33RevenueBridge(s, d)),
-    "param_k33_revenue_bridge" -> ((s, d) => k33RevenueBridge(s, d,
-      year0 = 1999, year1 = 2000)),
-    "k30_copurchase_pairs" -> ((s, d) => k30CopurchasePairs(s, d)),
-    "k31_association_rules" -> ((s, d) => k31AssociationRules(s, d)),
-    "param_k31_association_rules" -> ((s, d) => k31AssociationRules(s, d,
-      minSupport = 3, minConf = 0.1, limit = 30)),
-    "param_k30_copurchase_pairs" -> ((s, d) => k30CopurchasePairs(s, d,
-      minSupport = 3, limit = 20)),
-    "k29_rfm_segmentation" -> (rfmSegmentation _),
-    "k35_segment_migration" -> ((s: SparkSession, d: String) =>
-      segmentMigration(s, d)),
-    "param_k35_segment_migration" -> ((s: SparkSession, d: String) =>
-      segmentMigration(s, d, cutoff = "1997-01-01")),
-    "k23_product_profit" -> ((s, d) => k23ProductProfit(s, d)),
-    "k24_important_stock" -> ((s, d) => k24ImportantStock(s, d)),
-    "k25_part_promotion" -> ((s, d) => k25PartPromotion(s, d)),
-    "k26_waiting_suppliers" -> ((s, d) => k26WaitingSuppliers(s, d)),
-    "param_k23_product_profit" -> ((s, d) => k23ProductProfit(s, d,
-      nameSubstr = "rod", costFactor = 0.5)),
-    "param_k26_waiting_suppliers" -> ((s, d) => k26WaitingSuppliers(s, d,
-      lateDays = 180, limit = 20)),
-    "k22_market_share" -> ((s, d) => k22MarketShare(s, d)),
-    "k21_supplier_variety" -> ((s, d) => k21SupplierVariety(s, d)),
-    "k16_returned_item_report" -> ((s, d) => k16ReturnedItemReport(s, d)),
-    "k17_top_supplier_revenue" -> ((s, d) => k17TopSupplierRevenue(s, d)),
-    "k18_nation_trade_volume" -> ((s, d) => k18NationTradeVolume(s, d)),
-    "k19_idle_customers" -> ((s, d) => k19IdleCustomers(s, d)),
-    "k15_promo_revenue" -> ((s, d) => k15PromoRevenue(s, d)),
-    "k13_linestatus_priority" -> ((s, d) => k13LinestatusPriority(s, d)),
-    "k14_disjunctive_revenue" -> ((s, d) => k14DisjunctiveRevenue(s, d)),
-    "k12_min_cost_supplier" -> ((s, d) => k12MinCostSupplier(s, d)),
-    "k11_small_qty_revenue" -> ((s, d) => k11SmallQtyRevenue(s, d)),
-    "k10_running_revenue" -> (k10RunningRevenue _),
-    "k7_priority_semi_join" -> ((s, d) => k7PrioritySemiJoin(s, d)),
-    "k8_order_count_histogram" -> (k8OrderCountHistogram _),
-    "k9_large_volume_orders" -> ((s, d) => k9LargeVolumeOrders(s, d)),
-    "q1_pricing_summary" -> ((s, d) => q1PricingSummary(s, d)),
-    "q1_incremental" -> ((s, d) => q1Incremental(s, d)),
-    "q1_rollup" -> (q1Rollup _),
-    "k32_grouping_sets" -> (k32GroupingSets _),
-    "q1_pivot" -> (q1Pivot _),
-    "q3_shipping_priority" -> ((s, d) => q3ShippingPriority(s, d)),
-    "q5_join_chain" -> ((s, d) => q5JoinChain(s, d)),
-    "q6_forecast_revenue" -> ((s, d) => q6ForecastRevenue(s, d)),
-    "k5_segment_rollup" -> (k5SegmentRollup _),
-    "k6_top_customer_per_nation" -> (k6TopCustomerPerNation _),
+  val registry: Seq[(String, Entry)] = Seq(
+    "k34_revenue_concentration" -> Entry((s, d) => k34RevenueConcentration(s, d), k34Sql(),
+      shuffles = 5, // post-checkpoint: totals + cum window + gini + serve attaches, all over <= 10 rows
+      bnlj = true), // (b) 1-row threshold + totals + gini attaches onto <=10 rows
+    "param_k34_revenue_concentration" -> Entry((s, d) =>
+      k34RevenueConcentration(s, d, nBuckets = 4),
+      k34Sql(nBuckets = 4), shuffles = 5,
+      bnlj = true), // (b) 1-row threshold + totals + gini attaches onto <=10 rows
+    "k33_revenue_bridge" -> Entry((s, d) => k33RevenueBridge(s, d), k33Sql(), shuffles = 2),
+    "param_k33_revenue_bridge" -> Entry((s, d) => k33RevenueBridge(s, d,
+      year0 = 1999, year1 = 2000),
+      k33Sql(year0 = 1999, year1 = 2000), shuffles = 2),
+    "k30_copurchase_pairs" -> Entry((s, d) => k30CopurchasePairs(s, d), k30Sql(), graph = true,
+      shuffles = 2),
+    "k31_association_rules" -> Entry((s, d) => k31AssociationRules(s, d), k31Sql(), graph = true,
+      shuffles = 10, // K30's pair agg re-expanded per direction + part marginals + rollups
+      bnlj = true), // (b) 1-row order-total attach
+    "param_k31_association_rules" -> Entry((s, d) => k31AssociationRules(s, d,
+      minSupport = 3, minConf = 0.1, limit = 30),
+      k31Sql(minSupport = 3, minConf = 0.1, limit = 30), graph = true, shuffles = 10,
+      bnlj = true), // (b) 1-row order-total attach
+    "param_k30_copurchase_pairs" -> Entry((s, d) => k30CopurchasePairs(s, d,
+      minSupport = 3, limit = 20),
+      k30Sql(minSupport = 3, limit = 20), graph = true, shuffles = 2),
+    "k29_rfm_segmentation" -> Entry(rfmSegmentation _, rfmSegmentationSql,
+      shuffles = 3, // customer rollup + 1-row quartile agg + threshold attach
+      bnlj = true), // (b) 1-row quartile-threshold attach
+    "k35_segment_migration" -> Entry((s, d) => segmentMigration(s, d), segmentMigrationSql(),
+      shuffles = 4, // K29's 3 (both periods fold into ONE rollup/agg) + the bounded matrix serve sort
+      bnlj = true), // (b) K29's 1-row per-period quartile-threshold attach
+    "param_k35_segment_migration" -> Entry((s, d) => segmentMigration(s, d, cutoff = "1997-01-01"),
+      segmentMigrationSql(cutoff = "1997-01-01"), shuffles = 4,
+      bnlj = true), // (b) K29's 1-row per-period quartile-threshold attach
+    "k23_product_profit" -> Entry((s, d) => k23ProductProfit(s, d), k23Sql(),
+      shuffles = 3), // lineitem-orders SMJ + (nation,year) agg
+    "k24_important_stock" -> Entry((s, d) => k24ImportantStock(s, d), k24Sql(),
+      shuffles = 2, // per-part agg + 1-row total rollup
+      bnlj = true), // (b) nation stock total
+    "k25_part_promotion" -> Entry((s, d) => k25PartPromotion(s, d), k25Sql(),
+      shuffles = 2), // (part,supp) agg + qualifying-set distinct
+    "k26_waiting_suppliers" -> Entry((s, d) => k26WaitingSuppliers(s, d), k26Sql(),
+      shuffles = 4), // SMJ + per-order agg + supplier rollup
+    "param_k23_product_profit" -> Entry((s, d) => k23ProductProfit(s, d,
+      nameSubstr = "rod", costFactor = 0.5),
+      k23Sql(nameSubstr = "rod", costFactor = 0.5), shuffles = 3),
+    "param_k26_waiting_suppliers" -> Entry((s, d) => k26WaitingSuppliers(s, d,
+      lateDays = 180, limit = 20),
+      k26Sql(lateDays = 180, limit = 20), shuffles = 4),
+    "k22_market_share" -> Entry((s, d) => k22MarketShare(s, d), k22Sql(), shuffles = 1),
+    "k21_supplier_variety" -> Entry((s, d) => k21SupplierVariety(s, d), k21Sql(), shuffles = 2),
+    "k16_returned_item_report" -> Entry((s, d) => k16ReturnedItemReport(s, d), k16Sql(),
+      shuffles = 1),
+    "k17_top_supplier_revenue" -> Entry((s, d) => k17TopSupplierRevenue(s, d), k17Sql(),
+      shuffles = 1),
+    "k18_nation_trade_volume" -> Entry((s, d) => k18NationTradeVolume(s, d), k18Sql(), shuffles = 1),
+    "k19_idle_customers" -> Entry((s, d) => k19IdleCustomers(s, d), k19Sql(), shuffles = 2,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "k15_promo_revenue" -> Entry((s, d) => k15PromoRevenue(s, d), k15Sql(), shuffles = 1),
+    "k13_linestatus_priority" -> Entry((s, d) => k13LinestatusPriority(s, d), k13Sql(),
+      shuffles = 1),
+    "k14_disjunctive_revenue" -> Entry((s, d) => k14DisjunctiveRevenue(s, d), k14Sql(),
+      shuffles = 1),
+    "k12_min_cost_supplier" -> Entry((s, d) => k12MinCostSupplier(s, d), k12Sql(), shuffles = 2),
+    "k11_small_qty_revenue" -> Entry((s, d) => k11SmallQtyRevenue(s, d), k11Sql(), shuffles = 2),
+    "k10_running_revenue" -> Entry(k10RunningRevenue _, k10Sql, shuffles = 1),
+    "k7_priority_semi_join" -> Entry((s, d) => k7PrioritySemiJoin(s, d), k7Sql(), shuffles = 1),
+    "k8_order_count_histogram" -> Entry(k8OrderCountHistogram _, k8Sql, shuffles = 2),
+    "k9_large_volume_orders" -> Entry((s, d) => k9LargeVolumeOrders(s, d), k9Sql(), shuffles = 1),
+    "q1_pricing_summary" -> Entry((s, d) => q1PricingSummary(s, d), q1Sql(), shuffles = 1),
+    // incremental maintenance must reproduce the full recompute bit-for-bit
+    "q1_incremental" -> Entry((s, d) => q1Incremental(s, d), q1Sql(),
+      shuffles = 3), // base partials + tail partials + merge
+    "q1_rollup" -> Entry(q1Rollup _, q1RollupSql,
+      shuffles = 2), // q1-shaped partial agg + 6-row rollup
+    "k32_grouping_sets" -> Entry(k32GroupingSets _, k32GroupingSetsSql, shuffles = 2),
+    "q1_pivot" -> Entry(q1Pivot _, q1PivotSql,
+      shuffles = 2), // pivot = two-phase agg (pre-agg on both keys, then pivot)
+    "q3_shipping_priority" -> Entry((s, d) => q3ShippingPriority(s, d), q3Sql(), shuffles = 1),
+    "q5_join_chain" -> Entry((s, d) => q5JoinChain(s, d), q5Sql(), shuffles = 1),
+    "q6_forecast_revenue" -> Entry((s, d) => q6ForecastRevenue(s, d), q6Sql(), shuffles = 1),
+    "k5_segment_rollup" -> Entry(k5SegmentRollup _, k5Sql, shuffles = 1),
+    "k6_top_customer_per_nation" -> Entry(k6TopCustomerPerNation _, k6Sql, shuffles = 2),
     // non-default library-call instantiations, driver-checked against
     // the SAME parameterized SQL builders
-    "param_q6_forecast_revenue" -> ((s, d) => q6ForecastRevenue(s, d,
-      from = "1996-01-01", to = "1997-01-01",
-      discLo = 0.03, discHi = 0.05, qtyMax = 30)),
-    "param_q3_shipping_priority" -> ((s, d) => q3ShippingPriority(s, d,
-      segment = "MACHINERY", date = "1997-06-01", limit = 15)),
-    "param_k18_nation_trade_volume" -> ((s, d) => k18NationTradeVolume(s, d,
-      nationA = "NATION_1", nationB = "NATION_5")),
-    "param_k15_promo_revenue" -> ((s, d) => k15PromoRevenue(s, d,
-      from = "1996-07-01", to = "1996-08-01")))
-
-  val oracles: Map[String, String] = Map(
-    "k34_revenue_concentration" -> k34Sql(),
-    "param_k34_revenue_concentration" -> k34Sql(nBuckets = 4),
-    "k33_revenue_bridge" -> k33Sql(),
-    "param_k33_revenue_bridge" -> k33Sql(year0 = 1999, year1 = 2000),
-    "k30_copurchase_pairs" -> k30Sql(),
-    "k31_association_rules" -> k31Sql(),
-    "param_k31_association_rules" -> k31Sql(
-      minSupport = 3, minConf = 0.1, limit = 30),
-    "param_k30_copurchase_pairs" -> k30Sql(minSupport = 3, limit = 20),
-    "k29_rfm_segmentation" -> rfmSegmentationSql,
-    "k35_segment_migration" -> segmentMigrationSql(),
-    "param_k35_segment_migration" -> segmentMigrationSql(
-      cutoff = "1997-01-01"),
-    "k23_product_profit" -> k23Sql(),
-    "k24_important_stock" -> k24Sql(),
-    "k25_part_promotion" -> k25Sql(),
-    "k26_waiting_suppliers" -> k26Sql(),
-    "param_k23_product_profit" -> k23Sql(nameSubstr = "rod", costFactor = 0.5),
-    "param_k26_waiting_suppliers" -> k26Sql(lateDays = 180, limit = 20),
-    "k22_market_share" -> k22Sql(),
-    "k21_supplier_variety" -> k21Sql(),
-    "k16_returned_item_report" -> k16Sql(),
-    "k17_top_supplier_revenue" -> k17Sql(),
-    "k18_nation_trade_volume" -> k18Sql(),
-    "k19_idle_customers" -> k19Sql(),
-    "k15_promo_revenue" -> k15Sql(),
-    "k13_linestatus_priority" -> k13Sql(),
-    "k14_disjunctive_revenue" -> k14Sql(),
-    "k12_min_cost_supplier" -> k12Sql(),
-    "k11_small_qty_revenue" -> k11Sql(),
-    "k10_running_revenue" -> k10Sql,
-    "k7_priority_semi_join" -> k7Sql(),
-    "k8_order_count_histogram" -> k8Sql,
-    "k9_large_volume_orders" -> k9Sql(),
-    "q1_pricing_summary" -> q1Sql(),
-    // incremental maintenance must reproduce the full recompute bit-for-bit
-    "q1_incremental" -> q1Sql(),
-    "q1_rollup" -> q1RollupSql,
-    "k32_grouping_sets" -> k32GroupingSetsSql,
-    "q1_pivot" -> q1PivotSql,
-    "q3_shipping_priority" -> q3Sql(),
-    "q5_join_chain" -> q5Sql(),
-    "q6_forecast_revenue" -> q6Sql(),
-    "k5_segment_rollup" -> k5Sql,
-    "k6_top_customer_per_nation" -> k6Sql,
-    "param_q6_forecast_revenue" -> q6Sql(
+    "param_q6_forecast_revenue" -> Entry((s, d) => q6ForecastRevenue(s, d,
       from = "1996-01-01", to = "1997-01-01",
       discLo = 0.03, discHi = 0.05, qtyMax = 30),
-    "param_q3_shipping_priority" -> q3Sql(
+      q6Sql(from = "1996-01-01", to = "1997-01-01", discLo = 0.03, discHi = 0.05, qtyMax = 30),
+      shuffles = 1),
+    "param_q3_shipping_priority" -> Entry((s, d) => q3ShippingPriority(s, d,
       segment = "MACHINERY", date = "1997-06-01", limit = 15),
-    "param_k18_nation_trade_volume" -> k18Sql(
+      q3Sql(segment = "MACHINERY", date = "1997-06-01", limit = 15), shuffles = 1),
+    "param_k18_nation_trade_volume" -> Entry((s, d) => k18NationTradeVolume(s, d,
       nationA = "NATION_1", nationB = "NATION_5"),
-    "param_k15_promo_revenue" -> k15Sql(
-      from = "1996-07-01", to = "1996-08-01"))
+      k18Sql(nationA = "NATION_1", nationB = "NATION_5"), shuffles = 0),
+    "param_k15_promo_revenue" -> Entry((s, d) => k15PromoRevenue(s, d,
+      from = "1996-07-01", to = "1996-08-01"),
+      k15Sql(from = "1996-07-01", to = "1996-08-01"), shuffles = 1))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Memo, Tables}
+import graft.{Entry, Memo, Registered, Tables}
 
 /** Audit-log / metrics / DLQ set-algebra (reference: services/audit,
   * services/audit-list-api, libs/obs/metrics.ts, services/dlq-retry-api,
@@ -17,7 +17,7 @@ import graft.{Memo, Tables}
   * back to the main queue; reprocess replays raw objects with
   * contentType derived from the file extension.
   */
-object Audit {
+object Audit extends Registered {
 
   /** F1 `audit_partition_counts` — audit volume per physical
     * partition (tenant/date/hour). These three columns are the
@@ -1781,90 +1781,68 @@ object Audit {
           col("s.direction").as("direction"))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_mad_outliers" -> (madStreamBatch _),
-    "stream_changepoint" -> (changepointStreamBatch _),
-    "audit_k_anonymity" -> ((s: SparkSession, d: String) => kAnonymity(s, d)),
-    "param_k_anonymity" -> ((s: SparkSession, d: String) =>
-      kAnonymity(s, d, k = 12)),
-    "audit_constraint_check" -> (constraintCheck _),
-    "audit_mad_outliers" -> ((s: SparkSession, d: String) => madOutliers(s, d)),
-    "param_mad_outliers" -> ((s: SparkSession, d: String) =>
-      madOutliers(s, d, k = 2)),
-    "audit_psi_drift" -> ((s: SparkSession, d: String) => psiDrift(s, d)),
-    "param_psi_drift" -> ((s: SparkSession, d: String) =>
-      psiDrift(s, d, splitDate = "2024-01-11", bins = 4)),
-    "audit_changepoint" -> (changepoint _),
-    "audit_error_spikes" -> (errorSpikes _),
-    "audit_ewma_alarm" -> ((s: SparkSession, d: String) => ewmaAlarm(s, d)),
-    "audit_incidents" -> ((s: SparkSession, d: String) => incidents(s, d)),
-    "param_audit_incidents" -> ((s: SparkSession, d: String) =>
-      incidents(s, d, mergeGap = 0)),
-    "audit_alert_hysteresis" -> ((s: SparkSession, d: String) =>
-      alertHysteresis(s, d)),
-    "param_alert_hysteresis" -> ((s: SparkSession, d: String) =>
-      alertHysteresis(s, d, memory = 4, minN = 10L)),
-    "param_ewma_alarm" -> ((s: SparkSession, d: String) =>
-      ewmaAlarm(s, d, memory = 4)),
-    "audit_slo_burn" -> ((s: SparkSession, d: String) => sloBurn(s, d)),
-    "param_slo_burn" -> ((s: SparkSession, d: String) =>
-      sloBurn(s, d, budgetPer10k = 10L)),
-    "audit_retention_expiry" -> (retentionExpiry _),
-    "audit_purge_list" -> (purgeList _),
-    "reprocess_replay_set" -> (replaySet _),
-    "audit_heavy_hitters_sketch" -> (heavyHittersSketch _),
-    "audit_value_quantiles_sketch" -> (valueQuantilesSketch _),
-    "audit_latency_quantiles" -> (latencyQuantiles _),
-    "audit_exp_histogram" -> (expHistogram _),
-    "audit_distinct_users_sketch" -> (distinctUsersSketch _),
-    "audit_hll_sketch_store" -> (hllSketchStore _),
-    "audit_partition_counts" -> (partitionCounts _),
-    "audit_metric_counts" -> (metricCounts _),
-    "audit_health_report" -> ((s: SparkSession, d: String) => healthReport(s, d)),
-    "param_audit_health_report" -> ((s: SparkSession, d: String) =>
-      healthReport(s, d, windowMin = 1)), // clamps up to 5 (handler.ts:93)
-    "dlq_redrive_pending" -> (dlqRedrivePending _),
-    "dlq_redrive_batch" -> (dlqRedriveBatch _),
-    "audit_list_page" -> (auditListPage _),
-    "reprocess_content_type" -> (reprocessContentType _),
-    "audit_value_quantiles" -> (valueQuantiles _))
-
-  val oracles: Map[String, String] = Map(
-    "stream_mad_outliers" -> madOutliersSql(),
-    "stream_changepoint" -> changepointSql,
-    "audit_k_anonymity" -> kAnonymitySql(),
-    "param_k_anonymity" -> kAnonymitySql(k = 12),
-    "audit_constraint_check" -> constraintCheckSql,
-    "audit_mad_outliers" -> madOutliersSql(),
-    "param_mad_outliers" -> madOutliersSql(k = 2),
-    "audit_psi_drift" -> psiDriftSql(),
-    "param_psi_drift" -> psiDriftSql(splitDate = "2024-01-11", bins = 4),
-    "audit_changepoint" -> changepointSql,
-    "audit_error_spikes" -> errorSpikesSql,
-    "audit_ewma_alarm" -> ewmaAlarmSql(),
-    "audit_incidents" -> incidentsSql(),
-    "param_audit_incidents" -> incidentsSql(mergeGap = 0),
-    "audit_alert_hysteresis" -> alertHysteresisSql(),
-    "param_alert_hysteresis" -> alertHysteresisSql(memory = 4, minN = 10L),
-    "param_ewma_alarm" -> ewmaAlarmSql(memory = 4),
-    "audit_slo_burn" -> sloBurnSql(),
-    "param_slo_burn" -> sloBurnSql(budgetPer10k = 10L),
-    "audit_retention_expiry" -> retentionExpirySql,
-    "audit_purge_list" -> purgeListSql,
-    "reprocess_replay_set" -> replaySetSql,
-    "audit_heavy_hitters_sketch" -> heavyHittersSketchSql,
-    "audit_value_quantiles_sketch" -> valueQuantilesSketchSql,
-    "audit_latency_quantiles" -> latencyQuantilesSql,
-    "audit_exp_histogram" -> expHistogramSql,
-    "audit_distinct_users_sketch" -> distinctUsersSketchSql,
-    "audit_hll_sketch_store" -> hllSketchStoreSql,
-    "audit_partition_counts" -> partitionCountsSql,
-    "audit_metric_counts" -> metricCountsSql,
-    "audit_health_report" -> healthReportSql(),
-    "param_audit_health_report" -> healthReportSql(1),
-    "dlq_redrive_pending" -> dlqRedrivePendingSql,
-    "dlq_redrive_batch" -> dlqRedriveBatchSql,
-    "audit_list_page" -> auditListPageSql,
-    "reprocess_content_type" -> reprocessContentTypeSql,
-    "audit_value_quantiles" -> valueQuantilesSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "stream_mad_outliers" -> Entry(madStreamBatch _, madOutliersSql(), shuffles = 2),
+    "stream_changepoint" -> Entry(changepointStreamBatch _, changepointSql, shuffles = 2),
+    "audit_k_anonymity" -> Entry((s, d) => kAnonymity(s, d), kAnonymitySql(),
+      shuffles = 5), // QI rollup w/ two-level distinct (2) + class agg + onePart summary window + ordered serve
+    "param_k_anonymity" -> Entry((s, d) => kAnonymity(s, d, k = 12), kAnonymitySql(k = 12),
+      shuffles = 5),
+    "audit_constraint_check" -> Entry(constraintCheck _, constraintCheckSql,
+      shuffles = 4, // orders agg (distinct expand) + lineitem agg + RI semi join + attach
+      bnlj = true), // (b) three 1-row metric tables cross-attach
+    "audit_mad_outliers" -> Entry((s, d) => madOutliers(s, d), madOutliersSql(),
+      shuffles = 2), // hourly rollup + service window (one events scan)
+    "param_mad_outliers" -> Entry((s, d) => madOutliers(s, d, k = 2), madOutliersSql(k = 2),
+      shuffles = 2),
+    "audit_psi_drift" -> Entry((s, d) => psiDrift(s, d), psiDriftSql(),
+      shuffles = 3), // ref-edge agg + bucket counts + type window/rollup
+    "param_psi_drift" -> Entry((s, d) => psiDrift(s, d, splitDate = "2024-01-11", bins = 4),
+      psiDriftSql(splitDate = "2024-01-11", bins = 4), shuffles = 3),
+    "audit_changepoint" -> Entry(changepoint _, changepointSql, shuffles = 2),
+    "audit_error_spikes" -> Entry(errorSpikes _, errorSpikesSql,
+      shuffles = 2), // hourly rollup + per-tenant trail window
+    "audit_ewma_alarm" -> Entry((s, d) => ewmaAlarm(s, d), ewmaAlarmSql(), shuffles = 2),
+    "audit_incidents" -> Entry((s, d) => incidents(s, d), incidentsSql(), shuffles = 2),
+    "param_audit_incidents" -> Entry((s, d) => incidents(s, d, mergeGap = 0),
+      incidentsSql(mergeGap = 0), shuffles = 2),
+    "audit_alert_hysteresis" -> Entry((s, d) => alertHysteresis(s, d), alertHysteresisSql(),
+      shuffles = 2),
+    "param_alert_hysteresis" -> Entry((s, d) => alertHysteresis(s, d, memory = 4, minN = 10L),
+      alertHysteresisSql(memory = 4, minN = 10L), shuffles = 2),
+    "param_ewma_alarm" -> Entry((s, d) => ewmaAlarm(s, d, memory = 4), ewmaAlarmSql(memory = 4),
+      shuffles = 2),
+    "audit_slo_burn" -> Entry((s, d) => sloBurn(s, d), sloBurnSql(), shuffles = 2),
+    "param_slo_burn" -> Entry((s, d) => sloBurn(s, d, budgetPer10k = 10L),
+      sloBurnSql(budgetPer10k = 10L), shuffles = 2),
+    "audit_retention_expiry" -> Entry(retentionExpiry _, retentionExpirySql, shuffles = 2),
+    "audit_purge_list" -> Entry(purgeList _, purgeListSql,
+      shuffles = 1), // the complement slice of the same opState
+    "reprocess_replay_set" -> Entry(replaySet _, replaySetSql, shuffles = 2),
+    "audit_heavy_hitters_sketch" -> Entry(heavyHittersSketch _, heavyHittersSketchSql, shuffles = 2),
+    "audit_value_quantiles_sketch" -> Entry(valueQuantilesSketch _, valueQuantilesSketchSql,
+      shuffles = 1),
+    "audit_latency_quantiles" -> Entry(latencyQuantiles _, latencyQuantilesSql, shuffles = 1),
+    "audit_exp_histogram" -> Entry(expHistogram _, expHistogramSql,
+      shuffles = 2), // (service,bucket) agg + service window
+    "audit_distinct_users_sketch" -> Entry(distinctUsersSketch _, distinctUsersSketchSql,
+      shuffles = 2),
+    "audit_hll_sketch_store" -> Entry(hllSketchStore _, hllSketchStoreSql,
+      shuffles = 4), // day-sketch agg + tenant merge + exact twin + join
+    "audit_partition_counts" -> Entry(partitionCounts _, partitionCountsSql, shuffles = 2),
+    "audit_metric_counts" -> Entry(metricCounts _, metricCountsSql, shuffles = 1),
+    "audit_health_report" -> Entry((s, d) => healthReport(s, d), healthReportSql(),
+      shuffles = 5, // events rollup + tenant window/argmax + counter rollups (all tenant-keyed metadata after the first shuffle)
+      bnlj = true), // (b) 1-row window-end/horizon attach
+    // clamps up to 5 (handler.ts:93)
+    "param_audit_health_report" -> Entry((s, d) => healthReport(s, d, windowMin = 1),
+      healthReportSql(1), shuffles = 5,
+      bnlj = true), // (b) 1-row window-end/horizon attach
+    "dlq_redrive_pending" -> Entry(dlqRedrivePending _, dlqRedrivePendingSql, shuffles = 0),
+    "dlq_redrive_batch" -> Entry(dlqRedriveBatch _, dlqRedriveBatchSql, shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "audit_list_page" -> Entry(auditListPage _, auditListPageSql, shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "reprocess_content_type" -> Entry(reprocessContentType _, reprocessContentTypeSql, shuffles = 0),
+    "audit_value_quantiles" -> Entry(valueQuantiles _, valueQuantilesSql, shuffles = 1))
 }

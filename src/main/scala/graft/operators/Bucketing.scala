@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, Memo, Tables}
+import graft.{Ckpt, Entry, Memo, Registered, Tables}
 import graft.Ckpt.CutOps
 
 /** Bucketed/partitioned-layout helpers: the storage-side half of the
@@ -21,7 +21,7 @@ import graft.Ckpt.CutOps
   * tenant/date/hour S3 prefixes): time-ranged queries touch only the
   * matching partition directories.
   */
-object Bucketing {
+object Bucketing extends Registered {
 
   /** Write `df` as a bucketed+sorted table on `key`. Joins and
     * aggregations on `key` between tables bucketed with the same
@@ -853,42 +853,37 @@ object Bucketing {
        |GROUP BY 1, 2 ORDER BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "store_bloom_prune" -> ((s, d) => bloomPrune(s, d)),
-    "param_bloom_prune" -> ((s, d) => bloomPrune(s, d, bits = 512L)),
-    "store_schema_evolution" -> (schemaEvolution _),
-    "store_skew_report" -> ((s, d) => skewReport(s, d)),
-    "param_skew_report" -> ((s, d) => skewReport(s, d, hotFactor = 10)),
-    "store_equidepth_hist" -> ((s, d) => equidepthHist(s, d)),
-    "param_equidepth_hist" -> ((s, d) => equidepthHist(s, d, buckets = 4)),
-    "store_column_stats" -> (columnStats _),
-    "store_stats_incremental" -> ((s: org.apache.spark.sql.SparkSession,
-      d: String) => statsIncremental(s, d)),
-    "param_stats_incremental" -> ((s: org.apache.spark.sql.SparkSession,
-      d: String) => statsIncremental(s, d, partFmt = "yyyy")),
-    "store_partition_prune" -> (partitionPrune _),
-    "store_dpp_join" -> ((s: SparkSession, d: String) => dppJoin(s, d)),
-    "param_dpp_join" -> ((s: SparkSession, d: String) =>
-      dppJoin(s, d, factor = 1.1)),
-    "store_zorder_layout" -> (zorderLayout _),
-    "store_skipping_read" -> (skippingRead _),
-    "store_compaction_plan" -> (compactionPlan _))
-
-  val oracles: Map[String, String] = Map(
-    "store_bloom_prune" -> bloomPruneSql(),
-    "param_bloom_prune" -> bloomPruneSql(bits = 512L),
-    "store_schema_evolution" -> schemaEvolutionSql,
-    "store_skew_report" -> skewReportSql(),
-    "param_skew_report" -> skewReportSql(hotFactor = 10),
-    "store_equidepth_hist" -> equidepthHistSql(),
-    "param_equidepth_hist" -> equidepthHistSql(buckets = 4),
-    "store_column_stats" -> columnStatsSql,
-    "store_stats_incremental" -> statsIncrementalSql(),
-    "param_stats_incremental" -> statsIncrementalSql(partFmt = "yyyy"),
-    "store_partition_prune" -> partitionPruneSql,
-    "store_dpp_join" -> dppJoinSql(),
-    "param_dpp_join" -> dppJoinSql(factor = 1.1),
-    "store_zorder_layout" -> zorderLayoutSql,
-    "store_skipping_read" -> skippingReadSql,
-    "store_compaction_plan" -> compactionPlanSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    // eval over 6 derived relations (files/bits/probes/ppos/bm/tru):
+    // only 3 exchanges carry event-scale data (file rollup, set-bit
+    // distinct, true-hit distinct); the rest are probe-scale
+    "store_bloom_prune" -> Entry((s, d) => bloomPrune(s, d), bloomPruneSql(), shuffles = 10,
+      bnlj = true), // (b) bounded probe x file-manifest broadcast grid (75 x files)
+    "param_bloom_prune" -> Entry((s, d) => bloomPrune(s, d, bits = 512L),
+      bloomPruneSql(bits = 512L), shuffles = 10,
+      bnlj = true), // (b) bounded probe x file-manifest broadcast grid (75 x files)
+    "store_schema_evolution" -> Entry(schemaEvolution _, schemaEvolutionSql, shuffles = 2),
+    "store_skew_report" -> Entry((s, d) => skewReport(s, d), skewReportSql(),
+      shuffles = 3), // key rollup + stacked onePart stat windows + ordered serve
+    "param_skew_report" -> Entry((s, d) => skewReport(s, d, hotFactor = 10),
+      skewReportSql(hotFactor = 10), shuffles = 3),
+    "store_equidepth_hist" -> Entry((s, d) => equidepthHist(s, d), equidepthHistSql(),
+      shuffles = 4), // bin agg + stacked cumsum/total windows + bucket agg + ordered serve
+    "param_equidepth_hist" -> Entry((s, d) => equidepthHist(s, d, buckets = 4),
+      equidepthHistSql(buckets = 4), shuffles = 4),
+    "store_column_stats" -> Entry(columnStats _, columnStatsSql,
+      shuffles = 22), // 2 per profiled column (exact-NDV partial+final); branches exchange 1-row partials only
+    "store_stats_incremental" -> Entry((s, d) => statsIncremental(s, d), statsIncrementalSql(),
+      shuffles = 4), // store-merge agg + exact-NDV expand (partial/final over 4-col distinct) + attach; store itself is a checkpoint leaf
+    "param_stats_incremental" -> Entry((s, d) => statsIncremental(s, d, partFmt = "yyyy"),
+      statsIncrementalSql(partFmt = "yyyy"), shuffles = 4),
+    "store_partition_prune" -> Entry(partitionPrune _, partitionPruneSql, shuffles = 1),
+    "store_dpp_join" -> Entry((s, d) => dppJoin(s, d), dppJoinSql(), shuffles = 2),
+    "param_dpp_join" -> Entry((s, d) => dppJoin(s, d, factor = 1.1), dppJoinSql(factor = 1.1),
+      shuffles = 2),
+    "store_zorder_layout" -> Entry(zorderLayout _, zorderLayoutSql, shuffles = 2),
+    "store_skipping_read" -> Entry(skippingRead _, skippingReadSql,
+      shuffles = 1), // manifest rollup; file consult broadcasts
+    "store_compaction_plan" -> Entry(compactionPlan _, compactionPlanSql,
+      shuffles = 3)) // manifest agg + metadata-only global cumsum + bin agg
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CutOps
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 
 /** Training-corpus preparation operators (SURVEY §2.M): the steps
   * between a deduplicated document set and model-ready sequences —
@@ -19,7 +19,7 @@ import graft.Tables
   * compare of lowercase hex is identical in both engines), and all
   * arithmetic is integer.
   */
-object Corpus {
+object Corpus extends Registered {
 
   private def nonEmptyToks: Column = filter(split(col("text"), " "), c => c =!= "")
 
@@ -1811,83 +1811,74 @@ object Corpus {
        |JOIN pii p USING (source) JOIN sec s USING (source)
        |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_corpus_datasheet" -> (corpusDatasheet _),
-    "pipeline_corpus_release_diff" -> ((s, d) => releaseDiff(s, d)),
-    "param_corpus_release_diff" -> ((s, d) => releaseDiff(s, d, editMod = 3)),
-    "corpus_secret_scan" -> ((s, d) => secretScan(s, d)),
-    "param_secret_scan" -> ((s, d) => secretScan(s, d, hexLen = 32)),
-    "corpus_cluster_sample" -> ((s, d) => clusterSample(s, d)),
-    "param_cluster_sample" -> ((s, d) => clusterSample(s, d, cap = 3)),
-    "pipeline_corpus_refresh" -> ((s, d) => corpusRefresh(s, d)),
-    "param_corpus_refresh" -> ((s, d) =>
-      corpusRefresh(s, d, minNovelty = 0.8, minChars = 120L)),
-    "pipeline_corpus_refresh_trained" -> ((s, d) =>
-      corpusRefreshTrained(s, d)),
-    "param_corpus_refresh_trained" -> ((s, d) =>
-      corpusRefreshTrained(s, d, minNovelty = 0.8)),
-    "corpus_contrastive_triplets" -> ((s, d) => contrastiveTriplets(s, d)),
-    "param_contrastive_triplets" -> ((s, d) =>
-      contrastiveTriplets(s, d, t = 0.7, bucketChars = 32)),
-    "corpus_weighted_sample" -> ((s, d) => weightedSample(s, d)),
-    "param_weighted_sample" -> ((s, d) => weightedSample(s, d, k = 50)),
-    "corpus_length_buckets" -> ((s, d) => lengthBuckets(s, d)),
-    "corpus_token_budget" -> (tokenBudget _),
-    "corpus_quality_funnel" -> (qualityFunnel _),
-    "pipeline_corpus_prep" -> (corpusPrep _),
-    "corpus_shuffle_shards" -> (shuffleShards _),
-    "corpus_split_leakfree" -> (splitLeakFree _),
-    "corpus_resample" -> (resample _),
-    "corpus_pii_redact" -> (piiRedact _),
-    "corpus_chunk" -> (chunk _),
-    "corpus_sample_stratified" -> (sampleStratified _),
-    "corpus_pack" -> (pack _),
-    "corpus_balanced_shards" -> ((s: SparkSession, d: String) =>
-      balancedShards(s, d)),
-    "param_balanced_shards" -> ((s: SparkSession, d: String) =>
-      balancedShards(s, d, nShards = 5L)),
-    "corpus_source_cap" -> (sourceCap _),
-    "corpus_mix_weights" -> (mixWeights _),
-    "corpus_temperature_mix" -> (temperatureMix _),
-    "corpus_mix_doremi" -> ((s, d) => mixDoremi(s, d)),
-    "param_mix_doremi" -> ((s, d) => mixDoremi(s, d, eta = 0.25, steps = 4)))
-
-  val oracles: Map[String, String] = Map(
-    "pipeline_corpus_datasheet" -> corpusDatasheetSql,
-    "pipeline_corpus_release_diff" -> releaseDiffSql(),
-    "param_corpus_release_diff" -> releaseDiffSql(editMod = 3),
-    "corpus_secret_scan" -> secretScanSql(),
-    "param_secret_scan" -> secretScanSql(hexLen = 32),
-    "corpus_cluster_sample" -> clusterSampleSql(),
-    "param_cluster_sample" -> clusterSampleSql(cap = 3),
-    "pipeline_corpus_refresh" -> corpusRefreshSql(),
-    "param_corpus_refresh" ->
-      corpusRefreshSql(minNovelty = 0.8, minChars = 120L),
-    "pipeline_corpus_refresh_trained" -> corpusRefreshTrainedSql(),
-    "param_corpus_refresh_trained" ->
-      corpusRefreshTrainedSql(minNovelty = 0.8),
-    "corpus_contrastive_triplets" -> contrastiveTripletsSql(),
-    "param_contrastive_triplets" ->
-      contrastiveTripletsSql(t = 0.7, bucketChars = 32),
-    "corpus_weighted_sample" -> weightedSampleSql(),
-    "param_weighted_sample" -> weightedSampleSql(k = 50),
-    "corpus_length_buckets" -> lengthBucketsSql(),
-    "corpus_token_budget" -> tokenBudgetSql,
-    "corpus_quality_funnel" -> qualityFunnelSql,
+  val registry: Seq[(String, Entry)] = Seq(
+    // five source-keyed rollups (base/top/pii/sec/dup) + the url
+    // group-size rollup + two source-dim joins + ordered serve — each
+    // input scan is one pass, joins are on the bounded source dim
+    "pipeline_corpus_datasheet" -> Entry(corpusDatasheet _, corpusDatasheetSql, shuffles = 8),
+    "pipeline_corpus_release_diff" -> Entry((s, d) => releaseDiff(s, d), releaseDiffSql(),
+      shuffles = 7), // two G1 hash rollups + keeper attaches + full-outer class zip + source rollup
+    "param_corpus_release_diff" -> Entry((s, d) => releaseDiff(s, d, editMod = 3),
+      releaseDiffSql(editMod = 3), shuffles = 7),
+    "corpus_secret_scan" -> Entry((s, d) => secretScan(s, d), secretScanSql(), shuffles = 2),
+    "param_secret_scan" -> Entry((s, d) => secretScan(s, d, hexLen = 32),
+      secretScanSql(hexLen = 32), shuffles = 2),
+    "corpus_cluster_sample" -> Entry((s, d) => clusterSample(s, d), clusterSampleSql(),
+      shuffles = 4), // cluster window + sizes rollup + join + ordered serve over the checkpointed assignment leaf
+    "param_cluster_sample" -> Entry((s, d) => clusterSample(s, d, cap = 3),
+      clusterSampleSql(cap = 3), shuffles = 4),
+    "pipeline_corpus_refresh" -> Entry((s, d) => corpusRefresh(s, d), corpusRefreshSql(),
+      shuffles = 5), // two shingle distincts + shingle join + delta rollup + hash/doc attaches
+    "param_corpus_refresh" -> Entry((s, d) =>
+      corpusRefresh(s, d, minNovelty = 0.8, minChars = 120L),
+      corpusRefreshSql(minNovelty = 0.8, minChars = 120L), shuffles = 5),
+    "pipeline_corpus_refresh_trained" -> Entry((s, d) => corpusRefreshTrained(s, d),
+      corpusRefreshTrainedSql(),
+      shuffles = 5), // P4's skeleton; the trained gate is a per-row expression (zero classifier-side exchanges)
+    "param_corpus_refresh_trained" -> Entry((s, d) => corpusRefreshTrained(s, d, minNovelty = 0.8),
+      corpusRefreshTrainedSql(minNovelty = 0.8), shuffles = 5),
+    "corpus_contrastive_triplets" -> Entry((s, d) => contrastiveTriplets(s, d),
+      contrastiveTripletsSql(),
+      shuffles = 5), // G19 positive chain (shingle-keyed) + bucket-window negatives + pair anti-join
+    "param_contrastive_triplets" -> Entry((s, d) =>
+      contrastiveTriplets(s, d, t = 0.7, bucketChars = 32),
+      contrastiveTripletsSql(t = 0.7, bucketChars = 32), shuffles = 5),
+    "corpus_weighted_sample" -> Entry((s, d) => weightedSample(s, d), weightedSampleSql(),
+      shuffles = 2),
+    "param_weighted_sample" -> Entry((s, d) => weightedSample(s, d, k = 50),
+      weightedSampleSql(k = 50), shuffles = 2),
+    "corpus_length_buckets" -> Entry((s, d) => lengthBuckets(s, d), lengthBucketsSql(),
+      shuffles = 2,
+      bnlj = true), // (b) 1-row naive-baseline attach
+    "corpus_token_budget" -> Entry(tokenBudget _, tokenBudgetSql, shuffles = 3),
+    "corpus_quality_funnel" -> Entry(qualityFunnel _, qualityFunnelSql, shuffles = 0),
     // the fused chain must equal the stage-by-stage CTE composition
-    "pipeline_corpus_prep" -> corpusPrepSql,
-    "corpus_shuffle_shards" -> shuffleShardsSql,
-    "corpus_split_leakfree" -> splitLeakFreeSql,
-    "corpus_resample" -> resampleSql,
-    "corpus_source_cap" -> sourceCapSql,
-    "corpus_mix_weights" -> mixWeightsSql,
-    "corpus_temperature_mix" -> temperatureMixSql,
-    "corpus_pii_redact" -> piiRedactSql,
-    "corpus_chunk" -> chunkSql,
-    "corpus_sample_stratified" -> sampleStratifiedSql,
-    "corpus_pack" -> packSql,
-    "corpus_balanced_shards" -> balancedShardsSql(),
-    "param_balanced_shards" -> balancedShardsSql(nShards = 5L),
-    "corpus_mix_doremi" -> mixDoremiSql(),
-    "param_mix_doremi" -> mixDoremiSql(eta = 0.25, steps = 4))
+    "pipeline_corpus_prep" -> Entry(corpusPrep _, corpusPrepSql,
+      shuffles = 8), // fp-window dedup + shingle distinct/join/anti (all doc- or shingle-keyed) + pack's block-total scan; two corpus text scans (chain + shingles)
+    "corpus_shuffle_shards" -> Entry(shuffleShards _, shuffleShardsSql, shuffles = 1),
+    "corpus_split_leakfree" -> Entry(splitLeakFree _, splitLeakFreeSql, shuffles = 2),
+    "corpus_resample" -> Entry(resample _, resampleSql, shuffles = 3,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "corpus_pii_redact" -> Entry(piiRedact _, piiRedactSql, shuffles = 0),
+    "corpus_chunk" -> Entry(chunk _, chunkSql, shuffles = 0),
+    "corpus_sample_stratified" -> Entry(sampleStratified _, sampleStratifiedSql, shuffles = 0),
+    "corpus_pack" -> Entry(pack _, packSql, shuffles = 3),
+    "corpus_balanced_shards" -> Entry((s, d) => balancedShards(s, d), balancedShardsSql(),
+      shuffles = 7, // doc-keyed bucket join + shard rollup; rest bounded bucket/offset metadata exchanges
+      bnlj = true), // (b) 1-row token-total attach
+    "param_balanced_shards" -> Entry((s, d) => balancedShards(s, d, nShards = 5L),
+      balancedShardsSql(nShards = 5L), shuffles = 7,
+      bnlj = true), // (b) 1-row token-total attach
+    "corpus_source_cap" -> Entry(sourceCap _, sourceCapSql, shuffles = 1),
+    "corpus_mix_weights" -> Entry(mixWeights _, mixWeightsSql, shuffles = 3,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "corpus_temperature_mix" -> Entry(temperatureMix _, temperatureMixSql,
+      shuffles = 4, // lang agg + total + z + attach
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "corpus_mix_doremi" -> Entry((s, d) => mixDoremi(s, d), mixDoremiSql(),
+      shuffles = 15, // two LM scoring chains (I6+I12 shapes) + 8 MW window rounds, each a k-row (bounded source dim) exchange
+      bnlj = true), // (b) 1-row corpus-total/vocab-size attaches; MW rounds are windows over the bounded source dim
+    "param_mix_doremi" -> Entry((s, d) => mixDoremi(s, d, eta = 0.25, steps = 4),
+      mixDoremiSql(eta = 0.25, steps = 4), shuffles = 15,
+      bnlj = true)) // (b) 1-row corpus-total/vocab-size attaches; MW rounds are windows over the bounded source dim
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Ckpt.CutOps
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 
 /** Event-stream operators, batch form (SURVEY §2.L). Each has a
   * Structured Streaming twin in graft.streaming.StreamOps verified
@@ -18,7 +18,7 @@ import graft.Tables
   * lag+cumsum-over-window pattern (single sort within partitions, no
   * driver state).
   */
-object EventStream {
+object EventStream extends Registered {
 
   /** L1 `stream_tumbling_agg` — 1-hour tumbling windows per event
     * type. */
@@ -2004,128 +2004,93 @@ object EventStream {
         .orderBy(col("cur"), col("nxt"))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_funnel" -> (funnelStreamBatch _),
-    "stream_markov" -> (markovStreamBatch _),
-    "events_seasonal_decompose" -> ((s: SparkSession, d: String) =>
-      seasonalDecompose(s, d)),
-    "events_seasonal_anomaly" -> ((s: SparkSession, d: String) =>
-      seasonalAnomaly(s, d)),
-    "events_did" -> ((s: SparkSession, d: String) => didAnalysis(s, d)),
-    "param_events_did" -> ((s: SparkSession, d: String) =>
-      didAnalysis(s, d, salt = "exp2", cutoff = "2024-01-20")),
-    "param_seasonal_anomaly" -> ((s: SparkSession, d: String) =>
-      seasonalAnomaly(s, d, k = 2.0)),
-    "param_seasonal_decompose" -> ((s: SparkSession, d: String) =>
-      seasonalDecompose(s, d, eventType = Some("purchase"))),
-    "events_markov" -> (markovTransitions _),
-    "events_survival" -> ((s: SparkSession, d: String) => survival(s, d)),
-    "events_burstiness" -> (burstiness _),
-    "events_feature_snapshot" -> (featureSnapshot _),
-    "param_survival" -> ((s: SparkSession, d: String) =>
-      survival(s, d, censorDays = 7)),
-    "events_cumulative_users" -> (cumulativeUsers _),
-    "events_stickiness" -> ((s: SparkSession, d: String) => stickiness(s, d)),
-    "param_events_stickiness" -> ((s: SparkSession, d: String) =>
-      stickiness(s, d, windowDays = 28)),
-    "events_attribution" -> ((s: SparkSession, d: String) =>
-      attribution(s, d)),
-    "param_events_attribution" -> ((s: SparkSession, d: String) =>
-      attribution(s, d, lookbackDays = 1)),
-    "events_attribution_decay" -> ((s: SparkSession, d: String) =>
-      attributionDecay(s, d)),
-    "events_ab_test" -> ((s: SparkSession, d: String) => abTest(s, d)),
-    "events_ab_cuped" -> ((s: SparkSession, d: String) => abCuped(s, d)),
-    "events_ab_sprt" -> ((s: SparkSession, d: String) => abSprt(s, d)),
-    "param_ab_sprt" -> ((s: SparkSession, d: String) => abSprt(s, d,
-      salt = "exp2", minValue = 150.0, p0 = 0.03, p1 = 0.06)),
-    "param_ab_cuped" -> ((s: SparkSession, d: String) =>
-      abCuped(s, d, salt = "exp2", split = "2024-01-10 00:00:00")),
-    "param_ab_test" -> ((s: SparkSession, d: String) =>
-      abTest(s, d, salt = "exp2", minValue = 150.0)),
-    "param_attribution_decay" -> ((s: SparkSession, d: String) =>
-      attributionDecay(s, d, lookbackDays = 2, halflifeHours = 6)),
-    "events_seasonal_forecast" -> ((s: SparkSession, d: String) =>
-      seasonalForecast(s, d)),
-    "param_seasonal_forecast" -> ((s: SparkSession, d: String) =>
-      seasonalForecast(s, d, cutoff = "2024-01-15", eventType = "view")),
-    "events_forecast_backtest" -> ((s: SparkSession, d: String) =>
-      forecastBacktest(s, d)),
-    "param_forecast_backtest" -> ((s: SparkSession, d: String) =>
-      forecastBacktest(s, d, eventType = "view", minTrainDays = 14)),
-    "events_funnel" -> ((s: SparkSession, d: String) => funnel(s, d)),
-    "events_session_paths" -> ((s: SparkSession, d: String) =>
-      sessionPaths(s, d)),
-    "param_session_paths" -> ((s: SparkSession, d: String) =>
-      sessionPaths(s, d, pathLen = 3, limit = 10)),
-    "param_events_funnel" -> ((s: SparkSession, d: String) =>
-      funnel(s, d, horizonMin = Some(1440))),
-    "events_cohort_retention" -> (cohortRetention _),
-    "stream_watermark_audit" -> ((s: SparkSession, d: String) =>
-      watermarkAudit(s, d)),
-    "param_watermark_audit" -> ((s: SparkSession, d: String) =>
-      watermarkAudit(s, d, latenessMin = 5)),
-    "stream_hopping_agg" -> (hoppingAgg _),
-    "stream_interval_join_outer" -> (intervalJoinOuter _),
-    "stream_session_window" -> (sessionWindowAgg _),
-    "stream_enriched_rollup" -> (enrichedRollup _),
-    "stream_tumbling_agg" -> (tumblingAgg _),
-    "stream_sessionize" -> (sessionize _),
-    "stream_event_dedup" -> (eventDedup _),
-    "stream_user_latest_state" -> (userLatestState _),
-    "stream_interval_join" -> (intervalJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "events_markov" -> markovTransitionsSql,
-    "events_cumulative_users" -> cumulativeUsersSql,
-    "events_stickiness" -> stickinessSql(),
-    "param_events_stickiness" -> stickinessSql(windowDays = 28),
-    "events_attribution" -> attributionSql(),
-    "param_events_attribution" -> attributionSql(lookbackDays = 1),
-    "events_attribution_decay" -> attributionDecaySql(),
-    "events_ab_test" -> abTestSql(),
-    "events_ab_cuped" -> abCupedSql(),
-    "events_ab_sprt" -> abSprtSql(),
-    "param_ab_sprt" -> abSprtSql(salt = "exp2", minValue = 150.0,
-      p0 = 0.03, p1 = 0.06),
-    "param_ab_cuped" -> abCupedSql(salt = "exp2",
-      split = "2024-01-10 00:00:00"),
-    "param_ab_test" -> abTestSql(salt = "exp2", minValue = 150.0),
-    "param_attribution_decay" -> attributionDecaySql(
-      lookbackDays = 2, halflifeHours = 6),
-    "events_seasonal_forecast" -> seasonalForecastSql(),
-    "events_forecast_backtest" -> forecastBacktestSql(),
-    "param_forecast_backtest" -> forecastBacktestSql(
-      eventType = "view", minTrainDays = 14),
-    "events_seasonal_decompose" -> seasonalDecomposeSql(),
-    "events_seasonal_anomaly" -> seasonalAnomalySql(),
-    "events_did" -> didAnalysisSql(),
-    "param_events_did" -> didAnalysisSql(salt = "exp2", cutoff = "2024-01-20"),
-    "param_seasonal_anomaly" -> seasonalAnomalySql(k = 2.0),
-    "param_seasonal_decompose" -> seasonalDecomposeSql(
-      eventType = Some("purchase")),
-    "events_survival" -> survivalSql(),
-    "events_burstiness" -> burstinessSql,
-    "events_feature_snapshot" -> featureSnapshotSql,
-    "param_survival" -> survivalSql(censorDays = 7),
-    "param_seasonal_forecast" -> seasonalForecastSql(
-      cutoff = "2024-01-15", eventType = "view"),
-    "events_funnel" -> funnelSql(),
-    "stream_funnel" -> funnelSql(),
-    "stream_markov" -> markovTransitionsSql,
-    "events_session_paths" -> sessionPathsSql(),
-    "param_session_paths" -> sessionPathsSql(pathLen = 3, limit = 10),
-    "param_events_funnel" -> funnelSql(horizonMin = Some(1440)),
-    "events_cohort_retention" -> cohortRetentionSql,
-    "stream_watermark_audit" -> watermarkAuditSql(),
-    "param_watermark_audit" -> watermarkAuditSql(latenessMin = 5),
-    "stream_hopping_agg" -> hoppingAggSql,
-    "stream_interval_join_outer" -> intervalJoinOuterSql,
-    "stream_session_window" -> sessionWindowAggSql,
-    "stream_enriched_rollup" -> enrichedRollupSql,
-    "stream_tumbling_agg" -> tumblingAggSql,
-    "stream_sessionize" -> sessionizeSql,
-    "stream_event_dedup" -> eventDedupSql,
-    "stream_user_latest_state" -> userLatestStateSql,
-    "stream_interval_join" -> intervalJoinSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "stream_funnel" -> Entry(funnelStreamBatch _, funnelSql(), shuffles = 2),
+    "stream_markov" -> Entry(markovStreamBatch _, markovTransitionsSql, shuffles = 2),
+    "events_seasonal_decompose" -> Entry((s, d) => seasonalDecompose(s, d), seasonalDecomposeSql(),
+      shuffles = 3, // post-checkpoint: dow agg + grand + serve join (trend table is a day-cardinality leaf)
+      bnlj = true), // (b) 1-row grand-mean attach for centering the 7 dow indices
+    "events_seasonal_anomaly" -> Entry((s, d) => seasonalAnomaly(s, d), seasonalAnomalySql(),
+      shuffles = 4, // L23's 3 + the interior-days median window (day-cardinality)
+      bnlj = true), // (b) inherits L23's grand-mean attach
+    "events_did" -> Entry((s, d) => didAnalysis(s, d), didAnalysisSql(), shuffles = 2),
+    "param_events_did" -> Entry((s, d) => didAnalysis(s, d, salt = "exp2", cutoff = "2024-01-20"),
+      didAnalysisSql(salt = "exp2", cutoff = "2024-01-20"), shuffles = 2),
+    "param_seasonal_anomaly" -> Entry((s, d) => seasonalAnomaly(s, d, k = 2.0),
+      seasonalAnomalySql(k = 2.0), shuffles = 4,
+      bnlj = true), // (b) inherits L23's grand-mean attach
+    "param_seasonal_decompose" -> Entry((s, d) =>
+      seasonalDecompose(s, d, eventType = Some("purchase")),
+      seasonalDecomposeSql(eventType = Some("purchase")), shuffles = 3,
+      bnlj = true), // (b) 1-row grand-mean attach for centering the 7 dow indices
+    "events_markov" -> Entry(markovTransitions _, markovTransitionsSql,
+      shuffles = 4), // user sequence window + pair rollup + state marginal rollup + ordered serve
+    "events_survival" -> Entry((s, d) => survival(s, d), survivalSql(),
+      shuffles = 8, // ONE corpus-wide user rollup; 1-row horizon agg + lifetime rollup + desc/asc curve windows + ordered serve are all bounded distinct-lifetime metadata exchanges
+      bnlj = true), // (b) 1-row horizon attach
+    "events_burstiness" -> Entry(burstiness _, burstinessSql,
+      shuffles = 3), // (type,user) lag window + type rollup + ordered serve
+    "events_feature_snapshot" -> Entry(featureSnapshot _, featureSnapshotSql, shuffles = 2),
+    "param_survival" -> Entry((s, d) => survival(s, d, censorDays = 7), survivalSql(censorDays = 7),
+      shuffles = 8,
+      bnlj = true), // (b) 1-row horizon attach
+    "events_cumulative_users" -> Entry(cumulativeUsers _, cumulativeUsersSql,
+      shuffles = 4), // user first-seen agg + bucket rollup + onePart cumsum + ordered serve
+    "events_stickiness" -> Entry((s, d) => stickiness(s, d), stickinessSql(),
+      shuffles = 6), // (day,user) dedup + fan-out distinct (2: expand) + dau rollup + day join + ordered serve
+    "param_events_stickiness" -> Entry((s, d) => stickiness(s, d, windowDays = 28),
+      stickinessSql(windowDays = 28), shuffles = 6),
+    "events_attribution" -> Entry((s, d) => attribution(s, d), attributionSql(),
+      shuffles = 3), // user-keyed touch join + per-purchase argmax + channel rollup
+    "param_events_attribution" -> Entry((s, d) => attribution(s, d, lookbackDays = 1),
+      attributionSql(lookbackDays = 1), shuffles = 3),
+    "events_attribution_decay" -> Entry((s, d) => attributionDecay(s, d), attributionDecaySql(),
+      shuffles = 6), // user-keyed join + p_id window + channel rollup
+    "events_ab_test" -> Entry((s, d) => abTest(s, d), abTestSql(),
+      shuffles = 4), // user rollup; arm rollup + 1-row pivot are metadata
+    "events_ab_cuped" -> Entry((s, d) => abCuped(s, d), abCupedSql(), shuffles = 2),
+    "events_ab_sprt" -> Entry((s, d) => abSprt(s, d), abSprtSql(), shuffles = 2),
+    "param_ab_sprt" -> Entry((s, d) => abSprt(s, d,
+      salt = "exp2", minValue = 150.0, p0 = 0.03, p1 = 0.06),
+      abSprtSql(salt = "exp2", minValue = 150.0, p0 = 0.03, p1 = 0.06), shuffles = 2),
+    "param_ab_cuped" -> Entry((s, d) => abCuped(s, d, salt = "exp2", split = "2024-01-10 00:00:00"),
+      abCupedSql(salt = "exp2", split = "2024-01-10 00:00:00"), shuffles = 2),
+    "param_ab_test" -> Entry((s, d) => abTest(s, d, salt = "exp2", minValue = 150.0),
+      abTestSql(salt = "exp2", minValue = 150.0), shuffles = 4),
+    "param_attribution_decay" -> Entry((s, d) =>
+      attributionDecay(s, d, lookbackDays = 2, halflifeHours = 6),
+      attributionDecaySql(lookbackDays = 2, halflifeHours = 6), shuffles = 6),
+    "events_seasonal_forecast" -> Entry((s, d) => seasonalForecast(s, d), seasonalForecastSql(),
+      shuffles = 2),
+    "param_seasonal_forecast" -> Entry((s, d) =>
+      seasonalForecast(s, d, cutoff = "2024-01-15", eventType = "view"),
+      seasonalForecastSql(cutoff = "2024-01-15", eventType = "view"), shuffles = 2),
+    "events_forecast_backtest" -> Entry((s, d) => forecastBacktest(s, d), forecastBacktestSql(),
+      shuffles = 3), // (day,hod) rollup + hod-keyed expanding window + ordered serve
+    "param_forecast_backtest" -> Entry((s, d) =>
+      forecastBacktest(s, d, eventType = "view", minTrainDays = 14),
+      forecastBacktestSql(eventType = "view", minTrainDays = 14), shuffles = 3),
+    "events_funnel" -> Entry((s, d) => funnel(s, d), funnelSql(),
+      shuffles = 3), // user-key window + distinct expand + tenant rollup
+    "events_session_paths" -> Entry((s, d) => sessionPaths(s, d), sessionPathsSql(),
+      shuffles = 2), // user-key session window+collect + path rollup (TakeOrdered serve)
+    "param_session_paths" -> Entry((s, d) => sessionPaths(s, d, pathLen = 3, limit = 10),
+      sessionPathsSql(pathLen = 3, limit = 10), shuffles = 2),
+    "param_events_funnel" -> Entry((s, d) => funnel(s, d, horizonMin = Some(1440)),
+      funnelSql(horizonMin = Some(1440)), shuffles = 3),
+    "events_cohort_retention" -> Entry(cohortRetention _, cohortRetentionSql,
+      shuffles = 3), // cohort agg + user-key join + distinct rollup
+    "stream_watermark_audit" -> Entry((s, d) => watermarkAudit(s, d), watermarkAuditSql(),
+      shuffles = 2),
+    "param_watermark_audit" -> Entry((s, d) => watermarkAudit(s, d, latenessMin = 5),
+      watermarkAuditSql(latenessMin = 5), shuffles = 2),
+    "stream_hopping_agg" -> Entry(hoppingAgg _, hoppingAggSql, shuffles = 2),
+    "stream_interval_join_outer" -> Entry(intervalJoinOuter _, intervalJoinOuterSql, shuffles = 0),
+    "stream_session_window" -> Entry(sessionWindowAgg _, sessionWindowAggSql, shuffles = 1),
+    "stream_enriched_rollup" -> Entry(enrichedRollup _, enrichedRollupSql, shuffles = 1),
+    "stream_tumbling_agg" -> Entry(tumblingAgg _, tumblingAggSql, shuffles = 1),
+    "stream_sessionize" -> Entry(sessionize _, sessionizeSql, shuffles = 1),
+    "stream_event_dedup" -> Entry(eventDedup _, eventDedupSql, shuffles = 1),
+    "stream_user_latest_state" -> Entry(userLatestState _, userLatestStateSql, shuffles = 1),
+    "stream_interval_join" -> Entry(intervalJoin _, intervalJoinSql, shuffles = 0))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, Memo, Tables}
+import graft.{Ckpt, Entry, Memo, Registered, Tables}
 import graft.Ckpt.CutOps
 
 /** Graph analytics over the co-purchase graph (SURVEY §2 O-family).
@@ -37,7 +37,7 @@ import graft.Ckpt.CutOps
   * against the visited set; at 100 TB both sides stay keyed on the
   * node id.
   */
-object Graph {
+object Graph extends Registered {
 
   private val Scale = 1000000000L // 1e9 fixed-point unit
 
@@ -1527,95 +1527,91 @@ object Graph {
        |GROUP BY 1 ORDER BY core_degree DESC, part LIMIT $limit""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_kcore" -> ((s, d) => kcore(s, d)),
-    "param_graph_kcore" -> ((s, d) => kcore(s, d,
-      minSupport = 2, k = 2, rounds = 6, limit = 50)),
-    "graph_degree_dist" -> ((s, d) => degreeDist(s, d)),
-    "param_graph_degree_dist" -> ((s, d) => degreeDist(s, d,
-      minSupport = 2, xmin = 3)),
-    "graph_link_prediction" -> ((s, d) => linkPrediction(s, d)),
-    "param_graph_link_prediction" -> ((s, d) => linkPrediction(s, d,
-      minSupport = 2, maxDeg = 16, limit = 50)),
-    "graph_components" -> ((s, d) => connectedComponents(s, d)),
-    "graph_communities_lpa" -> ((s, d) => communitiesLpa(s, d)),
-    "param_communities_lpa" -> ((s, d) =>
-      communitiesLpa(s, d, minSupport = 3, iters = 2)),
-    "param_graph_components" -> ((s, d) => connectedComponents(s, d,
-      minSupport = 3, iters = 6, limit = 20)),
-    "graph_pagerank" -> ((s, d) => pagerank(s, d)),
-    "graph_triangles" -> ((s, d) => triangles(s, d)),
-    "graph_triangles_sampled" -> ((s, d) => trianglesSampled(s, d)),
-    "param_graph_triangles_sampled" -> ((s, d) =>
-      trianglesSampled(s, d, minSupport = 2)),
-    "graph_bfs" -> ((s, d) => bfs(s, d)),
-    "graph_closeness" -> ((s, d) => closeness(s, d)),
-    "graph_betweenness" -> ((s, d) => betweenness(s, d)),
-    "param_graph_betweenness" -> ((s, d) => betweenness(s, d,
-      brand = "Brand#2", nSeeds = 5, maxHops = 2, limit = 50)),
-    "graph_closeness_hyperball" -> ((s, d) => closenessHyperball(s, d)),
-    "graph_eff_diameter" -> ((s, d) => effDiameter(s, d)),
-    "param_graph_eff_diameter" -> ((s, d) => effDiameter(s, d,
-      brand = "Brand#7", qBp = 7500)),
-    "param_closeness_hyperball" -> ((s, d) =>
-      closenessHyperball(s, d, brand = "Brand#2", nSeeds = 5, maxHops = 2)),
-    "param_graph_closeness" -> ((s, d) => closeness(s, d,
-      brand = "Brand#2", nSeeds = 5, maxHops = 2)),
+  val registry: Seq[(String, Entry)] = Seq(
+    "graph_kcore" -> Entry((s, d) => kcore(s, d), kcoreSql(), graph = true, shuffles = 2),
+    "param_graph_kcore" -> Entry((s, d) => kcore(s, d,
+      minSupport = 2, k = 2, rounds = 6, limit = 50),
+      kcoreSql(minSupport = 2, k = 2, rounds = 6, limit = 50), graph = true, shuffles = 2),
+    "graph_degree_dist" -> Entry((s, d) => degreeDist(s, d), degreeDistSql(), graph = true,
+      shuffles = 5, // node-keyed degree rollup; histogram rollup + metadata window/fit attaches
+      bnlj = true), // (b) 1-row total + 1-row fit attach
+    "param_graph_degree_dist" -> Entry((s, d) => degreeDist(s, d, minSupport = 2, xmin = 3),
+      degreeDistSql(minSupport = 2, xmin = 3), graph = true, shuffles = 5,
+      bnlj = true), // (b) 1-row total + 1-row fit attach
+    "graph_link_prediction" -> Entry((s, d) => linkPrediction(s, d), linkPredictionSql(),
+      graph = true,
+      shuffles = 6), // nbr-list collect + wedge rollup + anti join (edges cached)
+    "param_graph_link_prediction" -> Entry((s, d) => linkPrediction(s, d,
+      minSupport = 2, maxDeg = 16, limit = 50),
+      linkPredictionSql(minSupport = 2, maxDeg = 16, limit = 50), graph = true, shuffles = 6),
+    "graph_components" -> Entry((s, d) => connectedComponents(s, d), connectedComponentsSql(),
+      graph = true, shuffles = 2),
+    "graph_communities_lpa" -> Entry((s, d) => communitiesLpa(s, d), communitiesLpaSql(),
+      graph = true, shuffles = 2),
+    "param_communities_lpa" -> Entry((s, d) => communitiesLpa(s, d, minSupport = 3, iters = 2),
+      communitiesLpaSql(minSupport = 3, iters = 2), shuffles = 2),
+    "param_graph_components" -> Entry((s, d) => connectedComponents(s, d,
+      minSupport = 3, iters = 6, limit = 20),
+      connectedComponentsSql(minSupport = 3, iters = 6, limit = 20), graph = true, shuffles = 2),
+    // O-family: iterative graph algorithms pay one join + one agg
+    // exchange PER ITERATION by nature (Pregel supersteps); the edge
+    // build adds K30's two. Budgets pin today's per-iteration cost so
+    // an extra shuffle inside the loop multiplies and fails loudly.
+    "graph_pagerank" -> Entry((s, d) => pagerank(s, d), pagerankSql(), graph = true,
+      shuffles = 9), // edges(2) + deg/adj + 5×(rank agg; join rides adj exchange) + TakeOrdered
+    "graph_triangles" -> Entry((s, d) => triangles(s, d), trianglesSql(), graph = true,
+      shuffles = 4), // edges(2) + deg attach + corner-explode rollup (wedge/closure joins broadcast at this SF)
+    "graph_triangles_sampled" -> Entry((s, d) => trianglesSampled(s, d), trianglesSampledSql(),
+      graph = true,
+      shuffles = 14, // two full O2-shaped triangle totals (degree agg + 2 adjacency attaches + orient, x full & sampled)
+      bnlj = true), // (b) four 1-row count/total attaches onto the single report row
+    "param_graph_triangles_sampled" -> Entry((s, d) => trianglesSampled(s, d, minSupport = 2),
+      trianglesSampledSql(minSupport = 2), graph = true, shuffles = 14,
+      bnlj = true), // (b) four 1-row count/total attaches onto the single report row
+    "graph_bfs" -> Entry((s, d) => bfs(s, d), bfsSql(), graph = true,
+      shuffles = 8), // edges(2) + seeds∩nodes + 3×(frontier distinct + anti-join) rides
+    "graph_closeness" -> Entry((s, d) => closeness(s, d), closenessSql(), graph = true,
+      shuffles = 2),
+    "graph_betweenness" -> Entry((s, d) => betweenness(s, d), betweennessSql(), graph = true,
+      shuffles = 2),
+    "param_graph_betweenness" -> Entry((s, d) => betweenness(s, d,
+      brand = "Brand#2", nSeeds = 5, maxHops = 2, limit = 50),
+      betweennessSql(brand = "Brand#2", nSeeds = 5, maxHops = 2, limit = 50), graph = true,
+      shuffles = 2),
+    "graph_closeness_hyperball" -> Entry((s, d) => closenessHyperball(s, d),
+      closenessHyperballSql(), graph = true,
+      shuffles = 6), // per-radius exact-ball rollups over the BFS leaf + band rollup + O11 serve rollup + ordered join (sketch iteration is a checkpoint leaf)
+    "graph_eff_diameter" -> Entry((s, d) => effDiameter(s, d), effDiameterSql(), graph = true,
+      shuffles = 5), // stacked N(t) agg + per-seed balls agg + band rollup + two single-partition windows — all over the memoized BFS leaf / maxHops-row frames
+    "param_graph_eff_diameter" -> Entry((s, d) => effDiameter(s, d, brand = "Brand#7", qBp = 7500),
+      effDiameterSql(brand = "Brand#7", qBp = 7500), graph = true, shuffles = 5),
+    "param_closeness_hyperball" -> Entry((s, d) =>
+      closenessHyperball(s, d, brand = "Brand#2", nSeeds = 5, maxHops = 2),
+      closenessHyperballSql(brand = "Brand#2", nSeeds = 5, maxHops = 2), shuffles = 6),
+    "param_graph_closeness" -> Entry((s, d) => closeness(s, d,
+      brand = "Brand#2", nSeeds = 5, maxHops = 2),
+      closenessSql(brand = "Brand#2", nSeeds = 5, maxHops = 2), graph = true, shuffles = 2),
     // iters=20 deliberately DEEP: proves the per-round lineage cut
     // (plan analysis stays linear, not quadratic, in iteration count)
-    "param_graph_pagerank" -> ((s, d) => pagerank(s, d,
-      minSupport = 2, iters = 20, limit = 40)),
-    "param_graph_triangles" -> ((s, d) => triangles(s, d,
-      minSupport = 2, limit = 50)),
-    "param_graph_bfs" -> ((s, d) => bfs(s, d,
-      brand = "Brand#7", minSupport = 2, maxHops = 4)),
-    "graph_ppr" -> ((s, d) => personalizedPagerank(s, d)),
-    "param_graph_ppr" -> ((s, d) => personalizedPagerank(s, d,
-      brand = "Brand#7", minSupport = 2, iters = 8, limit = 40)),
-    "graph_clustering_coef" -> ((s, d) => clusteringCoefficient(s, d)),
-    "param_graph_clustering_coef" -> ((s, d) => clusteringCoefficient(s, d,
-      minSupport = 2, limit = 50)))
-
-  val oracles: Map[String, String] = Map(
-    "graph_kcore" -> kcoreSql(),
-    "param_graph_kcore" -> kcoreSql(
-      minSupport = 2, k = 2, rounds = 6, limit = 50),
-    "graph_degree_dist" -> degreeDistSql(),
-    "param_graph_degree_dist" -> degreeDistSql(minSupport = 2, xmin = 3),
-    "graph_link_prediction" -> linkPredictionSql(),
-    "param_graph_link_prediction" -> linkPredictionSql(
-      minSupport = 2, maxDeg = 16, limit = 50),
-    "graph_components" -> connectedComponentsSql(),
-    "graph_communities_lpa" -> communitiesLpaSql(),
-    "param_communities_lpa" -> communitiesLpaSql(minSupport = 3, iters = 2),
-    "param_graph_components" -> connectedComponentsSql(
-      minSupport = 3, iters = 6, limit = 20),
-    "graph_pagerank" -> pagerankSql(),
-    "graph_triangles" -> trianglesSql(),
-    "graph_triangles_sampled" -> trianglesSampledSql(),
-    "param_graph_triangles_sampled" -> trianglesSampledSql(minSupport = 2),
-    "graph_bfs" -> bfsSql(),
-    "graph_closeness" -> closenessSql(),
-    "graph_betweenness" -> betweennessSql(),
-    "param_graph_betweenness" -> betweennessSql(
-      brand = "Brand#2", nSeeds = 5, maxHops = 2, limit = 50),
-    "graph_closeness_hyperball" -> closenessHyperballSql(),
-    "graph_eff_diameter" -> effDiameterSql(),
-    "param_graph_eff_diameter" -> effDiameterSql(brand = "Brand#7",
-      qBp = 7500),
-    "param_closeness_hyperball" -> closenessHyperballSql(
-      brand = "Brand#2", nSeeds = 5, maxHops = 2),
-    "param_graph_closeness" -> closenessSql(
-      brand = "Brand#2", nSeeds = 5, maxHops = 2),
-    "param_graph_pagerank" -> pagerankSql(
+    "param_graph_pagerank" -> Entry((s, d) => pagerank(s, d,
       minSupport = 2, iters = 20, limit = 40),
-    "param_graph_triangles" -> trianglesSql(minSupport = 2, limit = 50),
-    "param_graph_bfs" -> bfsSql(
-      brand = "Brand#7", minSupport = 2, maxHops = 4),
-    "graph_ppr" -> personalizedPagerankSql(),
-    "param_graph_ppr" -> personalizedPagerankSql(
+      pagerankSql(minSupport = 2, iters = 20, limit = 40), graph = true,
+      shuffles = 7), // 3 iterations
+    "param_graph_triangles" -> Entry((s, d) => triangles(s, d, minSupport = 2, limit = 50),
+      trianglesSql(minSupport = 2, limit = 50), graph = true, shuffles = 4),
+    "param_graph_bfs" -> Entry((s, d) => bfs(s, d, brand = "Brand#7", minSupport = 2, maxHops = 4),
+      bfsSql(brand = "Brand#7", minSupport = 2, maxHops = 4), graph = true,
+      shuffles = 9), // 4 hops
+    "graph_ppr" -> Entry((s, d) => personalizedPagerank(s, d), personalizedPagerankSql(),
+      graph = true, shuffles = 2),
+    "param_graph_ppr" -> Entry((s, d) => personalizedPagerank(s, d,
       brand = "Brand#7", minSupport = 2, iters = 8, limit = 40),
-    "graph_clustering_coef" -> clusteringCoefficientSql(),
-    "param_graph_clustering_coef" -> clusteringCoefficientSql(
-      minSupport = 2, limit = 50))
+      personalizedPagerankSql(brand = "Brand#7", minSupport = 2, iters = 8, limit = 40),
+      graph = true, shuffles = 2),
+    "graph_clustering_coef" -> Entry((s, d) => clusteringCoefficient(s, d),
+      clusteringCoefficientSql(), graph = true,
+      shuffles = 4), // O2's compact-forward subtree + degree join + corner rollup
+    "param_graph_clustering_coef" -> Entry((s, d) => clusteringCoefficient(s, d,
+      minSupport = 2, limit = 50),
+      clusteringCoefficientSql(minSupport = 2, limit = 50), graph = true, shuffles = 4))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 
 /** Shared observation-stream column derivations (events as the
   * reference's ingest stream). Kept as pure Column functions so every
@@ -47,7 +47,7 @@ object Obs {
   * envelope is a pure projection (codegen'd, no shuffle); the
   * idempotency dedup is a first-writer-wins window on the key.
   */
-object Ingest {
+object Ingest extends Registered {
 
   /** A1 `ingest_envelope` — envelope wrap + content hash. The payload
     * canonical form is a '|'-joined field list; contentHash = sha256.
@@ -261,15 +261,9 @@ object Ingest {
       |  decision = 'granted' AND requested_ct <> 'application/json' AS misroute
       |FROM decided""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ingest_envelope" -> (envelope _),
-    "ingest_dedup_idempotency" -> (dedupIdempotency _),
-    "ingest_partition_keys" -> (partitionKeys _),
-    "ingest_presign_route" -> (presignRoute _))
-
-  val oracles: Map[String, String] = Map(
-    "ingest_envelope" -> envelopeSql,
-    "ingest_dedup_idempotency" -> dedupIdempotencySql,
-    "ingest_partition_keys" -> partitionKeysSql,
-    "ingest_presign_route" -> presignRouteSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "ingest_envelope" -> Entry(envelope _, envelopeSql, shuffles = 0),
+    "ingest_dedup_idempotency" -> Entry(dedupIdempotency _, dedupIdempotencySql, shuffles = 1),
+    "ingest_partition_keys" -> Entry(partitionKeys _, partitionKeysSql, shuffles = 1),
+    "ingest_presign_route" -> Entry(presignRoute _, presignRouteSql, shuffles = 2))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CutOps
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 
 /** Multimodal column plumbing (SURVEY §2.J): media as opaque binary
   * columns with typed metadata, and a batched decode/feature-extract
@@ -18,7 +18,7 @@ import graft.Tables
   * batched pandas-UDF decode: amortizes per-batch codec init, keeps
   * memory bounded by batch size, preserves partition parallelism).
   */
-object Multimodal {
+object Multimodal extends Registered {
 
   case class MediaFeatures(doc_id: Long, n_bytes: Int, batch_size: Int,
       features: Array[Float])
@@ -932,25 +932,14 @@ object Multimodal {
       .stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_neardup_verdict" -> (neardupVerdict _),
-    "multimodal_phash" -> (phash _),
-    "multimodal_dhash" -> (dhash _),
-    "multimodal_ahash" -> (ahash _),
-    "multimodal_feature_stub" -> (featureStub _),
-    "multimodal_frame_sample" -> (frameSample _),
-    "multimodal_resize_stub" -> (resizeStub _),
-    "multimodal_decode_real" -> (decodeReal _),
-    "multimodal_image_dedup" -> (imageDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "multimodal_neardup_verdict" -> neardupVerdictSql,
-    "multimodal_phash" -> phashSql,
-    "multimodal_dhash" -> dhashSql,
-    "multimodal_ahash" -> ahashSql,
-    "multimodal_feature_stub" -> featureStubSql,
-    "multimodal_frame_sample" -> frameSampleSql,
-    "multimodal_resize_stub" -> resizeStubSql,
-    "multimodal_decode_real" -> decodeRealSql,
-    "multimodal_image_dedup" -> imageDedupSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "multimodal_neardup_verdict" -> Entry(neardupVerdict _, neardupVerdictSql, shuffles = 2),
+    "multimodal_phash" -> Entry(phash _, phashSql, shuffles = 2),
+    "multimodal_dhash" -> Entry(dhash _, dhashSql, shuffles = 2),
+    "multimodal_ahash" -> Entry(ahash _, ahashSql, shuffles = 2),
+    "multimodal_feature_stub" -> Entry(featureStub _, featureStubSql, shuffles = 0),
+    "multimodal_frame_sample" -> Entry(frameSample _, frameSampleSql, shuffles = 0),
+    "multimodal_resize_stub" -> Entry(resizeStub _, resizeStubSql, shuffles = 0),
+    "multimodal_decode_real" -> Entry(decodeReal _, decodeRealSql, shuffles = 0),
+    "multimodal_image_dedup" -> Entry(imageDedup _, imageDedupSql, shuffles = 1))
 }

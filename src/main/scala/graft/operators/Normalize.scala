@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Adapters
 
+import graft.{Entry, Registered}
+
 /** Normalize stage (reference: libs/validation/dto.ts Zod schema,
   * libs/mappers/observation.ts FHIR mapping,
   * services/normalize/handler.ts envelope).
@@ -17,7 +19,7 @@ import graft.sources.Adapters
   * and envelope are pure projections — the whole stage is one
   * codegen'd pass with a single tiny shuffle for the counts.
   */
-object Normalize {
+object Normalize extends Registered {
 
   /** DTO stream with one extra injected defect class (empty code every
     * 101st event) on top of the adapter's non-numeric values, so every
@@ -767,25 +769,14 @@ object Normalize {
       |UNION ALL SELECT * FROM json_dto
       |UNION ALL SELECT * FROM unsupported""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "normalize_source_route" -> (sourceRoute _),
-    "normalize_validate_envelope" -> (validateEnvelope _),
-    "pipeline_end_to_end" -> (endToEnd _),
-    "normalize_unit_canonical" -> (unitCanonical _),
-    "normalize_validate_dto" -> (validateDto _),
-    "normalize_validate_patient" -> (validatePatient _),
-    "normalize_reject_counts" -> (rejectCounts _),
-    "normalize_fhir_map" -> (fhirMap _),
-    "normalize_entity_id" -> (entityId _))
-
-  val oracles: Map[String, String] = Map(
-    "normalize_source_route" -> sourceRouteSql,
-    "normalize_validate_envelope" -> validateEnvelopeSql,
-    "pipeline_end_to_end" -> endToEndSql,
-    "normalize_unit_canonical" -> unitCanonicalSql,
-    "normalize_validate_dto" -> validateDtoSql,
-    "normalize_validate_patient" -> validatePatientSql,
-    "normalize_reject_counts" -> rejectCountsSql,
-    "normalize_fhir_map" -> fhirMapSql,
-    "normalize_entity_id" -> entityIdSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "normalize_source_route" -> Entry(sourceRoute _, sourceRouteSql, shuffles = 2),
+    "normalize_validate_envelope" -> Entry(validateEnvelope _, validateEnvelopeSql, shuffles = 2),
+    "pipeline_end_to_end" -> Entry(endToEnd _, endToEndSql, shuffles = 1),
+    "normalize_unit_canonical" -> Entry(unitCanonical _, unitCanonicalSql, shuffles = 0),
+    "normalize_validate_dto" -> Entry(validateDto _, validateDtoSql, shuffles = 0),
+    "normalize_validate_patient" -> Entry(validatePatient _, validatePatientSql, shuffles = 2),
+    "normalize_reject_counts" -> Entry(rejectCounts _, rejectCountsSql, shuffles = 1),
+    "normalize_fhir_map" -> Entry(fhirMap _, fhirMapSql, shuffles = 0),
+    "normalize_entity_id" -> Entry(entityId _, entityIdSql, shuffles = 0))
 }

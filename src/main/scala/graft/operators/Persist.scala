@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Entry, Memo, Registered, Tables}
 
 /** Persist semantics (reference: services/persist/handler.ts +
   * src/stacks/data-stack.ts single-table design).
@@ -27,7 +27,7 @@ import graft.{Memo, Tables}
   * partitioning so Catalyst plans a single Exchange. No driver-side
   * loops — this is the 1000-executor replacement for the Lambda.
   */
-object Persist {
+object Persist extends Registered {
 
   /** Entity here = (patient, code) "latest observation" document; the
     * synthetic idempotency key (event_id mod 5 within the entity)
@@ -1007,51 +1007,37 @@ object Persist {
       |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       |GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "persist_ivm_join" -> ((s, d) => ivmJoinView(s, d)),
-    "persist_key_design" -> (keyDesign _),
-    "persist_upsert_version" -> (upsertVersion _),
-    "persist_upsert_bucketed" -> (upsertVersionBucketed _),
-    "persist_commit_log" -> (commitLog _),
-    "persist_vacuum_plan" -> ((s: SparkSession, d: String) =>
-      vacuumPlan(s, d)),
-    "param_vacuum_plan" -> ((s: SparkSession, d: String) =>
-      vacuumPlan(s, d, horizon = "2024-01-08 00:00:00")),
-    "persist_patient_meta" -> (patientMeta _),
-    "persist_compacted_upsert" -> (compactedUpsert _),
-    "persist_scd2" -> (scd2History _),
-    "persist_tombstone" -> (tombstoneState _),
-    "persist_changefeed" -> (changefeed _),
-    "persist_cdc_apply" -> (cdcApply _),
-    "persist_conflict_check" -> (conflictCheck _),
-    "pipeline_cdc_roundtrip" -> ((s: SparkSession, d: String) => cdcRoundtrip(s, d)),
-    "persist_export_manifest" -> (exportManifest _),
+  val registry: Seq[(String, Entry)] = Seq(
+    // the merged base+delta partials must equal the full recompute
+    "persist_ivm_join" -> Entry((s, d) => ivmJoinView(s, d), ivmJoinViewSql, shuffles = 2),
+    "persist_key_design" -> Entry(keyDesign _, keyDesignSql, shuffles = 0),
+    "persist_upsert_version" -> Entry(upsertVersion _, upsertVersionSql, shuffles = 1),
+    "persist_upsert_bucketed" -> Entry(upsertVersionBucketed _, upsertVersionSql, shuffles = 0),
+    "persist_commit_log" -> Entry(commitLog _, commitLogSql, shuffles = 1),
+    "persist_vacuum_plan" -> Entry((s, d) => vacuumPlan(s, d), vacuumPlanSql(), shuffles = 2),
+    "param_vacuum_plan" -> Entry((s, d) => vacuumPlan(s, d, horizon = "2024-01-08 00:00:00"),
+      vacuumPlanSql(horizon = "2024-01-08 00:00:00"), shuffles = 2),
+    "persist_patient_meta" -> Entry(patientMeta _, patientMetaSql, shuffles = 1),
+    // the incremental path must reproduce the FULL replay bit-for-bit
+    "persist_compacted_upsert" -> Entry(compactedUpsert _, upsertVersionSql, shuffles = 3),
+    "persist_scd2" -> Entry(scd2History _, scd2HistorySql,
+      shuffles = 1), // row_number + lead share one entity window
+    "persist_tombstone" -> Entry(tombstoneState _, tombstoneStateSql,
+      shuffles = 1), // applied window + agg share the entity exchange
+    "persist_changefeed" -> Entry(changefeed _, changefeedSql,
+      shuffles = 3), // two snapshot replays + entity-key diff join
+    "persist_cdc_apply" -> Entry(cdcApply _, cdcApplySql,
+      shuffles = 4), // T1 replay + changefeed's two replays + entity-key merge join
+    "persist_conflict_check" -> Entry(conflictCheck _, conflictCheckSql,
+      shuffles = 11), // per-(attempt,key) rollup + attempts re-agg + (date,hour,key) candidate join + retry-set agg — all over O(commits) metadata rows, never event rows; 11 cold / 10 when an earlier suite's cache lets AQE convert one SMJ (ceiling = cold)
+    // the produce→apply→classify chain must equal the direct T2 replay
+    "pipeline_cdc_roundtrip" -> Entry((s, d) => cdcRoundtrip(s, d), cdcRoundtripSql(),
+      shuffles = 3), // shared T1 subtree + T2 replay + merge (diff/apply ride the entity exchange)
+    "persist_export_manifest" -> Entry(exportManifest _, exportManifestSql, shuffles = 2),
     // a second window: T1 = the default run's T2, T2 eight days later —
     // proves the roundtrip invariant is window-independent
-    "param_cdc_roundtrip" -> ((s: SparkSession, d: String) =>
-      cdcRoundtrip(s, d, cut1 = SnapshotTs2, cut2 = "2024-01-20 00:00:00")),
-    "persist_asof_snapshot" -> (asofSnapshot _))
-
-  val oracles: Map[String, String] = Map(
-    // the merged base+delta partials must equal the full recompute
-    "persist_ivm_join" -> ivmJoinViewSql,
-    "persist_key_design" -> keyDesignSql,
-    "persist_upsert_version" -> upsertVersionSql,
-    "persist_upsert_bucketed" -> upsertVersionSql,
-    "persist_commit_log" -> commitLogSql,
-    "persist_vacuum_plan" -> vacuumPlanSql(),
-    "param_vacuum_plan" -> vacuumPlanSql(horizon = "2024-01-08 00:00:00"),
-    "persist_patient_meta" -> patientMetaSql,
-    // the incremental path must reproduce the FULL replay bit-for-bit
-    "persist_compacted_upsert" -> upsertVersionSql,
-    "persist_scd2" -> scd2HistorySql,
-    "persist_tombstone" -> tombstoneStateSql,
-    "persist_changefeed" -> changefeedSql,
-    "persist_cdc_apply" -> cdcApplySql,
-    "persist_conflict_check" -> conflictCheckSql,
-    // the produce→apply→classify chain must equal the direct T2 replay
-    "pipeline_cdc_roundtrip" -> cdcRoundtripSql(),
-    "persist_export_manifest" -> exportManifestSql,
-    "param_cdc_roundtrip" -> cdcRoundtripSql(cut2 = "2024-01-20 00:00:00"),
-    "persist_asof_snapshot" -> asofSnapshotSql)
+    "param_cdc_roundtrip" -> Entry((s, d) =>
+      cdcRoundtrip(s, d, cut1 = SnapshotTs2, cut2 = "2024-01-20 00:00:00"),
+      cdcRoundtripSql(cut2 = "2024-01-20 00:00:00"), shuffles = 3),
+    "persist_asof_snapshot" -> Entry(asofSnapshot _, asofSnapshotSql, shuffles = 1))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 
 /** Query-API semantics of the reference re-expressed set-oriented
   * (reference: services/api-query/src/handler.ts + schema.graphql).
@@ -40,7 +40,7 @@ import graft.Tables
   * tenant and bucketed by patient, making these true point scans.
   * The latest-per-key query shuffles once on the grouping key.
   */
-object QueryApi {
+object QueryApi extends Registered {
 
   /** The synthetic auth-claim→tenant mapping of the testdata (the
     * reference reads it off the JWT; here it is derivable from the
@@ -961,102 +961,95 @@ object QueryApi {
        |JOIN callers c ON c.is_admin OR c.claim_tenant = m.tenant_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "api_field_mask" -> ((s, d) => fieldMask(s, d)),
-    "param_field_mask" -> ((s, d) => fieldMask(s, d, principals = Seq(
-      ("audit2", "t0", true, false), ("erin", "t2", false, true)))),
-    "api_authz_scope" -> ((s, d) => authzScope(s, d)),
-    "param_authz_scope" -> ((s, d) => authzScope(s, d, principals = Seq(
-      ("auditor", "t2", true), ("eve", "t3", false)))),
-    "api_multi_get" -> ((s, d) => multiGet(s, d)),
-    "api_next_token" -> ((s, d) => nextToken(s, d)),
-    "api_limit_clamp" -> ((s, d) => limitClamp(s, d)),
-    "api_get_patient" -> ((s, d) => getPatient(s, d)),
-    "api_obs_by_patient" -> ((s, d) => obsByPatient(s, d)),
-    "api_obs_gapfill" -> ((s, d) => obsGapfill(s, d)),
-    "api_obs_ohlc" -> ((s, d) => obsOhlc(s, d)),
-    "param_obs_ohlc" -> ((s, d) => obsOhlc(s, d,
-      tenant = "t3", code = "view", bucketHours = 24)),
-    "param_obs_gapfill" -> ((s, d) => obsGapfill(s, d,
+  val registry: Seq[(String, Entry)] = Seq(
+    "api_field_mask" -> Entry((s, d) => fieldMask(s, d), fieldMaskSql(), shuffles = 2,
+      bnlj = true), // (b) same E17 OR predicate: bounded principal directory (broadcast) against the patient-cardinality META store
+    "param_field_mask" -> Entry((s, d) => fieldMask(s, d, principals = Seq(
+      ("audit2", "t0", true, false), ("erin", "t2", false, true))),
+      fieldMaskSql(principals = Seq(("audit2", "t0", true, false), ("erin", "t2", false, true))),
+      shuffles = 2,
+      bnlj = true), // (b) same E17 OR predicate: bounded principal directory (broadcast) against the patient-cardinality META store
+    "api_authz_scope" -> Entry((s, d) => authzScope(s, d), authzScopeSql(), shuffles = 2,
+      bnlj = true), // (b) bounded principal directory (broadcast) x 4-row tenant rollup — the OR predicate is non-equi by nature, over metadata-scale sides only
+    "param_authz_scope" -> Entry((s, d) => authzScope(s, d, principals = Seq(
+      ("auditor", "t2", true), ("eve", "t3", false))),
+      authzScopeSql(principals = Seq(("auditor", "t2", true), ("eve", "t3", false))), shuffles = 2,
+      bnlj = true), // (b) bounded principal directory (broadcast) x 4-row tenant rollup — the OR predicate is non-equi by nature, over metadata-scale sides only
+    "api_multi_get" -> Entry((s, d) => multiGet(s, d), multiGetSql(), shuffles = 1),
+    "api_next_token" -> Entry((s, d) => nextToken(s, d), nextTokenSql(), shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "api_limit_clamp" -> Entry((s, d) => limitClamp(s, d), limitClampSql(), shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "api_get_patient" -> Entry((s, d) => getPatient(s, d), getPatientSql(), shuffles = 1),
+    "api_obs_by_patient" -> Entry((s, d) => obsByPatient(s, d), obsByPatientSql(), shuffles = 0),
+    "api_obs_gapfill" -> Entry((s, d) => obsGapfill(s, d), obsGapfillSql(),
+      shuffles = 3), // (patient,day) rollup + patient spine + fill window
+    "api_obs_ohlc" -> Entry((s, d) => obsOhlc(s, d), obsOhlcSql(), shuffles = 2),
+    "param_obs_ohlc" -> Entry((s, d) => obsOhlc(s, d,
+      tenant = "t3", code = "view", bucketHours = 24),
+      obsOhlcSql(tenant = "t3", code = "view", bucketHours = 24), shuffles = 2),
+    "param_obs_gapfill" -> Entry((s, d) => obsGapfill(s, d,
       tenant = "t2", code = "view", from = "2024-01-08 00:00:00",
-      to = "2024-01-28 00:00:00")),
-    "api_latest_observation" -> ((s, d) => latestObservation(s, d)),
-    "api_obs_stats" -> ((s, d) => obsStats(s, d)),
-    "api_obs_trend" -> ((s, d) => obsTrend(s, d)),
-    "param_obs_trend" -> ((s, d) => obsTrend(s, d, tenant = "t3")),
-    "param_obs_stats" -> ((s, d) => obsStats(s, d, tenant = "t2")),
-    "api_obs_page_after" -> ((s, d) => obsPageAfter(s, d)),
-    "api_obs_asof_join" -> ((s, d) => obsAsofJoin(s, d)),
-    "api_obs_by_code" -> ((s, d) => obsByCode(s, d)),
-    "api_profile_asof" -> ((s, d) => profileAsOf(s, d)),
-    "api_profile_asof_del" -> ((s, d) => profileAsOfDel(s, d)),
-    "api_patient_bundle" -> ((s, d) => patientBundle(s, d)),
+      to = "2024-01-28 00:00:00"),
+      obsGapfillSql(tenant = "t2", code = "view",
+        from = "2024-01-08 00:00:00", to = "2024-01-28 00:00:00"),
+      shuffles = 3),
+    "api_latest_observation" -> Entry((s, d) => latestObservation(s, d), latestObservationSql(),
+      shuffles = 1),
+    "api_obs_stats" -> Entry((s, d) => obsStats(s, d), obsStatsSql(), shuffles = 2),
+    "api_obs_trend" -> Entry((s, d) => obsTrend(s, d), obsTrendSql(), shuffles = 2),
+    "param_obs_trend" -> Entry((s, d) => obsTrend(s, d, tenant = "t3"), obsTrendSql(tenant = "t3"),
+      shuffles = 2),
+    "param_obs_stats" -> Entry((s, d) => obsStats(s, d, tenant = "t2"), obsStatsSql(tenant = "t2"),
+      shuffles = 2),
+    "api_obs_page_after" -> Entry((s, d) => obsPageAfter(s, d), obsPageAfterSql(), shuffles = 0),
+    "api_obs_asof_join" -> Entry((s, d) => obsAsofJoin(s, d), obsAsofJoinSql(), shuffles = 1),
+    "api_obs_by_code" -> Entry((s, d) => obsByCode(s, d), obsByCodeSql(), shuffles = 0),
+    "api_profile_asof" -> Entry((s, d) => profileAsOf(s, d), profileAsOfSql(),
+      shuffles = 1), // hist window; probe side rides the SMJ
+    "api_profile_asof_del" -> Entry((s, d) => profileAsOfDel(s, d), profileAsOfDelSql(),
+      shuffles = 1), // same shape, LEFT join
+    "api_patient_bundle" -> Entry((s, d) => patientBundle(s, d), patientBundleSql(),
+      shuffles = 3, // meta window + two 1-row attachments
+      bnlj = true), // (b) latest-obs + count attach
     // non-default instantiations — the library-call path the driver
     // oracle-checks with the SAME parameterized SQL builders
-    "param_get_patient" -> ((s, d) => getPatient(s, d, tenant = "t3", patient = 11L)),
-    "param_obs_by_patient" -> ((s, d) => obsByPatient(s, d, tenant = "t2",
-      patient = 6L, code = "click",
-      from = "2024-01-02 00:00:00", to = "2024-01-20 00:00:00", limit = 30)),
-    "param_latest_observation" -> ((s, d) => latestObservation(s, d, tenant = "t0")),
-    "param_obs_page_after" -> ((s, d) => obsPageAfter(s, d, tenant = "t1",
-      patient = 9L, cursorTs = "2024-01-12 00:00:00", cursorId = 100L, limit = 10)),
-    "param_obs_asof_join" -> ((s, d) => obsAsofJoin(s, d, tenant = "t2",
-      probeCode = "view", obsCode = "signup")),
-    "param_obs_by_code" -> ((s, d) => obsByCode(s, d, tenant = "t3",
-      code = "view", from = "2024-01-10 00:00:00",
-      to = "2024-01-20 00:00:00", limit = 25)),
-    "param_profile_asof" -> ((s, d) => profileAsOf(s, d, tenant = "t0",
-      code = "click")),
-    "param_profile_asof_del" -> ((s, d) => profileAsOfDel(s, d, tenant = "t2",
-      code = "view")),
-    "param_patient_bundle" -> ((s, d) => patientBundle(s, d, tenant = "t2",
-      patient = 6L, obsCode = "click",
-      from = "2024-01-05 00:00:00", to = "2024-01-15 00:00:00")))
-
-  val oracles: Map[String, String] = Map(
-    "api_field_mask" -> fieldMaskSql(),
-    "param_field_mask" -> fieldMaskSql(principals = Seq(
-      ("audit2", "t0", true, false), ("erin", "t2", false, true))),
-    "api_authz_scope" -> authzScopeSql(),
-    "param_authz_scope" -> authzScopeSql(principals = Seq(
-      ("auditor", "t2", true), ("eve", "t3", false))),
-    "api_multi_get" -> multiGetSql(),
-    "api_next_token" -> nextTokenSql(),
-    "api_limit_clamp" -> limitClampSql(),
-    "api_get_patient" -> getPatientSql(),
-    "api_obs_by_patient" -> obsByPatientSql(),
-    "api_obs_gapfill" -> obsGapfillSql(),
-    "api_obs_ohlc" -> obsOhlcSql(),
-    "param_obs_ohlc" -> obsOhlcSql(tenant = "t3", code = "view",
-      bucketHours = 24),
-    "param_obs_gapfill" -> obsGapfillSql(tenant = "t2", code = "view",
-      from = "2024-01-08 00:00:00", to = "2024-01-28 00:00:00"),
-    "api_latest_observation" -> latestObservationSql(),
-    "api_obs_stats" -> obsStatsSql(),
-    "api_obs_trend" -> obsTrendSql(),
-    "param_obs_trend" -> obsTrendSql(tenant = "t3"),
-    "param_obs_stats" -> obsStatsSql(tenant = "t2"),
-    "api_obs_page_after" -> obsPageAfterSql(),
-    "api_obs_asof_join" -> obsAsofJoinSql(),
-    "api_obs_by_code" -> obsByCodeSql(),
-    "api_profile_asof" -> profileAsOfSql(),
-    "api_profile_asof_del" -> profileAsOfDelSql(),
-    "api_patient_bundle" -> patientBundleSql(),
-    "param_get_patient" -> getPatientSql(tenant = "t3", patient = 11L),
-    "param_obs_by_patient" -> obsByPatientSql(tenant = "t2",
+    "param_get_patient" -> Entry((s, d) => getPatient(s, d, tenant = "t3", patient = 11L),
+      getPatientSql(tenant = "t3", patient = 11L), shuffles = 1),
+    "param_obs_by_patient" -> Entry((s, d) => obsByPatient(s, d, tenant = "t2",
       patient = 6L, code = "click",
       from = "2024-01-02 00:00:00", to = "2024-01-20 00:00:00", limit = 30),
-    "param_latest_observation" -> latestObservationSql(tenant = "t0"),
-    "param_obs_page_after" -> obsPageAfterSql(tenant = "t1",
+      obsByPatientSql(tenant = "t2",
+        patient = 6L, code = "click",
+        from = "2024-01-02 00:00:00", to = "2024-01-20 00:00:00", limit = 30),
+      shuffles = 0),
+    "param_latest_observation" -> Entry((s, d) => latestObservation(s, d, tenant = "t0"),
+      latestObservationSql(tenant = "t0"), shuffles = 1),
+    "param_obs_page_after" -> Entry((s, d) => obsPageAfter(s, d, tenant = "t1",
       patient = 9L, cursorTs = "2024-01-12 00:00:00", cursorId = 100L, limit = 10),
-    "param_obs_asof_join" -> obsAsofJoinSql(tenant = "t2",
+      obsPageAfterSql(tenant = "t1",
+        patient = 9L, cursorTs = "2024-01-12 00:00:00", cursorId = 100L, limit = 10),
+      shuffles = 0),
+    "param_obs_asof_join" -> Entry((s, d) => obsAsofJoin(s, d, tenant = "t2",
       probeCode = "view", obsCode = "signup"),
-    "param_obs_by_code" -> obsByCodeSql(tenant = "t3",
+      obsAsofJoinSql(tenant = "t2", probeCode = "view", obsCode = "signup"), shuffles = 1),
+    "param_obs_by_code" -> Entry((s, d) => obsByCode(s, d, tenant = "t3",
       code = "view", from = "2024-01-10 00:00:00",
       to = "2024-01-20 00:00:00", limit = 25),
-    "param_profile_asof" -> profileAsOfSql(tenant = "t0", code = "click"),
-    "param_profile_asof_del" -> profileAsOfDelSql(tenant = "t2", code = "view"),
-    "param_patient_bundle" -> patientBundleSql(tenant = "t2",
+      obsByCodeSql(tenant = "t3",
+        code = "view", from = "2024-01-10 00:00:00",
+        to = "2024-01-20 00:00:00", limit = 25),
+      shuffles = 0),
+    "param_profile_asof" -> Entry((s, d) => profileAsOf(s, d, tenant = "t0", code = "click"),
+      profileAsOfSql(tenant = "t0", code = "click"), shuffles = 1),
+    "param_profile_asof_del" -> Entry((s, d) => profileAsOfDel(s, d, tenant = "t2", code = "view"),
+      profileAsOfDelSql(tenant = "t2", code = "view"), shuffles = 1),
+    "param_patient_bundle" -> Entry((s, d) => patientBundle(s, d, tenant = "t2",
       patient = 6L, obsCode = "click",
-      from = "2024-01-05 00:00:00", to = "2024-01-15 00:00:00"))
+      from = "2024-01-05 00:00:00", to = "2024-01-15 00:00:00"),
+      patientBundleSql(tenant = "t2",
+        patient = 6L, obsCode = "click",
+        from = "2024-01-05 00:00:00", to = "2024-01-15 00:00:00"),
+      shuffles = 3,
+      bnlj = true)) // (b) latest-obs + count attach
 }

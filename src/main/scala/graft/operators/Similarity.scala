@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, Memo, Tables}
+import graft.{Ckpt, Entry, Memo, Registered, Tables}
 import graft.Ckpt.CutOps
 import graft.functions.VectorOps._
 import graft.functions.VectorExpressions.vdotQuantizedNative
@@ -25,7 +25,7 @@ import graft.functions.VectorExpressions.vdotQuantizedNative
   * so recall bounds in specs are modest — the mechanisms (bucketing,
   * multiprobe, re-rank) are what's tested.
   */
-object Similarity {
+object Similarity extends Registered {
 
   private val K = 10
   private val NQueries = 8
@@ -2419,97 +2419,103 @@ object Similarity {
     out
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_ann_serve" -> (annServeBatch _),
-    "sim_knn_graph" -> ((s, d) => knnGraph(s, d)),
-    "param_knn_graph" -> ((s, d) => knnGraph(s, d, k = 3)),
-    "sim_hybrid_rrf" -> ((s, d) => hybridRrf(s, d)),
-    "sim_rerank_pipeline" -> (rerankPipeline _),
-    "sim_sq8" -> (sq8 _),
-    "sim_binary_quantized" -> (binaryQuantized _),
-    "sim_pooled_search" -> (pooledSearch _),
-    "sim_filtered_search" -> (filteredSearch _),
-    "sim_range_search" -> (rangeSearch _),
-    "sim_maxsim_multivec" -> (maxsimMultivec _),
-    "sim_pq_adc" -> (pqAdc _),
-    "sim_topk_bruteforce" -> (topkBruteforce _),
-    "sim_mmr_select" -> ((s: SparkSession, d: String) => mmrSelect(s, d)),
-    "sim_rocchio_feedback" -> ((s: SparkSession, d: String) =>
-      rocchioFeedback(s, d)),
-    "param_rocchio_feedback" -> ((s: SparkSession, d: String) =>
-      rocchioFeedback(s, d, k0 = 5, k = 20)),
-    "param_mmr_select" -> ((s: SparkSession, d: String) =>
-      mmrSelect(s, d, poolK = 10, selectK = 3)),
-    "sim_knn_classify" -> ((s, d) => knnClassify(s, d)),
-    "sim_classifier_metrics" -> ((s, d) => classifierMetrics(s, d)),
-    "param_classifier_metrics" -> ((s, d) => classifierMetrics(s, d,
-      k = 3, nEval = 20)),
-    "param_knn_classify" -> ((s, d) => knnClassify(s, d, k = 3, nEval = 20)),
-    "sim_cosine_pairs" -> (cosinePairs _),
-    "sim_lsh_ann" -> (lshAnn _),
-    "sim_ivf_probe" -> (ivfProbe _),
-    "sim_index_refresh" -> ((s: SparkSession, d: String) => indexRefresh(s, d)),
-    "sim_staleness_recall" -> ((s: SparkSession, d: String) =>
-      stalenessRecall(s, d)),
-    "param_staleness_recall" -> ((s: SparkSession, d: String) =>
-      stalenessRecall(s, d, splitPct = 60)),
-    "param_index_refresh" -> ((s: SparkSession, d: String) =>
-      indexRefresh(s, d, splitPct = 60)),
-    "sim_index_tombstone" -> ((s: SparkSession, d: String) =>
-      indexTombstone(s, d)),
-    "param_index_tombstone" -> ((s: SparkSession, d: String) =>
-      indexTombstone(s, d, tombMod = 5, tombR = 0)),
-    "sim_index_compaction" -> ((s: SparkSession, d: String) =>
-      indexCompaction(s, d)),
-    "param_index_compaction" -> ((s: SparkSession, d: String) =>
-      indexCompaction(s, d, tombMod = 5, tombR = 0, tauBp = 2000)),
-    "sim_ivf_kmeans" -> (ivfKmeans _),
-    "sim_codebook_drift" -> ((s: SparkSession, d: String) =>
-      codebookDrift(s, d)),
-    "param_codebook_drift" -> ((s: SparkSession, d: String) =>
-      codebookDrift(s, d, byDim = true)),
-    "sim_ivfpq_residual" -> (ivfPqResidual _),
-    "sim_recall_eval" -> (recallEval _),
-    "sim_mrl_eval" -> ((s, d) => mrlEval(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "stream_ann_serve" -> ivfProbeSql, // stream ≡ batch probe IS the contract
-    "sim_knn_graph" -> knnGraphSql(),
-    "param_knn_graph" -> knnGraphSql(k = 3),
-    "sim_hybrid_rrf" -> hybridRrfSql(),
-    "sim_rerank_pipeline" -> rerankPipelineSql,
-    "sim_sq8" -> sq8Sql,
-    "sim_binary_quantized" -> binaryQuantizedSql,
-    "sim_pooled_search" -> pooledSearchSql,
-    "sim_filtered_search" -> filteredSearchSql,
-    "sim_range_search" -> rangeSearchSql,
-    "sim_maxsim_multivec" -> maxsimMultivecSql,
-    "sim_pq_adc" -> pqAdcSql,
-    "sim_topk_bruteforce" -> topkBruteforceSql,
-    "sim_mmr_select" -> mmrSelectSql(),
-    "sim_rocchio_feedback" -> rocchioFeedbackSql(),
-    "param_rocchio_feedback" -> rocchioFeedbackSql(k0 = 5, k = 20),
-    "param_mmr_select" -> mmrSelectSql(poolK = 10, selectK = 3),
-    "sim_knn_classify" -> knnClassifySql(),
-    "sim_classifier_metrics" -> classifierMetricsSql(),
-    "param_classifier_metrics" -> classifierMetricsSql(k = 3, nEval = 20),
-    "param_knn_classify" -> knnClassifySql(k = 3, nEval = 20),
-    "sim_cosine_pairs" -> cosinePairsSql,
-    "sim_lsh_ann" -> lshAnnSql,
-    "sim_ivf_probe" -> ivfProbeSql,
-    "sim_index_refresh" -> indexRefreshSql(),
-    "param_index_refresh" -> indexRefreshSql(splitPct = 60),
-    "sim_staleness_recall" -> stalenessRecallSql(),
-    "param_staleness_recall" -> stalenessRecallSql(splitPct = 60),
-    "sim_index_tombstone" -> indexTombstoneSql(),
-    "param_index_tombstone" -> indexTombstoneSql(tombMod = 5, tombR = 0),
-    "sim_index_compaction" -> indexCompactionSql(),
-    "param_index_compaction" -> indexCompactionSql(
-      tombMod = 5, tombR = 0, tauBp = 2000),
-    "sim_ivf_kmeans" -> ivfKmeansSql,
-    "sim_codebook_drift" -> codebookDriftSql(),
-    "param_codebook_drift" -> codebookDriftSql(byDim = true),
-    "sim_ivfpq_residual" -> ivfPqResidualSql,
-    "sim_recall_eval" -> recallEvalSql,
-    "sim_mrl_eval" -> mrlEvalSql())
+  val registry: Seq[(String, Entry)] = Seq(
+    // stream ≡ batch probe IS the contract
+    "stream_ann_serve" -> Entry(annServeBatch _, ivfProbeSql, shuffles = 2),
+    "sim_knn_graph" -> Entry((s, d) => knnGraph(s, d), knnGraphSql(),
+      shuffles = 5), // bucket-keyed self-join + src-keyed top-k window
+    "param_knn_graph" -> Entry((s, d) => knnGraph(s, d, k = 3), knnGraphSql(k = 3), shuffles = 5),
+    "sim_hybrid_rrf" -> Entry((s, d) => hybridRrf(s, d), hybridRrfSql(),
+      shuffles = 5, // BM25's 3 + union-groupBy fusion
+      bnlj = true), // (b) broadcast query vector + BM25's stats scalar
+    "sim_rerank_pipeline" -> Entry(rerankPipeline _, rerankPipelineSql, shuffles = 4,
+      bnlj = true), // (a) stage 1 is sim_pq_adc's codebook crossJoin
+    "sim_sq8" -> Entry(sq8 _, sq8Sql, shuffles = 2,
+      bnlj = true), // (a) broadcast query codes, streaming corpus codes
+    "sim_binary_quantized" -> Entry(binaryQuantized _, binaryQuantizedSql, shuffles = 2,
+      bnlj = true), // (a) broadcast query fingerprints, streaming corpus scan
+    "sim_pooled_search" -> Entry(pooledSearch _, pooledSearchSql, shuffles = 1,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_filtered_search" -> Entry(filteredSearch _, filteredSearchSql, shuffles = 1,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_range_search" -> Entry(rangeSearch _, rangeSearchSql, shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_maxsim_multivec" -> Entry(maxsimMultivec _, maxsimMultivecSql, shuffles = 3,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_pq_adc" -> Entry(pqAdc _, pqAdcSql, shuffles = 3,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_topk_bruteforce" -> Entry(topkBruteforce _, topkBruteforceSql, shuffles = 1,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_mmr_select" -> Entry((s, d) => mmrSelect(s, d), mmrSelectSql(), shuffles = 2,
+      bnlj = true), // (a) H1's broadcast-probe pool build
+    "sim_rocchio_feedback" -> Entry((s, d) => rocchioFeedback(s, d), rocchioFeedbackSql(),
+      shuffles = 4, // r1 top-k window + seedpos/qexp rollups over contract-bounded rows + r2 window
+      bnlj = true), // (a) broadcast probes round 1, broadcast expanded queries round 2
+    "param_rocchio_feedback" -> Entry((s, d) => rocchioFeedback(s, d, k0 = 5, k = 20),
+      rocchioFeedbackSql(k0 = 5, k = 20), shuffles = 4,
+      bnlj = true), // (a) broadcast probes round 1, broadcast expanded queries round 2
+    "param_mmr_select" -> Entry((s, d) => mmrSelect(s, d, poolK = 10, selectK = 3),
+      mmrSelectSql(poolK = 10, selectK = 3), shuffles = 2,
+      bnlj = true), // (a) H1's broadcast-probe pool build
+    "sim_knn_classify" -> Entry((s, d) => knnClassify(s, d), knnClassifySql(),
+      shuffles = 3, // per-query topK window + vote rollup/argmax + matrix rollup (label-keyed)
+      bnlj = true), // (a) broadcast held-out eval set, streaming train corpus
+    "sim_classifier_metrics" -> Entry((s, d) => classifierMetrics(s, d), classifierMetricsSql(),
+      shuffles = 3, // post-checkpoint: two marginal aggs + full-outer over <= |classes| rows
+      bnlj = true), // (b) 1-row macro-F1 attach onto the |classes| rows
+    "param_classifier_metrics" -> Entry((s, d) => classifierMetrics(s, d, k = 3, nEval = 20),
+      classifierMetricsSql(k = 3, nEval = 20), shuffles = 3,
+      bnlj = true), // (b) 1-row macro-F1 attach onto the |classes| rows
+    "param_knn_classify" -> Entry((s, d) => knnClassify(s, d, k = 3, nEval = 20),
+      knnClassifySql(k = 3, nEval = 20), shuffles = 3,
+      bnlj = true), // (a) broadcast held-out eval set, streaming train corpus
+    "sim_cosine_pairs" -> Entry(cosinePairs _, cosinePairsSql, shuffles = 0,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_lsh_ann" -> Entry(lshAnn _, lshAnnSql, shuffles = 1,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_ivf_probe" -> Entry(ivfProbe _, ivfProbeSql, shuffles = 3,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_index_refresh" -> Entry((s, d) => indexRefresh(s, d), indexRefreshSql(),
+      shuffles = 3, // delta-assign window + probe window + rank window (base lists are a checkpoint leaf)
+      bnlj = true), // (a) bounded frozen-codebook crossJoin (delta encode + probe assign)
+    "sim_staleness_recall" -> Entry((s, d) => stalenessRecall(s, d), stalenessRecallSql(),
+      shuffles = 5, // truth window + per-state hit rollups + qid attaches (index build is the memoized H23 checkpoint leaf)
+      bnlj = true), // (b) H1's broadcast-query truth pass + H23's codebook crossJoins
+    "param_staleness_recall" -> Entry((s, d) => stalenessRecall(s, d, splitPct = 60),
+      stalenessRecallSql(splitPct = 60), shuffles = 5,
+      bnlj = true), // (b) H1's broadcast-query truth pass + H23's codebook crossJoins
+    "param_index_refresh" -> Entry((s, d) => indexRefresh(s, d, splitPct = 60),
+      indexRefreshSql(splitPct = 60), shuffles = 3,
+      bnlj = true), // (a) bounded frozen-codebook crossJoin (delta encode + probe assign)
+    "sim_index_tombstone" -> Entry((s, d) => indexTombstone(s, d), indexTombstoneSql(),
+      shuffles = 3, // H23's shape: delta-assign + probe + rank windows
+      bnlj = true), // (a) same codebook crossJoin, postings filtered at read
+    "param_index_tombstone" -> Entry((s, d) => indexTombstone(s, d, tombMod = 5, tombR = 0),
+      indexTombstoneSql(tombMod = 5, tombR = 0), shuffles = 3,
+      bnlj = true), // (a) same codebook crossJoin, postings filtered at read
+    "sim_index_compaction" -> Entry((s, d) => indexCompaction(s, d), indexCompactionSql(),
+      shuffles = 3, // delta-assign window + cell rollup + ordered serve (base lists are a checkpoint leaf)
+      bnlj = true), // (a) same codebook crossJoin on the delta-encode side of the merged file
+    "param_index_compaction" -> Entry((s, d) =>
+      indexCompaction(s, d, tombMod = 5, tombR = 0, tauBp = 2000),
+      indexCompactionSql(tombMod = 5, tombR = 0, tauBp = 2000), shuffles = 3,
+      bnlj = true), // (a) same codebook crossJoin on the delta-encode side of the merged file
+    "sim_ivf_kmeans" -> Entry(ivfKmeans _, ivfKmeansSql, shuffles = 15,
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    // cell rollup + 1-row totals agg + final decision agg over the
+    // checkpointed assignment leaf
+    "sim_codebook_drift" -> Entry((s, d) => codebookDrift(s, d), codebookDriftSql(), shuffles = 3,
+      bnlj = true), // (b) 1-row slice-totals attach onto the <=256-cell rollup
+    "param_codebook_drift" -> Entry((s, d) => codebookDrift(s, d, byDim = true),
+      codebookDriftSql(byDim = true), shuffles = 3,
+      bnlj = true), // (b) 1-row slice-totals attach onto the <=256-cell rollup
+    "sim_ivfpq_residual" -> Entry(ivfPqResidual _, ivfPqResidualSql,
+      shuffles = 3, // assignment window + encode argmin + score agg
+      bnlj = true), // (a) bounded centroid + residual-codebook crossJoins
+    "sim_recall_eval" -> Entry(recallEval _, recallEvalSql,
+      shuffles = 28, // six index families side by side
+      bnlj = true), // (a) broadcast query/request side, streaming corpus side
+    "sim_mrl_eval" -> Entry((s, d) => mrlEval(s, d), mrlEvalSql(),
+      shuffles = 14, // ground-truth topk + per-fraction truncated topk/hit joins (500-row metadata shuffles)
+      bnlj = true)) // (a) broadcast query/request side, streaming corpus side
 }

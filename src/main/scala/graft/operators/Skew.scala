@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Entry, Memo, Registered, Tables}
 
 /** Skew mitigation for hot keys (SURVEY §4).
   *
@@ -14,7 +14,7 @@ import graft.{Memo, Tables}
   * plan rewrites — results are exactly equal to the unsalted form
   * (SkewSpec asserts set equality).
   */
-object Skew {
+object Skew extends Registered {
 
   /** Deterministic per-row salt (hash of the given columns mod n) —
     * no rand(), so retries/replays see identical salts. */
@@ -280,21 +280,18 @@ object Skew {
        |  AND o.o_orderdate <  TIMESTAMP '$to 00:00:00'
        |GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "skew_salted_rollup" -> (saltedRollup _),
-    "skew_salted_join" -> (saltedJoinRollup _),
-    "range_bin_join" -> ((s, d) => rangeBinJoin(s, d)),
-    "param_range_bin_join" -> ((s, d) => rangeBinJoin(s, d, Windows2)),
-    "join_bloom_prefilter" -> ((s, d) => bloomJoinRevenue(s, d)),
-    "param_join_bloom_prefilter" -> ((s, d) => bloomJoinRevenue(s, d,
-      priority = "2-HIGH", from = "1996-06-01", to = "1997-06-01")))
-
-  val oracles: Map[String, String] = Map(
-    "skew_salted_rollup" -> saltedRollupSql,
-    "skew_salted_join" -> saltedJoinRollupSql,
-    "range_bin_join" -> rangeBinJoinSql(),
-    "param_range_bin_join" -> rangeBinJoinSql(Windows2),
-    "join_bloom_prefilter" -> bloomJoinRevenueSql(),
-    "param_join_bloom_prefilter" -> bloomJoinRevenueSql(
-      priority = "2-HIGH", from = "1996-06-01", to = "1997-06-01"))
+  val registry: Seq[(String, Entry)] = Seq(
+    "skew_salted_rollup" -> Entry(saltedRollup _, saltedRollupSql, shuffles = 2),
+    "skew_salted_join" -> Entry(saltedJoinRollup _, saltedJoinRollupSql,
+      shuffles = 3), // both SMJ sides on (key, salt) + rollup
+    "range_bin_join" -> Entry((s, d) => rangeBinJoin(s, d), rangeBinJoinSql(),
+      shuffles = 0), // bucket-equi BHJ against the exploded windows
+    "param_range_bin_join" -> Entry((s, d) => rangeBinJoin(s, d, Windows2),
+      rangeBinJoinSql(Windows2), shuffles = 0),
+    "join_bloom_prefilter" -> Entry((s, d) => bloomJoinRevenue(s, d), bloomJoinRevenueSql(),
+      shuffles = 2),
+    "param_join_bloom_prefilter" -> Entry((s, d) => bloomJoinRevenue(s, d,
+      priority = "2-HIGH", from = "1996-06-01", to = "1997-06-01"),
+      bloomJoinRevenueSql(priority = "2-HIGH", from = "1996-06-01", to = "1997-06-01"),
+      shuffles = 2))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Ckpt, Memo, Tables}
+import graft.{Ckpt, Entry, Memo, Registered, Tables}
 import graft.Ckpt.CutOps
 
 /** Text-analysis operators for training-data pipelines (SURVEY §2.I):
@@ -16,7 +16,7 @@ import graft.Ckpt.CutOps
   * doubles are then bit-identical in Spark and DuckDB), and hashes are
   * md5/polynomial-mod arithmetic, not engine-native hash functions.
   */
-object TextAnalysis {
+object TextAnalysis extends Registered {
 
   private def nonEmptyToks: Column = filter(split(col("text"), " "), c => c =!= "")
 
@@ -2814,112 +2814,115 @@ object TextAnalysis {
        |    CAST(SUM(CASE WHEN y = 0 AND pred = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
        |  FROM fin WHERE y IS NOT NULL)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_quality_classifier" -> ((s: SparkSession, d: String) =>
-      qualityClassifier(s, d)),
-    "param_quality_classifier" -> ((s: SparkSession, d: String) =>
-      qualityClassifier(s, d, epochs = 8, lr = 2.0)),
-    "text_quality_classifier_eval" -> ((s: SparkSession, d: String) =>
-      qualityClassifierEval(s, d)),
-    "text_zipf_fit" -> ((s: SparkSession, d: String) => zipfFit(s, d)),
-    "param_zipf_fit" -> ((s: SparkSession, d: String) =>
-      zipfFit(s, d, topK = 20)),
-    "text_vocab_growth" -> ((s: SparkSession, d: String) => vocabGrowth(s, d)),
-    "param_vocab_growth" -> ((s: SparkSession, d: String) =>
-      vocabGrowth(s, d, bucket = 16L)),
-    "text_rake_keywords" -> ((s, d) => rakeKeywords(s, d)),
-    "param_rake_keywords" -> ((s, d) => rakeKeywords(s, d, limit = 15)),
-    "text_kneser_ney" -> ((s, d) => kneserNey(s, d)),
-    "param_kneser_ney" -> ((s, d) => kneserNey(s, d, minCount = 5, limit = 30)),
-    "text_bpe_train" -> (bpeTrain _),
-    "text_bpe_encode" -> (bpeEncode _),
-    "text_tokenizer_eval" -> (tokenizerEval _),
-    "text_tokenizer_roundtrip" -> (tokenizerRoundtrip _),
-    "text_pmi_collocations" -> ((s, d) => pmiCollocations(s, d)),
-    "param_pmi_collocations" -> ((s, d) =>
-      pmiCollocations(s, d, minCount = 10, k = 20)),
-    "text_entropy" -> (entropyStats _),
-    "text_bm25_topk" -> ((s, d) => bm25TopK(s, d)),
-    "param_bm25_topk" -> ((s, d) =>
-      bm25TopK(s, d, terms = Seq("customer", "window"), k = 5)),
-    "text_perplexity_buckets" -> (perplexityBuckets _),
-    "text_bigram_surprisal" -> (bigramSurprisal _),
-    "text_stupid_backoff" -> (stupidBackoff _),
-    "text_bigram_lm" -> (bigramLm _),
-    "text_dsir_weights" -> (dsirWeights _),
-    "text_bpe_pair_stats" -> (bpePairStats _),
-    "text_repetition_signals" -> (repetitionSignals _),
-    "text_unigram_surprisal" -> (unigramSurprisal _),
-    "text_kl_divergence" -> ((s: SparkSession, d: String) => klDivergence(s, d)),
-    "text_js_divergence" -> ((s: SparkSession, d: String) => jsDivergence(s, d)),
-    "text_textrank" -> ((s: SparkSession, d: String) => textrank(s, d)),
-    "param_textrank" -> ((s: SparkSession, d: String) =>
-      textrank(s, d, iters = 3, limit = 20)),
-    "param_js_divergence" -> ((s: SparkSession, d: String) =>
-      jsDivergence(s, d, vocabK = 10)), // small vocab exercises <oov>
-    "text_lexical_diversity" -> (lexicalDiversity _),
-    "text_langid_trained" -> (langIdTrained _),
-    "param_kl_divergence" -> ((s: SparkSession, d: String) =>
-      klDivergence(s, d, vocabK = 50)),
-    "text_tfidf_top_terms" -> (tfidfTopTerms _),
-    "text_lang_id" -> (langId _),
-    "text_quality_score" -> (qualityScore _),
-    "text_quality_calibrate" -> ((s: SparkSession, d: String) =>
-      qualityCalibrate(s, d)),
-    "text_distinctive_terms" -> ((s: SparkSession, d: String) =>
-      distinctiveTerms(s, d)),
-    "param_distinctive_terms" -> ((s: SparkSession, d: String) =>
-      distinctiveTerms(s, d, srcA = "src2", srcB = "src3", alpha0 = 50.0)),
-    "param_quality_calibrate" -> ((s: SparkSession, d: String) =>
-      qualityCalibrate(s, d, nBuckets = 4)),
-    "text_token_count" -> (tokenCount _),
-    "text_rolling_fingerprint" -> (rollingFingerprint _))
-
-  val oracles: Map[String, String] = Map(
-    "text_quality_classifier" -> qualityClassifierSql(),
-    "param_quality_classifier" -> qualityClassifierSql(epochs = 8, lr = 2.0),
-    "text_quality_classifier_eval" -> qualityClassifierEvalSql(),
-    "text_zipf_fit" -> zipfFitSql(),
-    "param_zipf_fit" -> zipfFitSql(topK = 20),
-    "text_vocab_growth" -> vocabGrowthSql(),
-    "param_vocab_growth" -> vocabGrowthSql(bucket = 16L),
-    "text_rake_keywords" -> rakeKeywordsSql(),
-    "param_rake_keywords" -> rakeKeywordsSql(limit = 15),
-    "text_kneser_ney" -> kneserNeySql(),
-    "param_kneser_ney" -> kneserNeySql(minCount = 5, limit = 30),
-    "text_bpe_train" -> bpeTrainSql,
-    "text_bpe_encode" -> bpeEncodeSql,
-    "text_tokenizer_eval" -> tokenizerEvalSql,
-    "text_tokenizer_roundtrip" -> tokenizerRoundtripSql,
-    "text_pmi_collocations" -> pmiCollocationsSql(),
-    "param_pmi_collocations" -> pmiCollocationsSql(minCount = 10, k = 20),
-    "text_entropy" -> entropyStatsSql,
-    "text_bm25_topk" -> bm25TopKSql(),
-    "param_bm25_topk" -> bm25TopKSql(terms = Seq("customer", "window"), k = 5),
-    "text_perplexity_buckets" -> perplexityBucketsSql,
-    "text_bigram_surprisal" -> bigramSurprisalSql,
-    "text_stupid_backoff" -> stupidBackoffSql,
-    "text_bigram_lm" -> bigramLmSql,
-    "text_dsir_weights" -> dsirWeightsSql,
-    "text_bpe_pair_stats" -> bpePairStatsSql,
-    "text_repetition_signals" -> repetitionSignalsSql,
-    "text_unigram_surprisal" -> unigramSurprisalSql,
-    "text_kl_divergence" -> klDivergenceSql(),
-    "text_js_divergence" -> jsDivergenceSql(),
-    "text_textrank" -> textrankSql(),
-    "param_textrank" -> textrankSql(iters = 3, limit = 20),
-    "param_js_divergence" -> jsDivergenceSql(vocabK = 10),
-    "text_lexical_diversity" -> lexicalDiversitySql,
-    "text_langid_trained" -> langIdTrainedSql,
-    "param_kl_divergence" -> klDivergenceSql(vocabK = 50),
-    "text_tfidf_top_terms" -> tfidfTopTermsSql,
-    "text_lang_id" -> langIdSql,
-    "text_quality_score" -> qualityScoreSql,
-    "text_quality_calibrate" -> qualityCalibrateSql(),
-    "text_distinctive_terms" -> distinctiveTermsSql(),
-    "param_distinctive_terms" -> distinctiveTermsSql(
-      srcA = "src2", srcB = "src3", alpha0 = 50.0),
-    "param_quality_calibrate" -> qualityCalibrateSql(nBuckets = 4),
-    "text_token_count" -> tokenCountSql,
-    "text_rolling_fingerprint" -> rollingFingerprintSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "text_quality_classifier" -> Entry((s, d) => qualityClassifier(s, d), qualityClassifierSql(),
+      shuffles = 2),
+    "param_quality_classifier" -> Entry((s, d) => qualityClassifier(s, d, epochs = 8, lr = 2.0),
+      qualityClassifierSql(epochs = 8, lr = 2.0), shuffles = 2),
+    "text_quality_classifier_eval" -> Entry((s, d) => qualityClassifierEval(s, d),
+      qualityClassifierEvalSql(), shuffles = 2),
+    "text_zipf_fit" -> Entry((s, d) => zipfFit(s, d), zipfFitSql(),
+      shuffles = 6, // token rollup + TakeOrdered top-K; rank window / fit agg / serve sort are 100-row metadata exchanges
+      bnlj = true), // (b) 1-row OLS-fit attach onto the top-K rows
+    "param_zipf_fit" -> Entry((s, d) => zipfFit(s, d, topK = 20), zipfFitSql(topK = 20),
+      shuffles = 6,
+      bnlj = true), // (b) 1-row OLS-fit attach onto the top-K rows
+    "text_vocab_growth" -> Entry((s, d) => vocabGrowth(s, d), vocabGrowthSql(),
+      shuffles = 6), // type-min rollup + 2 bucket rollups + bucket join + metadata cum window
+    "param_vocab_growth" -> Entry((s, d) => vocabGrowth(s, d, bucket = 16L),
+      vocabGrowthSql(bucket = 16L), shuffles = 6),
+    "text_rake_keywords" -> Entry((s, d) => rakeKeywords(s, d), rakeKeywordsSql(),
+      shuffles = 3), // doc-keyed phrase window + phrase/word rollups (vocab-keyed joins broadcast) + TakeOrdered
+    "param_rake_keywords" -> Entry((s, d) => rakeKeywords(s, d, limit = 15),
+      rakeKeywordsSql(limit = 15), shuffles = 3),
+    "text_kneser_ney" -> Entry((s, d) => kneserNey(s, d), kneserNeySql(),
+      shuffles = 7, // bigram rollup + ctx/cont marginal rollups + two vocab-keyed attaches + type total + TakeOrdered
+      bnlj = true), // (b) 1-row bigram-type-total attach
+    "param_kneser_ney" -> Entry((s, d) => kneserNey(s, d, minCount = 5, limit = 30),
+      kneserNeySql(minCount = 5, limit = 30), shuffles = 7,
+      bnlj = true), // (b) 1-row bigram-type-total attach
+    "text_bpe_train" -> Entry(bpeTrain _, bpeTrainSql,
+      shuffles = 5, // corpus→vocab agg + one vocab-keyed pair agg per unrolled merge (merge picks are 1-row TakeOrdered broadcasts)
+      bnlj = true), // (b) 1-row argmax-merge broadcast per unrolled iteration
+    "text_bpe_encode" -> Entry(bpeEncode _, bpeEncodeSql,
+      shuffles = 17, // the training fold re-expands per consumer (vocab-sized metadata shuffles, never corpus rows) + token-keyed encode join + doc rollup
+      bnlj = true), // (b) same training fold inside; encode join is equi
+    "text_tokenizer_eval" -> Entry(tokenizerEval _, tokenizerEvalSql,
+      shuffles = 17, // I18's shape with a source rollup instead of the doc rollup
+      bnlj = true), // (b) I18's dictionary (same training fold); eval join is equi
+    "text_tokenizer_roundtrip" -> Entry(tokenizerRoundtrip _, tokenizerRoundtripSql,
+      shuffles = 10, // I15 training fold (8, as text_bpe_encode) + roundtrip dict join + source rollup
+      bnlj = true), // (b) same training fold; roundtrip join is equi
+    "text_pmi_collocations" -> Entry((s, d) => pmiCollocations(s, d), pmiCollocationsSql(),
+      shuffles = 6, // unigram agg + bigram agg + two word-key marginal joins + totals + TakeOrdered
+      bnlj = true), // (b) 1-row corpus-totals attach
+    "param_pmi_collocations" -> Entry((s, d) => pmiCollocations(s, d, minCount = 10, k = 20),
+      pmiCollocationsSql(minCount = 10, k = 20), shuffles = 6,
+      bnlj = true), // (b) 1-row corpus-totals attach
+    "text_entropy" -> Entry(entropyStats _, entropyStatsSql,
+      shuffles = 4), // (doc,unit) agg + doc agg, for chars and for words; the final join reuses the doc partitioning
+    "text_bm25_topk" -> Entry((s, d) => bm25TopK(s, d), bm25TopKSql(),
+      shuffles = 3, // per-doc agg + 1-row stats agg + fused-list rank
+      bnlj = true), // (b) corpus-stats scalar attach
+    "param_bm25_topk" -> Entry((s, d) => bm25TopK(s, d, terms = Seq("customer", "window"), k = 5),
+      bm25TopKSql(terms = Seq("customer", "window"), k = 5), shuffles = 3,
+      bnlj = true), // (b) corpus-stats scalar attach
+    "text_perplexity_buckets" -> Entry(perplexityBuckets _, perplexityBucketsSql, shuffles = 4,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    // r15: +1 model-scale exchange, -1 occurrence-stream shuffle (the
+    // bc⋈ctx attach joins at model scale; see text_stupid_backoff)
+    "text_bigram_surprisal" -> Entry(bigramSurprisal _, bigramSurprisalSql, shuffles = 6,
+      bnlj = true), // (b) vocab-size scalar attach
+    // r15: one MORE exchange but strictly fewer shuffled bytes — the
+    // pruned model, context totals and unigram marginal pre-join at
+    // MODEL scale (two extra model-sized exchanges) so the doc-bigram
+    // occurrence stream is shuffled through ONE join instead of two
+    "text_stupid_backoff" -> Entry(stupidBackoff _, stupidBackoffSql, shuffles = 6,
+      bnlj = true), // (b) corpus-total scalar attach
+    "text_bigram_lm" -> Entry(bigramLm _, bigramLmSql, shuffles = 2),
+    "text_dsir_weights" -> Entry(dsirWeights _, dsirWeightsSql, shuffles = 5,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "text_bpe_pair_stats" -> Entry(bpePairStats _, bpePairStatsSql, shuffles = 1),
+    "text_repetition_signals" -> Entry(repetitionSignals _, repetitionSignalsSql, shuffles = 2),
+    "text_unigram_surprisal" -> Entry(unigramSurprisal _, unigramSurprisalSql, shuffles = 3,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "text_kl_divergence" -> Entry((s, d) => klDivergence(s, d), klDivergenceSql(),
+      shuffles = 7, // token rollup (corpus-scale) + 6 vocab/source-keyed metadata rollups/serves
+      bnlj = true), // (b) bounded sources × ≤201-category broadcast grid + 1-row totals attach
+    "text_js_divergence" -> Entry((s, d) => jsDivergence(s, d), jsDivergenceSql(),
+      shuffles = 7, // I21's token rollup (corpus-scale) + vocab/category/source-keyed metadata rollups; pair grid is map-side
+      bnlj = true), // (b) bounded source-pairs × categories grid + 1-row n_cats attach
+    "text_textrank" -> Entry((s, d) => textrank(s, d), textrankSql(), shuffles = 2),
+    "param_textrank" -> Entry((s, d) => textrank(s, d, iters = 3, limit = 20),
+      textrankSql(iters = 3, limit = 20), shuffles = 2),
+    // small vocab exercises <oov>
+    "param_js_divergence" -> Entry((s, d) => jsDivergence(s, d, vocabK = 10),
+      jsDivergenceSql(vocabK = 10), shuffles = 7,
+      bnlj = true), // (b) bounded source-pairs × categories grid + 1-row n_cats attach
+    "text_lexical_diversity" -> Entry(lexicalDiversity _, lexicalDiversitySql,
+      shuffles = 4), // token rollup + source window + rollup + sort
+    "text_langid_trained" -> Entry(langIdTrained _, langIdTrainedSql,
+      shuffles = 13, // doc-scale: docBg/score/argmax/matrix rollups; rest are bounded model-side (lb/types/totals) metadata exchanges
+      bnlj = true), // (b) bounded langs × charset² model grid + 1-row type-count attach
+    "param_kl_divergence" -> Entry((s, d) => klDivergence(s, d, vocabK = 50),
+      klDivergenceSql(vocabK = 50),
+      shuffles = 7, // same plan shape, smaller vocab
+      bnlj = true), // (b) bounded sources × ≤201-category broadcast grid + 1-row totals attach
+    "text_tfidf_top_terms" -> Entry(tfidfTopTerms _, tfidfTopTermsSql, shuffles = 5,
+      bnlj = true), // (b) one-row broadcast scalar attach
+    "text_lang_id" -> Entry(langId _, langIdSql, shuffles = 0),
+    "text_quality_score" -> Entry(qualityScore _, qualityScoreSql, shuffles = 0),
+    "text_quality_calibrate" -> Entry((s, d) => qualityCalibrate(s, d), qualityCalibrateSql(),
+      shuffles = 2),
+    "text_distinctive_terms" -> Entry((s, d) => distinctiveTerms(s, d), distinctiveTermsSql(),
+      shuffles = 2,
+      bnlj = true), // (b) 1-row corpus-totals attach
+    "param_distinctive_terms" -> Entry((s, d) =>
+      distinctiveTerms(s, d, srcA = "src2", srcB = "src3", alpha0 = 50.0),
+      distinctiveTermsSql(srcA = "src2", srcB = "src3", alpha0 = 50.0), shuffles = 2,
+      bnlj = true), // (b) 1-row corpus-totals attach
+    "param_quality_calibrate" -> Entry((s, d) => qualityCalibrate(s, d, nBuckets = 4),
+      qualityCalibrateSql(nBuckets = 4), shuffles = 2),
+    "text_token_count" -> Entry(tokenCount _, tokenCountSql, shuffles = 0),
+    "text_rolling_fingerprint" -> Entry(rollingFingerprint _, rollingFingerprintSql, shuffles = 0))
 }

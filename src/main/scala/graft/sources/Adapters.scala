@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Entry, Registered, Tables}
 import graft.operators.Obs
 
 /** Source adapters (reference: libs/adapters/csv/labx.ts,
@@ -22,7 +22,7 @@ import graft.operators.Obs
   * the adapter's drop/fallback semantics have work to do — then parsed
   * back. The synth+parse round trip is the operator under test.
   */
-object Adapters {
+object Adapters extends Registered {
 
   /** Raw CSV labx line: patientId,code,value,unit,effectiveDateTime
     * (reference: libs/adapters/csv/labx.ts header contract).
@@ -258,15 +258,9 @@ object Adapters {
       |  strptime(substring(line, 29, 14), '%Y%m%d%H%M%S') AS effective
       |FROM raw""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "adapter_fixedwidth" -> (fixedWidth _),
-    "adapter_csv_labx" -> (csvLabx _),
-    "adapter_hl7_obx" -> (hl7Obx _),
-    "adapter_json_generic" -> (jsonGeneric _))
-
-  val oracles: Map[String, String] = Map(
-    "adapter_fixedwidth" -> fixedWidthSql,
-    "adapter_csv_labx" -> csvLabxSql,
-    "adapter_hl7_obx" -> hl7ObxSql,
-    "adapter_json_generic" -> jsonGenericSql)
+  val registry: Seq[(String, Entry)] = Seq(
+    "adapter_fixedwidth" -> Entry(fixedWidth _, fixedWidthSql, shuffles = 0),
+    "adapter_csv_labx" -> Entry(csvLabx _, csvLabxSql, shuffles = 0),
+    "adapter_hl7_obx" -> Entry(hl7Obx _, hl7ObxSql, shuffles = 0),
+    "adapter_json_generic" -> Entry(jsonGeneric _, jsonGenericSql, shuffles = 0))
 }

@@ -15,6 +15,7 @@ class MemoRewriteSpec extends SparkSpecBase {
     "k17_top_supplier_revenue" -> "lineitem",  // cached plan
     "dedup_apss_prefix" -> "documents",        // checkpointed table
     "audit_heavy_hitters_sketch" -> "events",  // driver-side sketch bytes
+    "dedup_bloom_decontaminate" -> "documents", // shared shingle set
     "store_partition_prune" -> "events")       // written layout
 
   /** The rewritten tables. Events are doubled, so a sketch of the old

@@ -31,476 +31,47 @@ class RegistrySpec extends SparkSpecBase {
   }
 
   test("USAGE.md covers every registered key's owning object") {
-    // the same per-object registries SparkEntry composes — kept in
-    // sync by the completeness assertion below, so a new operator
-    // slice can't ship without a USAGE.md row
-    val owners: Seq[(String, Set[String])] = Seq(
-      "graft.operators.Analytics" -> operators.Analytics.queries.keySet,
-      "graft.operators.QueryApi" -> operators.QueryApi.queries.keySet,
-      "graft.operators.Persist" -> operators.Persist.queries.keySet,
-      "graft.operators.Ingest" -> operators.Ingest.queries.keySet,
-      "graft.operators.Audit" -> operators.Audit.queries.keySet,
-      "graft.operators.Dedup" -> operators.Dedup.queries.keySet,
-      "graft.operators.TextAnalysis" -> operators.TextAnalysis.queries.keySet,
-      "graft.operators.Similarity" -> operators.Similarity.queries.keySet,
-      "graft.sources.Adapters" -> sources.Adapters.queries.keySet,
-      "graft.operators.Normalize" -> operators.Normalize.queries.keySet,
-      "graft.operators.EventStream" -> operators.EventStream.queries.keySet,
-      "graft.operators.Multimodal" -> operators.Multimodal.queries.keySet,
-      "graft.operators.Corpus" -> operators.Corpus.queries.keySet,
-      "graft.operators.Skew" -> operators.Skew.queries.keySet,
-      "graft.operators.Bucketing" -> operators.Bucketing.queries.keySet,
-      "graft.operators.Graph" -> operators.Graph.queries.keySet)
-    // completeness: the owner list IS the registry (no orphan keys)
-    assert(owners.flatMap(_._2).toSet == SparkEntry.queries.keySet,
-      "owner list out of sync with SparkEntry.queries")
     val usage = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("USAGE.md")), "UTF-8")
-    val missing = owners.collect {
-      case (obj, keys) if keys.nonEmpty && !usage.contains(obj) => obj
-    }
+    val missing = SparkEntry.owners.map(_.getClass.getName.stripSuffix("$"))
+      .filterNot(usage.contains)
     assert(missing.isEmpty, s"USAGE.md lacks owning objects: $missing")
     // the streaming twins and the Catalyst as-of node are API too
     assert(usage.contains("graft.streaming.StreamOps"))
     assert(usage.contains("graft.plans.AsOfJoin"))
   }
 
-  /** Queries whose BroadcastNestedLoopJoin is the CORRECT plan, in
-    * two documented classes: (a) brute-force scorers / API-contract
-    * request sets — a non-equi join over a broadcast QUERY/REQUEST
-    * side while the corpus side streams (documented correctness
-    * baselines, bounded by contract); (b) scalar joins — a crossJoin
-    * against a broadcast ONE-ROW aggregate (corpus totals, vocab
-    * size, clamp constants), where BNLJ degenerates to "attach the
-    * scalar to every row". Everything else must not BNLJ. */
-  private val bnljAllowed = Set(
-    // (a) broadcast query/request side, streaming corpus side
-    "sim_mmr_select", "param_mmr_select", // H1's broadcast-probe pool build
-    "sim_rocchio_feedback", "param_rocchio_feedback", // broadcast probes round 1, broadcast expanded queries round 2
-    "sim_topk_bruteforce", "sim_cosine_pairs", "sim_range_search",
-    "sim_maxsim_multivec", "sim_filtered_search", "sim_pooled_search",
-    "sim_recall_eval", "sim_mrl_eval",
-    "sim_knn_classify", "param_knn_classify", // broadcast held-out eval set, streaming train corpus
-    "sim_pq_adc", "sim_lsh_ann", "sim_ivf_probe", "sim_ivf_kmeans",
-    "sim_ivfpq_residual", // bounded centroid + residual-codebook crossJoins
-    "sim_index_refresh", "param_index_refresh", // bounded frozen-codebook crossJoin (delta encode + probe assign)
-    "sim_index_tombstone", "param_index_tombstone", // same codebook crossJoin, postings filtered at read
-    "sim_index_compaction", "param_index_compaction", // same codebook crossJoin on the delta-encode side of the merged file
-    "sim_sq8", // broadcast query codes, streaming corpus codes
-    "sim_binary_quantized", // broadcast query fingerprints, streaming corpus scan
-    "sim_rerank_pipeline", // stage 1 is sim_pq_adc's codebook crossJoin
-    "dedup_embedding_neardup", "dedup_semdedup",
-    "api_limit_clamp", "api_next_token", "dlq_redrive_batch",
-    "k19_idle_customers", "audit_list_page",
-    // (b) one-row broadcast scalar attach
-    "api_patient_bundle", "param_patient_bundle", // latest-obs + count attach
-    "k24_important_stock", // nation stock total
-    "k31_association_rules", "param_k31_association_rules", // 1-row order-total attach
-    "audit_constraint_check", // three 1-row metric tables cross-attach
-    "k29_rfm_segmentation", // 1-row quartile-threshold attach
-    "corpus_mix_weights", "corpus_resample", "corpus_temperature_mix",
-    "corpus_length_buckets", // 1-row naive-baseline attach
-    "corpus_balanced_shards", "param_balanced_shards", // 1-row token-total attach
-    "graph_degree_dist", "param_graph_degree_dist", // 1-row total + 1-row fit attach
-    "text_stupid_backoff", // corpus-total scalar attach
-    "text_dsir_weights",
-    "text_tfidf_top_terms", "text_unigram_surprisal",
-    "text_perplexity_buckets",
-    "text_bigram_surprisal", // vocab-size scalar attach
-    "text_bpe_train", // 1-row argmax-merge broadcast per unrolled iteration
-    "text_bpe_encode", // same training fold inside; encode join is equi
-    "text_tokenizer_eval", // I18's dictionary (same training fold); eval join is equi
-    "text_tokenizer_roundtrip", // same training fold; roundtrip join is equi
-    "corpus_mix_doremi", "param_mix_doremi", // 1-row corpus-total/vocab-size attaches; MW rounds are windows over the bounded source dim
-    "text_pmi_collocations", "param_pmi_collocations", // 1-row corpus-totals attach
-    "text_kneser_ney", "param_kneser_ney", // 1-row bigram-type-total attach
-    "text_bm25_topk", "param_bm25_topk", // corpus-stats scalar attach
-    "sim_hybrid_rrf", // broadcast query vector + BM25's stats scalar
-    "text_kl_divergence", "param_kl_divergence", // bounded sources × ≤201-category broadcast grid + 1-row totals attach
-    "text_js_divergence", "param_js_divergence", // bounded source-pairs × categories grid + 1-row n_cats attach
-    "events_survival", "param_survival", // 1-row horizon attach
-    "audit_health_report", "param_audit_health_report", // 1-row window-end/horizon attach
-    "text_langid_trained", // bounded langs × charset² model grid + 1-row type-count attach
-    "text_zipf_fit", "param_zipf_fit", // 1-row OLS-fit attach onto the top-K rows
-    "events_seasonal_decompose", "param_seasonal_decompose", // 1-row grand-mean attach for centering the 7 dow indices
-    "events_seasonal_anomaly", "param_seasonal_anomaly", // inherits L23's grand-mean attach
-    "sim_classifier_metrics", "param_classifier_metrics", // 1-row macro-F1 attach onto the |classes| rows
-    "text_distinctive_terms", "param_distinctive_terms", // 1-row corpus-totals attach
-    "k34_revenue_concentration", "param_k34_revenue_concentration", // 1-row threshold + totals + gini attaches onto <=10 rows
-    "k35_segment_migration", "param_k35_segment_migration", // K29's 1-row per-period quartile-threshold attach
-    "store_bloom_prune", "param_bloom_prune", // bounded probe x file-manifest broadcast grid (75 x files)
-    "sim_codebook_drift", "param_codebook_drift", // 1-row slice-totals attach onto the <=256-cell rollup
-    "sim_staleness_recall", "param_staleness_recall", // H1's broadcast-query truth pass + H23's codebook crossJoins
-    "graph_triangles_sampled", "param_graph_triangles_sampled", // four 1-row count/total attaches onto the single report row
-    "api_authz_scope", "param_authz_scope", // bounded principal directory (broadcast) x 4-row tenant rollup — the OR predicate is non-equi by nature, over metadata-scale sides only
-    "api_field_mask", "param_field_mask") // same E17 OR predicate: bounded principal directory (broadcast) against the patient-cardinality META store
+  test("no registry key is defined twice, within an object or across objects") {
+    val keys = SparkEntry.owners.flatMap(_.registry.map(_._1))
+    assert(keys.diff(keys.distinct).isEmpty,
+      s"keys defined twice: ${keys.diff(keys.distinct).distinct.sorted}")
+    val e = SparkEntry.registry("q1_pricing_summary")
+    val thrown = intercept[IllegalArgumentException](
+      SparkEntry.index(Seq("a" -> e, "b" -> e, "a" -> e)))
+    assert(thrown.getMessage.contains("defined twice: a"))
+  }
+
+  /** What the plan pins read off one key's final (post-AQE) plan. */
+  private case class Pins(cartesian: Boolean, bnlj: Boolean, shuffles: Int)
+
+  /** Every key run once; both plan pins check the same final plan. */
+  private lazy val pins: Seq[(String, Pins)] =
+    SparkEntry.registry.toSeq.sortBy(_._1).map { case (name, e) =>
+      val nodes = flattenPlan(executedPlan(e.fn(spark, sf)))
+      name -> Pins(
+        nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
+        nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
+        nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]))
+    }
 
   test("no query plans a cartesian product; BNLJ only where documented") {
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      val nodes = flattenPlan(executedPlan(df))
-      if (nodes.exists(
-          _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]))
-        failures += s"$name: CartesianProduct"
-      if (!bnljAllowed(name) && nodes.exists(
-          _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]))
-        failures += s"$name: BroadcastNestedLoopJoin"
+    val failures = pins.flatMap { case (name, p) =>
+      (if (p.cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
+        (if (p.bnlj && !SparkEntry.registry(name).bnlj) Seq(s"$name: BroadcastNestedLoopJoin")
+         else Nil)
     }
     assert(failures.isEmpty, failures.mkString("; "))
   }
-
-  /** Per-query shuffle budget: the number of ShuffleExchange nodes
-    * in the FINAL (post-AQE) physical plan, pinned at the as-built
-    * value for every registered query — a regression that adds a
-    * shuffle ANYWHERE in the registry fails here before it costs
-    * anything at scale. Counted over plan NODES (not the plan string)
-    * so cached subtrees (InMemoryTableScan is a leaf) and reused
-    * exchanges (ReusedExchange is a leaf) don't count: only shuffles
-    * the query actually pays for. Ceilings, not equalities — AQE may
-    * legitimately remove one (SMJ→BHJ conversion), never add one.
-    * Queries without an entry (future additions) get a default budget
-    * of 2 — add an explicit entry when a new operator legitimately
-    * needs more. Notable pins: the composite pipeline_end_to_end at
-    * its single-shuffle claim, every adapter/scan at ZERO, and
-    * persist_upsert_bucketed at ZERO (the bucketed layout satisfies
-    * every downstream distribution requirement). */
-  private val shuffleBudget: Map[String, Int] = Map(
-    "graph_eff_diameter" -> 5, // stacked N(t) agg + per-seed balls agg + band rollup + two single-partition windows — all over the memoized BFS leaf / maxHops-row frames
-    "param_graph_eff_diameter" -> 5,
-    "corpus_mix_doremi" -> 15, // two LM scoring chains (I6+I12 shapes) + 8 MW window rounds, each a k-row (bounded source dim) exchange
-    "param_mix_doremi" -> 15,
-    "pipeline_corpus_release_diff" -> 7, // two G1 hash rollups + keeper attaches + full-outer class zip + source rollup
-    "param_corpus_release_diff" -> 7,
-    "text_tokenizer_roundtrip" -> 10, // I15 training fold (8, as text_bpe_encode) + roundtrip dict join + source rollup
-    "graph_triangles_sampled" -> 14, // two full O2-shaped triangle totals (degree agg + 2 adjacency attaches + orient, x full & sampled)
-    "param_graph_triangles_sampled" -> 14,
-    "sim_staleness_recall" -> 5, // truth window + per-state hit rollups + qid attaches (index build is the memoized H23 checkpoint leaf)
-    "param_staleness_recall" -> 5,
-    "adapter_csv_labx" -> 0,
-    "adapter_fixedwidth" -> 0,
-    "adapter_hl7_obx" -> 0,
-    "adapter_json_generic" -> 0,
-    "api_get_patient" -> 1,
-    "api_latest_observation" -> 1,
-    "api_limit_clamp" -> 0,
-    "api_multi_get" -> 1,
-    "api_next_token" -> 0,
-    "api_obs_asof_join" -> 1,
-    "api_obs_by_code" -> 0,
-    "api_obs_by_patient" -> 0,
-    "api_obs_page_after" -> 0,
-    "api_profile_asof" -> 1, // hist window; probe side rides the SMJ
-    "api_profile_asof_del" -> 1, // same shape, LEFT join
-    "param_profile_asof" -> 1,
-    "persist_tombstone" -> 1, // applied window + agg share the entity exchange
-    "audit_purge_list" -> 1, // the complement slice of the same opState
-    "api_patient_bundle" -> 3, // meta window + two 1-row attachments
-    "param_patient_bundle" -> 3,
-    "audit_error_spikes" -> 2, // hourly rollup + per-tenant trail window
-    "events_seasonal_decompose" -> 3, // post-checkpoint: dow agg + grand + serve join (trend table is a day-cardinality leaf)
-    "param_seasonal_decompose" -> 3,
-    "events_seasonal_anomaly" -> 4, // L23's 3 + the interior-days median window (day-cardinality)
-    "param_seasonal_anomaly" -> 4,
-    "k34_revenue_concentration" -> 5, // post-checkpoint: totals + cum window + gini + serve attaches, all over <= 10 rows
-    "param_k34_revenue_concentration" -> 5,
-    "sim_classifier_metrics" -> 3, // post-checkpoint: two marginal aggs + full-outer over <= |classes| rows
-    "param_classifier_metrics" -> 3,
-    "persist_scd2" -> 1, // row_number + lead share one entity window
-    "text_bm25_topk" -> 3, // per-doc agg + 1-row stats agg + fused-list rank
-    "param_bm25_topk" -> 3,
-    "sim_hybrid_rrf" -> 5, // BM25's 3 + union-groupBy fusion
-    "sim_index_refresh" -> 3, // delta-assign window + probe window + rank window (base lists are a checkpoint leaf)
-    "param_index_refresh" -> 3,
-    "store_stats_incremental" -> 4, // store-merge agg + exact-NDV expand (partial/final over 4-col distinct) + attach; store itself is a checkpoint leaf
-    "param_stats_incremental" -> 4,
-    "sim_index_tombstone" -> 3, // H23's shape: delta-assign + probe + rank windows
-    "param_index_tombstone" -> 3,
-    "audit_distinct_users_sketch" -> 2,
-    "audit_hll_sketch_store" -> 4, // day-sketch agg + tenant merge + exact twin + join
-    "store_compaction_plan" -> 3, // manifest agg + metadata-only global cumsum + bin agg
-    "store_column_stats" -> 22, // 2 per profiled column (exact-NDV partial+final); branches exchange 1-row partials only
-    "audit_heavy_hitters_sketch" -> 2,
-    "audit_exp_histogram" -> 2, // (service,bucket) agg + service window
-    "audit_latency_quantiles" -> 1,
-    "audit_list_page" -> 0,
-    "audit_metric_counts" -> 1,
-    "audit_partition_counts" -> 2,
-    "audit_retention_expiry" -> 2,
-    "audit_value_quantiles" -> 1,
-    "audit_value_quantiles_sketch" -> 1,
-    "corpus_chunk" -> 0,
-    "corpus_mix_weights" -> 3,
-    "corpus_pack" -> 3,
-    "corpus_pii_redact" -> 0,
-    "corpus_quality_funnel" -> 0,
-    "corpus_resample" -> 3,
-    "corpus_sample_stratified" -> 0,
-    "corpus_shuffle_shards" -> 1,
-    "corpus_source_cap" -> 1,
-    "corpus_split_leakfree" -> 2,
-    "corpus_temperature_mix" -> 4, // lang agg + total + z + attach
-    "corpus_token_budget" -> 3,
-    // r15: one MORE exchange but strictly fewer shuffled bytes — the
-    // pruned model, context totals and unigram marginal pre-join at
-    // MODEL scale (two extra model-sized exchanges) so the doc-bigram
-    // occurrence stream is shuffled through ONE join instead of two
-    "text_stupid_backoff" -> 6,
-    "dedup_apss_prefix" -> 6, // df agg + prefix window + candidate join + verify joins, all keyed
-    "param_apss_prefix" -> 6,
-    "dedup_lsh_recall" -> 5, // truth/candidate pair-set join + band rollup (APSS state is cached)
-    "k29_rfm_segmentation" -> 3, // customer rollup + 1-row quartile agg + threshold attach
-    "k35_segment_migration" -> 4, // K29's 3 (both periods fold into ONE rollup/agg) + the bounded matrix serve sort
-    "param_k35_segment_migration" -> 4,
-    // countDistinct(url) expands to a two-phase agg beside the other
-    // aggregates (2) + the bounded ordered serve (1)
-    "dedup_url_canonical" -> 3,
-    "param_url_canonical" -> 3,
-    // five source-keyed rollups (base/top/pii/sec/dup) + the url
-    // group-size rollup + two source-dim joins + ordered serve — each
-    // input scan is one pass, joins are on the bounded source dim
-    "pipeline_corpus_datasheet" -> 8,
-    // cell rollup + 1-row totals agg + final decision agg over the
-    // checkpointed assignment leaf
-    "sim_codebook_drift" -> 3,
-    "param_codebook_drift" -> 3,
-    // eval over 6 derived relations (files/bits/probes/ppos/bm/tru):
-    // only 3 exchanges carry event-scale data (file rollup, set-bit
-    // distinct, true-hit distinct); the rest are probe-scale
-    "store_bloom_prune" -> 10,
-    "param_bloom_prune" -> 10,
-    "events_forecast_backtest" -> 3, // (day,hod) rollup + hod-keyed expanding window + ordered serve
-    "param_forecast_backtest" -> 3,
-    "events_funnel" -> 3, // user-key window + distinct expand + tenant rollup
-    "param_events_funnel" -> 3,
-    "events_cohort_retention" -> 3, // cohort agg + user-key join + distinct rollup
-    "dedup_bloom_decontaminate" -> 3,
-    "dedup_clusters" -> 0,
-    "dedup_contamination_frac" -> 3,
-    "dedup_decontaminate" -> 1,
-    "dedup_embedding_neardup" -> 2,
-    "dedup_exact" -> 1,
-    "dedup_fingerprint" -> 1,
-    "dedup_keep_corpus" -> 2,
-    "dedup_line_level" -> 3,
-    "dedup_minhash_estimate" -> 2, // sig agg (self-join side reused) + distinct
-    "dedup_minhash_lsh" -> 2,
-    "dedup_ngram_jaccard" -> 3,
-    "dedup_semdedup" -> 1,
-    "dedup_simhash" -> 1,
-    "dedup_simhash_hamming" -> 1, // sig agg; band sides reuse the exchange
-    "param_simhash_hamming" -> 1,
-    "sim_ivfpq_residual" -> 3, // assignment window + encode argmin + score agg
-    "dedup_substring_spans" -> 3,
-    "dedup_winnowing" -> 1,
-    "dlq_redrive_batch" -> 0,
-    "dlq_redrive_pending" -> 0,
-    "ingest_dedup_idempotency" -> 1,
-    "ingest_envelope" -> 0,
-    "ingest_partition_keys" -> 1,
-    "k10_running_revenue" -> 1,
-    "k11_small_qty_revenue" -> 2,
-    "k12_min_cost_supplier" -> 2,
-    "k13_linestatus_priority" -> 1,
-    "k14_disjunctive_revenue" -> 1,
-    "k15_promo_revenue" -> 1,
-    "k16_returned_item_report" -> 1,
-    "k17_top_supplier_revenue" -> 1,
-    "k18_nation_trade_volume" -> 1,
-    "k19_idle_customers" -> 2,
-    "k21_supplier_variety" -> 2,
-    "k22_market_share" -> 1,
-    "k23_product_profit" -> 3, // lineitem-orders SMJ + (nation,year) agg
-    "k24_important_stock" -> 2, // per-part agg + 1-row total rollup
-    "audit_constraint_check" -> 4, // orders agg (distinct expand) + lineitem agg + RI semi join + attach
-    "audit_mad_outliers" -> 2, // hourly rollup + service window (one events scan)
-    "param_mad_outliers" -> 2,
-    "events_session_paths" -> 2, // user-key session window+collect + path rollup (TakeOrdered serve)
-    "param_session_paths" -> 2,
-    "sim_knn_classify" -> 3, // per-query topK window + vote rollup/argmax + matrix rollup (label-keyed)
-    "param_knn_classify" -> 3,
-    "store_skew_report" -> 3, // key rollup + stacked onePart stat windows + ordered serve
-    "param_skew_report" -> 3,
-    "text_rake_keywords" -> 3, // doc-keyed phrase window + phrase/word rollups (vocab-keyed joins broadcast) + TakeOrdered
-    "param_rake_keywords" -> 3,
-    "audit_k_anonymity" -> 5, // QI rollup w/ two-level distinct (2) + class agg + onePart summary window + ordered serve
-    "param_k_anonymity" -> 5,
-    "events_markov" -> 4, // user sequence window + pair rollup + state marginal rollup + ordered serve
-    "events_cumulative_users" -> 4, // user first-seen agg + bucket rollup + onePart cumsum + ordered serve
-    "events_stickiness" -> 6, // (day,user) dedup + fan-out distinct (2: expand) + dau rollup + day join + ordered serve
-    "param_events_stickiness" -> 6,
-    "events_attribution" -> 3, // user-keyed touch join + per-purchase argmax + channel rollup
-    "param_events_attribution" -> 3,
-    "text_kneser_ney" -> 7, // bigram rollup + ctx/cont marginal rollups + two vocab-keyed attaches + type total + TakeOrdered
-    "param_kneser_ney" -> 7,
-    "store_equidepth_hist" -> 4, // bin agg + stacked cumsum/total windows + bucket agg + ordered serve
-    "param_equidepth_hist" -> 4,
-    // O-family: iterative graph algorithms pay one join + one agg
-    // exchange PER ITERATION by nature (Pregel supersteps); the edge
-    // build adds K30's two. Budgets pin today's per-iteration cost so
-    // an extra shuffle inside the loop multiplies and fails loudly.
-    "graph_pagerank" -> 9, // edges(2) + deg/adj + 5×(rank agg; join rides adj exchange) + TakeOrdered
-    "param_graph_pagerank" -> 7, // 3 iterations
-    "graph_triangles" -> 4, // edges(2) + deg attach + corner-explode rollup (wedge/closure joins broadcast at this SF)
-    "param_graph_triangles" -> 4,
-    "graph_bfs" -> 8, // edges(2) + seeds∩nodes + 3×(frontier distinct + anti-join) rides
-    "param_graph_bfs" -> 9, // 4 hops
-    "dedup_novelty_fraction" -> 3, // shingle first-doc agg + shingle join-back + doc rollup
-    "persist_cdc_apply" -> 4, // T1 replay + changefeed's two replays + entity-key merge join
-    "pipeline_cdc_roundtrip" -> 3, // shared T1 subtree + T2 replay + merge (diff/apply ride the entity exchange)
-    "param_cdc_roundtrip" -> 3,
-    "api_obs_gapfill" -> 3, // (patient,day) rollup + patient spine + fill window
-    "param_obs_gapfill" -> 3,
-    "sim_mrl_eval" -> 14, // ground-truth topk + per-fraction truncated topk/hit joins (500-row metadata shuffles)
-    "k31_association_rules" -> 10, // K30's pair agg re-expanded per direction + part marginals + rollups
-    "param_k31_association_rules" -> 10,
-    "audit_psi_drift" -> 3, // ref-edge agg + bucket counts + type window/rollup
-    "param_psi_drift" -> 3,
-    "k25_part_promotion" -> 2, // (part,supp) agg + qualifying-set distinct
-    "k26_waiting_suppliers" -> 4, // SMJ + per-order agg + supplier rollup
-    "param_k23_product_profit" -> 3,
-    "param_k26_waiting_suppliers" -> 4,
-    "k5_segment_rollup" -> 1,
-    "k6_top_customer_per_nation" -> 2,
-    "k7_priority_semi_join" -> 1,
-    "k8_order_count_histogram" -> 2,
-    "k9_large_volume_orders" -> 1,
-    "multimodal_decode_real" -> 0,
-    "multimodal_feature_stub" -> 0,
-    "multimodal_frame_sample" -> 0,
-    "multimodal_image_dedup" -> 1,
-    "multimodal_resize_stub" -> 0,
-    "normalize_entity_id" -> 0,
-    "normalize_fhir_map" -> 0,
-    "normalize_reject_counts" -> 1,
-    "normalize_unit_canonical" -> 0,
-    "normalize_validate_dto" -> 0,
-    "param_get_patient" -> 1,
-    "param_k15_promo_revenue" -> 1,
-    "param_k18_nation_trade_volume" -> 0,
-    "param_latest_observation" -> 1,
-    "param_obs_asof_join" -> 1,
-    "param_obs_by_code" -> 0,
-    "param_obs_by_patient" -> 0,
-    "param_obs_page_after" -> 0,
-    "param_q3_shipping_priority" -> 1,
-    "param_q6_forecast_revenue" -> 1,
-    "persist_asof_snapshot" -> 1,
-    "persist_conflict_check" -> 11, // per-(attempt,key) rollup + attempts re-agg + (date,hour,key) candidate join + retry-set agg — all over O(commits) metadata rows, never event rows; 11 cold / 10 when an earlier suite's cache lets AQE convert one SMJ (ceiling = cold)
-    "persist_changefeed" -> 3, // two snapshot replays + entity-key diff join
-    "persist_commit_log" -> 1,
-    "param_profile_asof_del" -> 1,
-    "persist_compacted_upsert" -> 3,
-    "persist_key_design" -> 0,
-    "persist_patient_meta" -> 1,
-    "persist_upsert_bucketed" -> 0,
-    "persist_upsert_version" -> 1,
-    "pipeline_end_to_end" -> 1,
-    "pipeline_corpus_prep" -> 8, // fp-window dedup + shingle distinct/join/anti (all doc- or shingle-keyed) + pack's block-total scan; two corpus text scans (chain + shingles)
-    "q1_incremental" -> 3, // base partials + tail partials + merge
-    "q1_pricing_summary" -> 1,
-    "q1_rollup" -> 2, // q1-shaped partial agg + 6-row rollup
-    "q1_pivot" -> 2, // pivot = two-phase agg (pre-agg on both keys, then pivot)
-    "range_bin_join" -> 0, // bucket-equi BHJ against the exploded windows
-    "param_range_bin_join" -> 0,
-    "store_skipping_read" -> 1, // manifest rollup; file consult broadcasts
-    "skew_salted_join" -> 3, // both SMJ sides on (key, salt) + rollup
-    "q3_shipping_priority" -> 1,
-    "q5_join_chain" -> 1,
-    "q6_forecast_revenue" -> 1,
-    "reprocess_content_type" -> 0,
-    "reprocess_replay_set" -> 2,
-    "sim_cosine_pairs" -> 0,
-    "sim_filtered_search" -> 1,
-    "sim_ivf_kmeans" -> 15,
-    "sim_ivf_probe" -> 3,
-    "sim_lsh_ann" -> 1,
-    "sim_maxsim_multivec" -> 3,
-    "sim_pooled_search" -> 1,
-    "sim_pq_adc" -> 3,
-    "sim_range_search" -> 0,
-    "sim_recall_eval" -> 28, // six index families side by side
-    "sim_rerank_pipeline" -> 4,
-    "sim_topk_bruteforce" -> 1,
-    "skew_salted_rollup" -> 2,
-    "store_partition_prune" -> 1,
-    "stream_enriched_rollup" -> 1,
-    "stream_event_dedup" -> 1,
-    "stream_interval_join" -> 0,
-    "stream_interval_join_outer" -> 0,
-    "stream_session_window" -> 1,
-    "stream_sessionize" -> 1,
-    "stream_tumbling_agg" -> 1,
-    "stream_user_latest_state" -> 1,
-    "text_bigram_lm" -> 2,
-    "text_bpe_train" -> 5, // corpus→vocab agg + one vocab-keyed pair agg per unrolled merge (merge picks are 1-row TakeOrdered broadcasts)
-    "text_bpe_encode" -> 17, // the training fold re-expands per consumer (vocab-sized metadata shuffles, never corpus rows) + token-keyed encode join + doc rollup
-    "text_tokenizer_eval" -> 17, // I18's shape with a source rollup instead of the doc rollup
-    "text_pmi_collocations" -> 6, // unigram agg + bigram agg + two word-key marginal joins + totals + TakeOrdered
-    "param_pmi_collocations" -> 6,
-    "text_entropy" -> 4, // (doc,unit) agg + doc agg, for chars and for words; the final join reuses the doc partitioning
-    // r15: +1 model-scale exchange, -1 occurrence-stream shuffle (the
-    // bc⋈ctx attach joins at model scale; see text_stupid_backoff)
-    "text_bigram_surprisal" -> 6,
-    "text_bpe_pair_stats" -> 1,
-    "text_dsir_weights" -> 5,
-    "text_lang_id" -> 0,
-    "text_perplexity_buckets" -> 4,
-    "text_quality_score" -> 0,
-    "text_repetition_signals" -> 2,
-    "text_rolling_fingerprint" -> 0,
-    "text_tfidf_top_terms" -> 5,
-    "text_token_count" -> 0,
-    "text_unigram_surprisal" -> 3,
-    "text_kl_divergence" -> 7, // token rollup (corpus-scale) + 6 vocab/source-keyed metadata rollups/serves
-    "param_kl_divergence" -> 7, // same plan shape, smaller vocab
-    "text_lexical_diversity" -> 4, // token rollup + source window + rollup + sort
-    "text_langid_trained" -> 13, // doc-scale: docBg/score/argmax/matrix rollups; rest are bounded model-side (lb/types/totals) metadata exchanges
-    "graph_clustering_coef" -> 4, // O2's compact-forward subtree + degree join + corner rollup
-    "param_graph_clustering_coef" -> 4,
-    "dedup_boilerplate" -> 3, // line census rollup + flag join + doc rebuild
-    "param_boilerplate" -> 3,
-    "corpus_balanced_shards" -> 7, // doc-keyed bucket join + shard rollup; rest bounded bucket/offset metadata exchanges
-    "param_balanced_shards" -> 7,
-    "graph_link_prediction" -> 6, // nbr-list collect + wedge rollup + anti join (edges cached)
-    "param_graph_link_prediction" -> 6,
-    "text_vocab_growth" -> 6, // type-min rollup + 2 bucket rollups + bucket join + metadata cum window
-    "param_vocab_growth" -> 6,
-    "text_zipf_fit" -> 6, // token rollup + TakeOrdered top-K; rank window / fit agg / serve sort are 100-row metadata exchanges
-    "param_zipf_fit" -> 6,
-    "events_attribution_decay" -> 6, // user-keyed join + p_id window + channel rollup
-    "param_attribution_decay" -> 6,
-    "sim_knn_graph" -> 5, // bucket-keyed self-join + src-keyed top-k window
-    "param_knn_graph" -> 5,
-    "events_ab_test" -> 4, // user rollup; arm rollup + 1-row pivot are metadata
-    "param_ab_test" -> 4,
-    "dedup_source_overlap" -> 8, // shingle distinct + doc join + source distinct + 2 rollups; size attaches broadcast
-    "param_source_overlap" -> 8,
-    "graph_degree_dist" -> 5, // node-keyed degree rollup; histogram rollup + metadata window/fit attaches
-    "param_graph_degree_dist" -> 5,
-    "audit_health_report" -> 5, // events rollup + tenant window/argmax + counter rollups (all tenant-keyed metadata after the first shuffle)
-    "param_audit_health_report" -> 5,
-    "events_survival" -> 8, // ONE corpus-wide user rollup; 1-row horizon agg + lifetime rollup + desc/asc curve windows + ordered serve are all bounded distinct-lifetime metadata exchanges
-    "param_survival" -> 8,
-    "text_js_divergence" -> 7, // I21's token rollup (corpus-scale) + vocab/category/source-keyed metadata rollups; pair grid is map-side
-    "param_js_divergence" -> 7,
-    "corpus_contrastive_triplets" -> 5, // G19 positive chain (shingle-keyed) + bucket-window negatives + pair anti-join
-    "param_contrastive_triplets" -> 5,
-    "events_burstiness" -> 3, // (type,user) lag window + type rollup + ordered serve
-    "pipeline_corpus_refresh" -> 5, // two shingle distincts + shingle join + delta rollup + hash/doc attaches
-    "param_corpus_refresh" -> 5,
-    "pipeline_corpus_refresh_trained" -> 5, // P4's skeleton; the trained gate is a per-row expression (zero classifier-side exchanges)
-    "param_corpus_refresh_trained" -> 5,
-    "sim_index_compaction" -> 3, // delta-assign window + cell rollup + ordered serve (base lists are a checkpoint leaf)
-    "param_index_compaction" -> 3,
-    "graph_closeness_hyperball" -> 6, // per-radius exact-ball rollups over the BFS leaf + band rollup + O11 serve rollup + ordered join (sketch iteration is a checkpoint leaf)
-    "param_closeness_hyperball" -> 6,
-    "corpus_cluster_sample" -> 4, // cluster window + sizes rollup + join + ordered serve over the checkpointed assignment leaf
-    "param_cluster_sample" -> 4,
-    "sim_rocchio_feedback" -> 4, // r1 top-k window + seedpos/qexp rollups over contract-bounded rows + r2 window
-    "param_rocchio_feedback" -> 4
-
-)
 
   /** The documented O(n²) correctness baselines — the ONLY queries
     * allowed to refuse service under the cluster-deployment confs. */
@@ -547,20 +118,14 @@ class RegistrySpec extends SparkSpecBase {
   }
 
   test("shuffle budget: no query plans more exchanges than its pinned ceiling") {
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    val measured = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      // node-based count on the FINAL (post-AQE) plan: cached subtrees
-      // (InMemoryTableScan is a leaf) and reused exchanges
-      // (ReusedExchange is a leaf) do not count — only shuffles this
-      // query actually paid for
-      val n = flattenPlan(executedPlan(fn(spark, sf)))
-        .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-      measured += s"\"$name\" -> $n,"
-      val budget = shuffleBudget.getOrElse(name, 2)
-      if (n > budget) failures += s"$name: $n exchanges > budget $budget"
+    // counted over plan nodes (see Entry.shuffles): cached subtrees and
+    // reused exchanges are leaves, so only shuffles the key pays count
+    info(pins.map { case (name, p) => s"\"$name\" -> ${p.shuffles}," }
+      .mkString("MEASURED[", " ", "]MEASURED"))
+    val failures = pins.collect { case (name, p)
+        if p.shuffles > SparkEntry.registry(name).shuffles =>
+      s"$name: ${p.shuffles} exchanges > budget ${SparkEntry.registry(name).shuffles}"
     }
-    info(measured.mkString("MEASURED[", " ", "]MEASURED"))
     assert(failures.isEmpty, failures.mkString("; "))
   }
 }
