@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Entry, Registered, Tables}
+import graft.{Entry, Registered}
 
 /** Query-API semantics of the reference re-expressed set-oriented
   * (reference: services/api-query/src/handler.ts + schema.graphql).
@@ -27,18 +27,24 @@ import graft.{Entry, Registered, Tables}
   *
   * PARAMETERS: every operator is a library function with defaulted
   * domain parameters (patient, code, time range, page size); the
-  * registry entries in [[queries]] are the pinned oracle
-  * instantiations, and each `*Sql` oracle is a builder over the SAME
-  * parameters so Spark and DuckDB can be compared at ANY call site
-  * (the `param_*` registry keys pin a second, non-default
-  * instantiation per family).
+  * entries in [[registry]] are the pinned oracle instantiations, and
+  * each `*Sql` oracle is a builder over the SAME parameters so Spark
+  * and DuckDB can be compared at ANY call site (the `param_*`
+  * registry keys pin a second, non-default instantiation per family).
   *
-  * Scale notes: every per-patient query is a partition-pruned range
-  * scan in spirit — the predicates (tenant, user, code, time range)
-  * push into the parquet scan so a 100 TB store reads only matching
-  * row groups; at cluster scale the store would be partitioned by
-  * tenant and bucketed by patient, making these true point scans.
-  * The latest-per-key query shuffles once on the grouping key.
+  * Scale notes: every read is served from [[Persist.store]], the
+  * store the Persist step builds once per landing — the observations
+  * cached hash-partitioned on the patient and sorted in the GSI2
+  * order (patient, code, ts, id), plus the patient profile rows. A
+  * per-patient read is a scan of cached batches whose column stats
+  * skip every batch outside the patient's key range; per-(patient,
+  * code) windows and rollups need no Exchange, since the store is
+  * already partitioned on the patient; getPatient is a filter on the
+  * cached profile. Only the tenant rollup (E17) and the joins with
+  * the profile history built from the events files (E10, E12)
+  * shuffle. At
+  * cluster scale the store would be partitioned by tenant and
+  * bucketed by patient on disk, making these true point scans.
   */
 object QueryApi extends Registered {
 
@@ -52,30 +58,24 @@ object QueryApi extends Registered {
 
   private def tenantSqlPred(tenant: String) = s"'t' || (user_id % 4) = '$tenant'"
 
+  /** The observations every read serves from: the store's `obs`. */
+  private def events(spark: SparkSession, dir: String): DataFrame =
+    Persist.store(spark, dir).obs
+
   /** E1 `api_get_patient` — getPatient(id): point lookup of the
     * patient-profile META row (reference: api-query/src/handler.ts:
     * 41-57 reads name/birthDate/lastUpdated from the PATIENT#<id>
     * META item), left-joined with the static registry attributes
     * (segment/balance ~ the demographics the registry carries). The
-    * META row comes from [[Persist.patientMeta]] — the D5 versioned
-    * upsert — so a profile update stream changes what this returns,
-    * exactly like the reference. The (tenant, patient) point
-    * predicates push through the META aggregate into the scan; the
-    * registry side is filtered to the same point key before a
-    * broadcast 1x1 join. */
+    * META row is [[Persist.patientMeta]] — the D5 versioned upsert —
+    * so a profile update stream changes what this returns, exactly
+    * like the reference. The store's `profile` holds these rows with
+    * the registry attributes already attached, so the read is a
+    * (tenant, patient) filter on cached blocks. */
   def getPatient(spark: SparkSession, dir: String,
-                 tenant: String = "t1", patient: Long = 13L): DataFrame = {
-    val registry = Tables.customer(spark, dir)
-      .filter(col("c_custkey") === patient)
-      .select(col("c_custkey").as("patient_id"),
-        col("c_mktsegment").as("segment"), col("c_acctbal").as("balance"))
-    Persist.patientMeta(spark, dir)
+                 tenant: String = "t1", patient: Long = 13L): DataFrame =
+    Persist.store(spark, dir).profile
       .filter(col("tenant_id") === tenant && col("patient_id") === patient)
-      .join(broadcast(registry), Seq("patient_id"), "left")
-      .select(col("tenant_id"), col("patient_id"), col("name"),
-        col("birth_date"), col("version"), col("last_updated"),
-        col("segment"), col("balance"))
-  }
 
   def getPatientSql(tenant: String = "t1", patient: Long = 13L): String =
     s"""WITH ${Persist.patientMetaSqlCte}
@@ -98,7 +98,7 @@ object QueryApi extends Registered {
                    from: String = "2024-01-05 00:00:00",
                    to: String = "2024-01-25 00:00:00",
                    limit: Int = 50): DataFrame =
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant) &&
         col("user_id") === patient && col("event_type") === code &&
         col("ts") >= lit(from).cast("timestamp") &&
@@ -128,12 +128,13 @@ object QueryApi extends Registered {
     * scans the tenant-scoped GSI descending and takes the first row;
     * set-oriented that is a row_number window over (ts, event_id)
     * descending. The tenant predicate restricts the scan BEFORE the
-    * window, so the shuffle carries one tenant's rows only. */
+    * window, and the store's patient partitioning already clusters
+    * every (patient, code), so the window plans no shuffle. */
   def latestObservation(spark: SparkSession, dir: String,
                         tenant: String = "t1"): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant))
       .select(Obs.tenant.as("tenant_id"), col("event_id"), col("user_id"),
         col("event_type"), col("ts"), col("value"))
@@ -164,11 +165,12 @@ object QueryApi extends Registered {
     * (K6's argmax form — map-side combinable, so the shuffle
     * carries one partial row per key, not the observation stream),
     * where E3's row_number answers the row-level question. On the
-    * D2b bucketed layout this plan needs no exchange at all.
+    * store (and on the D2b bucketed layout) the rollup's keys contain
+    * the patient partitioning key, so it needs no exchange at all.
     * Mean = exact decimal sum / count, rounded 6dp (house davg). */
   def obsStats(spark: SparkSession, dir: String,
                tenant: String = "t1"): DataFrame =
-    obsStatsFrom(Tables.events(spark, dir), tenant)
+    obsStatsFrom(events(spark, dir), tenant)
 
   /** E15 over any events-shaped frame — the seam BucketingSpec uses to
     * pin the zero-Exchange claim on the D2b bucketed layout
@@ -230,15 +232,14 @@ object QueryApi extends Registered {
     * excluded. Exactness: dv is an IEEE double subtraction and the
     * slope a double multiply-divide of exact integer µs gaps — the
     * same shape both engines, rounded 6dp at serve. Scale: ONE
-    * entity-keyed window (lag rides the same (tenant, patient, code)
-    * exchange every E-read pays; zero-Exchange on the D2b bucketed
-    * layout like E15). */
+    * entity-keyed window, which the store's patient partitioning
+    * satisfies without an exchange, like E15. */
   def obsTrend(spark: SparkSession, dir: String,
                tenant: String = "t1"): DataFrame = {
     val w = Window
       .partitionBy(col("tenant_id"), col("user_id"), col("event_type"))
       .orderBy(col("us"), col("event_id"))
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant))
       .select(Obs.tenant.as("tenant_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
@@ -283,7 +284,7 @@ object QueryApi extends Registered {
                    cursorId: Long = 0L, limit: Int = 20): DataFrame = {
     val ts0 = lit(cursorTs).cast("timestamp")
     val id0 = lit(cursorId)
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant) && col("user_id") === patient &&
         (col("ts") > ts0 || (col("ts") === ts0 && col("event_id") > id0)))
       .select(Obs.tenant.as("tenant_id"), col("event_id"), col("user_id"),
@@ -311,15 +312,17 @@ object QueryApi extends Registered {
     * first-class custom logical operator here:
     * [[graft.plans.AsOfJoin]], expanded during analysis by the
     * injected [[graft.plans.ResolveAsOfJoin]] rule into the
-    * union + last(struct, ignoreNulls) window plan — ONE shuffle on
-    * user_id, no range-join pair explosion (a naive ts-range join is
-    * O(probes x obs) per user). The tenant predicate lands on BOTH
-    * sides before the union, so it reaches both scans. */
+    * union + last(struct, ignoreNulls) window plan — at most ONE
+    * shuffle on user_id (none over the store: the union of two store
+    * reads keeps its patient partitioning), no range-join pair
+    * explosion (a naive ts-range join is O(probes x obs) per user).
+    * The tenant predicate lands on BOTH sides before the union, so it
+    * reaches both scans. */
   def obsAsofJoin(spark: SparkSession, dir: String,
                   tenant: String = "t1",
                   probeCode: String = "purchase",
                   obsCode: String = "click"): DataFrame = {
-    val ev = Tables.events(spark, dir).filter(tenantPred(tenant))
+    val ev = events(spark, dir).filter(tenantPred(tenant))
     graft.plans.AsOf.join(
       probe = ev.filter(col("event_type") === probeCode),
       obs = ev.filter(col("event_type") === obsCode),
@@ -377,7 +380,7 @@ object QueryApi extends Registered {
     // bounded by the preceding TakeOrdered)
     val w = Window.partitionBy(Obs.onePart(col("event_id")))
       .orderBy(col("ts"), col("event_id"))
-    val page = Tables.events(spark, dir)
+    val page = events(spark, dir)
       .filter(tenantPred(tenant) && col("user_id") === patient)
       .select(col("event_id"), col("ts"), col("value"))
       .orderBy(col("ts"), col("event_id")).limit(100)
@@ -416,7 +419,7 @@ object QueryApi extends Registered {
                 tenant: String = "t1", patient: Long = 13L,
                 pageSize: Int = 20, nextN: Int = 5): DataFrame = {
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    val scan = Tables.events(spark, dir)
+    val scan = events(spark, dir)
       .filter(tenantPred(tenant) && col("user_id") === patient)
     val page1Last = scan
       .select(col("event_id"), col("ts"))
@@ -489,7 +492,7 @@ object QueryApi extends Registered {
                 from: String = "2024-01-05 00:00:00",
                 to: String = "2024-02-10 00:00:00",
                 limit: Int = 40): DataFrame =
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant) && col("event_type") === code &&
         col("ts") >= lit(from).cast("timestamp") &&
         col("ts") < lit(to).cast("timestamp"))
@@ -536,7 +539,7 @@ object QueryApi extends Registered {
                   tenant: String = "t1", code: String = "purchase"): DataFrame = {
     val hist = Persist.profileHistory(spark, dir)
       .withColumnRenamed("user_id", "h_user")
-    val ev = Tables.events(spark, dir)
+    val ev = events(spark, dir)
       .filter(tenantPred(tenant) && col("event_type") === code)
     ev.join(hist,
         ev("user_id") === hist("h_user") &&
@@ -578,7 +581,7 @@ object QueryApi extends Registered {
                      tenant: String = "t1", code: String = "purchase"): DataFrame = {
     val hist = Persist.profileHistoryTombstoned(spark, dir)
       .withColumnRenamed("user_id", "h_user")
-    val ev = Tables.events(spark, dir)
+    val ev = events(spark, dir)
       .filter(tenantPred(tenant) && col("event_type") === code)
     ev.join(hist,
         ev("user_id") === hist("h_user") &&
@@ -605,32 +608,35 @@ object QueryApi extends Registered {
     * plan: schema.graphql's patient query resolves profile + latest
     * observation + a period's observation count through separate
     * AppSync resolvers (N+1 round trips to the store); set-oriented
-    * they collapse into one DataFrame — the META row (E1) joined with
-    * the registry, the latest matching observation (E3's point form)
-    * and the period count, each a 1-row broadcast attached to the
-    * 1-row profile. A missing sub-resolution (no purchase yet) yields
-    * NULL fields, exactly like a null GraphQL sub-object, never a
-    * dropped row. Scale: every side is a (tenant, patient) point scan
-    * with pushed predicates; the attachments are 1-row broadcasts. */
+    * they collapse into one DataFrame — the profile row (E1) joined
+    * with ONE aggregate over the patient's rows of the code, which
+    * gives both the latest observation (E3's point form) and the
+    * period count. A missing sub-resolution (no purchase yet) yields
+    * NULL latest fields and a zero count, exactly like a null GraphQL
+    * sub-object, never a dropped row. Scale: both sides are
+    * (tenant, patient) reads of the cached store; the aggregate
+    * groups on the patient, the store's partitioning key, so it needs
+    * no Exchange, and its one row joins the profile row by broadcast. */
   def patientBundle(spark: SparkSession, dir: String,
                     tenant: String = "t1", patient: Long = 13L,
                     obsCode: String = "purchase",
                     from: String = "2024-01-01 00:00:00",
                     to: String = "2024-02-01 00:00:00"): DataFrame = {
-    val scan = Tables.events(spark, dir)
+    val inWindow = col("ts") >= lit(from).cast("timestamp") &&
+      col("ts") < lit(to).cast("timestamp")
+    val obs = events(spark, dir)
       .filter(tenantPred(tenant) && col("user_id") === patient &&
         col("event_type") === obsCode)
-    val latest = scan
-      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("l"))
-      .select(col("l.ts").as("latest_obs_ts"),
-        col("l.value").as("latest_obs_value"))
-    val windowCount = scan
-      .filter(col("ts") >= lit(from).cast("timestamp") &&
-        col("ts") < lit(to).cast("timestamp"))
-      .agg(count(lit(1)).as("n_obs_window"))
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("l"),
+        count(when(inWindow, true)).as("n"))
     getPatient(spark, dir, tenant, patient)
-      .crossJoin(broadcast(latest))
-      .crossJoin(broadcast(windowCount))
+      .join(broadcast(obs), col("patient_id") === col("user_id"), "left")
+      .select(col("tenant_id"), col("patient_id"), col("name"),
+        col("birth_date"), col("version"), col("last_updated"),
+        col("segment"), col("balance"),
+        col("l.ts").as("latest_obs_ts"), col("l.value").as("latest_obs_value"),
+        coalesce(col("n"), lit(0L)).as("n_obs_window"))
   }
 
   def patientBundleSql(tenant: String = "t1", patient: Long = 13L,
@@ -685,7 +691,7 @@ object QueryApi extends Registered {
     val probeDf = probes.toDF("p_user", "p_type")
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant))
       .join(broadcast(probeDf),
         col("user_id") === col("p_user") && col("event_type") === col("p_type"),
@@ -732,7 +738,7 @@ object QueryApi extends Registered {
                  to: String = "2024-01-20 00:00:00"): DataFrame = {
     val wDay = Window.partitionBy(col("user_id"), col("day"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    val daily = Tables.events(spark, dir)
+    val daily = events(spark, dir)
       .filter(tenantPred(tenant) && col("event_type") === code &&
         col("ts") >= lit(from).cast("timestamp") &&
         col("ts") < lit(to).cast("timestamp"))
@@ -788,14 +794,13 @@ object QueryApi extends Registered {
     * lexicographically on the unique (ts, event_id) chain in BOTH
     * engines, so open/close need no second window pass and the whole
     * operator is ONE partial-agg'd groupBy. Scale: predicate prunes
-    * at the scan; one shuffle on the (patient, bucket) key; map-side
-    * partials reduce each bucket to a constant-size accumulator
-    * before the exchange. */
+    * at the scan; the (patient, bucket) key contains the store's
+    * patient partitioning, so the rollup needs no exchange. */
   def obsOhlc(spark: SparkSession, dir: String,
               tenant: String = "t1", code: String = "click",
               bucketHours: Int = 168): DataFrame = {
     val bucketUs = bucketHours * 3600L * 1000000L
-    Tables.events(spark, dir)
+    events(spark, dir)
       .filter(tenantPred(tenant) && col("event_type") === code)
       .groupBy(col("user_id"),
         timestamp_micros(expr(s"(unix_micros(ts) div $bucketUs) * $bucketUs")
@@ -862,7 +867,7 @@ object QueryApi extends Registered {
       spark.sparkContext.parallelize(
         principals.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3)), 1)
         .toJavaRDD(), pSchema)
-    val slice = Tables.events(spark, dir)
+    val slice = events(spark, dir)
       .groupBy(Obs.tenant.as("tenant_id"))
       .agg(count(lit(1)).as("n_obs"),
         countDistinct(col("user_id")).as("n_patients"))
@@ -908,8 +913,8 @@ object QueryApi extends Registered {
     * and the birth date GENERALIZED to its year (the limited-dataset
     * rule; truncation not suppression keeps cohort math possible).
     *
-    * Scale: the META store is patient-cardinality (D5's single
-    * shuffle, memo-free); the principal directory is a bounded
+    * Scale: the META rows are the store's cached profile,
+    * patient-cardinality; the principal directory is a bounded
     * broadcast; the OR row predicate is the documented E17 BNLJ
     * class. Masking itself is a codegen'd per-row projection — zero
     * added shuffle. */
@@ -980,7 +985,7 @@ object QueryApi extends Registered {
       bnlj = true), // (a) broadcast query/request side, streaming corpus side
     "api_limit_clamp" -> Entry((s, d) => limitClamp(s, d), limitClampSql(), shuffles = 0,
       bnlj = true), // (a) broadcast query/request side, streaming corpus side
-    "api_get_patient" -> Entry((s, d) => getPatient(s, d), getPatientSql(), shuffles = 1),
+    "api_get_patient" -> Entry((s, d) => getPatient(s, d), getPatientSql(), shuffles = 0),
     "api_obs_by_patient" -> Entry((s, d) => obsByPatient(s, d), obsByPatientSql(), shuffles = 0),
     "api_obs_gapfill" -> Entry((s, d) => obsGapfill(s, d), obsGapfillSql(),
       shuffles = 3), // (patient,day) rollup + patient spine + fill window
@@ -995,13 +1000,13 @@ object QueryApi extends Registered {
         from = "2024-01-08 00:00:00", to = "2024-01-28 00:00:00"),
       shuffles = 3),
     "api_latest_observation" -> Entry((s, d) => latestObservation(s, d), latestObservationSql(),
-      shuffles = 1),
-    "api_obs_stats" -> Entry((s, d) => obsStats(s, d), obsStatsSql(), shuffles = 2),
+      shuffles = 0),
+    "api_obs_stats" -> Entry((s, d) => obsStats(s, d), obsStatsSql(), shuffles = 0),
     "api_obs_trend" -> Entry((s, d) => obsTrend(s, d), obsTrendSql(), shuffles = 2),
     "param_obs_trend" -> Entry((s, d) => obsTrend(s, d, tenant = "t3"), obsTrendSql(tenant = "t3"),
       shuffles = 2),
     "param_obs_stats" -> Entry((s, d) => obsStats(s, d, tenant = "t2"), obsStatsSql(tenant = "t2"),
-      shuffles = 2),
+      shuffles = 0),
     "api_obs_page_after" -> Entry((s, d) => obsPageAfter(s, d), obsPageAfterSql(), shuffles = 0),
     "api_obs_asof_join" -> Entry((s, d) => obsAsofJoin(s, d), obsAsofJoinSql(), shuffles = 1),
     "api_obs_by_code" -> Entry((s, d) => obsByCode(s, d), obsByCodeSql(), shuffles = 0),
@@ -1010,12 +1015,11 @@ object QueryApi extends Registered {
     "api_profile_asof_del" -> Entry((s, d) => profileAsOfDel(s, d), profileAsOfDelSql(),
       shuffles = 1), // same shape, LEFT join
     "api_patient_bundle" -> Entry((s, d) => patientBundle(s, d), patientBundleSql(),
-      shuffles = 3, // meta window + two 1-row attachments
-      bnlj = true), // (b) latest-obs + count attach
+      shuffles = 0), // profile filter + per-patient aggregate, both on the store
     // non-default instantiations — the library-call path the driver
     // oracle-checks with the SAME parameterized SQL builders
     "param_get_patient" -> Entry((s, d) => getPatient(s, d, tenant = "t3", patient = 11L),
-      getPatientSql(tenant = "t3", patient = 11L), shuffles = 1),
+      getPatientSql(tenant = "t3", patient = 11L), shuffles = 0),
     "param_obs_by_patient" -> Entry((s, d) => obsByPatient(s, d, tenant = "t2",
       patient = 6L, code = "click",
       from = "2024-01-02 00:00:00", to = "2024-01-20 00:00:00", limit = 30),
@@ -1024,7 +1028,7 @@ object QueryApi extends Registered {
         from = "2024-01-02 00:00:00", to = "2024-01-20 00:00:00", limit = 30),
       shuffles = 0),
     "param_latest_observation" -> Entry((s, d) => latestObservation(s, d, tenant = "t0"),
-      latestObservationSql(tenant = "t0"), shuffles = 1),
+      latestObservationSql(tenant = "t0"), shuffles = 0),
     "param_obs_page_after" -> Entry((s, d) => obsPageAfter(s, d, tenant = "t1",
       patient = 9L, cursorTs = "2024-01-12 00:00:00", cursorId = 100L, limit = 10),
       obsPageAfterSql(tenant = "t1",
@@ -1050,6 +1054,5 @@ object QueryApi extends Registered {
       patientBundleSql(tenant = "t2",
         patient = 6L, obsCode = "click",
         from = "2024-01-05 00:00:00", to = "2024-01-15 00:00:00"),
-      shuffles = 3,
-      bnlj = true)) // (b) latest-obs + count attach
+      shuffles = 0))
 }

@@ -91,6 +91,17 @@ object Similarity extends Registered {
       .select(col("qid"), col("rank"), col("vec_id"), col("dot"))
   }
 
+  /** H1's exact top-K as (qid, vec_id): the ground truth the recall
+    * evaluators (H5, H17, H27) join every index's result against. A
+    * [[Memo.cached]] entry over embeddings.parquet, because each
+    * evaluator reads it from several branches, and a bare `.cache()`
+    * of it would keep serving the old truth after a rewrite of the
+    * embeddings (CacheManager matches the plan by path, not by
+    * content). [[topkBruteforce]] itself stays uncached. */
+  private def truth(spark: SparkSession, dir: String): DataFrame =
+    Memo.cached(spark, s"sim.truth:$dir", embSrc(dir))(
+      topkBruteforce(spark, dir).select(col("qid"), col("vec_id")))
+
   def topkBruteforceSql: String =
     s"""WITH q AS (
        |  SELECT vec_id AS qid,
@@ -996,7 +1007,7 @@ object Similarity extends Registered {
                       splitPct: Int = RefreshSplitPct): DataFrame = {
     val emb = quantized(spark, dir)
     val (splitId, cents, baseIdx) = refreshBaseParts(spark, dir, splitPct)
-    val bf = topkBruteforce(spark, dir).select(col("qid"), col("vec_id")).cache()
+    val bf = truth(spark, dir)
     val qids = bf.select(col("qid")).distinct()
     val truthDelta = bf.filter(col("vec_id") >= splitId)
       .groupBy(col("qid")).agg(count(lit(1)).as("n_truth_delta"))
@@ -1481,17 +1492,16 @@ object Similarity extends Registered {
   private[operators] def pqApproxScores(spark: SparkSession, dir: String): DataFrame = {
     val emb = quantized(spark, dir)
     val subvec = slice(col("qvec"), col("m") * PqDsub + 1, lit(PqDsub))
-    val codes = emb
+    // cached: enc and lut broadcast different projections of the
+    // codebook, which defeats exchange reuse — without the cache the
+    // hash-pick TakeOrdered over the full corpus runs twice per plan
+    val codes = Memo.cached(spark, s"sim.pqcodes:$dir", embSrc(dir))(emb
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(PqCodes)
       .select(col("vec_id").as("code_id"), col("qvec"))
       .select(col("code_id"),
         explode(typedLit((0 until PqM).toArray)).as("m"), col("qvec"))
       .select(col("code_id"), col("m"), subvec.as("cvec"))
-      .withColumn("cn", vdotQuantizedNative(col("cvec"), col("cvec")))
-      // cached: enc and lut broadcast different projections of the
-      // codebook, which defeats exchange reuse — without the cache the
-      // hash-pick TakeOrdered over the full corpus runs twice per plan
-      .cache()
+      .withColumn("cn", vdotQuantizedNative(col("cvec"), col("cvec"))))
     val enc = emb.crossJoin(broadcast(codes))
       .withColumn("score",
         col("cn") - lit(2L) * vdotQuantizedNative(subvec, col("cvec")))
@@ -1736,13 +1746,12 @@ object Similarity extends Registered {
     // residual codebook: hash-picked residual rows, per-subspace split
     // (bounded: PqCodes x PqM rows; cached because enc and lut
     // broadcast different projections of it — the H7 discipline)
-    val rcb = assigned
+    val rcb = Memo.cached(spark, s"sim.rpqcodes:$dir", embSrc(dir))(assigned
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(PqCodes)
       .select(col("vec_id").as("code_id"),
         explode(typedLit((0 until PqM).toArray)).as("m"), col("rvec"))
       .select(col("code_id"), col("m"), sub(col("rvec")).as("cvec"))
-      .withColumn("cn", vdotQuantizedNative(col("cvec"), col("cvec")))
-      .cache()
+      .withColumn("cn", vdotQuantizedNative(col("cvec"), col("cvec"))))
     val enc = assigned.crossJoin(broadcast(rcb))
       .withColumn("score",
         col("cn") - lit(2L) * vdotQuantizedNative(sub(col("rvec")), col("cvec")))
@@ -1908,7 +1917,7 @@ object Similarity extends Registered {
     // cached: the ground-truth subtree feeds qids and BOTH per-method
     // joins — without the cache the brute-force join + top-K window
     // re-executes per branch (ReuseExchange dedups only the shuffle)
-    val bf = topkBruteforce(spark, dir).select(col("qid"), col("vec_id")).cache()
+    val bf = truth(spark, dir)
     val qids = bf.select(col("qid")).distinct()
     def per(m: DataFrame, name: String): DataFrame = {
       val hits = bf.join(m.select(col("qid"), col("vec_id")), Seq("qid", "vec_id"))
@@ -1987,7 +1996,7 @@ object Similarity extends Registered {
               fracs: Seq[Int] = Seq(2, 4)): DataFrame = {
     val emb = quantized(spark, dir)
     // cached: feeds qids + one hit-join per fraction (H5's discipline)
-    val bf = topkBruteforce(spark, dir).select(col("qid"), col("vec_id")).cache()
+    val bf = truth(spark, dir)
     val qids = bf.select(col("qid")).distinct()
     val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
     val per = fracs.map { f =>

@@ -16,17 +16,23 @@ class MemoRewriteSpec extends SparkSpecBase {
     "dedup_apss_prefix" -> "documents",        // checkpointed table
     "audit_heavy_hitters_sketch" -> "events",  // driver-side sketch bytes
     "dedup_bloom_decontaminate" -> "documents", // shared shingle set
-    "store_partition_prune" -> "events")       // written layout
+    "store_partition_prune" -> "events",       // written layout
+    "api_get_patient" -> "events",             // the served store
+    "sim_recall_eval" -> "embeddings")         // cached brute-force truth
 
   /** The rewritten tables. Events are doubled, so a sketch of the old
-    * data would underestimate every user; the others change every
-    * answer that reads them. */
+    * data would underestimate every user; the embeddings' ids are
+    * reversed, so other vectors are the queries; the others change
+    * every answer that reads them. */
   private def rewritten(table: String): DataFrame = {
     val df = spark.read.parquet(s"$sf/$table.parquet")
     table match {
       case "lineitem" =>
         df.withColumn("l_extendedprice", col("l_extendedprice") * 2)
       case "documents" => df.filter(col("doc_id") % 2 === 0)
+      case "embeddings" =>
+        val maxId = df.agg(max(col("vec_id"))).head().getLong(0)
+        df.withColumn("vec_id", lit(maxId) - col("vec_id"))
       case "events" =>
         val maxId = df.agg(max(col("event_id"))).head().getLong(0)
         df.unionByName(df.withColumn("event_id", col("event_id") + maxId))

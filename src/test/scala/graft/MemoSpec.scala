@@ -58,6 +58,24 @@ class MemoSpec extends SparkSpecBase {
     assert(get() == 2 && builds.get == 2)
   }
 
+  test("an in-place overwrite of a directory table's part file is a token change") {
+    val d = java.nio.file.Files.createTempDirectory("memospec_dir")
+    val part = d.resolve("part-00000.parquet")
+    java.nio.file.Files.write(part, Array.fill[Byte](16)(1))
+    val builds = new AtomicInteger()
+    def get(): Int = Memo.value(spark, s"memospec:dir:$d", Seq(d.toString)) {
+      builds.incrementAndGet()
+    }
+    assert(get() == 1 && get() == 1)
+    val dirMtime = java.nio.file.Files.getLastModifiedTime(d)
+    // a truncating write into the existing file, as `cp` over it does
+    java.nio.file.Files.write(part, Array.fill[Byte](32)(2))
+    assert(part.toFile.setLastModified(part.toFile.lastModified() + 60000L))
+    assert(java.nio.file.Files.getLastModifiedTime(d) == dirMtime,
+      "the overwrite must leave the directory's own mtime where it was")
+    assert(get() == 2 && builds.get == 2)
+  }
+
   test("a build that calls another memo completes") {
     // many outer/inner key pairs, so some share a hash bin: a build
     // run inside ConcurrentHashMap.compute would fail there with

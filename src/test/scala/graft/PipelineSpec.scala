@@ -9,9 +9,16 @@ class PipelineSpec extends SparkSpecBase {
     val df = run("api_obs_asof_join")
     // the injected resolution rule must have replaced the custom node
     assert(!df.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoin]))
-    val shuffles = flattenPlan(executedPlan(df)).count(
+    def shuffles(d: org.apache.spark.sql.DataFrame) = flattenPlan(executedPlan(d)).count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
-    assert(shuffles == 1, "as-of join must shuffle exactly once on the key")
+    // served from the store, both sides already sit partitioned on the
+    // key, so the union keeps that partitioning and nothing shuffles
+    assert(shuffles(df) == 0, "the served as-of join must not shuffle")
+    // over the parquet files the operator shuffles exactly once
+    val ev = Tables.events(spark, sf)
+    val raw = plans.AsOf.join(ev.filter(col("event_type") === "purchase"),
+      ev.filter(col("event_type") === "click"), "user_id", "ts", "event_id", "value")
+    assert(shuffles(raw) == 1, "as-of join must shuffle exactly once on the key")
   }
 
   test("E5 as-of join: non-double value column resolves and keeps its type") {
@@ -366,18 +373,32 @@ class PipelineSpec extends SparkSpecBase {
     assert(perEntity.filter(col("n") =!= col("maxv") || col("minv") =!= 1).count() == 0)
   }
 
-  test("E2/E4 range scans: predicates push into the parquet scan") {
-    val p = plan(run("api_obs_by_patient"))
-    assert(p.contains("PushedFilters") && p.contains("user_id"))
+  test("E2/E4 range scans: predicates push into the store scan") {
+    // served from the store: the patient predicate reaches the cached
+    // scan (its batch stats prune), and no events file is read
+    val nodes = flattenPlan(executedPlan(run("api_obs_by_patient")))
+    assert(nodes.exists {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s.predicates.exists(_.references.exists(_.name == "user_id"))
+      case _ => false
+    }, "the user_id predicate must reach the store scan")
+    assert(!nodes.exists {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "events.parquet")
+      case _ => false
+    }, "a served range scan must not read the events files")
+    // and over the events files themselves it pushes into the parquet scan
+    val p = plan(Tables.events(spark, sf).filter(col("user_id") === 13L))
+    assert(p.contains("PushedFilters") && p.contains("EqualTo(user_id,13)"))
   }
 
-  test("E3 latest observation: single shuffle on the entity key") {
+  test("E3 latest observation: no shuffle on the store's entity partitioning") {
     val df = run("api_latest_observation")
     val shuffles = flattenPlan(executedPlan(df)).count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
-    assert(shuffles == 1)
+    assert(shuffles == 0)
     // rank-limit pushdown: Spark prunes each partition to the top row
-    // per key BEFORE the shuffle (WindowGroupLimit) — the reason a
+    // per key before the window (WindowGroupLimit) — the reason a
     // custom top-k operator is unnecessary here
     assert(executedPlan(df).toString.contains("WindowGroupLimit"))
   }
@@ -398,13 +419,13 @@ class PipelineSpec extends SparkSpecBase {
     assert(plan(back).contains("PartitionFilters"))
   }
 
-  test("E5 as-of join: joined obs is at or before probe time, single shuffle") {
+  test("E5 as-of join: joined obs is at or before probe time, no shuffle") {
     val df = run("api_obs_asof_join")
     // plan check first: cache() would hide the shuffle behind an
     // InMemoryTableScan
     val shuffles = flattenPlan(executedPlan(df)).count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-    assert(shuffles == 1, s"as-of join should shuffle once, got $shuffles")
+    assert(shuffles == 0, s"the served as-of join should not shuffle, got $shuffles")
     assert(df.filter(col("obs_ts") > col("probe_ts")).count() == 0)
     // left as-of: probes with no prior click keep null obs — the
     // registry pin serves tenant t1, so count against t1's purchases
