@@ -53,11 +53,13 @@ object Tables {
     * Exchange + sort-before-repartition costs 0.2-0.5 s while the
     * post-scan work is too small to amortize it. Only pipelines whose
     * per-row compute dominates the shuffle keep it (REPS=7 isolated
-    * A/B, winners only): the char-explode entropy pass (+1.0 s), the
-    * HL7 regex parse (+0.46), envelope validation (+0.48), BPE
+    * A/B, winners only): the char-explode entropy pass (+1.0 s), BPE
     * training (+0.24), q1's 8-aggregate pass (+0.37), PNG decode
-    * (+0.17), PII scrub (+0.14). Those call `Tables.x(spark, dir,
-    * fan = true)`; everything else reads unfanned.
+    * (+0.17), PII scrub (+0.14). Those call `Tables.lineitem` or
+    * `Tables.documents` with `fan = true`; everything else reads
+    * unfanned. (The HL7 parse and envelope validation, winners of the
+    * same A/B, read the served `Persist.store`, which is already split
+    * `defaultParallelism` ways.)
     *
     * Scale behavior: the gate is the ACTUAL footer row-group count
     * (memoized per mtime, early-exit at the parallelism target), so
@@ -117,9 +119,9 @@ object Tables {
     * Engine.configure) it arrives as raw nanos. Convert via integer
     * division (ns epoch values exceed 2^53 — double math would lose
     * precision) to a microsecond timestamp. */
-  def events(s: SparkSession, d: String, fan: Boolean = false): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val raw = load(s, d, "events", fan)
+    val raw = load(s, d, "events")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw

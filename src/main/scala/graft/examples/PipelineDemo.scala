@@ -14,7 +14,9 @@ object PipelineDemo {
     val spark = graft.Engine.session("pipeline-demo", "4")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
-    val state = graft.operators.Normalize.endToEnd(spark, dir).cache()
+    // endToEnd reads the served store's cached blocks, so each of the
+    // three actions below re-reads them instead of the parquet files
+    val state = graft.operators.Normalize.endToEnd(spark, dir)
     println(s"persisted entities: ${state.count()}")
     state.orderBy(col("n_observations").desc, col("patient_id"), col("code"))
       .show(5, truncate = false)

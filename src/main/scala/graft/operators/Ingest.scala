@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Entry, Registered, Tables}
+import graft.{Entry, Registered}
 
 /** Shared observation-stream column derivations (events as the
   * reference's ingest stream). Kept as pure Column functions so every
@@ -45,16 +45,18 @@ object Obs {
   * serialized payload (handler.ts:25), then persists the raw copy
   * under raw/<tenant>/<date>/<id>.json for replay. Set-oriented, the
   * envelope is a pure projection (codegen'd, no shuffle); the
-  * idempotency dedup is a first-writer-wins window on the key.
+  * idempotency dedup is a first-writer-wins window on the key. Every
+  * stage reads that raw copy as the landing's decoded events, the
+  * served [[Persist.store]], which B1 builds.
   */
 object Ingest extends Registered {
 
   /** A1 `ingest_envelope` — envelope wrap + content hash. The payload
     * canonical form is a '|'-joined field list; contentHash = sha256.
-    * Pure narrow projection: at 100 TB this is a single codegen'd
-    * scan-project stage, no shuffle. */
+    * Pure narrow projection: a single codegen'd stage over the
+    * store's partitions, no shuffle. */
   def envelope(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).select(
+    Persist.store(spark, dir).obs.select(
       col("event_id"),
       Obs.tenant.as("tenant_id"),
       concat(lit("src"), pmod(col("event_id"), lit(3))).as("source"),
@@ -84,7 +86,7 @@ object Ingest extends Registered {
   def dedupIdempotency(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("idempotency_key"))
       .orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
+    Persist.store(spark, dir).obs
       .withColumn("idempotency_key", concat(lit("k"), pmod(col("event_id"), lit(400))))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -107,7 +109,7 @@ object Ingest extends Registered {
     * volume. At scale these are the physical partitionBy columns of
     * the raw zone (see Audit.partitionedWrite spec). */
   def partitionKeys(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    Persist.store(spark, dir).obs
       .groupBy(Obs.tenant.as("tenant_id"), Obs.ingestDate.as("ingest_date"))
       .agg(count(lit(1)).as("n_objects"),
         Analytics.dsum(col("value")).as("total_value"))
@@ -148,7 +150,7 @@ object Ingest extends Registered {
     *      one dispatch edge a real user of the reference hits that
     *      C8's clean law cannot see.
     *
-    * Scale: pure casewise scan-project over events — zero shuffles;
+    * Scale: pure casewise projection over the store — zero shuffles;
     * every branch is codegen'd (from_json / split+trim are native
     * expressions, no UDF). */
   def presignRoute(spark: SparkSession, dir: String): DataFrame = {
@@ -174,7 +176,7 @@ object Ingest extends Registered {
         .when(col("event_type") === "error", lit("application/hl7-v2"))
         .when(col("event_type") === "signup", lit(null).cast("string"))
         .otherwise(lit("application/json"))
-    val base = Tables.events(spark, dir).select(col("event_id"),
+    val base = Persist.store(spark, dir).obs.select(col("event_id"),
       claimTenant.as("claim_tenant"), bodyTenant.as("body_tenant"),
       groupsRaw.as("groups_raw"), requestedCtRaw.as("requested_ct_raw"))
     val parsed =
@@ -265,5 +267,5 @@ object Ingest extends Registered {
     "ingest_envelope" -> Entry(envelope _, envelopeSql, shuffles = 0),
     "ingest_dedup_idempotency" -> Entry(dedupIdempotency _, dedupIdempotencySql, shuffles = 1),
     "ingest_partition_keys" -> Entry(partitionKeys _, partitionKeysSql, shuffles = 1),
-    "ingest_presign_route" -> Entry(presignRoute _, presignRouteSql, shuffles = 2))
+    "ingest_presign_route" -> Entry(presignRoute _, presignRouteSql, shuffles = 0))
 }

@@ -32,11 +32,12 @@ object Normalize extends Registered {
     * and output column — the r2 driver bench measured that at ~49 s
     * per query for 100 k rows (BENCH_r02). The barrier pins the parse
     * into one Project evaluated once per row; at sf0.1 that is ~1 s.
-    * Scan pushdown is not lost: nothing in this stage can reach the
-    * parquet scan anyway, since every predicate is over derived
-    * columns. */
+    * The rows come from the landing's decoded copy, the served
+    * [[Persist.store]] (B1 builds it), so the parse runs on every one
+    * of its `defaultParallelism` cached partitions; no predicate here
+    * could prune the scan anyway, since each is over derived columns. */
   def dto(spark: SparkSession, dir: String): DataFrame =
-    dtoFrom(graft.Tables.events(spark, dir, fan = true))
+    dtoFrom(Persist.store(spark, dir).obs)
 
   /** The same parse+defect-injection over any events-shaped frame
     * (pure Column pipeline + the Sealed barrier — streaming-safe). */
@@ -231,7 +232,7 @@ object Normalize extends Registered {
       .when(col("event_type") === "click", "g/L")
       .when(col("event_type") === "view", "mmol/L")
       .otherwise("1")
-    graft.Tables.events(spark, dir)
+    Persist.store(spark, dir).obs
       .select(col("event_id"), col("event_type").as("code"),
         col("value"), unit.as("unit"))
       .join(broadcast(conv), Seq("unit"), "left")
@@ -344,7 +345,7 @@ object Normalize extends Registered {
           !col("birth_date").rlike(BirthDateRe), "birth_date_pattern")
         .when(col("extra_prop").isNotNull, "additional_properties")
         .otherwise("valid")
-    patientDtoFrom(graft.Tables.events(spark, dir))
+    patientDtoFrom(Persist.store(spark, dir).obs)
       .groupBy(reason.as("reason"))
       .agg(count(lit(1)).as("n"))
   }
@@ -377,7 +378,7 @@ object Normalize extends Registered {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("patient_id"), col("code"))
       .orderBy(col("effective").desc, col("event_id").desc)
-    validObsFrom(graft.Tables.events(spark, dir))
+    validObsFrom(Persist.store(spark, dir).obs)
       .withColumn("rn", row_number().over(w))
       .groupBy(col("patient_id"), col("code"))
       .agg(count(lit(1)).as("n_observations"),
@@ -423,10 +424,10 @@ object Normalize extends Registered {
     * the B/C-family classes (89/109/113/127/131/137 for ingest;
     * 139/149/151/157 for persisted), so both envelope kinds carry
     * every reject reason at any SF. Scale: construct + validate are
-    * per-row expressions over one events scan; the rollup is a
+    * per-row expressions over one read of the store; the rollup is a
     * ≤12-row group-by — entirely map-side until the final count. */
   def validateEnvelope(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, dir, fan = true)
+    val ev = Persist.store(spark, dir).obs
     val s = (c: Column) => c.cast("string")
     val iso = date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
     val m = (k: Int) => pmod(col("event_id"), lit(k)) === 0
@@ -658,12 +659,13 @@ object Normalize extends Registered {
     * Route law (same casewise mapping as F4): click/purchase → .csv,
     * error → .hl7, signup → .bin, else → .json.
     *
-    * Scale: every branch is a narrow scan-project over a DISJOINT
-    * event_type slice — the dispatch predicate pushes into the scan,
-    * each payload is parsed by exactly one branch, and the union is
-    * physical concatenation: no shuffle anywhere in the plan. */
+    * Scale: every branch is a narrow projection over a DISJOINT
+    * event_type slice of the served store — the dispatch predicate
+    * filters its cached batches, each payload is parsed by exactly one
+    * branch, and the union is physical concatenation: no shuffle
+    * anywhere in the plan. */
   def sourceRoute(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, dir)
+    val ev = Persist.store(spark, dir).obs
     val nullS = lit(null).cast("string")
     def dto(route: String, patientId: Column, code: Column, value: Column,
             unit: Column, effective: Column)(src: DataFrame): DataFrame =
@@ -770,12 +772,12 @@ object Normalize extends Registered {
       |UNION ALL SELECT * FROM unsupported""".stripMargin
 
   val registry: Seq[(String, Entry)] = Seq(
-    "normalize_source_route" -> Entry(sourceRoute _, sourceRouteSql, shuffles = 2),
+    "normalize_source_route" -> Entry(sourceRoute _, sourceRouteSql, shuffles = 0),
     "normalize_validate_envelope" -> Entry(validateEnvelope _, validateEnvelopeSql, shuffles = 2),
     "pipeline_end_to_end" -> Entry(endToEnd _, endToEndSql, shuffles = 1),
     "normalize_unit_canonical" -> Entry(unitCanonical _, unitCanonicalSql, shuffles = 0),
     "normalize_validate_dto" -> Entry(validateDto _, validateDtoSql, shuffles = 0),
-    "normalize_validate_patient" -> Entry(validatePatient _, validatePatientSql, shuffles = 2),
+    "normalize_validate_patient" -> Entry(validatePatient _, validatePatientSql, shuffles = 1),
     "normalize_reject_counts" -> Entry(rejectCounts _, rejectCountsSql, shuffles = 1),
     "normalize_fhir_map" -> Entry(fhirMap _, fhirMapSql, shuffles = 0),
     "normalize_entity_id" -> Entry(entityId _, entityIdSql, shuffles = 0))

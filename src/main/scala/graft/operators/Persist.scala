@@ -62,15 +62,19 @@ object Persist extends Registered {
     appliedFrom(store(spark, dir).obs)
 
   /** The served store of one landing, the single-table design's
-    * stand-in: what the reference's Persist stage writes (the table
-    * keyed by tenant and patient, GSI2) and its Query API reads with
-    * point lookups.
-    *  - `obs`: the observation columns, hash-partitioned on `user_id`
-    *    into `defaultParallelism` partitions and sorted within each by
-    *    (user_id, event_type, ts, event_id), the GSI2 order. Every
-    *    entity window (user_id, event_type) and every per-patient
-    *    rollup over it plans no Exchange, and the sort lets the cached
-    *    batches' column stats prune a patient's point read.
+    * stand-in: the landing decoded once (the reference's raw copy kept
+    * for replay), what its Persist stage writes (the table keyed by
+    * tenant and patient, GSI2) and what its Query API reads with point
+    * lookups.
+    *  - `obs`: the whole decoded events table (all six columns),
+    *    hash-partitioned on `user_id` into `defaultParallelism`
+    *    partitions and sorted within each by (user_id, event_type, ts,
+    *    event_id), the GSI2 order. Every entity window (user_id,
+    *    event_type) and every per-patient rollup over it plans no
+    *    Exchange, the sort lets the cached batches' column stats prune
+    *    a patient's point read, and the stages before Persist
+    *    (Adapters, Ingest, Normalize) run their parse, hash and regex
+    *    work on every partition instead of one task per row group.
     *  - `profile`: the D5 META rows ([[metaFrom]] over `obs`)
     *    left-joined with the registry's segment and balance — the row
     *    getPatient serves.
@@ -79,16 +83,15 @@ object Persist extends Registered {
     * a landing (a new or rewritten events file) rebuilds it, and the
     * release unpersists both superseded frames. The build runs one
     * action that materializes both, so the first stage that asks for
-    * the store pays for it (D2 in the reference flow, as the
-    * reference's Persist stage writes the store) and every later read
-    * is a scan of cached blocks. */
+    * the store pays for it (B1 `csvLabx` in the reference flow) and
+    * every later read is a scan of cached blocks. */
   final case class Store(obs: DataFrame, profile: DataFrame)
 
   def store(spark: SparkSession, dir: String): Store =
     Memo.cachedFrames(spark, s"persist.store:$dir",
         Seq(s"$dir/events.parquet", s"$dir/customer.parquet")) { cache =>
       val obs = cache(Tables.events(spark, dir)
-        .select("event_id", "user_id", "event_type", "value", "ts")
+        .select("event_id", "user_id", "event_type", "value", "ts", "props")
         .repartition(spark.sparkContext.defaultParallelism, col("user_id"))
         .sortWithinPartitions("user_id", "event_type", "ts", "event_id"))
       val customers = Tables.customer(spark, dir)
@@ -135,8 +138,7 @@ object Persist extends Registered {
   /** D2 `persist_upsert_version` — idempotent versioned upsert, whole
     * batch at once: version = count of applied writes (consecutive
     * same-key replays suppressed), attributes = latest applied write
-    * wins. The first call after a landing builds the [[store]] it
-    * replays, as the reference's Persist stage writes it. */
+    * wins. It replays the [[store]] the flow's first stage built. */
   def upsertVersion(spark: SparkSession, dir: String): DataFrame =
     upsertVersionFrom(applied(spark, dir))
 

@@ -17,8 +17,7 @@ class BareCacheSpec extends SparkSpecBase {
   private val remaining: Seq[(String, String)] = Seq(
     "operators/TextAnalysis.scala" -> """.select(col("src"), col("dst"), col("w"), col("wtot")).cache()""",
     "operators/Graph.scala" -> """col("src"), col("dst"), col("d")).cache()""",
-    "operators/Graph.scala" -> """col("src"), col("dst"), col("d")).cache()""",
-    "examples/PipelineDemo.scala" -> """val state = graft.operators.Normalize.endToEnd(spark, dir).cache()""")
+    "operators/Graph.scala" -> """col("src"), col("dst"), col("d")).cache()""")
 
   /** `src` with comments blanked and line breaks kept; string and
     * char literals are kept as they are (a `//` inside one is not a

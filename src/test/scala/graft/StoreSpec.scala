@@ -8,10 +8,12 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Persist, QueryApi}
+import graft.operators.{Ingest, Normalize, Persist, QueryApi}
+import graft.sources.Adapters
 
 /** The served store ([[Persist.store]]): the reads it serves plan no
-  * shuffle and no scan of the events files, and every landing — a new
+  * shuffle and no scan of the events files, every stage before Persist
+  * reads it instead of the events files, and every landing — a new
   * part file, or a part file rewritten in place — rebuilds it, serves
   * what a fresh directory holding the same files serves, and releases
   * the blocks it superseded. */
@@ -40,6 +42,15 @@ class StoreSpec extends SparkSpecBase {
     }
   }
 
+  test("every Adapters, Ingest and Normalize key reads the store, not the events files") {
+    Persist.store(spark, sf)
+    for ((name, e) <- Seq(Adapters, Ingest, Normalize).flatMap(_.registry)) {
+      val ns = nodes(e.fn(spark, sf))
+      assert(!ns.exists(scansEvents), s"$name scans the events files")
+      assert(ns.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$name skips the store")
+    }
+  }
+
   /** One Spark-written part file holding `df`, staged outside any table. */
   private def part(df: DataFrame): Path = {
     val out = Files.createTempDirectory("graft_store_part").resolve("out")
@@ -59,12 +70,21 @@ class StoreSpec extends SparkSpecBase {
     d
   }
 
-  /** The reads perfbench serves (a read of the landed rows, then one of
-    * each kind), plus D2 and D5, as sorted row strings. */
+  /** The batch flow's eight calls (B1, B2, B4, A1, A2, C2, P1, D2),
+    * then the reads perfbench serves (a read of the landed rows, then
+    * one of each kind) and D5, as sorted row strings. */
   private def answers(dir: Path): Map[String, Seq[String]] = {
     val d = dir.toString
     def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq.mkString("|")).sorted
     Map(
+      "B1" -> rows(Adapters.csvLabx(spark, d)),
+      "B2" -> rows(Adapters.hl7Obx(spark, d)),
+      "B4" -> rows(Adapters.jsonGeneric(spark, d)),
+      "A1" -> rows(Ingest.envelope(spark, d)),
+      "A2" -> rows(Ingest.dedupIdempotency(spark, d)),
+      "C2" -> rows(Normalize.rejectCounts(spark, d)),
+      "P1" -> rows(Normalize.endToEnd(spark, d)),
+      "D2" -> rows(Persist.upsertVersion(spark, d)),
       "fresh" -> rows(QueryApi.obsByPatient(spark, d, "t1", 13L, "purchase",
         "2024-01-01 00:00:00", "2024-02-01 00:00:00", 50)),
       "obsByPatient" -> rows(QueryApi.obsByPatient(spark, d, "t1", 5L, "click",
@@ -74,7 +94,6 @@ class StoreSpec extends SparkSpecBase {
         "2024-01-01 00:00:00", "2024-01-15 00:00:00")),
       "latestObservation" -> rows(QueryApi.latestObservation(spark, d, "t1")),
       "obsStats" -> rows(QueryApi.obsStats(spark, d, "t1")),
-      "D2" -> rows(Persist.upsertVersion(spark, d)),
       "D5" -> rows(Persist.patientMeta(spark, d)))
   }
 
