@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Where an artifact ran and with which overrides, as the JSON
     * fields every Bench artifact ends with. The strings come from the
@@ -11,19 +10,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = Engine.builder(master, cpus.toInt).getOrCreate()
-    Engine.configure(spark)
-    // measurement-time conf overrides ("k=v;k=v") — lets A/B experiments
-    // (e.g. a spark.sql.* setting on/off) reuse the bench methodology
-    // without code edits; empty in driver runs, so the contract is
-    // unchanged there. The artifact records the applied pairs.
-    val overrides = Engine.applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
-    // warm the JVM/codegen paths so the first measured query doesn't
-    // absorb session startup (~3-4 s of JIT + codegen compile)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().write.mode("overwrite").format("noop").save()
+    // the artifact records the cores, master and applied conf overrides
+    val Engine.Driver(spark, cpus, master, overrides) = Engine.driver("graft-bench")
+    Engine.warmUp(spark, sfDir)
     // noop sink: materializes every row and column (count() would let
     // Catalyst prune computed columns away and under-measure).
     //
@@ -70,9 +59,7 @@ object Bench {
     // a broken canary must not take down the whole artifact.
     val CanaryEvery =
       sys.env.getOrElse("SPARK_GRAFT_CANARY_EVERY", "50").toInt.max(1)
-    def canaryFn(): Unit = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.mode("overwrite").format("noop").save()
+    def canaryFn(): Unit = Engine.warmUp(spark, sfDir)
     // CPU-bound companion canary (r13 verdict ask #2): the read canary
     // under-detects co-tenant CPU bursts — a compute-saturating
     // 32-core query degrades far more than a small scan does. A fixed
@@ -85,7 +72,7 @@ object Bench {
       // jitter / GC pauses can't fake a multiple of the median (a 7 ms
       // probe read 4x spreads from noise alone), short enough to cost
       // <2 s over a full-registry run
-      (0 until cpus.toInt).par.map { w =>
+      (0 until cpus).par.map { w =>
         var h = 1125899906842597L + w
         var i = 0
         while (i < 30000000) { h = h * 31 + i; i += 1 }
@@ -166,7 +153,7 @@ object Bench {
     val cn = canary.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cu = canaryCpu.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cp = canaryPos.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val env = envFields(sfDir, cpus, master, overrides)
+    val env = envFields(sfDir, cpus.toString, master, overrides)
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val totalNorm = if (normMed.nonEmpty) normMed.values.sum else 0.0
     val fullJson =

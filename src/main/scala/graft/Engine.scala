@@ -63,6 +63,37 @@ object Engine {
     spark
   }
 
+  /** A command-line tool's session (Bench, Verify, Timeit, PlanAudit,
+    * ScaleGen) with the settings it ran under. */
+  final case class Driver(spark: SparkSession, cpus: Int, master: String,
+      overrides: Seq[(String, String)])
+
+  /** The tools' one session factory, set from the environment:
+    * `SPARK_GRAFT_CPUS` (default: this machine's cores) sizes the
+    * shuffle partitions and the default master `local[cpus]`;
+    * `SPARK_GRAFT_MASTER` overrides the master (e.g.
+    * `local-cluster[2,8,4096]`, where broadcasts and closures cross
+    * real executor JVMs); `SPARK_GRAFT_CONF` holds measurement-time
+    * conf overrides ([[applyConf]]), so an A/B reuses a tool without
+    * code edits. */
+  def driver(appName: String): Driver = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val spark = configure(builder(master, cpus).appName(appName).getOrCreate())
+    Driver(spark, cpus, master,
+      applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", "")))
+  }
+
+  /** A fixed cheap rollup over lineitem into the noop sink: it warms
+    * the JVM and codegen paths, so a tool's first measured query does
+    * not absorb session start-up (~3-4 s of JIT and codegen compile).
+    * Bench also times it as its load canary. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count()
+      .write.mode("overwrite").format("noop").save()
+
   /** Conf gate for the documented O(n²) correctness baselines (H2
     * `sim_cosine_pairs`, G3 `dedup_ngram_jaccard`). They exist to
     * ground-truth the LSH/IVF scale paths and die at 100× data, so a

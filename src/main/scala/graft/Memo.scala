@@ -107,6 +107,19 @@ object Memo {
       catch { case e: Throwable => held.foreach(_.unpersist(blocking = false)); throw e }
     }._1
 
+  /** Frames cached for one build only, never entries: `body` caches
+    * each frame through the function it is given, and all of them are
+    * unpersisted when `body` returns or throws. For scaffolding that
+    * every round of a loop joins on its key (the PageRank adjacency):
+    * the cache keeps the plan's hash partitioning, so a round's join
+    * moves only the other side, while a joined [[Ckpt.cut]] table is
+    * re-shuffled every round. */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    var held = List.empty[DataFrame]
+    try body { df => held = df.cache() :: held; held.head }
+    finally held.foreach(_.unpersist(blocking = false))
+  }
+
   /** A lineage-cut table: `build` returns a frame whose leaves are
     * checkpointed (its last step is `cutLineage()`). The checkpoint
     * mode is part of the token, so a mid-session

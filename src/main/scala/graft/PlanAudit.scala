@@ -11,9 +11,7 @@ package graft
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    Engine.configure(spark)
+    val spark = Engine.driver("graft-planaudit").spark
     spark.sparkContext.setLogLevel("ERROR")
     // windowspecdefinition whose FIRST argument is already a sort order
     // ("attr#id ASC/DESC ...") has no partition columns -> single-task

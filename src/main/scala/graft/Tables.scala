@@ -59,7 +59,14 @@ object Tables {
     * `Tables.documents` with `fan = true`; everything else reads
     * unfanned. (The HL7 parse and envelope validation, winners of the
     * same A/B, read the served `Persist.store`, which is already split
-    * `defaultParallelism` ways.)
+    * `defaultParallelism` ways.) A 4-core re-measure (graft.Bench at
+    * sf0.1, REPS=5, 3 alternating pairs, every canary max/median
+    * ≤ 2.1) against a copy with the gate's repartition removed kept
+    * it: the 15 fanned keys summed 14.9 s of medians with the gate
+    * and 19.6 s without (text_entropy 2.13 → 3.64 s, q1 1.89 → 2.29,
+    * each slower without the gate in 3 of 3 pairs), the two control
+    * keys moved 0.08 s, and an unconditional `repartition` would add
+    * an exchange to ~15 keys at sf0.001, where the gate does not fire.
     *
     * Scale behavior: the gate is the ACTUAL footer row-group count
     * (memoized per mtime, early-exit at the parallelism target), so

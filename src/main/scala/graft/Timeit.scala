@@ -14,15 +14,9 @@ object Timeit {
     val sfDir = args(0)
     val explain = args.contains("-x")
     val names = args.drop(1).filterNot(_ == "-x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    Engine.configure(spark)
-    // same measurement-time conf overrides as Bench ("k=v;k=v")
-    Engine.applyConf(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+    val spark = Engine.driver("graft-timeit").spark
     spark.sparkContext.setLogLevel("ERROR")
-    // warm the JVM/codegen paths (same as Bench)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().write.mode("overwrite").format("noop").save()
+    Engine.warmUp(spark, sfDir)
     names.foreach { n =>
       // time construction + action: several registry queries (the
       // streaming twins, eval composites) do their real work eagerly

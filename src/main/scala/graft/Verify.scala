@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,9 @@ object Verify {
     val outDir = args(1)
     // optional: extra args select a subset of queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — used to
-    // run the whole registry under local-cluster[2,8,4096], where
-    // broadcast transport and closure serialization cross REAL
-    // executor JVM boundaries (the r8 verdict's cluster-readiness ask)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = Engine.builder(master, cpus.toInt).getOrCreate()
-    Engine.configure(spark)
+    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the whole
+    // registry across real executor JVMs (see Engine.driver)
+    val spark = Engine.driver("graft-verify").spark
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -128,11 +128,6 @@ object VectorExpressions {
     }
   }
 
-  /** Column wrapper for FloatVectorDot. */
-  def vdotNative(a: Column, b: Column): Column =
-    GraftSqlBridge.column(
-      FloatVectorDot(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
   /** Column wrapper for LongVectorDot. */
   def vdotQuantizedNative(a: Column, b: Column): Column =
     GraftSqlBridge.column(

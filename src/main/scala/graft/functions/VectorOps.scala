@@ -5,30 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Vector math over Array[Float] embedding columns as pure Column
   * pipelines (codegen'd higher-order functions — no UDFs, so the hot
-  * path stays inside whole-stage codegen at 100 TB).
-  *
-  * Float elements are cast to double before arithmetic: float*int
-  * promotion rules differ across engines, double math is IEEE-
-  * identical everywhere.
+  * path stays inside whole-stage codegen at 100 TB). The dot products
+  * are native expressions ([[VectorExpressions]]).
   */
 object VectorOps {
 
-  /** Double dot product of two array columns. */
-  def vdot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def vnorm(a: Column): Column = sqrt(vdot(a, a))
-
-  def vcosine(a: Column, b: Column): Column = vdot(a, b) / (vnorm(a) * vnorm(b))
-
-  /** Integer-exact quantization: round(x * scale) as long. Quantized
+  /** Integer-exact quantization: round(x * scale) as long, each float
+    * cast to double first (float*int promotion rules differ across
+    * engines, double math is IEEE-identical everywhere). Quantized
     * dot products are integer arithmetic — deterministic ranks across
     * engines and partitionings (float summation order is not). */
   def vquantize(a: Column, scale: Double): Column =
     transform(a, x => round(x.cast("double") * scale).cast("long"))
-
-  /** Exact dot product of two quantized (long) vectors. */
-  def vdotQuantized(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 }

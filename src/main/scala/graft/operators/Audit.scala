@@ -1677,18 +1677,10 @@ object Audit extends Registered {
       (drain: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dbg = sys.env.contains("GRAFT_REPLAY_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(tag: String): Unit = {
-      if (dbg) System.err.println(
-        f"[replay] $tag ${(System.nanoTime - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
     val evs = Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .as[graft.streaming.StreamOps.Event]
       .collect().sortBy(e => (e.ts.getTime, e.event_id)).toSeq
-    mark("collect")
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[graft.streaming.StreamOps.Event]
     val name = s"graft_stream_twin_${streamSeq.incrementAndGet()}"
@@ -1697,21 +1689,15 @@ object Audit extends Registered {
     // floor; see StreamOps.withReplayPartitions)
     graft.streaming.StreamOps.withReplayPartitions(spark) {
       val q = start(ms.toDS(), name)
-      mark("start")
       try {
         val (a, rest) = evs.splitAt(evs.size / 4)
         val (b, c) = rest.splitAt(2 * rest.size / 3)
         ms.addData(a); q.processAllAvailable()
-        mark("batch1")
         ms.addData(b); q.processAllAvailable()
-        mark("batch2")
         ms.addData(c); q.processAllAvailable()
-        mark("batch3")
         // materialize off the memory sink so the served frame outlives
         // the dropped temp view (bounded: services × hours rows)
-        val out = graft.Ckpt.cut(drain(spark.table(name)))
-        mark("drain")
-        out
+        graft.Ckpt.cut(drain(spark.table(name)))
       } finally {
         q.stop()
         spark.catalog.dropTempView(name)

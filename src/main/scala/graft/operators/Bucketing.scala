@@ -423,11 +423,9 @@ object Bucketing extends Registered {
         Seq(s"$dir/lineitem.parquet")) {
       val (union, wide) =
         statsStoreFromWide(Tables.lineitem(spark, dir), partFmt)
-      val outer = union.cutLineage()
-      // the outer checkpoint materialized the union: the inner wide
+      // the outer checkpoint materializes the union: the inner wide
       // blocks would otherwise stay pinned for the session
-      Ckpt.release(wide)
-      outer
+      Ckpt.cut(union, wide)
     }
 
   /** The merged read over any store frame (base, delta, or union). */

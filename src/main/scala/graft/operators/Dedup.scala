@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Entry, Memo, Registered, Tables}
+import graft.{Ckpt, Entry, Memo, Registered, Tables}
 import graft.Ckpt.CutOps
 
 /** Document deduplication for LLM-scale corpora (SURVEY §2.G).
@@ -684,6 +684,8 @@ object Dedup extends Registered {
       val next = labels.unionAll(messages)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
         .cutLineage()
+      // next is materialized: the superseded labels' blocks can go
+      Ckpt.release(labels)
       val s = Option(next.agg(sum(col("label"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       labels = next

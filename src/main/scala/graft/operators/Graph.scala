@@ -24,12 +24,13 @@ import graft.Ckpt.CutOps
   * unrolled CTEs (aggregates are not allowed in a recursive CTE term,
   * and fixed-depth unrolling is exactly what the driver can verify).
   *
-  * Scale design: the directed edge list is materialized once per call
-  * with degrees attached (adjacency), so each Pregel-style iteration
+  * Scale design: the directed edge list is cached once per dir,
+  * hash-partitioned by src, and PageRank caches it for one build with
+  * degrees attached (the adjacency), so each Pregel-style iteration
   * is ONE rank-by-src equi join + ONE groupBy(dst) partial agg — the
-  * textbook Spark PageRank layout where a real deployment would
-  * `repartition(src)` + cache the adjacency and reuse its
-  * partitioning across all iterations. Triangle counting uses
+  * textbook Spark PageRank layout, reusing the adjacency's
+  * partitioning across all iterations; every fixed-round loop runs
+  * through [[Ckpt.rounds]]. Triangle counting uses
   * degree-based edge orientation (each wedge built at its
   * lowest-(deg,id) corner), which bounds intermediate wedges by
   * O(m^1.5) regardless of hub skew — the standard MapReduce triangle
@@ -184,7 +185,9 @@ object Graph extends Registered {
     * carrying a fixed HashPartitioning(src) from the cache, every
     * per-round join satisfies its required distribution for free and
     * only the frontier side moves — the GraphX economics (edges
-    * partitioned once, messages shuffle). */
+    * partitioned once, messages shuffle). O1/O5's adjacency, this
+    * table joined to the degrees and cached for one build, keeps that
+    * partitioning too. */
   private def directedEdges(spark: SparkSession, dir: String,
                             minSupport: Int): DataFrame = {
     Memo.cached(spark, s"graph:$dir:dedges:$minSupport", lineitemSrc(dir)) {
@@ -647,6 +650,45 @@ object Graph extends Registered {
        |ORDER BY betweenness_fp DESC, node LIMIT $limit""".stripMargin
   }
 
+  /** The adjacency (src, dst, d = out-degree of src) of O1 and O5,
+    * with the (node, d) degree table that seeds round 0. */
+  private def rankAdjacency(spark: SparkSession, dir: String,
+                            minSupport: Int): (DataFrame, DataFrame) = {
+    val e = directedEdges(spark, dir, minSupport)
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .withColumnRenamed("src", "node")
+    (e.join(deg, e("src") === deg("node"))
+      .select(col("src"), col("dst"), col("d")), deg)
+  }
+
+  /** The BIGINT fixed-point PageRank recurrence that O1, O5 and I27
+    * `text_textrank` share, run for `iters` rounds from the (node,
+    * rank) table `init`: every source sends `share` (an integer SQL
+    * expression over its `rank` and its `adj` row) along each
+    * out-edge, a node's in-mass `s` is damped to m = (85 · s) div 100
+    * in DECIMAL (see [[pagerank]] on overflow), and `teleport` adds
+    * the restart term to the (node, m) table, returning (node, rank).
+    * All-integer: Column./ on longs would route through double
+    * (inexact past 2^53, truncation vs floor), so every division
+    * stays a SQL `div` (IntegralDivide handles DECIMAL).
+    *
+    * `adj` (src, dst, …) is cached for the loop ([[Memo.scoped]]):
+    * every round joins it on `src`, and the cache keeps the edge
+    * table's HashPartitioning(src), so only the rank side moves. */
+  private[operators] def rankRounds(adj: DataFrame, init: DataFrame,
+      iters: Int, share: String)(
+      teleport: DataFrame => DataFrame): DataFrame =
+    Memo.scoped { cache =>
+      val held = cache(adj)
+      Ckpt.rounds(init, iters) { (ranks, _) =>
+        teleport(held.join(ranks, held("src") === ranks("node"))
+          .groupBy(col("dst"))
+          .agg(sum(expr(share)).as("s"))
+          .select(col("dst").as("node"),
+            expr("(85 * CAST(s AS DECIMAL(38,0))) div 100").as("m")))
+      }
+    }
+
   /** O1 `graph_pagerank` — damped PageRank over the co-purchase
     * graph in BIGINT fixed-point (SCALE = 1e9, d = 0.85), the
     * "importance seed" for recommendation candidates. Unnormalized
@@ -672,41 +714,20 @@ object Graph extends Registered {
     * product keeps Spark exact to 38 digits; the post-division rank
     * always fits BIGINT again (bounded by total mass).
     *
-    * The converged rank table is memoized ([[Memo.checkpointed]]) with a
-    * per-round `localCheckpoint`: each round's plan references the
-    * previous round's, so an unrolled lazy chain pays O(iters²)
-    * analysis time and re-plans on every action — deep `iters`
-    * (param_graph_pagerank runs 20) needs each round cut to a leaf. */
+    * The converged rank table is memoized ([[Memo.checkpointed]]) and
+    * [[rankRounds]] cuts every round ([[Ckpt.rounds]]): each round's plan
+    * references the previous round's, so an unrolled lazy chain pays
+    * O(iters²) analysis time and re-plans on every action — deep
+    * `iters` (param_graph_pagerank runs 20) needs each round cut to a
+    * leaf. */
   def pagerank(spark: SparkSession, dir: String, minSupport: Int = 1,
                iters: Int = 5, limit: Int = 100): DataFrame = {
     val key = s"graph:$dir:pr:$minSupport:$iters"
     val ranksFinal = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
-      val e = directedEdges(spark, dir, minSupport)
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .withColumnRenamed("src", "node")
-      // adjacency feeds every iteration — cache it or pay the join
-      // chain once per superstep (see cachedCanonicalEdges)
-      val adj = e.join(deg, e("src") === deg("node")).select(
-        col("src"), col("dst"), col("d")).cache()
-      var ranks = deg.select(col("node"), lit(Scale).as("rank"))
-        .cutLineage()
-      for (_ <- 1 to iters) {
-        // all-integer recurrence: Column./ on longs would route through
-        // double (inexact past 2^53 and float-truncation vs floor), so
-        // the ÷100 stays a SQL `div` (IntegralDivide handles DECIMAL)
-        val prev = ranks
-        ranks = adj.join(ranks, adj("src") === ranks("node"))
-          .groupBy(col("dst"))
-          .agg(sum(expr("rank div d")).as("s"))
-          .select(col("dst").as("node"),
-            (lit(15L * Scale / 100) +
-              expr("(85 * CAST(s AS DECIMAL(38,0))) div 100")).as("rank"))
-          .cutLineage()
-        Ckpt.release(prev) // round i+1 is materialized; free round i
-      }
-      // every round is checkpointed, so adj has served its last job
-      adj.unpersist(blocking = false)
-      ranks
+      val (adj, deg) = rankAdjacency(spark, dir, minSupport)
+      rankRounds(adj, deg.select(col("node"), lit(Scale).as("rank")),
+          iters, "rank div d")(
+        _.select(col("node"), (lit(15L * Scale / 100) + col("m")).as("rank")))
     }
     ranksFinal.select(col("node").as("part"), col("rank").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("part"))
@@ -1020,9 +1041,8 @@ object Graph extends Registered {
       val nodes = e.select(col("src").as("node")).distinct()
       val aug = e.union(nodes.select(col("node").as("src"),
         col("node").as("dst")))
-      var lab = nodes.select(col("node"), col("node").as("label"))
-        .cutLineage()
-      for (_ <- 1 to iters) {
+      Ckpt.rounds(nodes.select(col("node"), col("node").as("label")),
+          iters) { (lab, _) =>
         val nbrMin = aug.join(lab, aug("src") === lab("node"))
           .groupBy(col("dst")).agg(min(col("label")).as("nm"))
           .withColumnRenamed("dst", "node")
@@ -1030,13 +1050,9 @@ object Graph extends Registered {
             lab.select(col("node").as("pnode"), col("label").as("plabel")),
             col("label") === col("pnode"))
           .select(col("node").as("jnode"), col("plabel"))
-        val prev = lab
-        lab = nbrMin.join(ptr, col("node") === col("jnode"))
+        nbrMin.join(ptr, col("node") === col("jnode"))
           .select(col("node"), least(col("nm"), col("plabel")).as("label"))
-          .cutLineage()
-        Ckpt.release(prev)
       }
-      lab
     }
     labels.groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("sum_part"))
@@ -1096,8 +1112,7 @@ object Graph extends Registered {
     * Scale: each round is ONE edges⋈labels src-keyed join and ONE
     * (node, label)-keyed mode rollup — label-propagation economics
     * identical to O4; adjacency comes from the shared cached pair
-    * build, per-round lineage cut by the localCheckpoint memo
-    * discipline. */
+    * build, per-round lineage cut by [[Ckpt.rounds]]. */
   def communitiesLpa(spark: SparkSession, dir: String,
                      minSupport: Int = 2, iters: Int = 3,
                      limit: Int = 50): DataFrame = {
@@ -1105,23 +1120,18 @@ object Graph extends Registered {
     val labels = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
       val e = directedEdges(spark, dir, minSupport)
       val nodes = e.select(col("src").as("node")).distinct()
-      var lab = nodes.select(col("node"), col("node").as("label"))
-        .cutLineage()
       val wMode = Window.partitionBy(col("node"))
         .orderBy(col("cnt").desc, col("label"))
-      for (_ <- 1 to iters) {
-        val prev = lab
-        lab = e.join(lab.withColumnRenamed("node", "lnode"),
+      Ckpt.rounds(nodes.select(col("node"), col("node").as("label")),
+          iters) { (lab, _) =>
+        e.join(lab.withColumnRenamed("node", "lnode"),
             e("src") === col("lnode"))
           .groupBy(col("dst").as("node"), col("label"))
           .agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(wMode))
           .filter(col("rn") === 1)
           .select(col("node"), col("label"))
-          .cutLineage()
-        Ckpt.release(prev)
       }
-      lab
     }
     labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("sum_part"))
@@ -1166,47 +1176,31 @@ object Graph extends Registered {
     * rank 0 and are filtered from the serve (rank > 0), so the
     * result is the seed community ranked by proximity-weighted mass.
     *
-    * Scale: identical economics to O1 (adjacency cached once, each
-    * round ONE src-keyed join + ONE dst-keyed partial agg + a
+    * Scale: identical economics to O1 (the same scoped adjacency;
+    * each round ONE src-keyed join + ONE dst-keyed partial agg + a
     * broadcast seed-flag attach); the seed table is a brand slice —
     * bounded, broadcast. Deep-iters safety via the same per-round
-    * localCheckpoint memo. */
+    * cuts. */
   def personalizedPagerank(spark: SparkSession, dir: String,
                            brand: String = "Brand#1", minSupport: Int = 1,
                            iters: Int = 5, limit: Int = 100): DataFrame = {
     val key = s"graph:$dir:ppr:$brand:" +
       s"$minSupport:$iters"
     val ranksFinal = Memo.checkpointed(spark, key, seededSrc(dir)) {
-      val e = directedEdges(spark, dir, minSupport)
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .withColumnRenamed("src", "node")
-      val adj = e.join(deg, e("src") === deg("node")).select(
-        col("src"), col("dst"), col("d")).cache()
       val seeds = Tables.part(spark, dir)
         .filter(col("p_brand") === brand)
         .select(col("p_partkey").as("node"), lit(1).as("is_seed"))
-      var ranks = deg.select(col("node"))
-        .join(broadcast(seeds), Seq("node"), "left")
-        .select(col("node"),
-          when(col("is_seed") === 1, lit(Scale)).otherwise(lit(0L))
-            .cast("long").as("rank"))
-        .cutLineage()
-      for (_ <- 1 to iters) {
-        val prev = ranks
-        ranks = adj.join(ranks, adj("src") === ranks("node"))
-          .groupBy(col("dst"))
-          .agg(sum(expr("rank div d")).as("s"))
-          .select(col("dst").as("node"),
-            expr("(85 * CAST(s AS DECIMAL(38,0))) div 100").as("m"))
+      // `mass` on the seeds, 0 elsewhere
+      def onSeeds(mass: Long): Column =
+        when(col("is_seed") === 1, lit(mass)).otherwise(lit(0L))
+      val (adj, deg) = rankAdjacency(spark, dir, minSupport)
+      rankRounds(adj, deg.select(col("node"))
           .join(broadcast(seeds), Seq("node"), "left")
+          .select(col("node"), onSeeds(Scale).cast("long").as("rank")),
+          iters, "rank div d")(
+        _.join(broadcast(seeds), Seq("node"), "left")
           .select(col("node"),
-            (when(col("is_seed") === 1, lit(15L * Scale / 100))
-              .otherwise(lit(0L)) + col("m")).cast("long").as("rank"))
-          .cutLineage()
-        Ckpt.release(prev)
-      }
-      adj.unpersist(blocking = false)
-      ranks
+            (onSeeds(15L * Scale / 100) + col("m")).cast("long").as("rank")))
     }
     ranksFinal.filter(col("rank") > 0)
       .select(col("node").as("part"), col("rank").as("rank_fp"))
@@ -1477,8 +1471,8 @@ object Graph extends Registered {
     *
     * Scale: each round is one node-keyed degree rollup + two keyed
     * semijoins of the edge list against the survivor set — never a
-    * broadcast of anything unbounded; per-round localCheckpoint cuts
-    * the lineage exactly like O1/O3/O4 (each round references the
+    * broadcast of anything unbounded; [[Ckpt.rounds]] cuts each round
+    * exactly like O1/O4 (each round references the
     * previous edge table three times). Peeling removes in waves, so
     * real graphs converge in few rounds; a pathological chain peels
     * one layer per round, which the convergence spec would catch at
@@ -1488,19 +1482,14 @@ object Graph extends Registered {
     val key = s"graph:$dir:kcore:" +
       s"$minSupport:$k:$rounds"
     val alive = Memo.checkpointed(spark, key, lineitemSrc(dir)) {
-      var a = directedEdges(spark, dir, minSupport).cutLineage()
-      for (_ <- 1 to rounds) {
+      Ckpt.rounds(directedEdges(spark, dir, minSupport), rounds) { (a, _) =>
         val keep = a.groupBy(col("src")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= k).select(col("src").as("node"))
-        val prev = a
-        a = a.join(keep.select(col("node").as("ks")), col("src") === col("ks"))
+        a.join(keep.select(col("node").as("ks")), col("src") === col("ks"))
           .drop("ks")
           .join(keep.select(col("node").as("kd")), col("dst") === col("kd"))
           .drop("kd")
-          .cutLineage()
-        Ckpt.release(prev)
       }
-      a
     }
     alive.groupBy(col("src").as("part"))
       .agg(count(lit(1)).as("core_degree"))

@@ -177,21 +177,21 @@ object Similarity extends Registered {
       val cand = pool.select(col("qid"), col("vec_id"), col("rel"))
       val wPick = Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("vec_id"))
-      var s = cand
+      val first = cand
         .withColumn("score", lit(0.5) * col("rel"))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
         .select(col("qid"), col("vec_id"), lit(1).as("step"),
           col("score").as("mmr_score"))
-        .cutLineage()
-      for (t <- 2 to selectK) {
+      // round i picks step i + 1; the pool and the pairwise sims are
+      // the loop's scaffolding, released with it
+      Ckpt.rounds(first, selectK - 1, pool, sims) { (s, i) =>
         val ms = sims
           .join(s.select(col("qid").as("q2"), col("vec_id").as("selv")),
             col("qid") === col("q2") && col("sa") === col("selv"))
           .groupBy(col("qid"), col("sb").as("vec_id"))
           .agg(max(col("sim")).as("maxsim"))
-        val prevStep = s
-        s = s.union(cand
+        s.union(cand
           .join(s.select(col("qid").as("q3"), col("vec_id").as("v3")),
             col("qid") === col("q3") && col("vec_id") === col("v3"),
             "left_anti")
@@ -200,19 +200,9 @@ object Similarity extends Registered {
             lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
           .withColumn("rn", row_number().over(wPick))
           .filter(col("rn") === 1)
-          .select(col("qid"), col("vec_id"), lit(t).as("step"),
+          .select(col("qid"), col("vec_id"), lit(i + 1).as("step"),
             col("score").as("mmr_score")))
-          .cutLineage()
-        // eager checkpoint above materialized the union — the
-        // superseded per-step blocks are dead; release-on-supersede
-        // (the pagerank discipline, per r9 ADVICE)
-        Ckpt.release(prevStep)
       }
-      // the final selection is self-contained; the pool and pairwise
-      // sim scaffolding blocks are no longer referenced
-      Ckpt.release(pool)
-      Ckpt.release(sims)
-      s
     }
     sel.select(col("qid"), col("step"), col("vec_id"),
       round(col("mmr_score"), 6).as("mmr_score"))

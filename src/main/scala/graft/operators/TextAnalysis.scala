@@ -2372,13 +2372,13 @@ object TextAnalysis extends Registered {
     * weighted variant is also what the TextRank paper recommends for
     * keyword graphs.
     * Scale: the bigram rollup is ONE token-keyed linear shuffle; each
-    * round is one src-keyed join + one dst-keyed partial agg over the
-    * (bounded) vocabulary graph — O1's exact economics with vocab-
-    * sized rank tables (never broadcast, always keyed). */
+    * round is O1's own step ([[Graph.rankRounds]]: one src-keyed join
+    * against the adjacency, cached for the loop + one dst-keyed partial
+    * agg) over the (bounded) vocabulary graph, with vocab-sized rank
+    * tables (never broadcast, always keyed); the converged rank table
+    * is memoized like O1's. */
   def textrank(spark: SparkSession, dir: String, iters: Int = 5,
                limit: Int = 50): DataFrame = {
-    // the converged rank table is memoized like O1's: per-round
-    // checkpoints, the superseded table released on a rewrite
     val ranksFinal = Memo.checkpointed(spark, s"text.tr:$dir:$iters",
         docsSrc(dir)) {
       val bi = Tables.documents(spark, dir)
@@ -2394,28 +2394,16 @@ object TextAnalysis extends Registered {
       val edges = bi.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(bi.select(col("b").as("src"), col("a").as("dst"), col("w")))
       val wt = edges.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
-        .withColumnRenamed("src", "word")
-      val adj = edges.join(wt, edges("src") === wt("word"))
-        .select(col("src"), col("dst"), col("w"), col("wtot")).cache()
-      var ranks = wt.select(col("word"), lit(TrScale).as("rank"))
-        .cutLineage()
-      for (_ <- 1 to iters) {
-        val prevR = ranks
-        ranks = adj.join(ranks, adj("src") === ranks("word"))
-          .groupBy(col("dst"))
-          // r·w widened through DECIMAL before the integral divide
-          .agg(sum(expr("(CAST(rank AS DECIMAL(38,0)) * w) div wtot"))
-            .as("s"))
-          .select(col("dst").as("word"),
-            (lit(15L * TrScale / 100) +
-              expr("(85 * CAST(s AS DECIMAL(38,0))) div 100")).as("rank"))
-          .cutLineage()
-        Ckpt.release(prevR)
-      }
-      adj.unpersist(blocking = false)
-      ranks
+        .withColumnRenamed("src", "node")
+      // r·w widened through DECIMAL before the integral divide
+      Graph.rankRounds(
+          edges.join(wt, edges("src") === wt("node"))
+            .select(col("src"), col("dst"), col("w"), col("wtot")),
+          wt.select(col("node"), lit(TrScale).as("rank")), iters,
+          "(CAST(rank AS DECIMAL(38,0)) * w) div wtot")(
+        _.select(col("node"), (lit(15L * TrScale / 100) + col("m")).as("rank")))
     }
-    ranksFinal.select(col("word"), col("rank").as("textrank_fp"))
+    ranksFinal.select(col("node").as("word"), col("rank").as("textrank_fp"))
       .orderBy(col("textrank_fp").desc, col("word"))
       .limit(limit)
   }
@@ -2578,10 +2566,9 @@ object TextAnalysis extends Registered {
           w("w3") * col("z3") + w("w4") * col("z4") + w("w5") * col("z5")
       def sigmoid(mg: Column): Column =
         round(lit(0.5) * (lit(1.0) + mg / (lit(1.0) + abs(mg))), 12)
-      var w = spark.range(1)
+      val w0 = spark.range(1)
         .select((0 to 5).map(j => lit(0.0).as(s"w$j")): _*)
-        .cutLineage()
-      for (_ <- 1 to epochs) {
+      val w = Ckpt.rounds(w0, epochs) { (w, _) =>
         val joined = ztr.crossJoin(broadcast(w))
         val g = joined
           .select((sigmoid(marginOf(col)) - col("y")).as("d"),
@@ -2595,20 +2582,11 @@ object TextAnalysis extends Registered {
             sum(round(col("d") * col("z5"), 12).cast(dec)).as("s5"))
           .select(col("n") +: (0 to 5).map(j =>
             col(s"s$j").cast("double").as(s"g$j")): _*)
-        val prevW = w
-        w = prevW.crossJoin(broadcast(g))
+        w.crossJoin(broadcast(g))
           .select((0 to 5).map(j =>
             round(col(s"w$j") - lit(lr) * col(s"g$j") / col("n"), 12)
               .as(s"w$j")): _*)
-          .cutLineage()
-        Ckpt.release(prevW)
       }
-      val p = sigmoid(marginOf(col))
-      val serve = z.crossJoin(broadcast(w))
-        .select(col("doc_id"), col("y"),
-          round(p, 6).as("score"),
-          when(p >= lit(0.5), 1).otherwise(0).as("pred"))
-        .cutLineage()
       // distill the shippable model: three bounded driver fetches
       // (1 row of weights, 1 row of means, K vocab tokens) — the
       // artifacts per-row inference needs (qcInferCols)
@@ -2618,8 +2596,13 @@ object TextAnalysis extends Registered {
       val mArr = (0 until 5).map(mRow.getDouble).toArray
       val vocabArr = vocab.agg(collect_list(col("token")))
         .head().getSeq[String](0).sorted.toArray
-      Ckpt.release(z)
-      Ckpt.release(w)
+      val p = sigmoid(marginOf(col))
+      // the served table is materialized: the features and the
+      // weights are spent
+      val serve = Ckpt.cut(z.crossJoin(broadcast(w))
+        .select(col("doc_id"), col("y"),
+          round(p, 6).as("score"),
+          when(p >= lit(0.5), 1).otherwise(0).as("pred")), z, w)
       QcModel(serve, wArr, mArr, vocabArr)
     }
   }

@@ -18,9 +18,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
+  /** Shuffle partitions of a bounded replay drive (see
+    * [[withReplayPartitions]]). */
+  private val ReplayPartitions = 8
+
   /** Run `body` (a bounded MemoryStream replay drive + its drain) with
     * `spark.sql.shuffle.partitions` temporarily lowered to
-    * `graft.stream.replay.partitions` (default 8, conf-parameterized).
+    * [[ReplayPartitions]].
     *
     * Stateful micro-batches instantiate one state store PER SHUFFLE
     * PARTITION per batch — open, commit (a delta file write+rename
@@ -31,8 +35,8 @@ object StreamOps {
     * the r14 box, 32→8 partitions cut each twin's three-batch replay
     * roughly in half with bit-identical output (state partitioning is
     * invisible to results). A production `readStream` deployment sizes
-    * this by state volume instead — set the conf there; batch-side
-    * plans are unaffected because AQE re-coalesces batch shuffles.
+    * its shuffle partitions by state volume instead; batch-side plans
+    * are unaffected because AQE re-coalesces batch shuffles.
     *
     * The conf is restored in finally: streaming locks the partition
     * count into each query's (fresh, temporary) checkpoint at start,
@@ -41,7 +45,7 @@ object StreamOps {
   def withReplayPartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, spark.conf.get("graft.stream.replay.partitions", "8"))
+    spark.conf.set(key, ReplayPartitions.toString)
     try body finally spark.conf.set(key, prev)
   }
 

@@ -34,10 +34,7 @@ object ScaleGen {
   val Off = 10000000L // per-replica key offset (≡ 0 mod 4)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.Engine.builder(s"local[$cpus]", cpus.toInt)
-      .appName("graft-scalegen").getOrCreate()
-    graft.Engine.configure(spark)
+    val spark = graft.Engine.driver("graft-scalegen").spark
     run(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }

@@ -4,20 +4,14 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** A ratchet on bare caches: outside `Memo.scala`, main code that
-  * calls `.cache()` or `.persist(` pins blocks no memo entry releases
-  * and serves stale data after a source rewrite. The sites that remain
-  * are listed here, by file and code line; the list may only shrink —
-  * route a site through `graft.Memo` and delete its line. */
+/** No bare caches: outside `Memo.scala`, main code that calls
+  * `.cache()` or `.persist(` pins blocks no memo entry releases and
+  * serves stale data after a source rewrite. Reuse across queries goes
+  * through `graft.Memo`; scaffolding that lives for one build is a
+  * `Ckpt.cut` table the build releases (`Ckpt.rounds`' held frames). */
 class BareCacheSpec extends SparkSpecBase {
 
   private val root = Paths.get("src/main/scala/graft")
-
-  /** The remaining sites: (file under src/main/scala/graft, trimmed code line). */
-  private val remaining: Seq[(String, String)] = Seq(
-    "operators/TextAnalysis.scala" -> """.select(col("src"), col("dst"), col("w"), col("wtot")).cache()""",
-    "operators/Graph.scala" -> """col("src"), col("dst"), col("d")).cache()""",
-    "operators/Graph.scala" -> """col("src"), col("dst"), col("d")).cache()""")
 
   /** `src` with comments blanked and line breaks kept; string and
     * char literals are kept as they are (a `//` inside one is not a
@@ -82,14 +76,9 @@ class BareCacheSpec extends SparkSpecBase {
       "'\"' + \"\"\"x\" // \"\"\".persist(", ""))
   }
 
-  test("no bare .cache()/.persist( outside Memo beyond the listed remaining sites") {
+  test("no bare .cache()/.persist( outside Memo") {
     val found = sites()
-    val got = found.map(s => (s._1, s._3))
-    val extra = got.diff(remaining)
-    val gone = remaining.diff(got)
-    assert(extra.isEmpty, "new bare cache sites (route them through graft.Memo): " +
-      found.filter(s => extra.contains((s._1, s._3))).map(s => s"${s._1}:${s._2}: ${s._3}")
-        .mkString("; "))
-    assert(gone.isEmpty, s"listed sites no longer in the code; delete them from the list: $gone")
+    assert(found.isEmpty, "bare cache sites (route them through graft.Memo): " +
+      found.map(s => s"${s._1}:${s._2}: ${s._3}").mkString("; "))
   }
 }
