@@ -10,11 +10,11 @@ Usage: python3 scripts/check.py [--json report.json] [--shards R] <sfDir> <outDi
 
 --json additionally writes a driver-style correctness report
 ({query: {rows_match, schema_match, hash_match, spark_rows,
-oracle_rows, err}}) — used for the CORRECTNESS_SCALE artifacts.
+oracle_rows, err}}) — used for the CORRECTNESS_SCALE artifacts (history/).
 
 --shards R enables the SHARDED-ORACLE mode for the list-heavy queries
 DuckDB cannot execute whole at the 100x replica (per-doc list aggs and
-token windows are outside its spillable operator set — SCALING_r10.md
+token windows are outside its spillable operator set — history/SCALING_r10.md
 §2). ScaleGen replicas are DISJOINT key-shifted copies (replica k holds
 keys in [k*Off, (k+1)*Off) and document words carry a per-replica
 suffix, so no shingle/word/edge crosses replicas); for the queries in

@@ -21,8 +21,6 @@ import graft.{Entry, Registered, Tables}
   */
 object Corpus extends Registered {
 
-  private def nonEmptyToks: Column = filter(split(col("text"), " "), c => c =!= "")
-
   // ---------------------------------------------------------------- M1
   private val EmailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
   private val PhoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
@@ -90,7 +88,7 @@ object Corpus extends Registered {
     * non-empty. */
   def chunk(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("toks"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
     docs
       // zero-token docs emit no chunks; without the guard Spark's
@@ -110,7 +108,7 @@ object Corpus extends Registered {
 
   def chunkSql: String =
     s"""WITH d AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS toks
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS toks
        |  FROM documents
        |), e AS (
        |  SELECT doc_id, toks,
@@ -190,7 +188,7 @@ object Corpus extends Registered {
     * window here is over a bounded row set. */
   def pack(spark: SparkSession, dir: String): DataFrame =
     packFrom(Tables.documents(spark, dir)
-      .select(col("doc_id"), size(nonEmptyToks).as("n_tokens")))
+      .select(col("doc_id"), size(Dedup.words(col("text"))).as("n_tokens")))
 
   /** The two-level prefix-scan packing over any (doc_id, n_tokens)
     * frame — shared by M4 and P3's fused pipeline (blocks over a
@@ -248,7 +246,7 @@ object Corpus extends Registered {
   def balancedShards(spark: SparkSession, dir: String,
                      nShards: Long = BalanceShards): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(nonEmptyToks).as("n_tokens"))
+      .select(col("doc_id"), size(Dedup.words(col("text"))).as("n_tokens"))
     val bucketCounts = docs.groupBy(col("n_tokens")).agg(count(lit(1)).as("c"))
     val wBuckets = Window.partitionBy(Obs.onePart(col("n_tokens")))
       .orderBy(col("n_tokens").desc)
@@ -280,7 +278,7 @@ object Corpus extends Registered {
   def balancedShardsSql(nShards: Long = BalanceShards): String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |    len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_tokens
+       |    len(${Dedup.wordsSql("text")}) AS n_tokens
        |  FROM documents
        |), r AS (
        |  SELECT doc_id, n_tokens,
@@ -302,7 +300,7 @@ object Corpus extends Registered {
   def packSql: String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |    len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_tokens
+       |    len(${Dedup.wordsSql("text")}) AS n_tokens
        |  FROM documents
        |), o AS (
        |  SELECT doc_id, n_tokens,
@@ -360,7 +358,7 @@ object Corpus extends Registered {
     val clean = deduped
       .filter(pmod(col("doc_id"), lit(10)) =!= 0)
       .join(contaminated, Seq("doc_id"), "left_anti")
-    packFrom(clean.select(col("doc_id"), size(nonEmptyToks).as("n_tokens")))
+    packFrom(clean.select(col("doc_id"), size(Dedup.words(col("text"))).as("n_tokens")))
   }
 
   def corpusPrepSql: String =
@@ -377,8 +375,8 @@ object Corpus extends Registered {
        |      END AS verdict
        |    FROM (
        |      SELECT doc_id, text,
-       |        len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_words,
-       |        len(list_distinct(list_filter(str_split(text, ' '), x -> x <> '')))
+       |        len(${Dedup.wordsSql("text")}) AS n_words,
+       |        len(list_distinct(${Dedup.wordsSql("text")}))
        |          AS n_distinct,
        |        length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS punct,
        |        length(text) AS n_len
@@ -399,7 +397,7 @@ object Corpus extends Registered {
        |    AND NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = q.doc_id)
        |), d AS (
        |  SELECT doc_id,
-       |    len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_tokens
+       |    len(${Dedup.wordsSql("text")}) AS n_tokens
        |  FROM clean
        |), o AS (
        |  SELECT doc_id, n_tokens,
@@ -455,7 +453,7 @@ object Corpus extends Registered {
       when(col("lang") === l, lit(s)).otherwise(els)
     }
     val byLang = Tables.documents(spark, dir)
-      .select(col("lang"), size(nonEmptyToks).as("n_toks"))
+      .select(col("lang"), size(Dedup.words(col("text"))).as("n_toks"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
     val total = byLang.agg(sum(col("n_tokens")).as("total_tokens"))
@@ -473,7 +471,7 @@ object Corpus extends Registered {
     val cases = targetShares
       .map { case (l, s) => s"WHEN lang = '$l' THEN $s" }.mkString(" ")
     s"""WITH d AS (
-       |  SELECT lang, len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_toks
+       |  SELECT lang, len(${Dedup.wordsSql("text")}) AS n_toks
        |  FROM documents
        |), byLang AS (
        |  SELECT lang, COUNT(*) AS n_docs,
@@ -504,7 +502,7 @@ object Corpus extends Registered {
     * broadcast attachments — the corpus is scanned once. */
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
     val byLang = Tables.documents(spark, dir)
-      .select(col("lang"), size(nonEmptyToks).as("n_toks"))
+      .select(col("lang"), size(Dedup.words(col("text"))).as("n_toks"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
     val total = byLang.agg(sum(col("n_tokens")).as("total_tokens"))
@@ -522,7 +520,7 @@ object Corpus extends Registered {
 
   def temperatureMixSql: String =
     s"""WITH d AS (
-       |  SELECT lang, len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_toks
+       |  SELECT lang, len(${Dedup.wordsSql("text")}) AS n_toks
        |  FROM documents
        |), byLang AS (
        |  SELECT lang, COUNT(*) AS n_docs,
@@ -598,7 +596,7 @@ object Corpus extends Registered {
     // MODEL scale so the occurrence stream is joined ONCE on (w1, w2)
     // instead of twice.
     val toks = Tables.documents(spark, dir)
-      .select(col("source"), explode(nonEmptyToks).as("token"))
+      .select(col("source"), explode(Dedup.words(col("text"))).as("token"))
     val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = counts.select(sum(col("cnt")).as("total"))
     val vocab = counts.orderBy(col("cnt").desc, col("token")).limit(20)
@@ -612,12 +610,9 @@ object Corpus extends Registered {
         round(sum(col("surp")).cast("double") / count(lit(1)), 6)
           .as("avg_unigram_surprisal"))
     val docBigr = Tables.documents(spark, dir)
-      .select(col("source"), nonEmptyToks.as("w"))
+      .select(col("source"), Dedup.words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
-      .select(col("source"), explode(
-        expr("transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
-        .as("b"))
+      .select(col("source"), explode(Dedup.wordPairs(col("w"))).as("b"))
       .select(col("source"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val bc = docBigr.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_bigram"))
     val ctx = bc.groupBy(col("w1")).agg(sum(col("c_bigram")).as("c_ctx"))
@@ -700,7 +695,7 @@ object Corpus extends Registered {
          |)""".stripMargin
     }.mkString(",\n")
     s"""WITH t AS (
-       |  SELECT source, unnest(list_filter(str_split(text, ' '), x -> x <> ''))
+       |  SELECT source, unnest(${Dedup.wordsSql("text")})
        |    AS token
        |  FROM documents
        |), c AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY 1),
@@ -713,11 +708,10 @@ object Corpus extends Registered {
        |      / COUNT(*), 6) AS avg_unigram_surprisal
        |  FROM t LEFT JOIN vz USING (token) CROSS JOIN tot GROUP BY 1
        |), toksw AS (
-       |  SELECT source, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT source, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), db AS (
-       |  SELECT source, unnest(list_transform(range(1, len(w)),
-       |    i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |  SELECT source, unnest(${Dedup.wordPairsSql}) AS b
        |  FROM toksw WHERE len(w) >= 2
        |), dbf AS (SELECT source, b.w1 AS w1, b.w2 AS w2 FROM db),
        |bcnt AS (SELECT w1, w2, COUNT(*) AS c_bigram FROM dbf GROUP BY 1, 2),
@@ -842,7 +836,7 @@ object Corpus extends Registered {
   /** The funnel's first-failing-rule verdict as a Column — shared
     * with P3's fused quality stage. */
   private[operators] def qualityVerdict: Column = {
-    val w = nonEmptyToks
+    val w = Dedup.words(col("text"))
     val nWords = size(w)
     val nDistinct = size(array_distinct(w))
     // keep-class includes A-Z: capitalized text is not punctuation
@@ -857,11 +851,11 @@ object Corpus extends Registered {
 
   def qualityFunnel(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), size(nonEmptyToks).as("n_words"),
+      .select(col("doc_id"), size(Dedup.words(col("text"))).as("n_words"),
         qualityVerdict.as("verdict"))
 
   def qualityFunnelSql: String =
-    """SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
+    s"""SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
       |  CASE
       |    WHEN n_words < 10 THEN 'too_short'
       |    WHEN CAST(n_distinct AS DOUBLE) / CAST(n_words AS DOUBLE) < 0.5
@@ -872,8 +866,8 @@ object Corpus extends Registered {
       |  END AS verdict
       |FROM (
       |  SELECT doc_id,
-      |    len(list_filter(str_split(text, ' '), x -> x <> '')) AS n_words,
-      |    len(list_distinct(list_filter(str_split(text, ' '), x -> x <> '')))
+      |    len(${Dedup.wordsSql("text")}) AS n_words,
+      |    len(list_distinct(${Dedup.wordsSql("text")}))
       |      AS n_distinct,
       |    length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS punct,
       |    length(text) AS n_chars
@@ -944,7 +938,7 @@ object Corpus extends Registered {
     * cross-engine); ties break by doc_id. */
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
       .select(col("doc_id"), size(col("w")).as("n_tokens"),
         size(array_distinct(col("w"))).as("n_distinct"))
       .filter(col("n_tokens") > 0)
@@ -973,7 +967,7 @@ object Corpus extends Registered {
 
   def tokenBudgetSql: String =
     s"""WITH tw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), q AS (
        |  SELECT doc_id, len(w) AS n_tokens,
@@ -1009,7 +1003,7 @@ object Corpus extends Registered {
   def lengthBuckets(spark: SparkSession, dir: String,
                     minCap: Int = 16): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(nonEmptyToks).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(Dedup.words(col("text"))).cast("long").as("n_tokens"))
     val bucketed = toks.withColumn("bucket_cap",
       when(col("n_tokens") <= minCap, minCap.toLong)
         .otherwise(expr("shiftleft(1L, length(bin(n_tokens - 1)))")))
@@ -1032,8 +1026,7 @@ object Corpus extends Registered {
 
   def lengthBucketsSql(minCap: Int = 16): String =
     s"""WITH t AS (
-       |  SELECT doc_id, CAST(len(list_filter(str_split(text, ' '),
-       |    x -> x <> '')) AS BIGINT) AS n_tokens
+       |  SELECT doc_id, CAST(len(${Dedup.wordsSql("text")}) AS BIGINT) AS n_tokens
        |  FROM documents
        |), b AS (
        |  SELECT CASE WHEN n_tokens <= $minCap THEN $minCap
@@ -1151,16 +1144,7 @@ object Corpus extends Registered {
   }
 
   def contrastiveTripletsSql(t: Double = 0.5, bucketChars: Int = 16): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '')[:60]
-       |    AS w
-       |  FROM documents
-       |), sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    unnest(list_transform(range(1, len(w) - 1),
-       |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-       |  FROM toks WHERE len(w) >= 3
-       |), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+    s"""WITH ${Dedup.shinglesSql(3)}, sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
        |prs AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -1222,7 +1206,9 @@ object Corpus extends Registered {
     * shingle index — both content-keyed, shardable); delta work is
     * O(|delta|): one hash-keyed left join + one shingle-keyed left
     * join + a delta-doc rollup. The base is never rescanned per doc
-    * and nothing pairwise ever forms. */
+    * and nothing pairwise ever forms. The shingle index is the
+    * session's memoized `Dedup.shingles` entry, which the near-dup
+    * keys share (see [[refreshAnnotated]]). */
   def corpusRefresh(spark: SparkSession, dir: String,
                     minNovelty: Double = 0.3,
                     minChars: Long = 64L): DataFrame =
@@ -1239,7 +1225,10 @@ object Corpus extends Registered {
   /** The shared P4 admission skeleton: delta docs annotated with the
     * base content-hash hit and the frozen-base novelty stats —
     * everything but the quality gate, so P4 (heuristic) and P4b
-    * (trained) differ in exactly one rule. */
+    * (trained) differ in exactly one rule. Shingles are per document,
+    * so the base and delta shingle sets are the session's one
+    * `Dedup.shingles` entry (the G3/G19 trigrams) split by
+    * `doc_id % 3`: no shingle is rebuilt here. */
   private def refreshAnnotated(spark: SparkSession,
                                dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -1248,9 +1237,10 @@ object Corpus extends Registered {
     val baseHashes = base
       .select(md5(col("text").cast("binary")).as("h")).distinct()
       .withColumn("in_base", lit(1))
-    val baseShingles = shingleSet(base)
+    val sh = Dedup.shingles(spark, dir, 3)
+    val baseShingles = sh.filter(pmod(col("doc_id"), lit(3)) =!= 0)
       .select(col("shingle")).distinct().withColumn("seen", lit(1))
-    val novelty = shingleSet(delta)
+    val novelty = sh.filter(pmod(col("doc_id"), lit(3)) === 0)
       .join(baseShingles, Seq("shingle"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -1303,16 +1293,7 @@ object Corpus extends Registered {
 
   def corpusRefreshTrainedSql(minNovelty: Double = 0.3): String =
     s"""WITH ${TextAnalysis.qcDefaultCtes},
-       |rtoks AS (
-       |  SELECT doc_id,
-       |    list_filter(str_split(text, ' '), x -> x <> '')[:60] AS w
-       |  FROM documents
-       |), rsh AS (
-       |  SELECT DISTINCT doc_id,
-       |    unnest(list_transform(range(1, len(w) - 1),
-       |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-       |  FROM rtoks WHERE len(w) >= 3
-       |), base_hashes AS (
+       |${Dedup.shinglesSql(3, "rtoks", "rsh")}, base_hashes AS (
        |  SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 <> 0
        |), base_shingles AS (
        |  SELECT DISTINCT shingle FROM rsh WHERE doc_id % 3 <> 0
@@ -1342,31 +1323,9 @@ object Corpus extends Registered {
        |WHERE d.doc_id % 3 = 0
        |ORDER BY d.doc_id""".stripMargin
 
-  /** Distinct trigram shingles (the G19 definition: 60-token cap). */
-  private def shingleSet(docs: DataFrame): DataFrame = {
-    val w = col("w")
-    val idx = when(size(w) >= 3, sequence(lit(1), size(w) - 2))
-      .otherwise(array().cast("array<int>"))
-    val sh = transform(idx, i => concat_ws(" ",
-      element_at(w, i), element_at(w, i + 1), element_at(w, i + 2)))
-    docs.select(col("doc_id"),
-        slice(filter(split(col("text"), " "), c => c =!= ""), 1, 60).as("w"))
-      .select(col("doc_id"), explode(sh).as("shingle"))
-      .distinct()
-  }
-
   def corpusRefreshSql(minNovelty: Double = 0.3,
                        minChars: Long = 64L): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id,
-       |    list_filter(str_split(text, ' '), x -> x <> '')[:60] AS w
-       |  FROM documents
-       |), sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    unnest(list_transform(range(1, len(w) - 1),
-       |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-       |  FROM toks WHERE len(w) >= 3
-       |), base_hashes AS (
+    s"""WITH ${Dedup.shinglesSql(3)}, base_hashes AS (
        |  SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 <> 0
        |), base_shingles AS (
        |  SELECT DISTINCT shingle FROM sh WHERE doc_id % 3 <> 0
@@ -1724,7 +1683,7 @@ object Corpus extends Registered {
     val base = docs.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_chars")).as("n_chars"),
-      sum(size(nonEmptyToks).cast("long")).as("n_ws_tokens"))
+      sum(size(Dedup.words(col("text"))).cast("long")).as("n_ws_tokens"))
     val wTop = Window.partitionBy(col("source"))
       .orderBy(col("n").desc, col("lang"))
     val top = docs.groupBy(col("source"), col("lang"))
@@ -1771,7 +1730,7 @@ object Corpus extends Registered {
     s"""base AS (
        |  SELECT source, COUNT(*) AS n_docs,
        |    CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-       |    CAST(SUM(len(list_filter(str_split(text, ' '), x -> x <> '')))
+       |    CAST(SUM(len(${Dedup.wordsSql("text")}))
        |      AS BIGINT) AS n_ws_tokens
        |  FROM documents GROUP BY 1
        |), top AS (

@@ -21,44 +21,78 @@ object Dedup extends Registered {
 
   private def docsSrc(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
-  /** Whitespace tokens, first 60 (cap documented above). */
-  private def toks: Column =
-    slice(filter(split(col("text"), " "), c => c =!= ""), 1, 60)
+  /** The corpus word split: `c` cut at single spaces, empty tokens
+    * dropped. Every word-level key of TextAnalysis, Corpus and Dedup
+    * tokenizes through this one definition. */
+  private[operators] def words(c: Column): Column =
+    filter(split(c, " "), t => t =!= "")
 
-  /** Distinct word n-gram shingles per doc. Mirrors the oracle's
-    * range(1, len-n+2) + element_at construction index-for-index so
-    * both engines shingle identically. Guarded for short docs
-    * (Spark's sequence() counts DOWN when start > stop).
+  /** [[words]] in DuckDB, over the SQL expression `e`. */
+  private[operators] def wordsSql(e: String): String =
+    s"list_filter(str_split($e, ' '), x -> x <> '')"
+
+  /** The first 60 words of `text` (cap documented above). */
+  private def toks: Column = slice(words(col("text")), 1, 60)
+
+  /** [[toks]] in DuckDB. */
+  private def toksSql: String = s"${wordsSql("text")}[:60]"
+
+  /** The space-joined word n-gram of the array `w` at each 1-based
+    * start in `idx`. The caller keeps documents shorter than `n` words
+    * out (Spark's sequence() counts DOWN when start > stop). */
+  private[operators] def ngrams(w: Column, idx: Column, n: Int): Column =
+    transform(idx, i => concat_ws(" ",
+      (0 until n).map(k => element_at(w, if (k == 0) i else i + k)): _*))
+
+  /** [[ngrams]] in DuckDB over the list `w`, every start from 1 to
+    * len(w)-n+1, index for index. */
+  private[operators] def ngramsSql(n: Int): String = {
+    val parts = (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(" || ' ' || ")
+    s"list_transform(range(1, len(w) - ${n - 2}), i -> $parts)"
+  }
+
+  /** Every adjacent word pair of the array `w`, in order, as a struct
+    * (w1, w2). A caller keeps one-word documents out, as above. */
+  private[operators] def wordPairs(w: Column): Column =
+    transform(sequence(lit(1), size(w) - 1),
+      i => struct(element_at(w, i).as("w1"), element_at(w, i + 1).as("w2")))
+
+  /** [[wordPairs]] in DuckDB over the list `w`. */
+  private[operators] def wordPairsSql: String =
+    "list_transform(range(1, len(w)), i -> struct_pack(w1 := w[i], w2 := w[i+1]))"
+
+  /** Distinct word n-gram shingles per doc over the 60-token window.
+    * Mirrors the oracle's construction ([[shinglesSql]]) index for
+    * index, so both engines shingle identically.
     *
     * A memo entry per (dir, n), never a bare `.cache()`: every
-    * consumer reads the shingles through this one entry, so a rewrite
-    * of documents.parquet releases the old set before any plan can
-    * pick it up from CacheManager. */
+    * consumer (the near-dup and decontamination keys, P3, P4 and P4b)
+    * reads the shingles through this one entry, so a rewrite of
+    * documents.parquet releases the old set before any plan can pick
+    * it up from CacheManager. */
   private[operators] def shingles(spark: SparkSession, dir: String, n: Int): DataFrame =
     Memo.cached(spark, s"dedup.shingles:$dir:$n", docsSrc(dir)) {
       val w = col("w")
       val idx = when(size(w) >= n, sequence(lit(1), size(w) - (n - 1)))
         .otherwise(array().cast("array<int>"))
-      val sh = transform(idx, i =>
-        concat_ws(" ", (0 until n).map(k => element_at(w, i + k)): _*))
       Tables.documents(spark, dir)
         .select(col("doc_id"), toks.as("w"))
-        .select(col("doc_id"), explode(sh).as("shingle"))
+        .select(col("doc_id"), explode(ngrams(w, idx, n)).as("shingle"))
         .distinct()
     }
 
-  /** SQL fragment producing the identical shingle set in DuckDB. */
-  private[operators] def shinglesSql(n: Int): String = {
-    val parts = (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(" || ' ' || ")
-    s"""toks AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '')[:60] AS w
+  /** The identical shingle set in DuckDB, as the CTEs `toksCte` (the
+    * window) and `shCte` (doc_id, shingle); a caller whose WITH already
+    * uses `toks`/`sh` passes other names. */
+  private[operators] def shinglesSql(n: Int, toksCte: String = "toks",
+                                     shCte: String = "sh"): String =
+    s"""$toksCte AS (
+       |  SELECT doc_id, $toksSql AS w
        |  FROM documents
-       |), sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    unnest(list_transform(range(1, len(w) - ${n - 2}), i -> $parts)) AS shingle
-       |  FROM toks WHERE len(w) >= $n
+       |), $shCte AS (
+       |  SELECT DISTINCT doc_id, unnest(${ngramsSql(n)}) AS shingle
+       |  FROM $toksCte WHERE len(w) >= $n
        |)""".stripMargin
-  }
 
   /** G1 `dedup_exact` — exact dedup via content hash groupBy: keeper =
     * min doc_id per hash. Single shuffle on the hash. */
@@ -479,7 +513,7 @@ object Dedup extends Registered {
       .mkString(" +\n  ")
     s"""t AS (
        |  SELECT doc_id,
-       |    unnest(list_filter(str_split(text, ' '), x -> x <> '')[:60]) AS token
+       |    unnest($toksSql) AS token
        |  FROM documents
        |), h AS (
        |  SELECT doc_id,
@@ -990,7 +1024,7 @@ object Dedup extends Registered {
   /** The identical window stream in DuckDB (CTEs toksw/win0/win). */
   private def windowHashesSqlCte: String =
     s"""toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '')[:60] AS w
+       |  SELECT doc_id, $toksSql AS w
        |  FROM documents
        |), win0 AS (
        |  SELECT doc_id, unnest(range(1, len(w) - ${SpanN - 2})) AS pos, w
@@ -1187,8 +1221,40 @@ object Dedup extends Registered {
        |  CAST(substring(s, 34, 6) AS INTEGER) AS sel_pos
        |FROM sel WHERE pos <= n - ${WinnowW - 1}""".stripMargin
 
-  /** Tokens per line for G15's line-level dedup. */
+  /** Tokens per line for G15's and G23's lines. */
   private val LineW = 8
+
+  /** The G15/G23 line split: each document's [[words]] cut into
+    * [[LineW]]-word lines, one row per (`keys`, line_idx, line) with
+    * line_idx from 0; a document without words has no lines. */
+  private def linesOf(docs: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    val w = col("w")
+    val nLines = ((size(w) + (LineW - 1)) / LineW).cast("int")
+    docs.select(k :+ words(col("text")).as("w"): _*)
+      .filter(size(w) > 0)
+      .select(k :+ explode(transform(
+        sequence(lit(0), nLines - 1),
+        i => struct(i.as("line_idx"),
+          concat_ws(" ", slice(w, i * LineW + 1, lit(LineW))).as("line")))).as("s"): _*)
+      .select(k ++ Seq(col("s.line_idx").as("line_idx"), col("s.line").as("line")): _*)
+  }
+
+  /** [[linesOf]] in DuckDB: the CTEs toksl/ln/lines, `keys` a SQL
+    * column list. */
+  private def linesSql(keys: String): String =
+    s"""toksl AS (
+       |  SELECT $keys, ${wordsSql("text")} AS w
+       |  FROM documents
+       |), ln AS (
+       |  SELECT $keys, unnest(list_transform(
+       |    range(0, CAST(CEIL(len(w) / $LineW.0) AS BIGINT)),
+       |    i -> struct_pack(line_idx := i,
+       |      line := array_to_string(w[(i*$LineW+1):(i*$LineW+$LineW)], ' ')))) AS s
+       |  FROM toksl WHERE len(w) > 0
+       |), lines AS (
+       |  SELECT $keys, s.line_idx AS line_idx, s.line AS line FROM ln
+       |)""".stripMargin
 
   /** G15 `dedup_line_level` — corpus-wide duplicate-LINE removal with
     * document reconstruction: the C4 recipe (Raffel et al. 2020
@@ -1209,18 +1275,7 @@ object Dedup extends Registered {
     * the DOC length, never corpus-wide. No all-pairs anywhere. */
   def lineLevel(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val allToks = filter(split(col("text"), " "), c => c =!= "")
-    val w = col("w")
-    val nLines = ((size(w) + (LineW - 1)) / LineW).cast("int")
-    val lines = Tables.documents(spark, dir)
-      .select(col("doc_id"), allToks.as("w"))
-      .filter(size(w) > 0)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), nLines - 1),
-        i => struct(i.as("line_idx"),
-          concat_ws(" ", slice(w, i * LineW + 1, lit(LineW))).as("line")))).as("s"))
-      .select(col("doc_id"), col("s.line_idx").as("line_idx"),
-        col("s.line").as("line"))
+    val lines = linesOf(Tables.documents(spark, dir), "doc_id")
     val firstW = Window.partitionBy(col("line"))
       .orderBy(col("doc_id"), col("line_idx"))
     val kept = lines
@@ -1239,18 +1294,7 @@ object Dedup extends Registered {
   }
 
   def lineLevelSql: String =
-    s"""WITH toksl AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
-       |  FROM documents
-       |), ln AS (
-       |  SELECT doc_id, unnest(list_transform(
-       |    range(0, CAST(CEIL(len(w) / $LineW.0) AS BIGINT)),
-       |    i -> struct_pack(line_idx := i,
-       |      line := array_to_string(w[(i*$LineW+1):(i*$LineW+$LineW)], ' ')))) AS s
-       |  FROM toksl WHERE len(w) > 0
-       |), lines AS (
-       |  SELECT doc_id, s.line_idx AS line_idx, s.line AS line FROM ln
-       |), firsts AS (
+    s"""WITH ${linesSql("doc_id")}, firsts AS (
        |  SELECT doc_id, line_idx, line,
        |    ROW_NUMBER() OVER (PARTITION BY line
        |                       ORDER BY doc_id, line_idx) AS rn
@@ -1288,18 +1332,7 @@ object Dedup extends Registered {
     * doc length. */
   def boilerplate(spark: SparkSession, dir: String,
                   minDocs: Int = 3): DataFrame = {
-    val allToks = filter(split(col("text"), " "), c => c =!= "")
-    val w = col("w")
-    val nLines = ((size(w) + (LineW - 1)) / LineW).cast("int")
-    val lines = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), allToks.as("w"))
-      .filter(size(w) > 0)
-      .select(col("doc_id"), col("source"), explode(transform(
-        sequence(lit(0), nLines - 1),
-        i => struct(i.as("line_idx"),
-          concat_ws(" ", slice(w, i * LineW + 1, lit(LineW))).as("line")))).as("s"))
-      .select(col("doc_id"), col("source"),
-        col("s.line_idx").as("line_idx"), col("s.line").as("line"))
+    val lines = linesOf(Tables.documents(spark, dir), "doc_id", "source")
     val boiler = lines.groupBy(col("source"), col("line"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -1315,19 +1348,7 @@ object Dedup extends Registered {
   }
 
   def boilerplateSql(minDocs: Int = 3): String =
-    s"""WITH toksl AS (
-       |  SELECT doc_id, source,
-       |    list_filter(str_split(text, ' '), x -> x <> '') AS w
-       |  FROM documents
-       |), ln AS (
-       |  SELECT doc_id, source, unnest(list_transform(
-       |    range(0, CAST(CEIL(len(w) / $LineW.0) AS BIGINT)),
-       |    i -> struct_pack(line_idx := i,
-       |      line := array_to_string(w[(i*$LineW+1):(i*$LineW+$LineW)], ' ')))) AS s
-       |  FROM toksl WHERE len(w) > 0
-       |), lines AS (
-       |  SELECT doc_id, source, s.line_idx AS line_idx, s.line AS line FROM ln
-       |), boiler AS (
+    s"""WITH ${linesSql("doc_id, source")}, boiler AS (
        |  SELECT source, line FROM lines
        |  GROUP BY 1, 2 HAVING COUNT(DISTINCT doc_id) >= $minDocs
        |)

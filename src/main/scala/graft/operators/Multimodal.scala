@@ -35,6 +35,13 @@ object Multimodal extends Registered {
         lit("text/fake").as("format"),
         col("source").as("origin")).as("meta"))
 
+  /** The document ids every synthetic-image stage draws its media
+    * from, fanned out so the per-image work runs on every core. */
+  private def docIds(spark: SparkSession, dir: String): Dataset[Long] = {
+    import spark.implicits._
+    Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+  }
+
   private val BatchSize = 32
   private val NChunks = 8
 
@@ -83,25 +90,30 @@ object Multimodal extends Registered {
       .select((col("doc_id") +: col("n_bytes") +: feats): _*)
   }
 
+  /** The oracles' media bytes: CTE `b` (doc_id, n = byte count,
+    * bytes = the byte values of `text`, 1-based). The documents table
+    * is ASCII-only (checked at every SF), so ascii(char) == byte. */
+  private def bytesCte: String =
+    """b AS (
+      |  SELECT doc_id, length(text) AS n,
+      |    list_transform(str_split(text, ''), c -> ascii(c)) AS bytes
+      |  FROM documents
+      |)""".stripMargin
+
   /** Chunk c covers byte indices [n*c/8, n*(c+1)/8) — 1-based slice
-    * [lo+1, hi] in DuckDB. The documents table is ASCII-only (checked
-    * at every SF), so ascii(char) == byte value; the mean is an exact
+    * [lo+1, hi] of [[bytesCte]] in DuckDB; the mean is an exact
     * integer sum divided as DOUBLE then cast FLOAT — bit-identical to
     * the Scala `(s.toDouble / (hi - lo)).toFloat`. */
   def featureStubSql: String = {
     val chunks = (0 until NChunks).map { c =>
-      val lo = s"(n_bytes * $c) // $NChunks"
-      val hi = s"(n_bytes * ${c + 1}) // $NChunks"
+      val lo = s"(n * $c) // $NChunks"
+      val hi = s"(n * ${c + 1}) // $NChunks"
       s"""  CAST(CASE WHEN $hi <= $lo THEN 0.0
          |    ELSE CAST(list_sum(bytes[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo)
          |    END AS FLOAT) AS f$c""".stripMargin
     }.mkString(",\n")
-    s"""WITH b AS (
-       |  SELECT doc_id, length(text) AS n_bytes,
-       |    list_transform(str_split(text, ''), c -> ascii(c)) AS bytes
-       |  FROM documents
-       |)
-       |SELECT doc_id, n_bytes,
+    s"""WITH $bytesCte
+       |SELECT doc_id, n AS n_bytes,
        |$chunks
        |FROM b""".stripMargin
   }
@@ -146,11 +158,7 @@ object Multimodal extends Registered {
   /** Frame f covers bytes [f*16, f*16+16); docs shorter than one
     * frame produce no rows in either engine. */
   def frameSampleSql: String =
-    s"""WITH b AS (
-       |  SELECT doc_id, length(text) AS n,
-       |    list_transform(str_split(text, ''), c -> ascii(c)) AS bytes
-       |  FROM documents
-       |), f AS (
+    s"""WITH $bytesCte, f AS (
        |  SELECT doc_id, bytes,
        |    unnest(range(0, n // $FrameBytes)) AS frame_idx
        |  FROM b
@@ -193,13 +201,9 @@ object Multimodal extends Registered {
   }
 
   def resizeStubSql: String =
-    s"""WITH b AS (
-       |  SELECT doc_id, length(text) AS n,
-       |    list_transform(str_split(text, ''), c -> ascii(c)) AS bytes
-       |  FROM documents WHERE length(text) > 0
-       |), px AS (
+    s"""WITH $bytesCte, px AS (
        |  SELECT doc_id, n, bytes, unnest(range(0, $ResizeW)) AS i
-       |  FROM b
+       |  FROM b WHERE n > 0
        |)
        |SELECT doc_id, CAST(i AS INTEGER) AS out_idx,
        |  CAST(bytes[(i * n) // $ResizeW + 1] AS INTEGER) AS pix
@@ -238,7 +242,7 @@ object Multimodal extends Registered {
     * synthesized per doc_id on the executors — nothing driver-side). */
   def pngTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+    docIds(spark, dir)
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false) // no tmp-file cache on executors
         it.map(id => (id, synthPng(id)))
@@ -320,7 +324,7 @@ object Multimodal extends Registered {
   def imageDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val media: Dataset[(Long, Array[Byte])] =
-      Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+      docIds(spark, dir)
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.map(id => (id, synthPng(id % ImgGroups)))
@@ -376,7 +380,7 @@ object Multimodal extends Registered {
   def ahash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val hashed: Dataset[AhashRow] =
-      Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+      docIds(spark, dir)
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.grouped(BatchSize).flatMap { batch =>
@@ -464,7 +468,7 @@ object Multimodal extends Registered {
   def dhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val hashed: Dataset[DhashRow] =
-      Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+      docIds(spark, dir)
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.grouped(BatchSize).flatMap { batch =>
@@ -559,7 +563,7 @@ object Multimodal extends Registered {
     import spark.implicits._
     val ct = PhCos // avoid capturing `this` in the task closure
     val hashed: Dataset[PhashRow] =
-      Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+      docIds(spark, dir)
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.grouped(BatchSize).flatMap { batch =>
@@ -772,7 +776,7 @@ object Multimodal extends Registered {
   def neardupVerdict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val hashed: Dataset[TriHash] =
-      Tables.documents(spark, dir, fan = true).select(col("doc_id")).as[Long]
+      docIds(spark, dir)
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.grouped(BatchSize).flatMap { batch =>

@@ -54,30 +54,13 @@ object Normalize extends Registered {
     dtoFrom(events).filter(isValid).filter(fhirValid)
 
   private[operators] def dtoSqlCte: String =
-    """raw AS (
-      |  SELECT event_id,
-      |    concat_ws(',', user_id, event_type,
-      |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
-      |           WHEN event_id % 103 = 0 THEN 'Infinity'
-      |           ELSE CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) END,
-      |      'mg/dL', strftime(ts, '%Y-%m-%d %H:%M:%S.%f')) AS line
-      |  FROM events
-      |), f AS (SELECT event_id, line, str_split(line, ',') AS p FROM raw),
-      |parsed AS (
-      |  SELECT event_id,
-      |    p[1] AS patient_id, p[2] AS code,
-      |    TRY_CAST(p[3] AS DOUBLE) AS value,
-      |    p[4] AS unit,
-      |    strptime(p[5], '%Y-%m-%d %H:%M:%S.%f') AS effective,
-      |    'labx-csv' AS source_system, sha256(line) AS ingest_hash
-      |  FROM f
-      |),
-      |dto AS (
-      |  SELECT event_id, patient_id,
-      |    CASE WHEN event_id % 101 = 0 THEN '' ELSE code END AS code,
-      |    value, unit, effective, source_system, ingest_hash
-      |  FROM parsed
-      |)""".stripMargin
+    s"""${Adapters.csvLabxSqlCte("parsed")},
+       |dto AS (
+       |  SELECT event_id, patient_id,
+       |    CASE WHEN event_id % 101 = 0 THEN '' ELSE code END AS code,
+       |    value, unit, effective, source_system, ingest_hash
+       |  FROM parsed
+       |)""".stripMargin
 
   /** Zod-equivalent validity predicate (reference: libs/validation/
     * dto.ts:5-11 — non-empty patientId/code/unit/sourceSystem, numeric
@@ -706,51 +689,16 @@ object Normalize extends Registered {
   }
 
   def sourceRouteSql: String =
-    """WITH csv_raw AS (
-      |  SELECT event_id,
-      |    concat_ws(',', user_id, event_type,
-      |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
-      |           WHEN event_id % 103 = 0 THEN 'Infinity'
-      |           ELSE CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) END,
-      |      'mg/dL', strftime(ts, '%Y-%m-%d %H:%M:%S.%f')) AS line
-      |  FROM events WHERE event_type IN ('click', 'purchase')
-      |), csv_dto AS (
+    s"""WITH ${Adapters.csvLabxSqlCte("csv", "event_type IN ('click', 'purchase')")},
+      |csv_dto AS (
       |  SELECT event_id, 'text/csv' AS route,
-      |    str_split(line, ',')[1] AS patient_id,
-      |    str_split(line, ',')[2] AS code,
-      |    TRY_CAST(str_split(line, ',')[3] AS DOUBLE) AS value,
-      |    str_split(line, ',')[4] AS unit,
-      |    strptime(str_split(line, ',')[5], '%Y-%m-%d %H:%M:%S.%f') AS effective
-      |  FROM csv_raw
-      |), hl7_raw AS (
-      |  SELECT event_id,
-      |    'PID|1||' || user_id || '^^^MRN||DOE^JOHN' || chr(13) ||
-      |    array_to_string(list_transform(range(1, event_id % 3 + 2), k ->
-      |      'OBX|' || k || '|NM|' || event_type || '^' || upper(event_type) || '||' ||
-      |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
-      |           ELSE CAST(CAST(value + (k-1) AS DECIMAL(18,2)) AS VARCHAR) END || '|' ||
-      |      CASE WHEN event_id % 7 = 0 THEN ''
-      |           WHEN event_id % 3 = 0 THEN 'mg'
-      |           ELSE 'mg^mg/dL' END || '|||||F|||' ||
-      |      strftime(ts, '%Y%m%d%H%M%S')), chr(13)) AS msg
-      |  FROM events WHERE event_type = 'error'
-      |), hl7_seg AS (
-      |  SELECT event_id,
-      |    list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'PID|'))[1] AS pid,
-      |    unnest(list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'OBX|'))) AS obx
-      |  FROM hl7_raw
-      |), hl7_dto AS (
+      |    patient_id, code, value, unit, effective
+      |  FROM csv
+      |), ${Adapters.hl7ObxSqlCte("hl7", "event_type = 'error'")},
+      |hl7_dto AS (
       |  SELECT event_id, 'application/hl7-v2' AS route,
-      |    str_split(str_split(pid, '|')[4], '^')[1] AS patient_id,
-      |    coalesce(nullif(str_split(str_split(obx, '|')[4], '^')[1], ''),
-      |             str_split(str_split(obx, '|')[4], '^')[2]) AS code,
-      |    TRY_CAST(str_split(obx, '|')[6] AS DOUBLE) AS value,
-      |    coalesce(nullif(str_split(str_split(obx, '|')[7], '^')[2], ''),
-      |             nullif(str_split(str_split(obx, '|')[7], '^')[1], ''),
-      |             '1') AS unit,
-      |    strptime(str_split(obx, '|')[15], '%Y%m%d%H%M%S') AS effective
-      |  FROM hl7_seg
-      |  WHERE TRY_CAST(str_split(obx, '|')[6] AS DOUBLE) IS NOT NULL
+      |    patient_id, code, value, unit, effective
+      |  FROM hl7
       |), json_dto AS (
       |  SELECT event_id, 'application/json' AS route,
       |    CAST(user_id AS VARCHAR) AS patient_id,

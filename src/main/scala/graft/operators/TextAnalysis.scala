@@ -18,8 +18,6 @@ import graft.Ckpt.CutOps
   */
 object TextAnalysis extends Registered {
 
-  private def nonEmptyToks: Column = filter(split(col("text"), " "), c => c =!= "")
-
   private def docsSrc(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
   /** Marker stopword sets per language (tiny n-gram heuristic in the
@@ -37,7 +35,7 @@ object TextAnalysis extends Registered {
     * language, argmax with deterministic lang-order tie-break. */
   def langId(spark: SparkSession, dir: String): DataFrame = {
     val scoreCols = langs.map { case (l, ws) =>
-      size(filter(nonEmptyToks, t => t.isin(ws.map(lit): _*).cast("boolean")))
+      size(filter(Dedup.words(col("text")), t => t.isin(ws.map(lit): _*).cast("boolean")))
         .as(s"score_$l")
     }
     val scored = Tables.documents(spark, dir)
@@ -54,7 +52,7 @@ object TextAnalysis extends Registered {
   def langIdSql: String = {
     val scores = langs.map { case (l, ws) =>
       val list = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(list_filter(str_split(text, ' '), x -> x <> ''), t -> t IN ($list))) AS score_$l"
+      s"len(list_filter(${Dedup.wordsSql("text")}, t -> t IN ($list))) AS score_$l"
     }.mkString(",\n  ")
     val pred = langs.map { case (l, _) =>
       val ge = langs.map(_._1).filter(_ != l).map(o => s"score_$l >= score_$o").mkString(" AND ")
@@ -76,9 +74,9 @@ object TextAnalysis extends Registered {
     * pre-training quality filters). All components are exact-int
     * ratios -> identical doubles in both engines. */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val nToks = size(nonEmptyToks).cast("double")
+    val nToks = size(Dedup.words(col("text"))).cast("double")
     val nChars = length(col("text")).cast("double")
-    val stopToks = size(filter(nonEmptyToks,
+    val stopToks = size(filter(Dedup.words(col("text")),
       t => t.isin(stopwords.map(lit): _*).cast("boolean"))).cast("double")
     // keep-class includes A-Z (capitalized text is not punctuation —
     // same fix as the M9 funnel; lowercase corpus, identical results)
@@ -100,7 +98,7 @@ object TextAnalysis extends Registered {
   }
 
   def qualityScoreSql: String =
-    """SELECT doc_id, n_tokens, stopword_ratio, punct_ratio, avg_word_len,
+    s"""SELECT doc_id, n_tokens, stopword_ratio, punct_ratio, avg_word_len,
       |  least(1.0::DOUBLE, n_tokens / 100.0::DOUBLE) * 0.3::DOUBLE
       |    + stopword_ratio * 0.3::DOUBLE
       |    + (1.0::DOUBLE - punct_ratio) * 0.2::DOUBLE
@@ -108,15 +106,15 @@ object TextAnalysis extends Registered {
       |            THEN 1.0::DOUBLE ELSE 0.5::DOUBLE END) * 0.2::DOUBLE AS quality
       |FROM (
       |  SELECT doc_id,
-      |    len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE AS n_tokens,
-      |    len(list_filter(str_split(text, ' '),
+      |    len(${Dedup.wordsSql("text")})::DOUBLE AS n_tokens,
+      |    len(list_filter(${Dedup.wordsSql("text")},
       |      x -> x IN ('the','a','and','of','is','to','in','for')))::DOUBLE
-      |      / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+      |      / len(${Dedup.wordsSql("text")})::DOUBLE
       |      AS stopword_ratio,
       |    length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE
       |      / length(text)::DOUBLE AS punct_ratio,
       |    length(replace(text, ' ', ''))::DOUBLE
-      |      / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+      |      / len(${Dedup.wordsSql("text")})::DOUBLE
       |      AS avg_word_len
       |  FROM documents
       |)""".stripMargin
@@ -138,9 +136,9 @@ object TextAnalysis extends Registered {
     * ≥ p·n — verified including the ceil-boundary cases). */
   def qualityCalibrate(spark: SparkSession, dir: String,
                        nBuckets: Int = 10): DataFrame = {
-    val nToks = size(nonEmptyToks).cast("double")
+    val nToks = size(Dedup.words(col("text"))).cast("double")
     val nChars = length(col("text")).cast("double")
-    val stopToks = size(filter(nonEmptyToks,
+    val stopToks = size(filter(Dedup.words(col("text")),
       t => t.isin(stopwords.map(lit): _*).cast("boolean"))).cast("double")
     val punctChars = length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", "")).cast("double")
     val wordChars = length(regexp_replace(col("text"), " ", "")).cast("double")
@@ -185,15 +183,15 @@ object TextAnalysis extends Registered {
       |              THEN 1.0::DOUBLE ELSE 0.5::DOUBLE END) * 0.2::DOUBLE AS quality
       |  FROM (
       |    SELECT doc_id, source,
-      |      len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE AS n_tokens,
-      |      len(list_filter(str_split(text, ' '),
+      |      len(${Dedup.wordsSql("text")})::DOUBLE AS n_tokens,
+      |      len(list_filter(${Dedup.wordsSql("text")},
       |        x -> x IN ('the','a','and','of','is','to','in','for')))::DOUBLE
-      |        / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+      |        / len(${Dedup.wordsSql("text")})::DOUBLE
       |        AS stopword_ratio,
       |      length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE
       |        / length(text)::DOUBLE AS punct_ratio,
       |      length(replace(text, ' ', ''))::DOUBLE
-      |        / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+      |        / len(${Dedup.wordsSql("text")})::DOUBLE
       |        AS avg_word_len
       |    FROM documents
       |  )
@@ -230,7 +228,7 @@ object TextAnalysis extends Registered {
                        srcA: String = "src0", srcB: String = "src1",
                        alpha0: Double = 100.0): DataFrame = {
     val counts = Tables.documents(spark, dir)
-      .select(col("source"), explode(nonEmptyToks).as("token"))
+      .select(col("source"), explode(Dedup.words(col("text"))).as("token"))
       .groupBy(col("token")).agg(
         count(lit(1)).as("y_all"),
         count(when(col("source") === srcA, lit(1))).as("y_a"),
@@ -255,7 +253,7 @@ object TextAnalysis extends Registered {
                           alpha0: Double = 100.0): String =
     s"""WITH t AS (
        |  SELECT source,
-       |    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |    unnest(${Dedup.wordsSql("text")}) AS token
        |  FROM documents
        |), counts AS (
        |  SELECT token, COUNT(*) AS y_all,
@@ -288,15 +286,15 @@ object TextAnalysis extends Registered {
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
       col("doc_id"),
-      size(nonEmptyToks).as("ws_tokens"),
+      size(Dedup.words(col("text"))).as("ws_tokens"),
       size(regexp_extract_all(col("text"),
         lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), lit(0))).as("bpe_ish_tokens"),
       length(col("text")).as("n_chars"))
 
   def tokenCountSql: String =
-    """SELECT doc_id,
-      |  len(list_filter(str_split(text, ' '), x -> x <> '')) AS ws_tokens,
-      |  len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))
+    s"""SELECT doc_id,
+      |  len(${Dedup.wordsSql("text")}) AS ws_tokens,
+      |  len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]'))
       |    AS bpe_ish_tokens,
       |  length(text) AS n_chars
       |FROM documents""".stripMargin
@@ -331,7 +329,7 @@ object TextAnalysis extends Registered {
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val terms = docs
-      .select(col("doc_id"), explode(nonEmptyToks).as("term"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("term"))
     val tf = terms.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val df = terms.select(col("doc_id"), col("term")).distinct()
@@ -352,8 +350,8 @@ object TextAnalysis extends Registered {
   }
 
   def tfidfTopTermsSql: String =
-    """WITH terms AS (
-      |  SELECT doc_id, unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS term
+    s"""WITH terms AS (
+      |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS term
       |  FROM documents
       |), tf AS (
       |  SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2
@@ -386,7 +384,7 @@ object TextAnalysis extends Registered {
     * — no unbounded broadcast, no second pass. */
   def unigramSurprisal(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(nonEmptyToks).as("token"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("token"))
     val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = counts.select(sum(col("cnt")).as("total"))
     val vocab = counts.orderBy(col("cnt").desc, col("token")).limit(VocabK)
@@ -433,7 +431,7 @@ object TextAnalysis extends Registered {
                    vocabK: Int = KlVocabK): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val toks = Tables.documents(spark, dir)
-      .select(col("source"), explode(nonEmptyToks).as("token"))
+      .select(col("source"), explode(Dedup.words(col("text"))).as("token"))
     val corpus = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
     val vocab = corpus.orderBy(col("c").desc, col("token")).limit(vocabK)
       .select(col("token"), lit(1).as("inv"))
@@ -475,7 +473,7 @@ object TextAnalysis extends Registered {
   def klDivergenceSql(vocabK: Int = KlVocabK): String =
     s"""WITH t AS (
        |  SELECT source,
-       |    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |    unnest(${Dedup.wordsSql("text")}) AS token
        |  FROM documents
        |), corpus AS (
        |  SELECT token, COUNT(*) AS c FROM t GROUP BY 1
@@ -535,7 +533,7 @@ object TextAnalysis extends Registered {
                    vocabK: Int = KlVocabK): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val toks = Tables.documents(spark, dir)
-      .select(col("source"), explode(nonEmptyToks).as("token"))
+      .select(col("source"), explode(Dedup.words(col("text"))).as("token"))
     val corpus = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
     val vocab = corpus.orderBy(col("c").desc, col("token")).limit(vocabK)
       .select(col("token"), lit(1).as("inv"))
@@ -591,7 +589,7 @@ object TextAnalysis extends Registered {
   def jsDivergenceSql(vocabK: Int = KlVocabK): String =
     s"""WITH t AS (
        |  SELECT source,
-       |    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |    unnest(${Dedup.wordsSql("text")}) AS token
        |  FROM documents
        |), corpus AS (
        |  SELECT token, COUNT(*) AS c FROM t GROUP BY 1
@@ -652,7 +650,7 @@ object TextAnalysis extends Registered {
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tt = Tables.documents(spark, dir)
-      .select(col("source"), explode(nonEmptyToks).as("token"))
+      .select(col("source"), explode(Dedup.words(col("text"))).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
     val ranked = tt.withColumn("rnk",
       row_number().over(Window.partitionBy(col("source"))
@@ -670,9 +668,9 @@ object TextAnalysis extends Registered {
   }
 
   def lexicalDiversitySql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT source,
-      |    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+      |    unnest(${Dedup.wordsSql("text")}) AS token
       |  FROM documents
       |), tt AS (
       |  SELECT source, token, COUNT(*) AS c FROM t GROUP BY 1, 2
@@ -821,7 +819,7 @@ object TextAnalysis extends Registered {
 
   def unigramSurprisalSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS token
        |  FROM documents
        |), c AS (
        |  SELECT token, COUNT(*) AS cnt FROM t GROUP BY 1
@@ -849,13 +847,12 @@ object TextAnalysis extends Registered {
     * engines). */
   def repetitionSignals(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("n_words"),
         size(array_distinct(col("w"))).as("n_distinct"))
     val bigrams = base
       .select(col("doc_id"), explode(when(col("n_words") >= 2,
-          expr("transform(sequence(1, n_words - 1), " +
-            "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
+          Dedup.ngrams(col("w"), sequence(lit(1), col("n_words") - 1), 2))
         .otherwise(array().cast("array<string>"))).as("bigram"))
     val top = bigrams
       .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
@@ -870,15 +867,15 @@ object TextAnalysis extends Registered {
   }
 
   def repetitionSignalsSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
       |  FROM documents
       |), base AS (
       |  SELECT doc_id, len(w) AS n_words, len(list_distinct(w)) AS n_distinct
       |  FROM toks
       |), bg AS (
       |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bigram
+      |    unnest(${Dedup.ngramsSql(2)}) AS bigram
       |  FROM toks WHERE len(w) >= 2
       |), topbg AS (
       |  SELECT doc_id, MAX(c) AS top_c FROM (
@@ -915,11 +912,10 @@ object TextAnalysis extends Registered {
   private def dsirFeats(spark: SparkSession, dir: String): DataFrame =
     Memo.cached(spark, s"text.dsirFeats:$dir", docsSrc(dir)) {
       val bigrams = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), nonEmptyToks.as("w"))
+        .select(col("doc_id"), col("lang"), Dedup.words(col("text")).as("w"))
         .select(col("doc_id"), col("lang"),
           explode(when(size(col("w")) >= 2,
-              expr("transform(sequence(1, size(w) - 1), " +
-                "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
+              Dedup.ngrams(col("w"), sequence(lit(1), size(col("w")) - 1), 2))
             .otherwise(array().cast("array<string>"))).as("bg"))
       bigrams.select(col("doc_id"), col("lang"),
         pmod(conv(substring(md5(col("bg").cast("binary")), 1, 15), 16, 10)
@@ -958,11 +954,11 @@ object TextAnalysis extends Registered {
 
   def dsirWeightsSql: String =
     s"""WITH toksw AS (
-       |  SELECT doc_id, lang, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, lang, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), bg AS (
        |  SELECT doc_id, lang,
-       |    unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
+       |    unnest(${Dedup.ngramsSql(2)}) AS bg
        |  FROM toksw WHERE len(w) >= 2
        |), feats AS (
        |  SELECT doc_id, lang,
@@ -1006,7 +1002,7 @@ object TextAnalysis extends Registered {
     * set only. */
   def bpePairStats(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Tables.documents(spark, dir)
-      .select(explode(nonEmptyToks).as("t"))
+      .select(explode(Dedup.words(col("text"))).as("t"))
       .select(explode(when(length(col("t")) >= 2,
           expr("transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))"))
         .otherwise(array().cast("array<string>"))).as("pair"))
@@ -1021,7 +1017,7 @@ object TextAnalysis extends Registered {
 
   def bpePairStatsSql: String =
     s"""WITH t AS (
-       |  SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS t
+       |  SELECT unnest(${Dedup.wordsSql("text")}) AS t
        |  FROM documents
        |), p AS (
        |  SELECT unnest(list_transform(range(1, length(t)), i -> substring(t, i, 2))) AS pair
@@ -1047,11 +1043,9 @@ object TextAnalysis extends Registered {
     * unigram LM for scoring; this is the model-building side. */
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
     val bigr = toks
-      .select(explode(when(size(col("w")) >= 2,
-          expr("transform(sequence(1, size(w) - 1), " +
-            "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
+      .select(explode(when(size(col("w")) >= 2, Dedup.wordPairs(col("w")))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     val ctx = bigr.groupBy(col("w1")).agg(count(lit(1)).as("c_ctx"))
@@ -1065,11 +1059,10 @@ object TextAnalysis extends Registered {
 
   def bigramLmSql: String =
     s"""WITH toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), bg AS (
-       |  SELECT unnest(list_transform(range(1, len(w)),
-       |    i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |  SELECT unnest(${Dedup.wordPairsSql}) AS b
        |  FROM toksw WHERE len(w) >= 2
        |), pairs AS (
        |  SELECT b.w1 AS w1, b.w2 AS w2 FROM bg
@@ -1106,18 +1099,15 @@ object TextAnalysis extends Registered {
     // (the second full-stream shuffle is gone, and so is the third
     // corpus explode that fed the old occurrence-keyed ctx).
     val docBigr = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(
-        expr("transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
-        .as("b"))
+      .select(col("doc_id"), explode(Dedup.wordPairs(col("w"))).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val bc = docBigr.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_bigram"))
     val ctx = bc.groupBy(col("w1")).agg(sum(col("c_bigram")).as("c_ctx"))
     val vocab = Tables.documents(spark, dir)
-      .select(explode(nonEmptyToks).as("token"))
+      .select(explode(Dedup.words(col("text"))).as("token"))
       .agg(countDistinct(col("token")).as("v"))
     docBigr
       .join(bc.join(ctx, Seq("w1")), Seq("w1", "w2"))
@@ -1133,13 +1123,12 @@ object TextAnalysis extends Registered {
   }
 
   def bigramSurprisalSql: String =
-    """WITH toksw AS (
-      |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+    s"""WITH toksw AS (
+      |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
       |  FROM documents
       |), db AS (
       |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(w)),
-      |      i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+      |    unnest(${Dedup.wordPairsSql}) AS b
       |  FROM toksw WHERE len(w) >= 2
       |), dbf AS (
       |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM db
@@ -1149,7 +1138,7 @@ object TextAnalysis extends Registered {
       |  SELECT w1, COUNT(*) AS c_ctx FROM dbf GROUP BY 1
       |), voc AS (
       |  SELECT COUNT(DISTINCT token) AS v FROM (
-      |    SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+      |    SELECT unnest(${Dedup.wordsSql("text")}) AS token
       |    FROM documents
       |  )
       |)
@@ -1193,18 +1182,15 @@ object TextAnalysis extends Registered {
     // so the inner joins are loss-free; c_bigram is NULL exactly where
     // the old left join missed the pruned model.
     val docBigr = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(
-        expr("transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
-        .as("b"))
+      .select(col("doc_id"), explode(Dedup.wordPairs(col("w"))).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val bcAll = docBigr.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cb_all"))
     val ctx = bcAll.groupBy(col("w1")).agg(sum(col("cb_all")).as("c_ctx"))
     val toks = Tables.documents(spark, dir)
-      .select(explode(nonEmptyToks).as("token"))
+      .select(explode(Dedup.words(col("text"))).as("token"))
     val uni = toks.groupBy(col("token").as("w2")).agg(count(lit(1)).as("c_uni"))
     // total from the unigram table (#vocab rows), not a second corpus scan
     val total = uni.agg(sum(col("c_uni")).as("n_total"))
@@ -1232,19 +1218,17 @@ object TextAnalysis extends Registered {
 
   def stupidBackoffSql: String =
     s"""WITH toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), db AS (
        |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w)),
-       |      i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |    unnest(${Dedup.wordPairsSql}) AS b
        |  FROM toksw WHERE len(w) >= 2
        |), dbf AS (
        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM db
        |), pairs AS (
        |  SELECT b.w1 AS w1, b.w2 AS w2 FROM (
-       |    SELECT unnest(list_transform(range(1, len(w)),
-       |      i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |    SELECT unnest(${Dedup.wordPairsSql}) AS b
        |    FROM toksw WHERE len(w) >= 2
        |  )
        |), ctx AS (
@@ -1254,7 +1238,7 @@ object TextAnalysis extends Registered {
        |  HAVING COUNT(*) >= $LmMinCount
        |), uni AS (
        |  SELECT token AS w2, COUNT(*) AS c_uni FROM (
-       |    SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |    SELECT unnest(${Dedup.wordsSql("text")}) AS token
        |    FROM documents
        |  ) GROUP BY 1
        |), tot AS (
@@ -1343,7 +1327,7 @@ object TextAnalysis extends Registered {
                k: Int = 10): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(nonEmptyToks).as("tok"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("tok"))
     val perDocAggs = count(lit(1)).as("len") +: terms.zipWithIndex.map {
       case (t, i) => sum(when(col("tok") === t, 1L).otherwise(0L)).as(s"tf_$i")
     }
@@ -1380,7 +1364,7 @@ object TextAnalysis extends Registered {
                   k: Int = 10): String = {
     val inList = terms.map(t => s"'$t'").mkString(", ")
     s"""WITH t AS (
-       |  SELECT doc_id, unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS tok
+       |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS tok
        |  FROM documents
        |), lens AS (
        |  SELECT doc_id, COUNT(*) AS len FROM t GROUP BY 1
@@ -1484,7 +1468,7 @@ object TextAnalysis extends Registered {
   private def bpeTrainedBuild(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val wf = Tables.documents(spark, dir, fan = true)
-      .select(explode(nonEmptyToks).as("t"))
+      .select(explode(Dedup.words(col("text"))).as("t"))
       .filter(col("t").rlike("^[a-z0-9]+$"))
       .groupBy(col("t").as("token")).agg(count(lit(1)).as("freq"))
     val rep0 = wf.withColumn("repr", expr(
@@ -1550,7 +1534,7 @@ object TextAnalysis extends Registered {
     }.mkString(", ")
     s"""wf AS (
        |  SELECT t AS token, COUNT(*) AS freq FROM (
-       |    SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS t
+       |    SELECT unnest(${Dedup.wordsSql("text")}) AS t
        |    FROM documents
        |  ) WHERE regexp_matches(t, '^[a-z0-9]+$$') GROUP BY 1
        |), rep0 AS (
@@ -1588,7 +1572,7 @@ object TextAnalysis extends Registered {
       explode(expr("transform(sequence(1, length(text)), i -> substr(text, i, 1))"))
         .as("ch"))
     val words = Tables.documents(spark, dir, fan = true)
-      .select(col("doc_id"), explode(nonEmptyToks).as("w"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("w"))
     entropyOf(chars, "ch", "n_chars_seen", "char_entropy")
       .join(entropyOf(words, "w", "n_tokens", "word_entropy"), "doc_id")
       .withColumn("diversity_band",
@@ -1610,7 +1594,7 @@ object TextAnalysis extends Registered {
        |ce AS (
        |${eSql("cc", "n_chars_seen", "char_entropy")}
        |), tk AS (
-       |  SELECT doc_id, unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS w
+       |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS w
        |  FROM documents
        |), wc AS (SELECT doc_id, w, COUNT(*) AS c FROM tk GROUP BY 1, 2),
        |we AS (
@@ -1649,13 +1633,11 @@ object TextAnalysis extends Registered {
   def pmiCollocations(spark: SparkSession, dir: String,
                       minCount: Int = PmiMinCount, k: Int = 50): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
     val uni = toks.select(explode(col("w")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c_uni"))
     val bigr = toks
-      .select(explode(when(size(col("w")) >= 2,
-          expr("transform(sequence(1, size(w) - 1), " +
-            "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
+      .select(explode(when(size(col("w")) >= 2, Dedup.wordPairs(col("w")))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     val totals = uni.agg(sum(col("c_uni")).as("n_tok"))
@@ -1678,7 +1660,7 @@ object TextAnalysis extends Registered {
 
   def pmiCollocationsSql(minCount: Int = PmiMinCount, k: Int = 50): String =
     s"""WITH toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), uni AS (
        |  SELECT t, COUNT(*) AS c_uni FROM (
@@ -1686,8 +1668,7 @@ object TextAnalysis extends Registered {
        |  ) GROUP BY 1
        |), bigr AS (
        |  SELECT b['w1'] AS w1, b['w2'] AS w2 FROM (
-       |    SELECT unnest(list_transform(range(1, len(w)),
-       |      i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |    SELECT unnest(${Dedup.wordPairsSql}) AS b
        |    FROM toksw WHERE len(w) >= 2
        |  )
        |), totals AS (
@@ -1735,7 +1716,7 @@ object TextAnalysis extends Registered {
         expr("(length(repr) - length(replace(repr, chr(1), ''))) div 2")
           .as("n_sym"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(nonEmptyToks).as("t"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("t"))
       .join(dict, Seq("t"), "left_outer")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_ws_tokens"),
@@ -1744,8 +1725,7 @@ object TextAnalysis extends Registered {
 
   def bpeEncodeSql: String =
     s"""WITH $bpeSqlCtes, toks AS (
-       |  SELECT doc_id, unnest(list_filter(str_split(text, ' '),
-       |    x -> x <> '')) AS t
+       |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS t
        |  FROM documents
        |), enc AS (
        |  SELECT doc_id,
@@ -1779,7 +1759,7 @@ object TextAnalysis extends Registered {
         expr("(length(repr) - length(replace(repr, chr(1), ''))) div 2")
           .as("n_sym"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), explode(nonEmptyToks).as("t"))
+      .select(col("doc_id"), col("source"), explode(Dedup.words(col("text"))).as("t"))
       .join(dict, Seq("t"), "left_outer")
       .groupBy(col("source"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -1800,8 +1780,7 @@ object TextAnalysis extends Registered {
 
   def tokenizerEvalSql: String =
     s"""WITH $bpeSqlCtes, toks AS (
-       |  SELECT doc_id, source, unnest(list_filter(str_split(text, ' '),
-       |    x -> x <> '')) AS t
+       |  SELECT doc_id, source, unnest(${Dedup.wordsSql("text")}) AS t
        |  FROM documents
        |), enc AS (
        |  SELECT doc_id, source, length(t) AS n_ch,
@@ -1879,13 +1858,11 @@ object TextAnalysis extends Registered {
         roundtripText.as("rt"))
       .withColumn("case_loss", lower(col("rt")) =!= col("rt"))
       .withColumn("ws_loss",
-        array_join(filter(split(col("rt"), " "), c => c =!= ""), " ")
-          =!= col("rt"))
+        array_join(Dedup.words(col("rt")), " ") =!= col("rt"))
     val keys = Seq("doc_id", "source", "case_inj", "ws_inj", "fb_inj",
       "case_loss", "ws_loss").map(col)
     val perDoc = docs
-      .select(keys :+
-        explode(filter(split(lower(col("rt")), " "), c => c =!= "")).as("lt"): _*)
+      .select(keys :+ explode(Dedup.words(lower(col("rt")))).as("lt"): _*)
       .join(dict, Seq("lt"), "left_outer")
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_toks"),
@@ -1938,12 +1915,12 @@ object TextAnalysis extends Registered {
        |  FROM documents
        |), flags AS (
        |  SELECT *, lower(rt) <> rt AS case_loss,
-       |    array_to_string(list_filter(str_split(rt, ' '), x -> x <> ''), ' ')
+       |    array_to_string(${Dedup.wordsSql("rt")}, ' ')
        |      <> rt AS ws_loss
        |  FROM base
        |), rtoks AS (
        |  SELECT doc_id, source, case_inj, ws_inj, fb_inj, case_loss, ws_loss,
-       |    unnest(list_filter(str_split(lower(rt), ' '), x -> x <> '')) AS lt
+       |    unnest(${Dedup.wordsSql("lower(rt)")}) AS lt
        |  FROM flags
        |), enc AS (
        |  SELECT t.*, CASE WHEN r.token IS NULL THEN NULL
@@ -2014,7 +1991,7 @@ object TextAnalysis extends Registered {
                    limit: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(nonEmptyToks).as(Seq("pos", "w")))
+      .select(col("doc_id"), posexplode(Dedup.words(col("text"))).as(Seq("pos", "w")))
       .withColumn("is_stop", col("w").isin(RakeStop: _*))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val words = toks
@@ -2052,7 +2029,7 @@ object TextAnalysis extends Registered {
   def rakeKeywordsSql(limit: Int = 50): String = {
     val stops = RakeStop.map(s => s"'$s'").mkString(", ")
     s"""WITH toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), toks AS (
        |  SELECT doc_id, t.pos, t.word,
@@ -2118,11 +2095,9 @@ object TextAnalysis extends Registered {
   def kneserNey(spark: SparkSession, dir: String,
                 minCount: Long = LmMinCount, limit: Int = 100): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), nonEmptyToks.as("w"))
+      .select(col("doc_id"), Dedup.words(col("text")).as("w"))
     val bigr = toks
-      .select(explode(when(size(col("w")) >= 2,
-          expr("transform(sequence(1, size(w) - 1), " +
-            "i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"))
+      .select(explode(when(size(col("w")) >= 2, Dedup.wordPairs(col("w")))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     val bc = bigr.groupBy(col("w1"), col("w2"))
@@ -2148,11 +2123,10 @@ object TextAnalysis extends Registered {
 
   def kneserNeySql(minCount: Long = LmMinCount, limit: Int = 100): String =
     s"""WITH toksw AS (
-       |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT doc_id, ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), bg AS (
-       |  SELECT unnest(list_transform(range(1, len(w)),
-       |    i -> struct_pack(w1 := w[i], w2 := w[i+1]))) AS b
+       |  SELECT unnest(${Dedup.wordPairsSql}) AS b
        |  FROM toksw WHERE len(w) >= 2
        |), pairs AS (
        |  SELECT b.w1 AS w1, b.w2 AS w2 FROM bg
@@ -2198,13 +2172,13 @@ object TextAnalysis extends Registered {
   def vocabGrowth(spark: SparkSession, dir: String,
                   bucket: Long = VocabGrowthBucket): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(nonEmptyToks).as("t"))
+      .select(col("doc_id"), explode(Dedup.words(col("text"))).as("t"))
     val newTypes = toks.groupBy(col("t")).agg(min(col("doc_id")).as("fd"))
       .groupBy((col("fd") / bucket).cast("long").as("bucket"))
       .agg(count(lit(1)).as("new_types"))
     val base = Tables.documents(spark, dir)
       .select((col("doc_id") / bucket).cast("long").as("bucket"),
-        size(nonEmptyToks).cast("long").as("n"))
+        size(Dedup.words(col("text"))).cast("long").as("n"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
     // bucket table is metadata-scale (docs / bucket size): the
@@ -2227,8 +2201,7 @@ object TextAnalysis extends Registered {
 
   def vocabGrowthSql(bucket: Long = VocabGrowthBucket): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_filter(str_split(text, ' '),
-       |    x -> x <> '')) AS t
+       |  SELECT doc_id, unnest(${Dedup.wordsSql("text")}) AS t
        |  FROM documents
        |), nt AS (
        |  SELECT CAST(MIN(doc_id) // $bucket AS BIGINT) AS bucket, t
@@ -2238,7 +2211,7 @@ object TextAnalysis extends Registered {
        |), base AS (
        |  SELECT CAST(doc_id // $bucket AS BIGINT) AS bucket,
        |    COUNT(*) AS n_docs,
-       |    CAST(SUM(len(list_filter(str_split(text, ' '), x -> x <> '')))
+       |    CAST(SUM(len(${Dedup.wordsSql("text")}))
        |         AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1
        |), j AS (
@@ -2284,7 +2257,7 @@ object TextAnalysis extends Registered {
     * broadcasts back onto the K served rows. */
   def zipfFit(spark: SparkSession, dir: String, topK: Int = 100): DataFrame = {
     val counts = Tables.documents(spark, dir)
-      .select(explode(nonEmptyToks).as("token"))
+      .select(explode(Dedup.words(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
     val top = counts.orderBy(col("c").desc, col("token")).limit(topK)
     val ranked = top.select(col("token"), col("c"),
@@ -2320,7 +2293,7 @@ object TextAnalysis extends Registered {
 
   def zipfFitSql(topK: Int = 100): String =
     s"""WITH t AS (
-       |  SELECT unnest(list_filter(str_split(text, ' '), x -> x <> ''))
+       |  SELECT unnest(${Dedup.wordsSql("text")})
        |    AS token
        |  FROM documents
        |), counts AS (
@@ -2382,7 +2355,7 @@ object TextAnalysis extends Registered {
     val ranksFinal = Memo.checkpointed(spark, s"text.tr:$dir:$iters",
         docsSrc(dir)) {
       val bi = Tables.documents(spark, dir)
-        .select(nonEmptyToks.as("w"))
+        .select(Dedup.words(col("text")).as("w"))
         .select(explode(expr(
           """transform(slice(w, 1, size(w) - 1),
             |  (x, i) -> struct(x AS t1, element_at(w, i + 2) AS t2))"""
@@ -2420,7 +2393,7 @@ object TextAnalysis extends Registered {
          |  GROUP BY 1)""".stripMargin
     }.mkString(",\n")
     s"""WITH toks AS (
-       |  SELECT list_filter(str_split(text, ' '), x -> x <> '') AS w
+       |  SELECT ${Dedup.wordsSql("text")} AS w
        |  FROM documents
        |), bi AS (
        |  SELECT LEAST(w[i], w[i+1]) AS a, GREATEST(w[i], w[i+1]) AS b,
@@ -2492,12 +2465,12 @@ object TextAnalysis extends Registered {
       w: Array[Double], m: Array[Double], vocab: Array[String])
 
   private def qcFeatureCols: Seq[(String, Column)] = {
-    val nToks = size(nonEmptyToks).cast("double")
+    val nToks = size(Dedup.words(col("text"))).cast("double")
     Seq(
       "x1" -> least(lit(1.0), nToks / lit(100.0)),
-      "x2" -> (size(filter(nonEmptyToks,
+      "x2" -> (size(filter(Dedup.words(col("text")),
         t => t.isin(stopwords.map(lit): _*).cast("boolean"))).cast("double") / nToks),
-      "x3" -> (size(array_distinct(nonEmptyToks)).cast("double") / nToks),
+      "x3" -> (size(array_distinct(Dedup.words(col("text")))).cast("double") / nToks),
       "x4" -> (length(regexp_replace(col("text"), " ", "")).cast("double")
         / nToks / lit(10.0)))
   }
@@ -2518,7 +2491,7 @@ object TextAnalysis extends Registered {
         m => Ckpt.release(m.serve)) {
       val dec = DecimalType(30, 12)
       val toks = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(nonEmptyToks).as("token"))
+        .select(col("doc_id"), explode(Dedup.words(col("text"))).as("token"))
       val cnt = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
       val tot = cnt.agg(sum(col("c")).cast("double").as("n_corpus"))
       val vocab = cnt.orderBy(col("c").desc, col("token")).limit(vocabK)
@@ -2617,7 +2590,7 @@ object TextAnalysis extends Registered {
     * — every op IEEE +,-,*,/ or abs on the same doubles
     * (TextAnalysisSpec pins expression-inference ≡ build serve). */
   private[operators] def qcInferCols(model: QcModel): (Column, Column) = {
-    val toks = nonEmptyToks
+    val toks = Dedup.words(col("text"))
     val nT = size(toks).cast("double")
     val xs: Seq[Column] = qcFeatureCols.map(_._2) :+
       (size(filter(toks, t =>
@@ -2708,7 +2681,7 @@ object TextAnalysis extends Registered {
       s"ROUND(CAST(CAST(SUM(CAST(ROUND($x, 12) AS DECIMAL(30,12))) AS VARCHAR) AS DOUBLE)/COUNT(*), 12) AS m_$x"
     s"""t AS MATERIALIZED (
        |  SELECT doc_id,
-       |    unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
+       |    unnest(${Dedup.wordsSql("text")}) AS token
        |  FROM documents
        |), cnt AS MATERIALIZED (SELECT token, COUNT(*) AS c FROM t GROUP BY 1),
        |tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS n_corpus FROM cnt),
@@ -2729,15 +2702,15 @@ object TextAnalysis extends Registered {
        |), featbase AS (
        |  SELECT doc_id,
        |    least(1.0::DOUBLE,
-       |      len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+       |      len(${Dedup.wordsSql("text")})::DOUBLE
        |        / 100.0::DOUBLE) AS x1,
-       |    len(list_filter(str_split(text, ' '),
+       |    len(list_filter(${Dedup.wordsSql("text")},
        |      x -> x IN (${stopwords.map(s => s"'$s'").mkString(",")})))::DOUBLE
-       |      / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE AS x2,
-       |    len(list_distinct(list_filter(str_split(text, ' '), x -> x <> '')))::DOUBLE
-       |      / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE AS x3,
+       |      / len(${Dedup.wordsSql("text")})::DOUBLE AS x2,
+       |    len(list_distinct(${Dedup.wordsSql("text")}))::DOUBLE
+       |      / len(${Dedup.wordsSql("text")})::DOUBLE AS x3,
        |    length(replace(text, ' ', ''))::DOUBLE
-       |      / len(list_filter(str_split(text, ' '), x -> x <> ''))::DOUBLE
+       |      / len(${Dedup.wordsSql("text")})::DOUBLE
        |      / 10.0::DOUBLE AS x4
        |  FROM documents
        |), feat AS MATERIALIZED (

@@ -80,25 +80,32 @@ object Adapters extends Registered {
         lit("labx-csv").as("source_system"),
         col("ingest_hash"))
 
-  def csvLabxSql: String =
-    """WITH raw AS (
-      |  SELECT event_id,
-      |    concat_ws(',', user_id, event_type,
-      |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
-      |           WHEN event_id % 103 = 0 THEN 'Infinity'
-      |           ELSE CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) END,
-      |      'mg/dL', strftime(ts, '%Y-%m-%d %H:%M:%S.%f')) AS line
-      |  FROM events
-      |), f AS (SELECT event_id, line, str_split(line, ',') AS p FROM raw)
-      |SELECT event_id,
-      |  p[1] AS patient_id,
-      |  p[2] AS code,
-      |  TRY_CAST(p[3] AS DOUBLE) AS value,
-      |  p[4] AS unit,
-      |  strptime(p[5], '%Y-%m-%d %H:%M:%S.%f') AS effective,
-      |  'labx-csv' AS source_system,
-      |  sha256(line) AS ingest_hash
-      |FROM f""".stripMargin
+  def csvLabxSql: String = s"WITH ${csvLabxSqlCte("labx")}\nSELECT * FROM labx"
+
+  /** B1's synth+parse in DuckDB over the events rows matching `where`,
+    * as the CTE `name` (event_id, patient_id, code, value, unit,
+    * effective, source_system, ingest_hash) plus its helper
+    * `<name>_raw`. Normalize's DTO and C8's CSV route reuse it. */
+  def csvLabxSqlCte(name: String, where: String = "TRUE"): String =
+    s"""${name}_raw AS (
+       |  SELECT event_id,
+       |    concat_ws(',', user_id, event_type,
+       |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
+       |           WHEN event_id % 103 = 0 THEN 'Infinity'
+       |           ELSE CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) END,
+       |      'mg/dL', strftime(ts, '%Y-%m-%d %H:%M:%S.%f')) AS line
+       |  FROM events WHERE $where
+       |), $name AS (
+       |  SELECT event_id,
+       |    p[1] AS patient_id,
+       |    p[2] AS code,
+       |    TRY_CAST(p[3] AS DOUBLE) AS value,
+       |    p[4] AS unit,
+       |    strptime(p[5], '%Y-%m-%d %H:%M:%S.%f') AS effective,
+       |    'labx-csv' AS source_system,
+       |    sha256(line) AS ingest_hash
+       |  FROM (SELECT event_id, line, str_split(line, ',') AS p FROM ${name}_raw)
+       |)""".stripMargin
 
   /** Raw HL7 v2 message: PID + 1-3 OBX segments (`event_id % 3 + 1`),
     * CR-separated — real lab messages batch several results per
@@ -173,37 +180,44 @@ object Adapters extends Registered {
       .filter(col("value").isNotNull) // non-numeric OBX-5 dropped
   }
 
-  def hl7ObxSql: String =
-    """WITH raw AS (
-      |  SELECT event_id,
-      |    'PID|1||' || user_id || '^^^MRN||DOE^JOHN' || chr(13) ||
-      |    array_to_string(list_transform(range(1, event_id % 3 + 2), k ->
-      |      'OBX|' || k || '|NM|' || event_type || '^' || upper(event_type) || '||' ||
-      |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
-      |           ELSE CAST(CAST(value + (k-1) AS DECIMAL(18,2)) AS VARCHAR) END || '|' ||
-      |      CASE WHEN event_id % 7 = 0 THEN ''
-      |           WHEN event_id % 3 = 0 THEN 'mg'
-      |           ELSE 'mg^mg/dL' END || '|||||F|||' ||
-      |      strftime(ts, '%Y%m%d%H%M%S')), chr(13)) AS msg
-      |  FROM events
-      |), seg AS (
-      |  SELECT event_id,
-      |    list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'PID|'))[1] AS pid,
-      |    unnest(list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'OBX|'))) AS obx
-      |  FROM raw
-      |), parsed AS (
-      |  SELECT event_id,
-      |    str_split(str_split(pid, '|')[4], '^')[1] AS patient_id,
-      |    coalesce(nullif(str_split(str_split(obx, '|')[4], '^')[1], ''),
-      |             str_split(str_split(obx, '|')[4], '^')[2]) AS code,
-      |    TRY_CAST(str_split(obx, '|')[6] AS DOUBLE) AS value,
-      |    coalesce(nullif(str_split(str_split(obx, '|')[7], '^')[2], ''),
-      |             nullif(str_split(str_split(obx, '|')[7], '^')[1], ''),
-      |             '1') AS unit,
-      |    strptime(str_split(obx, '|')[15], '%Y%m%d%H%M%S') AS effective
-      |  FROM seg
-      |)
-      |SELECT * FROM parsed WHERE value IS NOT NULL""".stripMargin
+  def hl7ObxSql: String = s"WITH ${hl7ObxSqlCte("obx")}\nSELECT * FROM obx"
+
+  /** B2's synth+parse in DuckDB over the events rows matching `where`,
+    * as the CTE `name` (event_id, patient_id, code, value, unit,
+    * effective; non-numeric OBX-5 rows dropped) plus its helpers
+    * `<name>_raw` and `<name>_seg`. C8's HL7 route reuses it. */
+  def hl7ObxSqlCte(name: String, where: String = "TRUE"): String =
+    s"""${name}_raw AS (
+       |  SELECT event_id,
+       |    'PID|1||' || user_id || '^^^MRN||DOE^JOHN' || chr(13) ||
+       |    array_to_string(list_transform(range(1, event_id % 3 + 2), k ->
+       |      'OBX|' || k || '|NM|' || event_type || '^' || upper(event_type) || '||' ||
+       |      CASE WHEN event_id % 97 = 0 THEN 'N/A'
+       |           ELSE CAST(CAST(value + (k-1) AS DECIMAL(18,2)) AS VARCHAR) END || '|' ||
+       |      CASE WHEN event_id % 7 = 0 THEN ''
+       |           WHEN event_id % 3 = 0 THEN 'mg'
+       |           ELSE 'mg^mg/dL' END || '|||||F|||' ||
+       |      strftime(ts, '%Y%m%d%H%M%S')), chr(13)) AS msg
+       |  FROM events WHERE $where
+       |), ${name}_seg AS (
+       |  SELECT event_id,
+       |    list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'PID|'))[1] AS pid,
+       |    unnest(list_filter(str_split(msg, chr(13)), s -> starts_with(s, 'OBX|'))) AS obx
+       |  FROM ${name}_raw
+       |), $name AS (
+       |  SELECT * FROM (
+       |    SELECT event_id,
+       |      str_split(str_split(pid, '|')[4], '^')[1] AS patient_id,
+       |      coalesce(nullif(str_split(str_split(obx, '|')[4], '^')[1], ''),
+       |               str_split(str_split(obx, '|')[4], '^')[2]) AS code,
+       |      TRY_CAST(str_split(obx, '|')[6] AS DOUBLE) AS value,
+       |      coalesce(nullif(str_split(str_split(obx, '|')[7], '^')[2], ''),
+       |               nullif(str_split(str_split(obx, '|')[7], '^')[1], ''),
+       |               '1') AS unit,
+       |      strptime(str_split(obx, '|')[15], '%Y%m%d%H%M%S') AS effective
+       |    FROM ${name}_seg
+       |  ) WHERE value IS NOT NULL
+       |)""".stripMargin
 
   /** B4 `adapter_json_generic` — generic JSON payload ingest:
     * from_json with an explicit schema (reference: the normalize

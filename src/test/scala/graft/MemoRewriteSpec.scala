@@ -16,6 +16,7 @@ class MemoRewriteSpec extends SparkSpecBase {
     "dedup_apss_prefix" -> "documents",        // checkpointed table
     "audit_heavy_hitters_sketch" -> "events",  // driver-side sketch bytes
     "dedup_bloom_decontaminate" -> "documents", // shared shingle set
+    "pipeline_corpus_refresh" -> "documents",  // P4 reads that shingle set
     "store_partition_prune" -> "events",       // written layout
     "api_get_patient" -> "events",             // the served store
     "sim_recall_eval" -> "embeddings")         // cached brute-force truth
