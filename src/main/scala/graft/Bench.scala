@@ -109,10 +109,18 @@ object Bench {
     // per-sample canary segment, parallel to `samples`
     val segs = scala.collection.mutable.LinkedHashMap[String, Vector[Int]](
       names.map { case (n, _) => n -> Vector.empty[Int] }: _*)
+    // per-sample count of classes Janino compiled, parallel to
+    // `samples`: queries run one at a time, so the JVM-wide counter's
+    // delta around a sample is that sample's codegen compile work
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Vector[Long]](
+      names.map { case (n, _) => n -> Vector.empty[Long] }: _*)
+    def compiled(): Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     for (rep <- 1 to Reps) {
       names.zipWithIndex.foreach { case ((name, fn), i) =>
         if (i % CanaryEvery == 0) takeCanary(rep, i)
         val seg = canary.length - 1
+        val k0 = compiled()
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable =>
@@ -120,6 +128,7 @@ object Bench {
           if (!failed.contains(name)) failed += name
         }
         samples(name) :+= (System.nanoTime() - t0) / 1e9
+        compiles(name) :+= compiled() - k0
         segs(name) :+= seg
       }
     }
@@ -149,6 +158,15 @@ object Bench {
       .mkString("{", ",", "}")
     val qsNorm = normMed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // codegen compiles per key: its first run, and the median of the
+    // warm reps after it (empty with one rep)
+    val cgFirst = compiles.map { case (k, v) => s"\"" + k + "\":" + v.head }
+      .mkString("{", ",", "}")
+    val cgWarm = compiles.filter(_._2.length > 1).map { case (k, v) =>
+      val w = v.tail.sorted
+      s"\"" + k + "\":" + w(w.length / 2)
+    }.mkString("{", ",", "}")
+    val cg = s"""{"first_run":$cgFirst,"warm_median":$cgWarm}"""
     val fl = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val cn = canary.map(t => f"$t%.3f").mkString("[", ",", "]")
     val cu = canaryCpu.map(t => f"$t%.3f").mkString("[", ",", "]")
@@ -157,7 +175,7 @@ object Bench {
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val totalNorm = if (normMed.nonEmpty) normMed.values.sum else 0.0
     val fullJson =
-      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"failed":$fl,$env}"""
+      s"""{"metric":"total_median_of_$Reps","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"queries_norm":$qsNorm,"value_norm":$totalNorm,"canary":$cn,"canary_cpu":$cu,"canary_pos":$cp,"canary_every":$CanaryEvery,"codegen_compiles":$cg,"failed":$fl,$env}"""
     println(fullJson)
     // The driver's BENCH artifact preserves only a bounded stdout
     // TAIL — r07 lost 201 of 252 per-query medians to truncation,

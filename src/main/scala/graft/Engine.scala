@@ -12,8 +12,52 @@ import org.apache.spark.sql.SparkSession
   *     drop-and-count semantics (reference: libs/validation/dto.ts drops
   *     invalid rows instead of failing the batch).
   *   - Session TZ UTC so timestamp semantics match the oracle.
+  *
+  * Static confs, set once per JVM in [[builder]] (see
+  * [[CodegenCacheEntries]] and [[uiRetention]]):
+  *   - The generated-class cache holds [[CodegenCacheEntries]]
+  *     classes, so a plan the session ran before reuses its compiled
+  *     code instead of running Janino and the JIT again.
+  *   - The UI status store keeps only the last few executions, jobs
+  *     and stages: the UI is off and nothing in the engine reads the
+  *     store, which otherwise holds up to 1000 SQL executions' plan
+  *     strings, plan graphs and metrics.
   */
 object Engine {
+  /** `spark.sql.codegen.cache.maxEntries`, the size of Spark's cache
+    * of compiled generated classes (Spark's default is 100). One pass
+    * of the reference flow and its six Query API reads needs about 145
+    * distinct classes, one curated corpus shard about 215, so at 100
+    * the cache evicted every class before its reuse and every pass ran
+    * Janino again (132-133 compiles per reference-flow pass, 210-211
+    * per shard, about 13 ms each on the driver) and the JIT then
+    * compiled the new classes (12-16 CPU-s per 6-7 s pass on 4 cores).
+    * At 1024 a pass's second run compiles nothing but the Query API
+    * reads whose patient and timestamp literals are inlined into the
+    * generated Java (1-7 classes per call). The cost is heap: raising
+    * the cap from 100 to 512 kept about 3 MB more live at an equal
+    * pass count, about 28 KB per extra class. A full-registry
+    * `graft.Bench` rep (405 keys round-robin) needs more classes than
+    * any sane cap, so its warm medians still recompile; the cap is
+    * sized to a working session, not to that sweep.
+    *
+    * It is a static conf: only [[builder]] can set it, and
+    * [[configure]] cannot change it on a session built elsewhere. */
+  val CodegenCacheEntries = 1024
+
+  /** Status-store retention (`spark.sql.ui.retainedExecutions`,
+    * `spark.ui.retainedJobs`, `spark.ui.retainedStages`,
+    * `spark.ui.dagGraph.retainedRootRDDs`, `spark.ui.retainedTasks`).
+    * Spark fills the store whether or not the UI runs, and at the
+    * defaults one corpus curation run left about 70k `SQLPlanMetric`s
+    * in it; the engine never reads it. Static, like the cache above. */
+  private val uiRetention: Seq[(String, String)] = Seq(
+    "spark.sql.ui.retainedExecutions" -> "20",
+    "spark.ui.retainedJobs" -> "20",
+    "spark.ui.retainedStages" -> "20",
+    "spark.ui.dagGraph.retainedRootRDDs" -> "20",
+    "spark.ui.retainedTasks" -> "1000")
+
   /** The engine's runtime SQL confs, applied both at build time
     * ([[builder]]) and on an externally created session
     * ([[configure]]). */
@@ -38,7 +82,8 @@ object Engine {
     // dims (region/nation/customer/supplier/part at dim scale) broadcast
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString)
 
-  /** Builder with every conf baked in at construction time. Setting
+  /** Builder with every conf baked in at construction time, static
+    * ones included. Setting
     * them only post-hoc via spark.conf.set is NOT enough: parallel
     * planning/schema-inference threads read a thread-local SQLConf
     * that may miss late runtime sets (seen as nondeterministic
@@ -49,6 +94,8 @@ object Engine {
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(uiRetention.toMap)
       .config(sqlConfs.toMap)
       // per-process dir: the in-memory catalog forgets tables between
       // JVMs but their directories would survive, and saveAsTable
@@ -108,7 +155,9 @@ object Engine {
           "graft.allowQuadraticBaselines=false — run the bucketed scale " +
           "path (MinHash/LSH or IVF) instead")
 
-  /** Runtime confs safe to (re)apply on an externally created session. */
+  /** Runtime confs safe to (re)apply on an externally created session.
+    * Static confs ([[CodegenCacheEntries]], [[uiRetention]]) are not
+    * among them: a session built elsewhere keeps its own. */
   def configure(spark: SparkSession): SparkSession = {
     sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")

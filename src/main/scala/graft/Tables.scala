@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-provided testdata tables.
   *
@@ -23,12 +24,26 @@ object Tables {
       fan: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schema(spark, path)).parquet(path)
     val ntz = raw.schema.fields.filter(_.dataType == TimestampNTZType).foldLeft(raw) {
       (df, f) => df.withColumn(f.name, col(f.name).cast(TimestampType))
     }
-    if (fan) fanOutUnsplittable(spark, s"$dir/$name.parquet", ntz) else ntz
+    if (fan) fanOutUnsplittable(spark, path, ntz) else ntz
   }
+
+  /** The parquet schema of the table at `path`, inferred once per
+    * version of it: without a given schema, every `spark.read.parquet`
+    * runs a one-task footer-reading job (about 55 ms of job time on a
+    * 4-core box). The token is the path's listing stamp, like every
+    * memo's, plus the two confs that change how the footer's timestamp
+    * types map to Spark types. */
+  private def schema(spark: SparkSession, path: String): StructType =
+    Memo.value(spark, s"tables.schema:$path", Seq(path),
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+      spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")) {
+      spark.read.parquet(path).schema
+    }
 
   /** Layout-aware read parallelization (optimization guide §2.5,
     * "input skew: one huge unsplittable file ... otherwise repartition

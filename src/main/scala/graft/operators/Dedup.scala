@@ -1118,28 +1118,37 @@ object Dedup extends Registered {
     // situation). A memo entry, NOT a bare .cache(): CacheManager
     // matches canonicalized plans, so after a data rewrite a plain
     // re-cache would keep serving blocks built from the old files
-    // even though quantized() itself rebuilt.
-    val assigned = Memo.cached(spark, s"dedup.semAssign:$dir",
-        Seq(s"$dir/embeddings.parquet")) {
+    // even though quantized() itself rebuilt. Its build fills the
+    // blocks (one count), so every plan over it is made from their
+    // real size: planned over unfilled blocks, AQE picked the pair
+    // join's build side by which side's cache stage had finished
+    // first, and the exchange count varied from run to run.
+    val assigned = Memo.cachedFrames(spark, s"dedup.semAssign:$dir",
+        Seq(s"$dir/embeddings.parquet")) { cache =>
       val cents = emb.orderBy(md5(col("vec_id").cast("string")))
         .limit(SemCells)
         .select(col("vec_id").as("cent_id"), col("qvec").as("cq"),
           col("nsq").as("cn"))
       val wAssign = Window.partitionBy(col("vec_id"))
         .orderBy(col("cent_cos").desc, col("cent_id"))
-      emb.crossJoin(broadcast(cents))
+      val a = cache(emb.crossJoin(broadcast(cents))
         .withColumn("cent_cos", Similarity.cosineQ(
           vdotQuantizedNative(col("qvec"), col("cq")), col("nsq"), col("cn")))
         .withColumn("arn", row_number().over(wAssign))
         .filter(col("arn") === 1)
         .select(col("vec_id"), col("qvec"), col("nsq"),
-          col("cent_id").as("cell"))
+          col("cent_id").as("cell")))
+      a.count()
+      a
     }
     val x = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("qvec").as("qa"), col("nsq").as("na"))
     val y = assigned.select(col("cell"), col("vec_id").as("id_b"),
       col("qvec").as("qb"), col("nsq").as("nb"))
-    val dominated = x.join(y, Seq("cell"))
+    // y streams: the assignment is partitioned on vec_id, so y arrives
+    // partitioned on id_b and the distinct below needs no exchange
+    // (of two equal-size sides, a broadcast join builds the right one)
+    val dominated = y.join(x, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .filter(Similarity.cosineQ(
         vdotQuantizedNative(col("qa"), col("qb")),
@@ -1703,7 +1712,7 @@ object Dedup extends Registered {
     "dedup_minhash_estimate" -> Entry(minhashEstimate _, minhashEstimateSql,
       shuffles = 2), // sig agg (self-join side reused) + distinct
     "dedup_winnowing" -> Entry(winnowing _, winnowingSql, shuffles = 1),
-    "dedup_semdedup" -> Entry(semDedup _, semDedupSql, shuffles = 1,
+    "dedup_semdedup" -> Entry(semDedup _, semDedupSql, shuffles = 0,
       bnlj = true), // (a) broadcast query/request side, streaming corpus side
     "dedup_substring_spans" -> Entry(substringSpans _, substringSpansSql, shuffles = 3),
     "dedup_embedding_neardup" -> Entry(embeddingNearDup _, embeddingNearDupSql, shuffles = 2,
